@@ -260,7 +260,7 @@ object DataOpsQueries {
     // per-hash seeds are data-independent xxh64_int4(h, 42) constants
     // baked as literals), signed mins per signature slot, the
     // array<long> band-bucket fold (running-seed hashLong per element,
-    // pinned against tools/XxhProbe), the maxBucket skew guard, and
+    // pinned against Spark's xxhash64), the maxBucket skew guard, and
     // the exact-Jaccard verify — so the CANDIDATE SET itself, not just
     // the verified scores, is hash-gated. DedupSpec keeps the recall
     // band vs q22's exact relation.
@@ -2944,7 +2944,7 @@ object DataOpsQueries {
     // distinct table. ORACLE-GATED since round 16: the xxhash64
     // placements ARE SQL-reproducible at fixture vocabulary scale —
     // XxhSql replays Spark's XXH64 (short-string path + the two-arg
-    // int chain, pinned against tools/XxhProbe) in DuckDB limb
+    // int chain, pinned against Spark's xxhash64) in DuckDB limb
     // arithmetic, so cells AND min-of-rows estimates replay exactly.
     // SketchesSpec still pins est ≥ exact, the e/width overcount
     // bound, cell-exact merge-of-parts, and stream ≡ batch.
@@ -4703,7 +4703,7 @@ object DataOpsQueries {
         val e = embs(s, dir)
         HammingIndex.hammingWriteIndex(e, "vec_id", "embedding",
           root.toString, nBands = 8, nBuckets = 32)
-        HammingIndex.hammingDeleteIds(e.filter(col("vec_id") % 7 === 3),
+        HammingIndex.Layout.delete(e.filter(col("vec_id") % 7 === 3),
           "vec_id", root.toString)
         HammingIndex.hammingProbeIndex(s, e, "vec_id", "embedding",
             root.toString, radius = 15, pruneListing = false)
@@ -6108,7 +6108,7 @@ object DataOpsQueries {
     // (HammingIndexStream.indexSink — the ledgered append machinery
     // PhashStream/AudioHashStream delegate to after their decode
     // step), building the persisted MIH index under a fixed geometry;
-    // then a TAKEDOWN lands (hammingDeleteIds) and the index is
+    // then a TAKEDOWN lands (HammingIndex.Layout.delete) and the index is
     // radius-probed. HASH-GATED end to end: planted stub twins
     // (doc_id % 1000, code copied under id+10⁷) are the only radius-6
     // neighbors besides self-matches, half of them (doc_id % 2000)
@@ -6182,7 +6182,7 @@ object DataOpsQueries {
           .trigger(Trigger.AvailableNow())
           .start()
         q.awaitTermination()
-        HammingIndex.hammingDeleteIds(
+        HammingIndex.Layout.delete(
           docs(s, dir).filter(col("doc_id") % 2000 === 0)
             .select((col("doc_id") + lit(10000000L)).as("doc_id")),
           "doc_id", idx)
@@ -6852,7 +6852,8 @@ object DataOpsQueries {
     // (HammingIndexStream.indexSink — the same ledgered append q219
     // pins for whole-object codes), building the persisted 256-bit MIH
     // index; a TAKEDOWN lands (every frame of the banned videos,
-    // hammingDeleteIds) and the q226 probe library queries the index.
+    // HammingIndex.Layout.delete) and the q226 probe library queries
+    // the index.
     // HASH-GATED end to end: matchers (doc_id % 200 = 0, seed 2 = the
     // videos' sampled frame 2) hit at hamming 0, distractors (seed 23)
     // nowhere, and the deleted videos (doc_id % 400 = 200) vanish from
@@ -6951,7 +6952,7 @@ object DataOpsQueries {
             .start()
           q.awaitTermination()
           // takedown: every frame of the banned videos
-          HammingIndex.hammingDeleteIds(
+          HammingIndex.Layout.delete(
             base.filter(col("doc_id") % 400 === 200)
               .select(col("doc_id"), explode(sequence(lit(0L),
                 lit(VideoHash.SampleFrames - 1L))).as("slot"))

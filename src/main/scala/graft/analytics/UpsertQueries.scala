@@ -1317,7 +1317,7 @@ object UpsertQueries {
         val idxP = s"$root/ivf"
         val cents = VectorOps.ivfWriteIndex(e, "vec_id", "embedding",
           idxP, nCentroids = 16)
-        VectorOps.ivfDeleteIds(
+        VectorOps.IvfLayout.delete(
           e.filter(col("vec_id") % 9 === 4).select("vec_id"),
           "vec_id", idxP)
         VectorOps.ivfProbeJoin(
@@ -1469,7 +1469,7 @@ object UpsertQueries {
           _ => (VectorOps.kmeansCentroids(e, "embedding", 16),
             Pq.pqTrain(e, "embedding", m = 8, codebook = 16)))
         Pq.pqIvfWriteIndex(e, "vec_id", "embedding", idxP, model, cents)
-        VectorOps.ivfDeleteIds(
+        VectorOps.IvfLayout.delete(
           e.filter(col("vec_id") % 7 === 3).select("vec_id"),
           "vec_id", idxP)
         Pq.pqIvfProbeJoin(

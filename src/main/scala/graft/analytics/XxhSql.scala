@@ -5,7 +5,7 @@ package graft.analytics
   * fixed seed 42) for SHORT ASCII strings (< 32 bytes — only the tail
   * path) and the two-arg `xxhash64(string, int)` chain (the int is
   * hashed through XXH64's 4-byte finalizer with the string's hash as
-  * seed — pinned empirically against Spark in tools/XxhProbe, all
+  * seed — pinned empirically against Spark's own xxhash64, all
   * tokens exact).
   *
   * This closes the "engine-hash placements no SQL engine reproduces"

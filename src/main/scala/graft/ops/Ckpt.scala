@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 
 /** Release a materialized intermediate's storage — the call every
   * "unpersist the previous state" site in the engine needs instead of
-  * `Dataset.unpersist()`: measured on Spark 4.1 (tools/CkptProbe),
+  * `Dataset.unpersist()`: measured on Spark 4.1,
   * `unpersist()` on a LOCALCHECKPOINTED frame is a silent no-op — it
   * goes through the CacheManager, which only tracks `persist()`/
   * `cache()` entries, while a checkpoint's blocks are an RDD-level

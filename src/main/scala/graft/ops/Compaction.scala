@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 /** Shared small-file compaction for append-accumulating parquet
   * directories (the persisted-index maintenance primitive behind
-  * [[VectorOps.ivfCompactIndex]] and [[LexIndex.bm25CompactIndex]]):
+  * [[IndexLayout.compact]] and [[LexIndex.bm25CompactIndex]]):
   * fold any directory over `maxFilesPerDir` visible files into
   * ⌈bytes / targetBytes⌉ files, atomically enough for concurrent
   * READERS — originals are hidden by rename only after the compacted
@@ -95,12 +95,12 @@ object Compaction {
     // accepted dirs with their visible files (driver metadata listings,
     // pooled — hundreds of dirs list in tens of ms each)
     val accepted: Seq[(Path, Array[org.apache.hadoop.fs.FileStatus])] =
-      awaitAll(qdirs.map { dir => inPool {
+      dirPool.mapAll(qdirs) { dir =>
         val files = fs.listStatus(dir)
           .filter(s => s.isFile && visible(s.getPath))
         if (files.isEmpty || !shouldRewrite(dir, files.length)) None
         else Some(dir -> files)
-      }}).flatten
+      }.flatten
     if (accepted.isEmpty) return Map.empty
 
     // one staging root under the accepted dirs' common parent —
@@ -110,6 +110,10 @@ object Compaction {
     fs.delete(stageRoot, true)
 
     val indexed = accepted.zipWithIndex
+    // where dir `i` of schema group `g` stages (the bulk path's
+    // partitionBy("_graft_dir") lands its rows there too)
+    def stagedDirOf(g: Int, i: Int): Path =
+      IndexLayout.partitionPath(new Path(stageRoot, s"g$g"), "_graft_dir" -> i)
     def targetOfFiles(files: Array[org.apache.hadoop.fs.FileStatus]): Int =
       math.max(1,
         math.ceil(files.map(_.getLen).sum.toDouble / targetBytes).toInt)
@@ -122,12 +126,12 @@ object Compaction {
         // grouping, one shuffle, a partitioned commit) only amortize
         // past a few dozen dirs (measured: the 33-dir BM25 purge is a
         // wash, the 256-dir Hamming purge is 4× faster bulk)
-        awaitAll(indexed.map { case ((dir, files), i) => inPool {
+        dirPool.mapAll(indexed) { case ((dir, files), i) =>
           transform(spark.read.parquet(dir.toString))
             .coalesce(targetOfFiles(files))
             .write.mode("overwrite")
-            .parquet(new Path(stageRoot, s"g0/_graft_dir=$i").toString)
-        }})
+            .parquet(stagedDirOf(0, i).toString)
+        }
         indexed.map { case (_, i) => i -> 0 }.toMap
       } else {
         // a caller may pass dirs of SEVERAL sub-layouts in one list
@@ -141,11 +145,11 @@ object Compaction {
             org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, hConf))
           try r.getFooter.getFileMetaData.getSchema.toString finally r.close()
         }
-        val groups = awaitAll(indexed.map { case ((dir, files), i) => inPool {
+        val groups = dirPool.mapAll(indexed) { case ((dir, files), i) =>
           (schemaKey(files.head.getPath), (dir, files, i))
-        }}).groupBy(_._1).values.map(_.map(_._2)).toSeq
+        }.groupBy(_._1).values.map(_.map(_._2)).toSeq
 
-        awaitAll(groups.zipWithIndex.map { case (group, gi) => inPool {
+        dirPool.mapAll(groups.zipWithIndex) { case (group, gi) =>
           // per-dir file target from the ORIGINAL byte sizes (compacted
           // bytes are ≤ original for both callers); the write lands
           // ≤ target files per dir via a deterministic row-hash salt
@@ -182,7 +186,7 @@ object Compaction {
             .repartition(nParts, col("_graft_dir"), salt)
             .write.mode("overwrite").partitionBy("_graft_dir")
             .parquet(new Path(stageRoot, s"g$gi").toString)
-        }})
+        }
         groups.zipWithIndex.flatMap { case (group, gi) =>
           group.map { case (_, _, i) => i -> gi }
         }.toMap
@@ -194,10 +198,9 @@ object Compaction {
     // original visible NEXT TO its compacted copy — duplicated rows —
     // so every step is checked and a hide failure rolls the
     // already-hidden originals back before aborting)
-    val report = awaitAll(accepted.zipWithIndex.map {
-      case ((dir, files), i) => inPool {
-        val stagedDir = new Path(stageRoot,
-          s"g${dirGroup(i)}/_graft_dir=$i")
+    val report = dirPool.mapAll(accepted.zipWithIndex) {
+      case ((dir, files), i) =>
+        val stagedDir = stagedDirOf(dirGroup(i), i)
         val compacted =
           if (!fs.exists(stagedDir)) Array.empty[org.apache.hadoop.fs.FileStatus]
           else fs.listStatus(stagedDir)
@@ -236,8 +239,7 @@ object Compaction {
                 "not duplication)")
         }
         dir.getName -> (files.length, compacted.length)
-      }
-    })
+    }
     if (!fs.delete(stageRoot, true))
       throw new java.io.IOException(
         s"$opName: could not delete staging root $stageRoot after publish")
@@ -268,23 +270,8 @@ object Compaction {
     if (common.isEmpty) paths.head.getParent else new Path(common.last)
   }
 
-  /** Bounded daemon pool for the per-directory metadata passes — the
-    * [[CorpusUpsert]] indexPool convention (FileSystem instances are
-    * cached and thread-safe).
+  /** The per-directory pool — separate from [[CorpusUpsert]]'s, whose
+    * maintenance blocks submit here (see [[WorkPool]]).
     */
-  private lazy val dirPool: scala.concurrent.ExecutionContext =
-    scala.concurrent.ExecutionContext.fromExecutorService(
-      java.util.concurrent.Executors.newFixedThreadPool(8,
-        (r: Runnable) => {
-          val t = new Thread(r, "graft-compact-dir")
-          t.setDaemon(true)
-          t
-        }))
-
-  private def inPool[A](body: => A): scala.concurrent.Future[A] =
-    scala.concurrent.Future(body)(dirPool)
-
-  private def awaitAll[A](fs: Seq[scala.concurrent.Future[A]]): Seq[A] =
-    fs.map(scala.concurrent.Await.result(_,
-      scala.concurrent.duration.Duration.Inf))
+  private val dirPool = new WorkPool("graft-compact-dir")
 }

@@ -117,21 +117,25 @@ object CorpusUpsert {
 
   def revOf(rid: Column): Column = rid.bitwiseAND(lit(MaxRev.toLong))
 
-  /** One coordinated index. `stage` writes the delta's rows (keyed by
-    * [[RidCol]]) under a staging root mirroring the index layout;
-    * `delete` tombstones superseded rids through the layout's own
-    * delete (idempotent under re-runs by the [[Tombstones]] dedup
-    * contract).
+  /** One coordinated index: its root, its [[IndexLayout]], and `stage`,
+    * which writes the delta's rows (keyed by [[RidCol]]) under a
+    * staging root mirroring that layout. `delete` tombstones superseded
+    * rids (idempotent under re-runs by the [[Tombstones]] dedup
+    * contract); the quiesced-window `purge` (physical tombstone drop)
+    * and `compact` (append-litter fold) come from the layout. Only
+    * [[Bm25Target]] overrides them.
     */
   sealed trait IndexTarget {
     def name: String
     def path: String
+    private[ops] def layout: IndexLayout
     private[ops] def stage(delta: DataFrame, stageDir: String): Unit
-    private[ops] def delete(rids: DataFrame): Unit
-    /** The layout's physical tombstone drop (quiesced window). */
-    private[ops] def purge(spark: SparkSession): Map[String, (Int, Int)]
-    /** The layout's append-litter fold (quiesced window, tombstone-free). */
-    private[ops] def compact(spark: SparkSession): Map[String, (Int, Int)]
+    private[ops] def delete(rids: DataFrame): Unit =
+      layout.delete(rids, RidCol, path)
+    private[ops] def purge(spark: SparkSession): Map[String, (Int, Int)] =
+      layout.purge(spark, path, RidCol)
+    private[ops] def compact(spark: SparkSession): Map[String, (Int, Int)] =
+      layout.compact(spark, path)
   }
 
   final case class IvfTarget(
@@ -139,15 +143,10 @@ object CorpusUpsert {
       vecCol: String,
       centroids: Array[Array[Double]],
       name: String = "ivf") extends IndexTarget {
+    private[ops] def layout = VectorOps.IvfLayout
     private[ops] def stage(delta: DataFrame, stageDir: String): Unit =
       VectorOps.ivfStageAppend(delta, RidCol, vecCol, path, stageDir,
         centroids)
-    private[ops] def delete(rids: DataFrame): Unit =
-      VectorOps.ivfDeleteIds(rids, RidCol, path)
-    private[ops] def purge(spark: SparkSession): Map[String, (Int, Int)] =
-      VectorOps.ivfPurgeIndex(spark, path, RidCol)
-    private[ops] def compact(spark: SparkSession): Map[String, (Int, Int)] =
-      VectorOps.ivfCompactIndex(spark, path)
   }
 
   final case class PqIvfTarget(
@@ -156,28 +155,30 @@ object CorpusUpsert {
       model: Pq.PqModel,
       centroids: Array[Array[Double]],
       name: String = "pqivf") extends IndexTarget {
+    private[ops] def layout = VectorOps.IvfLayout
     private[ops] def stage(delta: DataFrame, stageDir: String): Unit =
       Pq.pqIvfStageAppend(delta, RidCol, vecCol, path, stageDir, model,
         centroids)
-    private[ops] def delete(rids: DataFrame): Unit =
-      Pq.pqIvfDeleteIds(rids, RidCol, path)
-    private[ops] def purge(spark: SparkSession): Map[String, (Int, Int)] =
-      VectorOps.ivfPurgeIndex(spark, path, RidCol) // same cluster= layout
-    private[ops] def compact(spark: SparkSession): Map[String, (Int, Int)] =
-      VectorOps.ivfCompactIndex(spark, path)
   }
 
+  /** BM25 keeps its own delete (tombstones carry `dl`), purge (stages a
+    * negative stats row) and compaction (refused while tombstones pend)
+    * on top of [[LexIndex.Layout]].
+    */
   final case class Bm25Target(
       path: String,
       textCol: String,
       name: String = "bm25") extends IndexTarget {
+    private[ops] def layout = LexIndex.Layout
     private[ops] def stage(delta: DataFrame, stageDir: String): Unit =
       LexIndex.stageAppend(delta, RidCol, textCol, path, stageDir)
-    private[ops] def delete(rids: DataFrame): Unit =
+    override private[ops] def delete(rids: DataFrame): Unit =
       LexIndex.bm25DeleteIds(rids, RidCol, path)
-    private[ops] def purge(spark: SparkSession): Map[String, (Int, Int)] =
+    override private[ops] def purge(spark: SparkSession)
+        : Map[String, (Int, Int)] =
       LexIndex.bm25PurgeIndex(spark, path, RidCol)
-    private[ops] def compact(spark: SparkSession): Map[String, (Int, Int)] =
+    override private[ops] def compact(spark: SparkSession)
+        : Map[String, (Int, Int)] =
       LexIndex.bm25CompactIndex(spark, path)
   }
 
@@ -185,14 +186,9 @@ object CorpusUpsert {
       path: String,
       vecCol: String,
       name: String = "hamming") extends IndexTarget {
+    private[ops] def layout = HammingIndex.Layout
     private[ops] def stage(delta: DataFrame, stageDir: String): Unit =
       HammingIndex.stageAppend(delta, RidCol, vecCol, path, stageDir)
-    private[ops] def delete(rids: DataFrame): Unit =
-      HammingIndex.hammingDeleteIds(rids, RidCol, path)
-    private[ops] def purge(spark: SparkSession): Map[String, (Int, Int)] =
-      HammingIndex.hammingPurgeIndex(spark, path, RidCol)
-    private[ops] def compact(spark: SparkSession): Map[String, (Int, Int)] =
-      HammingIndex.hammingCompactIndex(spark, path)
   }
 
   /** The [[NearDupIndex]] MinHash-LSH layout as a coordinated target:
@@ -205,14 +201,9 @@ object CorpusUpsert {
       path: String,
       textCol: String,
       name: String = "neardup") extends IndexTarget {
+    private[ops] def layout = NearDupIndex.Layout
     private[ops] def stage(delta: DataFrame, stageDir: String): Unit =
       NearDupIndex.stageAppend(delta, RidCol, textCol, path, stageDir)
-    private[ops] def delete(rids: DataFrame): Unit =
-      NearDupIndex.neardupDeleteIds(rids, RidCol, path)
-    private[ops] def purge(spark: SparkSession): Map[String, (Int, Int)] =
-      NearDupIndex.neardupPurgeIndex(spark, path, RidCol)
-    private[ops] def compact(spark: SparkSession): Map[String, (Int, Int)] =
-      NearDupIndex.neardupCompactIndex(spark, path)
   }
 
   final case class UpsertReport(
@@ -234,11 +225,12 @@ object CorpusUpsert {
     * runs inline — without it, every later batch's rev lookup (and
     * every [[currentRevs]] call) reads one parquet dir per batch ever
     * applied, the same unbounded-litter curve the index appends had
-    * before co-partitioning (GateSteadyProbe). The fold runs AFTER the
-    * done marker inside the same serialized apply, so the quiesced-
-    * window contract holds by construction; a crash mid-fold leaves
-    * lookups exact in every interleaving (compactRevs' invariant) and
-    * the next batch's trigger re-runs it. ≤ 0 disables. The fold
+    * before co-partitioning ([[HammingIndex.hammingAppendIndex]]). The
+    * fold runs AFTER the done marker inside the same serialized apply,
+    * so the quiesced-window contract holds by construction; a crash
+    * mid-fold leaves lookups exact in every interleaving (compactRevs'
+    * invariant) and the next batch's trigger re-runs it. ≤ 0 disables.
+    * The fold
     * TRADES the backfill horizon (see the object doc): a later-added
     * target can only backfill batches whose per-batch revs survive,
     * so pick the threshold from how far back you add indexes.
@@ -293,7 +285,7 @@ object CorpusUpsert {
     // bytes contract intact)
     val freezeF =
       if (deltaFrozen) None
-      else Some(inPool {
+      else Some(indexPool.submit {
         delta.write.mode("overwrite").parquet(deltaDir.toString) })
 
     // 2. revision assignment. Once recorded, a batch's revs are
@@ -311,8 +303,8 @@ object CorpusUpsert {
     // localCheckpoint ONCE: four index stagings then read materialized
     // rows instead of each re-running the lookup join (and the rid
     // range check fails the batch up front, before any index work).
-    val revsDir = new Path(s"$root/revs/batch=$key")
-    val revsFrozen = fs.exists(new Path(revsDir, "_SUCCESS"))
+    val batchRevs = revsDir(root, key)
+    val revsFrozen = fs.exists(new Path(batchRevs, "_SUCCESS"))
     // reaching here with the done marker set means a BACKFILL (some
     // target lacks its marker). Backfill needs this batch's frozen
     // revs; if compactRevs already folded them away, recomputing would
@@ -332,7 +324,7 @@ object CorpusUpsert {
     // checkpoint's driver jobs on the first batch of every lifecycle
     val prior0: Option[DataFrame] =
       if (revsFrozen)
-        Some(readRevDirs(spark, Seq(revsDir.toString))
+        Some(readRevDirs(spark, Seq(batchRevs.toString))
           .select(col("doc").as(docCol),
             when(col("rev") > 0, col("rev") - 1).as("old_rev"),
             col("rev").as("frozen_rev")))
@@ -344,7 +336,7 @@ object CorpusUpsert {
     // ledger-sized; materialized NOW so its jobs overlap the in-flight
     // freeze write instead of serializing after it
     val prior = prior0.map(_.localCheckpoint(true))
-    freezeF.foreach(await(_))
+    freezeF.foreach(WorkPool.await(_))
     // the fresh-freeze path just wrote these bytes from `delta`, so
     // the schema is known — pinning it skips the footer-inference job;
     // a re-apply over an already-frozen delta keeps inference (the
@@ -407,7 +399,7 @@ object CorpusUpsert {
             lit(" — one revision per doc per batch"))))
           .otherwise(max(col("new_rev"))).cast("int").as("rev"))
         .coalesce(1)
-        .write.mode("overwrite").parquet(revsDir.toString)
+        .write.mode("overwrite").parquet(batchRevs.toString)
     val oldRids = withRid.filter(col("old_rev").isNotNull)
       .select(ridExpr(col(docCol), col("old_rev")).as(RidCol))
 
@@ -417,7 +409,7 @@ object CorpusUpsert {
     // concurrently — wall time is the slowest layout, not the sum (the
     // serial contract is across BATCHES, not across an one batch's
     // indexes).
-    awaitAll(targets.map { t => inPool {
+    indexPool.mapAll(targets) { t =>
       val appliedM = new Path(batchDir, s"applied-${t.name}")
       val stageDir = new Path(batchDir, s"stage-${t.name}")
       if (!fs.exists(appliedM)) {
@@ -434,20 +426,15 @@ object CorpusUpsert {
         touch(fs, appliedM)
       }
       fs.delete(stageDir, true)
-    }})
+    }
     touch(fs, doneMarker)
     // never fold on a BACKFILL re-apply (the batch was already done, so
     // nothing new landed in the ledger): the remaining backfill batches
     // NEED their per-batch revs, and the first re-applied batch would
     // otherwise compact them all away and wedge the rest
-    if (autoFoldRevsAt > 0 && !wasDone) {
-      val revsRoot = new Path(s"$root/revs")
-      val nDirs =
-        if (!fs.exists(revsRoot)) 0
-        else fs.listStatus(revsRoot).count(s =>
-          s.isDirectory && s.getPath.getName.startsWith("batch="))
-      if (nDirs > autoFoldRevsAt) compactRevs(spark, root)
-    }
+    if (autoFoldRevsAt > 0 && !wasDone &&
+        revBatchDirs(fs, root).size > autoFoldRevsAt)
+      compactRevs(spark, root)
     UpsertReport(key, alreadyApplied = false, nRows, nUpd, nRows - nUpd)
   }
 
@@ -543,17 +530,15 @@ object CorpusUpsert {
       foldRevs: Boolean = true): MaintenanceReport = {
     require(targets.map(_.name).distinct.size == targets.size,
       "maintain: duplicate target names")
-    val purged = targets.map(t => t.name -> inPool(t.purge(spark)))
-      .map { case (n, f) => n -> await(f) }.toMap
-    val compacted = targets.map(t => t.name -> inPool(t.compact(spark)))
-      .map { case (n, f) => n -> await(f) }.toMap
+    def eachTarget(pass: IndexTarget => Map[String, (Int, Int)]) =
+      targets.map(_.name).zip(
+        indexPool.mapAll(targets)(pass)).toMap
+    val purged = eachTarget(_.purge(spark))
+    val compacted = eachTarget(_.compact(spark))
     val vacuumed = vacuumBatches(spark, root, keepBatches)
-    val revsRoot = new Path(s"$root/revs")
-    val fs = revsRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def revsDirs(): Int =
-      if (!fs.exists(revsRoot)) 0
-      else fs.listStatus(revsRoot).count(s =>
-        s.isDirectory && s.getPath.getName.startsWith("batch="))
+    val fs = new Path(root).getFileSystem(
+      spark.sparkContext.hadoopConfiguration)
+    def revsDirs(): Int = revBatchDirs(fs, root).size
     val before = revsDirs()
     if (foldRevs) compactRevs(spark, root)
     MaintenanceReport(purged, compacted, vacuumed, before, revsDirs())
@@ -582,7 +567,7 @@ object CorpusUpsert {
       .join(currentRevs(spark, root), Seq("doc"))
       .select(ridExpr(col("doc"), col("rev")).as(RidCol))
       .localCheckpoint(true)
-    awaitAll(targets.map(t => inPool { t.delete(rids) }))
+    indexPool.mapAll(targets)(_.delete(rids))
   }
 
   /** The current `(doc, rev)` per document — max rev over every batch
@@ -666,7 +651,7 @@ object CorpusUpsert {
     val fs = new Path(root).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     keys.foreach { k =>
-      require(fs.exists(new Path(s"$root/revs/batch=$k/_SUCCESS")),
+      require(fs.exists(new Path(revsDir(root, k), "_SUCCESS")),
         s"revsAsOf: batch '$k' has no frozen revs — never applied, or " +
           "folded by compactRevs (the as-of horizon is the unfolded " +
           "ledger; fold on the cadence that keeps the history you need)")
@@ -674,8 +659,7 @@ object CorpusUpsert {
         s"revsAsOf: batch '$k' recorded revs but never completed — a " +
           "mid-apply batch has no defined snapshot state")
     }
-    val all = readRevDirs(spark,
-      keys.map(k => s"$root/revs/batch=$k"))
+    val all = readRevDirs(spark, keys.map(k => revsDir(root, k).toString))
     // historical-state validation: per doc the included revs must be
     // exactly {0..max} — a gap means some earlier batch touching this
     // doc was left out and the requested state never existed. The check
@@ -805,10 +789,7 @@ object CorpusUpsert {
   def compactRevs(spark: SparkSession, root: String): Unit = {
     val revsRoot = new Path(s"$root/revs")
     val fs = revsRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(revsRoot)) return
-    val old = fs.listStatus(revsRoot).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
-      .map(_.getPath)
+    val old = revBatchDirs(fs, root)
     if (old.size <= 1) return
     // a CRASHED batch awaiting its retry (revs recorded, no done
     // marker) must keep its own batch= dir: folding it into the
@@ -833,8 +814,8 @@ object CorpusUpsert {
       .select(col("doc"), col("rev").cast("int").as("rev"))
       .coalesce(1)
       .write.mode("overwrite").parquet(stage.toString)
-    val dest = new Path(revsRoot, s"batch=$CompactedKey")
-    val aside = new Path(revsRoot, s"batch=$CompactedKey-old")
+    val dest = revsDir(root, CompactedKey)
+    val aside = revsDir(root, s"$CompactedKey-old")
     // a LEFTOVER aside dir (a prior pass crashed between its publish
     // and its deletes) goes first: its rows were just folded into the
     // freshly staged result by the excludeKey = "" scan above, and
@@ -890,7 +871,7 @@ object CorpusUpsert {
       fs: FileSystem,
       root: String,
       excludeKey: String): DataFrame = {
-    val dirs = revBatchDirs(fs, root, excludeKey)
+    val dirs = revBatchDirs(fs, root, excludeKey).map(_.toString)
     if (dirs.isEmpty)
       spark.createDataFrame(
         java.util.Collections.emptyList[org.apache.spark.sql.Row](),
@@ -900,14 +881,17 @@ object CorpusUpsert {
         .groupBy("doc").agg(max("rev").as("rev"))
   }
 
+  /** The rev ledger's `revs/batch=<key>` partition dir. */
+  private def revsDir(root: String, key: String): Path =
+    IndexLayout.partitionPath(new Path(s"$root/revs"), "batch" -> key)
+
+  /** Every `revs/batch=` dir but `excludeKey`'s. */
   private def revBatchDirs(
-      fs: FileSystem, root: String, excludeKey: String): Seq[String] = {
+      fs: FileSystem, root: String, excludeKey: String = ""): Seq[Path] = {
     val revsRoot = new Path(s"$root/revs")
-    if (!fs.exists(revsRoot)) Seq.empty[String]
-    else fs.listStatus(revsRoot).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
-      .filter(s => s.getPath.getName != s"batch=$excludeKey")
-      .map(_.getPath.toString)
+    if (!fs.exists(revsRoot)) Nil
+    else IndexLayout.partitionDirs(fs, revsRoot, "batch")
+      .filter(_.getName != revsDir(root, excludeKey).getName)
   }
 
   /** Publish a complete stage (`_graft_staged` present) into the live
@@ -951,26 +935,10 @@ object CorpusUpsert {
     fs.create(p, true).close()
   }
 
-  /** Bounded pool for the concurrent per-index blocks — daemon threads
-    * so a driver shutdown never hangs on it. Spark actions are safe to
-    * launch from multiple threads against one session.
+  /** The per-index pool: every block is joined ([[WorkPool.mapAll]]),
+    * so a failing target never unwinds the call while its siblings
+    * still stage or publish.
     */
-  private lazy val indexPool: scala.concurrent.ExecutionContext =
-    scala.concurrent.ExecutionContext.fromExecutorService(
-      java.util.concurrent.Executors.newFixedThreadPool(8,
-        (r: Runnable) => {
-          val t = new Thread(r, "graft-upsert-index")
-          t.setDaemon(true)
-          t
-        }))
+  private val indexPool = new WorkPool("graft-upsert-index")
 
-  private def inPool[A](body: => A): scala.concurrent.Future[A] =
-    scala.concurrent.Future(body)(indexPool)
-
-  private def await[A](f: scala.concurrent.Future[A]): A =
-    scala.concurrent.Await.result(f,
-      scala.concurrent.duration.Duration.Inf)
-
-  private def awaitAll(fs: Seq[scala.concurrent.Future[_]]): Unit =
-    fs.foreach(await(_))
 }

@@ -592,10 +592,11 @@ object Dedup {
     * relation (one per join side; the differently-aliased projections
     * defeat exchange reuse) plus the join itself. Grouping shuffles the
     * bucket relation ONCE and generates the same ordered pairs from
-    * each list (identical relation — tools/Q21Decomp pins set equality
-    * and measured the three candidate dataflows). The expansion is
-    * quadratic per bucket BY DESIGN — identical pair volume to the
-    * self-join, bounded at maxBucket²/2 per key by the skew guard.
+    * each list (identical relation — set equality with the self-join
+    * was checked when the three candidate dataflows were measured).
+    * The expansion is quadratic per bucket BY DESIGN — identical pair
+    * volume to the self-join, bounded at maxBucket²/2 per key by the
+    * skew guard.
     *
     * The skew guard itself is a WindowGroupLimit rank-prune rather than
     * the former count/broadcast-anti-join pre-pass: `row_number ≤

@@ -25,8 +25,8 @@ import org.apache.spark.sql.functions._
   * Append contract (the [[VectorOps.ivfAppendIndex]] one): delta ids
   * are NEW — band rows stay unique per (band, id), so append ≡
   * from-scratch rebuild gives identical probe results (HammingSpec
-  * pins it). [[hammingCompactIndex]] folds append litter in place via
-  * the shared [[Compaction.compactDirs]] publish protocol with
+  * pins it). `Layout.compact` folds append litter in place via the
+  * shared [[Compaction.compactDirs]] publish protocol with
   * bit-identical probes.
   *
   * 100 TB shape: the build is one map-only pack+explode pass written
@@ -41,6 +41,16 @@ import org.apache.spark.sql.functions._
   * from (n, dim, radius) and refuses infeasible combinations.
   */
 object HammingIndex {
+
+  /** `bands/` × (band, bb) — the whole persisted layout besides `meta/`. */
+  private val Bands = IndexLayout.SubDir("bands", Seq("band", "bb"))
+
+  /** The lifecycle entry point: `Layout.delete` tombstones ids (probes
+    * exclude them at once), `Layout.purge` drops a deleted vector's
+    * nBands band rows from exactly the (band, bb) leaves holding them,
+    * `Layout.compact` folds append litter with bit-identical probes.
+    */
+  val Layout: IndexLayout = IndexLayout("hamming", Seq(Bands))
 
   /** `dim` < 0 derives the dimension from the data; pass it explicitly
     * to bootstrap an EMPTY index whose geometry a stream then appends
@@ -75,8 +85,8 @@ object HammingIndex {
     * geometry. `coPartition` (default true) shuffles the band rows to
     * the (band, bb) directory layout before the write — ≤ one file per
     * touched dir per append instead of tasks×dirs. The steady-state
-    * numbers that made this the DEFAULT (tools/GateSteadyProbe, 128k
-    * codes / 32 batches): without it every append wrote 2,048 files
+    * numbers that made this the DEFAULT (a 128k-code, 32-batch
+    * steady-append run): without it every append wrote 2,048 files
     * (32 tasks × 64 dirs), probe latency grew linearly with the litter
     * (3.4 s fresh → 25.3 s at 65k files) and the eventual compaction
     * of 65k files cost 113 s — the shuffle it adds is delta-sized.
@@ -148,74 +158,12 @@ object HammingIndex {
         // ([[DirLayout.toDirs]]): the exchange is build-sized, file
         // creation parallelizes across tasks, and files per directory
         // stay bounded — measured 4.1 s → ~0.6 s on the gate build
-        DirLayout.toDirs(rows, nBands * nBuckets, col(idCol),
-          col("band"), col("bb"))
+        DirLayout.toDirs(rows, nBands * nBuckets, col(idCol), Bands.cols: _*)
       else if (coPartition)
-        DirLayout.appendToDirs(rows, nBands * nBuckets,
-          col("band"), col("bb"))
+        DirLayout.appendToDirs(rows, nBands * nBuckets, Bands.cols: _*)
       else rows
-    laidOut.write.mode(mode).partitionBy("band", "bb")
-      .parquet(s"$path/bands")
+    Bands.write(laidOut, path, mode)
   }
-
-  /** Fold append litter back into a bounded file layout — the
-    * [[LexIndex.bm25CompactIndex]] maintenance pass for the band
-    * layout. Rows are unchanged, so probe results are identical before
-    * and after (HammingSpec pins it). Returns per-compacted-directory
-    * (files before, after).
-    */
-  def hammingCompactIndex(
-      spark: SparkSession,
-      path: String,
-      maxFilesPerDir: Int = 8,
-      targetBytes: Long = 128L << 20): Map[String, (Int, Int)] = {
-    import org.apache.hadoop.fs.Path
-    val bands = new Path(s"$path/bands")
-    val fs = bands.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val leafDirs = fs.listStatus(bands)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("band="))
-      .flatMap(b => fs.listStatus(b.getPath))
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("bb="))
-      .map(_.getPath).toSeq
-    Compaction.compactDirs(spark, leafDirs, maxFilesPerDir, targetBytes,
-      "hammingCompactIndex")
-  }
-
-  /** Tombstone ids out of the index ([[Tombstones]] — the
-    * persisted-index delete lifecycle): append-only, O(|ids|), safe
-    * next to concurrent probes. Probes exclude the set immediately;
-    * [[hammingPurgeIndex]] is the physical drop of the nBands band
-    * rows per deleted vector.
-    */
-  def hammingDeleteIds(ids: DataFrame, idCol: String, path: String): Unit =
-    Tombstones.add(ids, idCol, path)
-
-  /** Physically drop tombstoned vectors' band rows and clear the
-    * tombstone set. A deleted vector holds one row in each of its
-    * nBands (band, bucket) directories; the affected-directory list
-    * comes from one column-pruned (id, band, bb) semi-join — ≤
-    * nBands·nBuckets pairs — and only those leaves rewrite, through
-    * the shared [[Compaction.rewriteDirs]] publish protocol.
-    * Quiesced-window maintenance, idempotent across crashes.
-    */
-  def hammingPurgeIndex(
-      spark: SparkSession,
-      path: String,
-      idCol: String,
-      targetBytes: Long = 128L << 20): Map[String, (Int, Int)] =
-    Tombstones.purge(spark, path, idCol,
-      candidateDirs = Seq.empty,
-      affectedOf = (tombs, _) => {
-        import org.apache.hadoop.fs.Path
-        spark.read.parquet(s"$path/bands")
-          .select(col(idCol), col("band"), col("bb"))
-          .join(tombs, Seq(idCol), "left_semi")
-          .select("band", "bb").distinct()
-          .collect() // ≤ nBands·nBuckets pairs
-          .map(r => new Path(s"$path/bands/band=${r.getInt(0)}/bb=${r.getInt(1)}"))
-          .toSeq
-      },
-      targetBytes = targetBytes, opName = "hammingPurgeIndex")
 
   /** EXACT radius search served from the index: every `(q_id, n_id,
     * hamming)` with distance ≤ `radius` between a query-batch row and
@@ -224,7 +172,7 @@ object HammingIndex {
     * corpus and keeping `q_id < n_id` reproduces the pair relation
     * exactly; HammingSpec pins both). The index scan prunes to the
     * probe values' (band, bucket) directories at file listing.
-    * Tombstoned ids ([[hammingDeleteIds]]) are excluded from the
+    * Tombstoned ids (`Layout.delete`) are excluded from the
     * scanned slice (never from the caller's query batch — a deleted
     * vector can still be ASKED about; it just can't be FOUND).
     *
@@ -282,7 +230,7 @@ object HammingIndex {
     // broadcast would ship |corpus|·nBands·(1+cb) rows to every task —
     // the round-12 probe measured 18.9× vs 8.6× at 64× for exactly
     // that hint before it was removed
-    val slice = spark.read.parquet(s"$path/bands").filter(prune) // pruned
+    val slice = spark.read.parquet(Bands.dir(path)).filter(prune) // pruned
     (if (includeTombstoned) slice
      else Tombstones.excludeFrom(slice, path, idCol))
       .join(probes, Seq("band", "bv", "bb"))

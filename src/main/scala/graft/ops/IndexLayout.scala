@@ -1,0 +1,135 @@
+package graft.ops
+
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+
+/** The directory layout of one persisted-index family, described ONCE
+  * as data — which sub-directories sit under the index root, which
+  * partition columns each is written `partitionBy`, and whether its
+  * rows carry the index's id column. The maintenance lifecycle every
+  * family shares derives from it:
+  *
+  *   - [[leafDirs]] — the data directories compaction folds (one per
+  *     partition value combination, or the flat sub-directory itself);
+  *   - [[affectedDirs]] — the directories a tombstone purge must
+  *     rewrite: one column-pruned (id, partition columns) semi-join per
+  *     keyed partitioned sub-directory (partition columns come from
+  *     directory names, so the scan reads only the id column), plus
+  *     every flat keyed sub-directory (no listing can narrow it);
+  *     sub-directories without the id column are never touched;
+  *   - [[delete]] / [[purge]] / [[compact]] — the [[Tombstones]] and
+  *     [[Compaction]] passes over those lists.
+  *
+  * The families' writers take their `partitionBy` columns and
+  * sub-directory names from the same constant ([[IndexLayout.SubDir.write]]),
+  * so what the writer lays out and what maintenance lists cannot drift.
+  * BM25 ([[LexIndex]]) reuses the listing and the affected-dir
+  * derivation but keeps its own delete/purge (its tombstones carry the
+  * document length, and its purge stages a negative stats row).
+  */
+final case class IndexLayout(name: String, subDirs: Seq[IndexLayout.SubDir]) {
+  import IndexLayout._
+
+  /** Every existing data directory of the index under `root`. */
+  def leafDirs(spark: SparkSession, root: String): Seq[Path] = {
+    val fs = new Path(root).getFileSystem(
+      spark.sparkContext.hadoopConfiguration)
+    subDirs.flatMap { s =>
+      val top = new Path(s.dir(root))
+      if (!fs.exists(top)) Nil
+      else s.partCols.foldLeft(Seq(top))((dirs, c) =>
+        dirs.flatMap(partitionDirs(fs, _, c)))
+    }
+  }
+
+  /** The data directories holding a row of any id in `tombs` (a
+    * one-column `idCol` frame): per keyed partitioned sub-directory one
+    * semi-join collected to its ≤ fan-out partition tuples, plus every
+    * flat keyed sub-directory.
+    */
+  private[ops] def affectedDirs(
+      spark: SparkSession, root: String, idCol: String, tombs: DataFrame)
+      : Seq[Path] =
+    subDirs.filter(_.keyed).flatMap { s =>
+      if (s.partCols.isEmpty) Seq(new Path(s.dir(root)))
+      else spark.read.parquet(s.dir(root))
+        .select((idCol +: s.partCols).map(col): _*)
+        .join(tombs, Seq(idCol), "left_semi")
+        .select(s.cols: _*).distinct()
+        .collect()
+        .map(r => partitionPath(new Path(s.dir(root)),
+          s.partCols.zip(r.toSeq): _*))
+        .toSeq
+    }
+
+  /** Tombstone ids out of the index ([[Tombstones]]): append-only,
+    * O(|ids|), safe next to concurrent probes, which exclude the set
+    * immediately; [[purge]] is the physical drop.
+    */
+  def delete(ids: DataFrame, idCol: String, root: String): Unit =
+    Tombstones.add(ids, idCol, root)
+
+  /** Physically drop tombstoned rows from [[affectedDirs]] only and
+    * clear the tombstone set, through the shared
+    * [[Compaction.rewriteDirs]] publish protocol. Quiesced-window
+    * maintenance, idempotent across crashes ([[Tombstones]] has the
+    * full story). Returns dirName → (filesBefore, filesAfter).
+    */
+  def purge(
+      spark: SparkSession,
+      root: String,
+      idCol: String,
+      targetBytes: Long = DefaultTargetBytes): Map[String, (Int, Int)] =
+    Tombstones.purge(spark, root, idCol, this, targetBytes, s"$name purge")
+
+  /** Fold append litter back into a bounded file layout: every leaf
+    * directory holding more than `maxFilesPerDir` files is rewritten to
+    * ⌈bytes / targetBytes⌉ files ([[Compaction.compactDirs]]). Rows
+    * are unchanged, so probe results are identical before and after.
+    * Returns per-compacted-directory (files before, after).
+    */
+  def compact(
+      spark: SparkSession,
+      root: String,
+      maxFilesPerDir: Int = 8,
+      targetBytes: Long = DefaultTargetBytes): Map[String, (Int, Int)] =
+    Compaction.compactDirs(spark, leafDirs(spark, root), maxFilesPerDir,
+      targetBytes, s"$name compact")
+}
+
+object IndexLayout {
+
+  /** One sub-directory of an index root (`name` "" is the root itself):
+    * its `partitionBy` columns (empty = a flat directory) and whether
+    * its rows carry the index's id column (`keyed`).
+    */
+  final case class SubDir(
+      name: String,
+      partCols: Seq[String] = Nil,
+      keyed: Boolean = true) {
+    def dir(root: String): String = if (name.isEmpty) root else s"$root/$name"
+    def cols: Seq[Column] = partCols.map(col)
+    /** Write `df` as this sub-directory of `root`, partitioned by its
+      * columns.
+      */
+    def write(df: DataFrame, root: String, mode: String): Unit = {
+      val w = df.write.mode(mode)
+      (if (partCols.isEmpty) w else w.partitionBy(partCols: _*))
+        .parquet(dir(root))
+    }
+  }
+
+  private val DefaultTargetBytes: Long = 128L << 20
+
+  /** The `column=<value>` sub-directories of `parent`. */
+  private[ops] def partitionDirs(
+      fs: FileSystem, parent: Path, column: String): Seq[Path] =
+    fs.listStatus(parent).toSeq
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith(s"$column="))
+      .map(_.getPath)
+
+  /** `parent/c1=v1/c2=v2/…`. */
+  private[ops] def partitionPath(parent: Path, kvs: (String, Any)*): Path =
+    kvs.foldLeft(parent) { case (p, (c, v)) => new Path(p, s"$c=$v") }
+}

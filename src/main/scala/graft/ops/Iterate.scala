@@ -18,15 +18,15 @@ import org.apache.spark.sql.DataFrame
   * burning CPU in `BigInteger.multiplyToomCook3` — while 18
   * iterations planned in milliseconds).
   *
-  * The fix: after checkpointing, re-wrap the materialized RDD in a
-  * fresh DataFrame via `createDataFrame(rdd, schema)`, whose leaf
-  * carries the DEFAULT size estimate instead of the inherited product.
-  * Stats reset to a constant each iteration, so planning cost stays
-  * flat at any iteration count. The extra cost is one
-  * InternalRow↔Row conversion on the checkpointed relation per
-  * downstream read — negligible for the iterate-state relations this
-  * guards (weight/rank/strength tables), which are orders of magnitude
-  * smaller than the corpus.
+  * The fix: after checkpointing, re-leaf the checkpointed plan
+  * ([[org.apache.spark.sql.GraftIterate.resetStats]]) — a new
+  * `LogicalRDD` over the SAME materialized RDD, its output partitioning
+  * and ordering, built WITHOUT the inherited `originStats`, so the leaf
+  * carries the default size estimate instead of the compounded
+  * product. Stats reset to a constant each iteration, so planning cost
+  * stays flat at any iteration count, and the state table keeps its
+  * InternalRow blocks: no Row conversion and no extra pass per
+  * downstream read.
   */
 object Iterate {
 

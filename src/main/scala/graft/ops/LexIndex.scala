@@ -40,6 +40,18 @@ import org.apache.spark.sql.functions._
   */
 object LexIndex {
 
+  private val Postings = IndexLayout.SubDir("postings", Seq("tb"))
+  private val Doclen = IndexLayout.SubDir("doclen")
+  private val Stats = IndexLayout.SubDir("stats", keyed = false)
+
+  /** `postings/` × tb, the flat keyed `doclen/` and the flat `stats/`
+    * (no id column): the listing [[bm25CompactIndex]] folds and the
+    * affected dirs [[bm25PurgeIndex]] rewrites. BM25 keeps its own
+    * delete and purge on top — its tombstones carry `dl`, and the purge
+    * stages a negative stats row.
+    */
+  val Layout: IndexLayout = IndexLayout("bm25", Seq(Postings, Doclen, Stats))
+
   /** Stable term bucket: layout hash only — scores never depend on it. */
   private def termBucket(w: org.apache.spark.sql.Column, buckets: Int) =
     pmod(xxhash64(w), lit(buckets.toLong)).cast("int")
@@ -206,30 +218,29 @@ object LexIndex {
         val rows = exploded.withColumn("tb", termBucket(col("w"), buckets))
         val grouped =
           if (coPartition)
-            agged(DirLayout.appendToDirs(rows, buckets, col("tb"))
+            agged(DirLayout.appendToDirs(rows, buckets, Postings.cols: _*)
               .groupBy(col("tb"), col(idCol), col("w")))
           else
             agged(rows.groupBy(col("tb"), col(idCol), col("w")))
-        grouped.write.mode(mode).partitionBy("tb")
-          .parquet(s"$path/postings")
+        Postings.write(grouped, path, mode)
       },
-      () => docs
-        .select(col(idCol), size(toks).cast("double").as("dl"))
-        .write.mode(mode).parquet(s"$path/doclen"),
-      () => docs
-        .agg(count(lit(1)).as("n"),
-          sum(size(toks).cast("double")).as("sum_dl"))
-        .write.mode(mode).parquet(s"$path/stats"))
+      () => Doclen.write(
+        docs.select(col(idCol), size(toks).cast("double").as("dl")),
+        path, mode),
+      () => Stats.write(
+        docs.agg(count(lit(1)).as("n"),
+          sum(size(toks).cast("double")).as("sum_dl")),
+        path, mode))
     if (concurrent) WorkPool.runAll(writes)
     else writes.foreach(_())
   }
 
   /** Fold append litter back into a bounded file layout — the
-    * [[VectorOps.ivfCompactIndex]] maintenance pass for the lexical
-    * layout: every `postings/tb=` partition, plus the flat `doclen/`
-    * and `stats/` directories, holding more than `maxFilesPerDir`
-    * files is rewritten to ⌈bytes / targetBytes⌉ files (same hidden-
-    * rename publish protocol, shared in [[Compaction.compactDirs]]).
+    * [[IndexLayout.compact]] pass over [[Layout]]: every `postings/tb=`
+    * partition, plus the flat `doclen/` and `stats/` directories,
+    * holding more than `maxFilesPerDir` files is rewritten to
+    * ⌈bytes / targetBytes⌉ files (the hidden-rename publish protocol
+    * of [[Compaction.compactDirs]]).
     * Rows — including the additive stats rows — are unchanged, so
     * probe scores are identical before and after (LexIndexSpec pins
     * it). Returns per-compacted-directory (files before, after).
@@ -239,7 +250,6 @@ object LexIndex {
       path: String,
       maxFilesPerDir: Int = 8,
       targetBytes: Long = 128L << 20): Map[String, (Int, Int)] = {
-    import org.apache.hadoop.fs.Path
     // compacting stats/ would fold a generation-keyed graft-neg row
     // into an anonymous part file, erasing the name probes use to
     // exclude the current generation's published row while its
@@ -248,14 +258,7 @@ object LexIndex {
     require(!Tombstones.exists(spark, path),
       s"bm25CompactIndex: tombstones pending on $path — run " +
         "bm25PurgeIndex to completion before compacting")
-    val postings = new Path(s"$path/postings")
-    val fs = postings.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tbDirs = fs.listStatus(postings)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("tb="))
-      .map(_.getPath).toSeq
-    Compaction.compactDirs(spark,
-      tbDirs :+ new Path(s"$path/doclen") :+ new Path(s"$path/stats"),
-      maxFilesPerDir, targetBytes, "bm25CompactIndex")
+    Layout.compact(spark, path, maxFilesPerDir, targetBytes)
   }
 
   /** Tombstone documents out of the index ([[Tombstones]] — the
@@ -418,17 +421,7 @@ object LexIndex {
       .filter(p => p.getName.startsWith(".neg_stage_") &&
         p.getName != s".neg_stage_$key")
       .foreach(p => fs.delete(p, true)) // superseded, never published
-    Tombstones.purge(spark, path, idCol,
-      candidateDirs = Seq.empty,
-      affectedOf = (tombs, _) => {
-        val affected = spark.read.parquet(s"$path/postings")
-          .select(col(idCol), col("tb"))
-          .join(tombs, Seq(idCol), "left_semi")
-          .select("tb").distinct()
-          .collect().map(_.getInt(0)) // ≤ buckets ints
-        affected.map(b => new Path(s"$path/postings/tb=$b")).toSeq :+
-          new Path(s"$path/doclen")
-      },
+    Tombstones.purge(spark, path, idCol, Layout,
       targetBytes = targetBytes, opName = "bm25PurgeIndex",
       beforeRewrite = _ => {
         val stageValid = fs.exists(new Path(stage, "_SUCCESS")) &&

@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -57,6 +56,18 @@ import org.apache.spark.sql.functions._
   */
 object NearDupIndex {
 
+  private val Buckets = IndexLayout.SubDir("buckets", Seq("band", "bb"))
+  private val Docs = IndexLayout.SubDir("docs", Seq("db"))
+
+  /** The lifecycle entry point over `buckets/` × (band, bb) and
+    * `docs/` × db: `Layout.delete` tombstones ids (probes exclude them
+    * at once from the bucket slice and the docs lookup),
+    * `Layout.purge` drops a deleted doc's nBands bucket rows and its
+    * docs row from exactly the leaves holding them, `Layout.compact`
+    * folds append litter with identical probe results.
+    */
+  val Layout: IndexLayout = IndexLayout("neardup", Seq(Buckets, Docs))
+
   private case class Meta(
       shingleN: Int, numHashes: Int, bands: Int,
       nBuckets: Int, nDocBuckets: Int) {
@@ -97,8 +108,8 @@ object NearDupIndex {
     * `coPartition` (default true) shuffles the delta's rows to the
     * directory layout before the write — ≤ one file per touched dir
     * per append instead of tasks×dirs (the
-    * [[HammingIndex.hammingAppendIndex]] steady-state default; the
-    * GateSteadyProbe litter curve applies verbatim to this layout).
+    * [[HammingIndex.hammingAppendIndex]] steady-state default; its
+    * measured litter curve applies verbatim to this layout).
     */
   def neardupAppendIndex(
       delta: DataFrame,
@@ -178,18 +189,18 @@ object NearDupIndex {
         // ([[DirLayout.toDirs]] — the HammingIndex build treatment):
         // parallel file creation, bounded files per directory
         DirLayout.toDirs(buckets, m.bands * m.nBuckets, col(idCol),
-          col("band"), col("bb"))
+          Buckets.cols: _*)
       else if (coPartition)
         DirLayout.appendToDirs(buckets, m.bands * m.nBuckets,
-          col("band"), col("bb"))
+          Buckets.cols: _*)
       else buckets
     val docRows = sets.withColumn("db",
       pmod(col(idCol).cast("long"), lit(m.nDocBuckets.toLong)).cast("int"))
     val docsLaidOut =
       if (overwrite)
-        DirLayout.toDirs(docRows, m.nDocBuckets, col(idCol), col("db"))
+        DirLayout.toDirs(docRows, m.nDocBuckets, col(idCol), Docs.cols: _*)
       else if (coPartition)
-        DirLayout.appendToDirs(docRows, m.nDocBuckets, col("db"))
+        DirLayout.appendToDirs(docRows, m.nDocBuckets, Docs.cols: _*)
       else docRows
     // the two sub-layouts are independent subtrees — write them
     // concurrently (the LexIndex.writeParts treatment): the buckets
@@ -197,80 +208,9 @@ object NearDupIndex {
     // shingles, so the docs write rides inside the buckets tail
     // instead of serializing a second full shingle pass after it
     WorkPool.runAll(Seq(
-      () => laidOut.write.mode(mode).partitionBy("band", "bb")
-        .parquet(s"$path/buckets"),
-      () => docsLaidOut.write.mode(mode).partitionBy("db")
-        .parquet(s"$path/docs")))
+      () => Buckets.write(laidOut, path, mode),
+      () => Docs.write(docsLaidOut, path, mode)))
   }
-
-  /** Fold append litter back into a bounded file layout — the shared
-    * [[Compaction.compactDirs]] maintenance pass over both
-    * sub-layouts. Rows are unchanged, so probe results are identical
-    * before and after (NearDupIndexSpec pins it).
-    */
-  def neardupCompactIndex(
-      spark: SparkSession,
-      path: String,
-      maxFilesPerDir: Int = 8,
-      targetBytes: Long = 128L << 20): Map[String, (Int, Int)] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val bucketsRoot = new Path(s"$path/buckets")
-    val fs = bucketsRoot.getFileSystem(conf)
-    val bucketDirs = fs.listStatus(bucketsRoot)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("band="))
-      .flatMap(b => fs.listStatus(b.getPath))
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("bb="))
-      .map(_.getPath).toSeq
-    val docsRoot = new Path(s"$path/docs")
-    val docDirs = fs.listStatus(docsRoot)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("db="))
-      .map(_.getPath).toSeq
-    Compaction.compactDirs(spark, bucketDirs ++ docDirs, maxFilesPerDir,
-      targetBytes, "neardupCompactIndex")
-  }
-
-  /** Tombstone ids out of the index ([[Tombstones]] — the family's
-    * delete lifecycle): append-only, O(|ids|), safe next to concurrent
-    * probes, which exclude the set immediately from both the bucket
-    * slice and the docs lookup. [[neardupPurgeIndex]] is the physical
-    * drop.
-    */
-  def neardupDeleteIds(ids: DataFrame, idCol: String, path: String): Unit =
-    Tombstones.add(ids, idCol, path)
-
-  /** Physically drop tombstoned docs' rows — their nBands bucket rows
-    * and one docs row each — and clear the tombstone set. Affected
-    * directories come from two column-pruned semi-joins (≤
-    * bands·nBuckets + nDocBuckets dirs); only those leaves rewrite,
-    * through the shared [[Compaction.rewriteDirs]] publish protocol.
-    * Quiesced-window maintenance, idempotent across crashes.
-    */
-  def neardupPurgeIndex(
-      spark: SparkSession,
-      path: String,
-      idCol: String,
-      targetBytes: Long = 128L << 20): Map[String, (Int, Int)] =
-    Tombstones.purge(spark, path, idCol,
-      candidateDirs = Seq.empty,
-      affectedOf = (tombs, _) => {
-        val bucketDirs = spark.read.parquet(s"$path/buckets")
-          .select(col(idCol), col("band"), col("bb"))
-          .join(tombs, Seq(idCol), "left_semi")
-          .select("band", "bb").distinct()
-          .collect() // ≤ bands·nBuckets pairs
-          .map(r => new Path(
-            s"$path/buckets/band=${r.getInt(0)}/bb=${r.getInt(1)}"))
-          .toSeq
-        val docDirs = spark.read.parquet(s"$path/docs")
-          .select(col(idCol), col("db"))
-          .join(tombs, Seq(idCol), "left_semi")
-          .select("db").distinct()
-          .collect() // ≤ nDocBuckets values
-          .map(r => new Path(s"$path/docs/db=${r.getInt(0)}"))
-          .toSeq
-        bucketDirs ++ docDirs
-      },
-      targetBytes = targetBytes, opName = "neardupPurgeIndex")
 
   /** Near-duplicates of a query batch served from the index: every
     * `(q_id, n_id, jaccard)` with exact shingle-set Jaccard ≥
@@ -361,7 +301,7 @@ object NearDupIndex {
         .reduce(_ || _)
     }
     val idx = Tombstones.excludeFrom(
-      spark.read.parquet(s"$path/buckets").filter(prune), // pruned at listing
+      spark.read.parquet(Buckets.dir(path)).filter(prune), // pruned at listing
       path, idCol)
     // Skew guard on the INDEX side, scan-path-identical: rank-prune to
     // maxBucket+1 rows per (band, bucket) — WindowGroupLimit bounds a
@@ -384,7 +324,7 @@ object NearDupIndex {
       .distinct() // each pair verified once, however many bands agree
     val docsRel = {
       val all = Tombstones.excludeFrom(
-        spark.read.parquet(s"$path/docs"), path, idCol)
+        spark.read.parquet(Docs.dir(path)), path, idCol)
       if (!pruneDocLookup) all
       else {
         val dbs = candidates

@@ -225,15 +225,8 @@ object Pq {
       model: PqModel,
       centroids: Array[Array[Double]]): Unit = {
     require(centroids.nonEmpty, "pqIvfWriteIndex: empty centroid table")
-    VectorOps.assignClusters(df, vecCol, VectorOps.indexedCents(centroids))
-      .select(col(idCol), codesCol(col("dv"), model).as("codes"),
-        col("dv"), col("nrm"), col("cluster"))
-      // same drop contract as pqEncode: a row the kernel can't code
-      // (model dim ≠ corpus dim, zero norm) must not reach the index —
-      // a NULL adist would sort NULLS FIRST ahead of every real
-      // candidate in the shortlist.
-      .filter(col("codes").isNotNull)
-      .write.mode("overwrite").partitionBy("cluster").parquet(path)
+    VectorOps.Clusters.write(codedRows(df, idCol, vecCol, model, centroids),
+      path, "overwrite")
   }
 
   /** Append a vector delta to a persisted IVF-PQ index — the
@@ -253,7 +246,10 @@ object Pq {
     * delta's `dv` is aligned to the index's recorded element type (same
     * parquet single-type-per-relation constraint, same cached footer
     * read as the exact path). `autoCompact` has the exact path's
-    * publish caveat: opt-in, for quiesced maintenance windows.
+    * publish caveat: opt-in, for quiesced maintenance windows. The rest
+    * of the lifecycle — delete, purge, compaction — is the exact
+    * path's [[VectorOps.IvfLayout]]: the two layouts are the same
+    * `cluster=` partitioning.
     */
   def pqIvfAppendIndex(
       delta: DataFrame,
@@ -266,29 +262,11 @@ object Pq {
       maxFilesPerCluster: Int = 8,
       coPartition: Boolean = true): Map[String, (Int, Int)] = {
     require(centroids.nonEmpty, "pqIvfAppendIndex: empty centroid table")
-    val indexElem = VectorOps.recordedDvType(delta.sparkSession, path)
-    val assigned = VectorOps
-      .assignClusters(delta, vecCol, VectorOps.indexedCents(centroids))
-      .select(col(idCol), codesCol(col("dv"), model).as("codes"),
-        col("dv"), col("nrm"), col("cluster"))
-      .filter(col("codes").isNotNull) // same drop contract as the write
-    val dvAligned = indexElem match {
-      case Some(t) if assigned.schema("dv").dataType != t => col("dv").cast(t)
-      case _ => col("dv")
-    }
-    val written = indexElem.getOrElse(assigned.schema("dv").dataType)
-    val rows = assigned
-      .select(col(idCol), col("codes"), dvAligned.as("dv"), col("nrm"),
-        col("cluster"))
-    // the ivfAppendIndex co-partition treatment (see there)
-    val laidOut =
-      if (coPartition)
-        DirLayout.appendToDirs(rows, centroids.length, col("cluster"))
-      else rows
-    laidOut.write.mode("append").partitionBy("cluster").parquet(path)
-    VectorOps.recordDvType(path, written)
+    VectorOps.writeClusterRows(
+      codedRows(delta, idCol, vecCol, model, centroids),
+      path, stageDir = None, centroids.length, coPartition)
     if (autoCompact)
-      pqIvfCompactIndex(delta.sparkSession, path, maxFilesPerCluster)
+      VectorOps.IvfLayout.compact(delta.sparkSession, path, maxFilesPerCluster)
     else Map.empty
   }
 
@@ -305,75 +283,27 @@ object Pq {
       model: PqModel,
       centroids: Array[Array[Double]]): Unit = {
     require(centroids.nonEmpty, "pqIvfStageAppend: empty centroid table")
-    val indexElem = VectorOps.recordedDvType(delta.sparkSession, indexPath)
-    val assigned = VectorOps
-      .assignClusters(delta, vecCol, VectorOps.indexedCents(centroids))
+    VectorOps.writeClusterRows(
+      codedRows(delta, idCol, vecCol, model, centroids),
+      indexPath, Some(stagePath), centroids.length, coPartition = true)
+  }
+
+  /** (id, codes, dv, nrm, cluster) under the frozen centroids and model,
+    * with pqEncode's drop contract: a row the kernel can't code (model
+    * dim ≠ corpus dim, zero norm) must not reach the index — a NULL
+    * adist would sort NULLS FIRST ahead of every real candidate in the
+    * shortlist.
+    */
+  private def codedRows(
+      df: DataFrame,
+      idCol: String,
+      vecCol: String,
+      model: PqModel,
+      centroids: Array[Array[Double]]): DataFrame =
+    VectorOps.assignClusters(df, vecCol, VectorOps.indexedCents(centroids))
       .select(col(idCol), codesCol(col("dv"), model).as("codes"),
         col("dv"), col("nrm"), col("cluster"))
       .filter(col("codes").isNotNull)
-    val dvAligned = indexElem match {
-      case Some(t) if assigned.schema("dv").dataType != t => col("dv").cast(t)
-      case _ => col("dv")
-    }
-    // co-partition the staged rows to the cluster layout (explicit
-    // count — see DirLayout): parallel file creation, <= 1 file per
-    // touched cluster for the publish renames
-    DirLayout.appendToDirs(
-      assigned
-        .select(col(idCol), col("codes"), dvAligned.as("dv"), col("nrm"),
-          col("cluster")),
-      centroids.length, col("cluster"))
-      .write.mode("overwrite").partitionBy("cluster").parquet(stagePath)
-  }
-
-  /** Fold [[pqIvfAppendIndex]]/`pqIndexSink` append litter back into a
-    * bounded per-cluster file count — the compressed twin of
-    * [[VectorOps.ivfCompactIndex]], closing the last asymmetry in the
-    * vector-store lifecycle (a long-lived streaming corpus otherwise
-    * accumulates unbounded small files per cluster until an offline
-    * rebuild). Same `cluster=` layout, same shared
-    * [[Compaction.compactDirs]] publish protocol (dot-hidden temp,
-    * checked renames, crash-recoverable), so the index CONTENT — codes,
-    * vectors, cluster routing, and therefore every
-    * [[pqIvfShortlistFrom]]/[[pqIvfProbeFrom]] result — is bit-identical
-    * before and after; only file counts move (PqSpec pins both).
-    * Run in a quiesced maintenance window like any file-level
-    * compaction; a probe mid-rename can see a partially-hidden cluster.
-    */
-  def pqIvfCompactIndex(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      maxFilesPerCluster: Int = 8,
-      targetBytes: Long = 128L << 20): Map[String, (Int, Int)] = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val clusters = fs.listStatus(root)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("cluster="))
-      .map(_.getPath).toSeq
-    Compaction.compactDirs(spark, clusters, maxFilesPerCluster,
-      targetBytes, "pqIvfCompactIndex")
-  }
-
-  /** Tombstone ids out of a persisted IVF-PQ index — the layout shares
-    * the exact path's `cluster=` partitioning, so the whole delete
-    * lifecycle is [[VectorOps.ivfDeleteIds]]/[[VectorOps.ivfPurgeIndex]]
-    * verbatim: append-only tombstones, immediate probe-side exclusion,
-    * physical drop confined to the affected clusters. Exposed under the
-    * PQ name so the compressed layout's lifecycle reads complete.
-    */
-  def pqIvfDeleteIds(ids: DataFrame, idCol: String, path: String): Unit =
-    VectorOps.ivfDeleteIds(ids, idCol, path)
-
-  /** [[VectorOps.ivfPurgeIndex]] for the compressed layout (identical
-    * mechanics — see [[pqIvfDeleteIds]]).
-    */
-  def pqIvfPurgeIndex(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      idCol: String,
-      targetBytes: Long = 128L << 20): Map[String, (Int, Int)] =
-    VectorOps.ivfPurgeIndex(spark, path, idCol, targetBytes)
 
   /** Stage 1 of the probe, exposed for plan inspection: the pruned ADC
     * scan — (id, adist) over the query's nProbe clusters, reading only

@@ -183,8 +183,8 @@ object Similarity {
   /** Per-table per-row sketch cost in posting-row equivalents, PER
     * PLANE: each extra table re-hashes the vector against all `planes`
     * hyperplanes (planes × dim multiplies) across the three map passes
-    * of the candidate plan. Calibrated on the sf0.1 twin corpus
-    * (tools/DirectedProbe): at b=13, (t=21, p=0) measured 2.12 s,
+    * of the candidate plan. Calibrated on the sf0.1 twin corpus: at
+    * b=13, (t=21, p=0) measured 2.12 s,
     * (t=12, p=1) 1.40 s, (t=8, p=3) 1.27 s, (t=6, full probe) 1.88 s —
     * a pure posting-volume model (α = 0) inverts that ordering and
     * picks the slow many-tables/no-probe corner; α ≈ 0.4 reproduces it.

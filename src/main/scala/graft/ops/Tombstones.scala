@@ -4,12 +4,10 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Delete/tombstone lifecycle for the persisted-index family
-  * ([[VectorOps.ivfWriteIndex]] exact IVF, [[Pq.pqIvfWriteIndex]]
-  * IVF-PQ, [[LexIndex]] BM25, [[HammingIndex]] MIH) — the governance
-  * gap a takedown / right-to-be-forgotten request hits first: every
-  * layout supported build → append → stream → compact, but removing a
-  * document id used to mean a full index rebuild.
+/** Delete/tombstone lifecycle for the persisted-index family (exact
+  * IVF, IVF-PQ, BM25, Hamming MIH, near-dup — see [[IndexLayout]]):
+  * the governance gap a takedown / right-to-be-forgotten request hits
+  * first, closed without a full index rebuild.
   *
   * The mechanism is a tombstone relation per index root:
   *
@@ -26,15 +24,13 @@ import org.apache.spark.sql.functions._
   *     clusters / probed buckets), never the whole index, and skips
   *     entirely when no tombstones exist (one driver `exists` check).
   *   - Purge: the physical drop, run in a quiesced maintenance window
-  *     like compaction. Only directories that actually CONTAIN
-  *     tombstoned rows are rewritten (found by one column-pruned
-  *     semi-join over the index's id column), through the same
-  *     checked hide-rename publish protocol
+  *     like compaction. Only the [[IndexLayout.affectedDirs]] — the
+  *     directories that CONTAIN tombstoned rows — are rewritten,
+  *     through the checked hide-rename publish protocol
   *     ([[Compaction.rewriteDirs]]); the tombstone set is cleared only
-  *     after every affected directory published, so a crash anywhere
-  *     leaves probes correct (anti-join still live) and the purge
-  *     re-runnable (idempotent: already-purged dirs no longer match
-  *     the semi-join).
+  *     after every one published, so a crash anywhere leaves probes
+  *     correct (anti-join still live) and the purge re-runnable
+  *     (already-purged dirs no longer match the semi-join).
   *
   * Duplicate tombstone rows are legal (re-deleting an id appends
   * again); every reader goes through [[ids]]' distinct. The sketch
@@ -101,22 +97,17 @@ object Tombstones {
         s"Tombstones.clear: could not delete $p")
   }
 
-  /** The shared physical-drop pass: among `candidateDirs` (an index
-    * layout's data directories), rewrite exactly those whose rows
-    * contain a tombstoned id, dropping the matching rows, then clear
-    * the tombstone set. `affected` maps the layout's relation to the
-    * candidate dirs that need rewriting (a column-pruned semi-join on
-    * the layout's partition columns — cheap: partition columns come
-    * from directory names, so the scan reads only the id column).
-    * Returns dirName → (filesBefore, filesAfter) for the dirs
-    * rewritten.
+  /** The shared physical-drop pass: rewrite exactly the `layout`'s
+    * [[IndexLayout.affectedDirs]] — the directories whose rows contain
+    * a tombstoned id — dropping the matching rows, then clear the
+    * tombstone set. Returns dirName → (filesBefore, filesAfter) for the
+    * dirs rewritten.
     */
   private[ops] def purge(
       spark: SparkSession,
       indexRoot: String,
       idCol: String,
-      candidateDirs: Seq[Path],
-      affectedOf: (DataFrame, Seq[Path]) => Seq[Path],
+      layout: IndexLayout,
       targetBytes: Long,
       opName: String,
       beforeRewrite: DataFrame => Unit = _ => (),
@@ -137,7 +128,7 @@ object Tombstones {
           // negative stats row here) and publish it before the tombstone
           // clear — both run inside the same crash-idempotent protocol
           beforeRewrite(tombs)
-          val affected = affectedOf(tombs, candidateDirs)
+          val affected = layout.affectedDirs(spark, indexRoot, idCol, tombs)
           val report = Compaction.rewriteDirs(spark, affected, targetBytes,
             opName,
             shouldRewrite = (_, _) => true,

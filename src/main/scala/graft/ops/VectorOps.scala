@@ -2032,48 +2032,33 @@ object VectorOps {
     val base = kmeansCentroidsRefined(df, vecCol, nCentroids, kmeansIters,
       seed, refineIters = refineIters)
     require(base.nonEmpty, "ivfWriteIndex: empty corpus (or all zero-norm vectors)")
-    assignClusters(df, vecCol, indexedCents(base))
-      .select(col(idCol), col("dv"), col("nrm"), col("cluster"))
-      .write.mode("overwrite").partitionBy("cluster").parquet(path)
+    Clusters.write(assignClusters(df, vecCol, indexedCents(base))
+      .select(col(idCol), col("dv"), col("nrm"), col("cluster")),
+      path, "overwrite")
     base
   }
 
-  /** Top-k cosine probe against a persisted [[ivfWriteIndex]] index:
-    * reads ONLY the query's `nProbe` nearest cluster partitions
-    * (`cluster` is a partition column, so the filter prunes at file
-    * listing — no data from other clusters is opened, let alone
-    * scanned). Same result as [[ivfTopK]] with the same centroids.
+  /** The index root itself × `cluster` — the layout exact IVF and
+    * [[Pq]]'s IVF-PQ share.
     */
-  /** Per-path `dv` element type of persisted IVF indexes — an index's
-    * type is fixed at creation, so [[ivfAppendIndex]] reads the parquet
-    * footer once per path per JVM instead of once per append batch.
+  private[ops] val Clusters = IndexLayout.SubDir("", Seq("cluster"))
+
+  /** The lifecycle entry point for both `cluster=`-partitioned indexes
+    * (exact IVF and IVF-PQ): `delete` tombstones ids (probes exclude
+    * them at once), `purge` rewrites only the clusters holding a
+    * tombstoned id, `compact` folds append litter — a probe's pruned
+    * listing stays `nProbe` directories but opens one reader per tiny
+    * file inside them. Purge and compaction want quiesced probes and
+    * preserve probe results bit-identically.
+    */
+  val IvfLayout: IndexLayout = IndexLayout("ivf", Seq(Clusters))
+
+  /** Per-path `dv` element type of persisted IVF indexes — fixed at
+    * creation, so [[writeClusterRows]] reads the parquet footer once per
+    * path per JVM instead of once per append batch.
     */
   private val ivfDvTypeCache = new java.util.concurrent.ConcurrentHashMap[
     String, org.apache.spark.sql.types.DataType]()
-
-  /** The index's recorded `dv` type (footer read, cached per path per
-    * JVM), or None when the index doesn't exist yet. Shared by the
-    * exact and PQ append paths — both layouts fix their dv type at
-    * creation.
-    */
-  private[ops] def recordedDvType(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String): Option[org.apache.spark.sql.types.DataType] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p))
-      Some(ivfDvTypeCache.computeIfAbsent(path,
-        _ => spark.read.parquet(path).schema("dv").dataType))
-    else {
-      // deleting and re-creating an index at the same path drops the entry
-      ivfDvTypeCache.remove(path)
-      None
-    }
-  }
-
-  private[ops] def recordDvType(
-      path: String, t: org.apache.spark.sql.types.DataType): Unit =
-    ivfDvTypeCache.put(path, t)
 
   /** Append a vector delta to a persisted IVF index: each new vector is
     * assigned to its nearest EXISTING centroid (map-only — the centroid
@@ -2089,7 +2074,7 @@ object VectorOps {
     * 100 TB shape: the delta is one map-only pass + a partitioned
     * append; the existing index is never read, let alone re-shuffled.
     *
-    * `autoCompact = true` runs [[ivfCompactIndex]] after the append
+    * `autoCompact = true` runs `IvfLayout.compact` after the append
     * whenever a cluster's file count crossed `maxFilesPerCluster` —
     * the measured probe-vs-litter curve (SCALE.md `ivf_litter`: 98 ms
     * fresh → 206 ms at 33 files/cluster, pure per-file reader
@@ -2103,7 +2088,7 @@ object VectorOps {
     * partial file set — so the trigger is OPT-IN: the default append
     * is always safe to run concurrently with probes, and callers who
     * own a maintenance window (no in-flight probes) pass
-    * `autoCompact = true` or schedule [[ivfCompactIndex]] themselves.
+    * `autoCompact = true` or schedule `IvfLayout.compact` themselves.
     * Returns the compaction report (empty when nothing crossed the
     * knee or `autoCompact` is off).
     */
@@ -2117,43 +2102,12 @@ object VectorOps {
       maxFilesPerCluster: Int = 8,
       coPartition: Boolean = true): Map[String, (Int, Int)] = {
     require(centroids.nonEmpty, "ivfAppendIndex: empty centroid table")
-    // The index stores `dv` in the element type of the corpus that built
-    // it (float stays float — see ivfWriteIndex). Appended files must
-    // carry the SAME physical type: parquet readers do not reconcile a
-    // float file with a double file in one scan. Align the delta to the
-    // index's recorded type; in the normal case (delta typed like the
-    // original corpus, or the first append creating the index) this is
-    // a no-op column reference. The recorded type is remembered per
-    // path for the life of the JVM: an index's dv type is fixed at
-    // creation (appends only ever write the aligned type), so the
-    // steady-append pattern pays the parquet footer read ONCE, not per
-    // batch. The cache is trusted only while the index still exists —
-    // deleting and re-creating an index at the same path drops the
-    // entry.
-    val indexElem = recordedDvType(delta.sparkSession, path)
-    val assigned = assignClusters(delta, vecCol, indexedCents(centroids))
-    val dvAligned = indexElem match {
-      case Some(t) if assigned.schema("dv").dataType != t => col("dv").cast(t)
-      case _ => col("dv")
-    }
-    val written = indexElem.getOrElse(assigned.schema("dv").dataType)
-    val rows = assigned
-      .select(col(idCol), dvAligned.as("dv"), col("nrm"), col("cluster"))
-    // co-partition with the cluster layout before the dynamic-partition
-    // write — ≤ one file per touched cluster per append instead of
-    // tasks×clusters (the HammingIndex.hammingAppendIndex steady-state
-    // treatment: tools/GateSteadyProbe measured the litter curve); the
-    // shuffle is delta-sized, and corpus-scale deltas can opt out
-    val laidOut =
-      if (coPartition)
-        DirLayout.appendToDirs(rows, centroids.length, col("cluster"))
-      else rows
-    laidOut.write.mode("append").partitionBy("cluster").parquet(path)
-    // index now exists with `written` as its dv type — future appends
-    // in this JVM skip the footer read entirely
-    recordDvType(path, written)
+    writeClusterRows(
+      assignClusters(delta, vecCol, indexedCents(centroids))
+        .select(col(idCol), col("dv"), col("nrm"), col("cluster")),
+      path, stageDir = None, centroids.length, coPartition)
     if (autoCompact)
-      ivfCompactIndex(delta.sparkSession, path, maxFilesPerCluster)
+      IvfLayout.compact(delta.sparkSession, path, maxFilesPerCluster)
     else Map.empty
   }
 
@@ -2162,8 +2116,7 @@ object VectorOps {
     * aligned to the index's recorded element type — written to a
     * staging root mirroring the index layout (`cluster=` dirs), to be
     * published into the live index by file rename, never by a direct
-    * append. The dv-type cache is consulted for the REAL index path
-    * and never populated for the stage.
+    * append.
     */
   private[ops] def ivfStageAppend(
       delta: DataFrame,
@@ -2173,99 +2126,70 @@ object VectorOps {
       stagePath: String,
       centroids: Array[Array[Double]]): Unit = {
     require(centroids.nonEmpty, "ivfStageAppend: empty centroid table")
-    val indexElem = recordedDvType(delta.sparkSession, indexPath)
-    val assigned = assignClusters(delta, vecCol, indexedCents(centroids))
-    val dvAligned = indexElem match {
-      case Some(t) if assigned.schema("dv").dataType != t => col("dv").cast(t)
-      case _ => col("dv")
-    }
-    // co-partition to the cluster layout (explicit-count — see
-    // DirLayout) so the staged files are ≤ 1 per touched cluster and
-    // their creation parallelizes instead of serializing on whatever
-    // single task the delta scan produced
-    DirLayout.appendToDirs(
-      assigned
-        .select(col(idCol), dvAligned.as("dv"), col("nrm"), col("cluster")),
-      centroids.length, col("cluster"))
-      .write.mode("overwrite").partitionBy("cluster").parquet(stagePath)
+    writeClusterRows(
+      assignClusters(delta, vecCol, indexedCents(centroids))
+        .select(col(idCol), col("dv"), col("nrm"), col("cluster")),
+      indexPath, Some(stagePath), centroids.length, coPartition = true)
   }
 
-  /** Fold [[ivfAppendIndex]]'s per-batch files back into a bounded
-    * per-cluster layout: every `cluster=` partition holding more than
-    * `maxFilesPerCluster` data files is rewritten to
-    * ⌈bytes / targetBytes⌉ files. Without this, steady appends give the
-    * index itself the small-file problem the ETL compaction solves for
-    * data — a probe's pruned listing stays `nProbe` DIRECTORIES but
-    * opens one reader per tiny file inside them. The partition layout
-    * (and therefore probe pruning and results) is unchanged; only file
-    * counts move. Returns per-compacted-cluster (files before, after).
+  /** The one writer behind the exact and PQ append and stage paths.
+    * `rows` carries `dv` in the delta's element type; the index stores
+    * `dv` in the element type of the corpus that built it (float stays
+    * float — see [[ivfWriteIndex]]), and parquet readers do not
+    * reconcile a float file with a double file in one scan, so `dv` is
+    * cast to the index's recorded type (a no-op column reference in the
+    * normal case). The recorded type is cached per path for the life
+    * of the JVM: the steady-append pattern pays the footer read once,
+    * not per batch, and the cache is trusted only while the index
+    * exists.
     *
-    * Publish protocol per cluster: compacted files are written to a
-    * dot-prefixed temp dir (hidden from concurrent readers' listings),
-    * originals are renamed to hidden names, the compacted files move
-    * in, and only then are the hidden originals deleted — so a crash
-    * at any step leaves every row recoverable (a reader in the rename
-    * window can see a partially-hidden cluster, making this a
-    * maintenance pass to run when the cluster's probes are quiesced,
-    * like any file-level compaction). Driver work is file METADATA only
-    * (list/rename per cluster); the data rewrite is a distributed read
-    * + write of just the oversized clusters.
+    * The rows co-partition with the cluster layout before the
+    * dynamic-partition write — ≤ one file per touched cluster instead
+    * of tasks×clusters, with file creation parallelized (the
+    * [[HammingIndex.hammingAppendIndex]] steady-state treatment; the
+    * shuffle is delta-sized). `coPartition = false` opts a corpus-scale
+    * append out.
+    *
+    * `stageDir = None` appends into the index at `indexPath` and
+    * records its dv type; `Some(dir)` overwrites the staging root
+    * `dir` and leaves the cache alone.
     */
-  def ivfCompactIndex(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      maxFilesPerCluster: Int = 8,
-      targetBytes: Long = 128L << 20): Map[String, (Int, Int)] = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val clusters = fs.listStatus(root)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("cluster="))
-      .map(_.getPath).toSeq
-    // the publish protocol lives in the shared Compaction helper (also
-    // behind LexIndex.bm25CompactIndex)
-    Compaction.compactDirs(spark, clusters, maxFilesPerCluster,
-      targetBytes, "ivfCompactIndex")
+  private[ops] def writeClusterRows(
+      rows: DataFrame,
+      indexPath: String,
+      stageDir: Option[String],
+      nClusters: Int,
+      coPartition: Boolean): Unit = {
+    val spark = rows.sparkSession
+    val p = new org.apache.hadoop.fs.Path(indexPath)
+    val indexElem =
+      if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
+        Some(ivfDvTypeCache.computeIfAbsent(indexPath,
+          _ => spark.read.parquet(indexPath).schema("dv").dataType))
+      else {
+        // deleting and re-creating an index at the same path drops the entry
+        ivfDvTypeCache.remove(indexPath)
+        None
+      }
+    val aligned = indexElem match {
+      case Some(t) if rows.schema("dv").dataType != t =>
+        rows.withColumn("dv", col("dv").cast(t))
+      case _ => rows
+    }
+    val laidOut =
+      if (coPartition)
+        DirLayout.appendToDirs(aligned, nClusters, Clusters.cols: _*)
+      else aligned
+    stageDir match {
+      case Some(dir) => Clusters.write(laidOut, dir, "overwrite")
+      case None =>
+        Clusters.write(laidOut, indexPath, "append")
+        // the index now exists with this dv type — later appends in
+        // this JVM skip the footer read entirely
+        ivfDvTypeCache.put(indexPath,
+          indexElem.getOrElse(rows.schema("dv").dataType))
+    }
   }
-
-  /** Tombstone ids out of a persisted `cluster=`-partitioned index
-    * (exact IVF here and [[Pq]]'s IVF-PQ — both share the layout, and
-    * a delete never reads index data, so one implementation serves
-    * both): appends to `_graft_tombstones/` under the index root
-    * ([[Tombstones]]). Every probe excludes the set immediately;
-    * [[ivfPurgeIndex]] is the physical drop. O(|ids|), concurrent-
-    * probe-safe (unlike compaction/purge, which want a quiesced
-    * window).
-    */
-  def ivfDeleteIds(ids: DataFrame, idCol: String, path: String): Unit =
-    Tombstones.add(ids, idCol, path)
-
-  /** Physically drop tombstoned rows from a `cluster=`-partitioned
-    * index (exact IVF or IVF-PQ) and clear the tombstone set. Only
-    * clusters that actually hold a tombstoned id are rewritten — found
-    * by one column-pruned scan of (id, cluster), where `cluster` comes
-    * from directory names — through the [[Compaction.rewriteDirs]]
-    * publish protocol. Quiesced-window maintenance, idempotent across
-    * crashes ([[Tombstones]] has the full story). Returns
-    * clusterDir → (filesBefore, filesAfter).
-    */
-  def ivfPurgeIndex(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      idCol: String,
-      targetBytes: Long = 128L << 20): Map[String, (Int, Int)] =
-    Tombstones.purge(spark, path, idCol,
-      candidateDirs = Seq.empty, // derived from the affected clusters
-      affectedOf = (tombs, _) => {
-        val affected = spark.read.parquet(path)
-          .select(col(idCol), col("cluster"))
-          .join(tombs, Seq(idCol), "left_semi")
-          .select("cluster").distinct()
-          .collect().map(_.getInt(0)) // ≤ nClusters ints
-        affected.map(c =>
-          new org.apache.hadoop.fs.Path(path, s"cluster=$c")).toSeq
-      },
-      targetBytes = targetBytes, opName = "ivfPurgeIndex")
 
   /** The index relation with tombstoned ids excluded — what every
     * probe should scan. Warm-workload callers (the
@@ -2279,6 +2203,12 @@ object VectorOps {
       idCol: String): DataFrame =
     Tombstones.excludeFrom(spark.read.parquet(path), path, idCol)
 
+  /** Top-k cosine probe against a persisted [[ivfWriteIndex]] index:
+    * reads ONLY the query's `nProbe` nearest cluster partitions
+    * (`cluster` is a partition column, so the filter prunes at file
+    * listing — no data from other clusters is opened, let alone
+    * scanned). Same result as [[ivfTopK]] with the same centroids.
+    */
   def ivfProbeIndex(
       spark: org.apache.spark.sql.SparkSession,
       path: String,

@@ -3,43 +3,58 @@ package graft.ops
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 
-/** One bounded daemon pool for overlapping INDEPENDENT Spark actions
-  * from the driver (guide §2.6) — the convention [[CorpusUpsert]] and
-  * [[Compaction]] already follow with private pools, shared so the
-  * remaining call sites (query-glue bootstraps, concurrent index
-  * writes) stop blocking on `ExecutionContext.global`, whose
+/** A bounded daemon pool for overlapping INDEPENDENT Spark actions from
+  * the driver (guide §2.6), instead of `ExecutionContext.global`, whose
   * work-stealing pool interleaves blocking Spark awaits unpredictably
-  * under load. Spark actions are safe to launch from multiple driver
-  * threads against one session; 8 in-flight jobs is plenty to fill a
-  * scheduler tail without starving it.
+  * under load. Spark actions (and cached, thread-safe FileSystem
+  * calls) are safe to launch from multiple driver threads against one
+  * session; 8 in-flight units is plenty to fill a scheduler tail
+  * without starving it. Daemon threads, so a driver shutdown never
+  * hangs on one.
   */
-private[graft] object WorkPool {
+private[graft] final class WorkPool(threadName: String) {
 
-  private lazy val pool: ExecutionContext =
+  private lazy val ec: ExecutionContext =
     ExecutionContext.fromExecutorService(
       java.util.concurrent.Executors.newFixedThreadPool(8,
         (r: Runnable) => {
-          val t = new Thread(r, "graft-work-pool")
+          val t = new Thread(r, threadName)
           t.setDaemon(true)
           t
         }))
 
-  private[graft] def submit[A](body: => A): Future[A] =
-    Future(body)(pool)
+  def submit[A](body: => A): Future[A] = Future(body)(ec)
+
+  /** `f` over every element concurrently, joined ([[WorkPool.joinAll]]). */
+  def mapAll[A, B](xs: Seq[A])(f: A => B): Seq[B] =
+    WorkPool.joinAll(xs.map(x => submit(f(x))))
+}
+
+/** The shared pool (query-glue bootstraps, concurrent index writes)
+  * and the join every pool goes through. [[CorpusUpsert]]'s per-index
+  * pool and [[Compaction]]'s per-directory pool stay separate from it
+  * and from each other: their submissions nest (maintain → purge →
+  * rewriteDirs, applyBatch → BM25 stage → [[runAll]]), and one bounded
+  * pool could starve itself.
+  */
+private[graft] object WorkPool {
+
+  private val shared = new WorkPool("graft-work-pool")
+
+  private[graft] def submit[A](body: => A): Future[A] = shared.submit(body)
 
   private[graft] def await[A](f: Future[A]): A =
     Await.result(f, Duration.Inf)
 
-  /** Run every unit to completion, concurrently, and only then
-    * return — or rethrow the FIRST failure, after all units have been
-    * joined (never unwinding while sibling Spark jobs still run, the
-    * half-awaited-futures hazard `concurrently` had before round 18).
+  /** Join EVERY future, then return their results in order — or
+    * rethrow the first failure (in submission order) only after all of
+    * them finished, never unwinding while sibling Spark jobs or file
+    * renames still run (the half-awaited-futures hazard).
     */
-  private[graft] def runAll(units: Seq[() => Unit]): Unit = {
-    val fs = units.map(u => submit(u()))
-    val results = fs.map(f =>
-      scala.util.Try(Await.result(f, Duration.Inf)))
-    results.collectFirst { case scala.util.Failure(e) => throw e }
-    ()
-  }
+  private[graft] def joinAll[A](fs: Seq[Future[A]]): Seq[A] =
+    fs.map(f => scala.util.Try(await(f))).map(_.get)
+
+  /** Run every unit to completion, concurrently. */
+  private[graft] def runAll(units: Seq[() => Unit]): Unit =
+    shared.mapAll(units)(_())
 }

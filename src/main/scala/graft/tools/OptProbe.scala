@@ -184,11 +184,11 @@ object OptProbe {
          while (it.hasNext) { val f = it.next(); if (!f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith(".")) n += 1 }
          n}}")
       t("ham delete 1/7") {
-        HammingIndex.hammingDeleteIds(
+        HammingIndex.Layout.delete(
           e.filter(col("vec_id") % 7 === 3), "vec_id", root)
       }
       t("ham purge") {
-        HammingIndex.hammingPurgeIndex(spark, root, "vec_id")
+        HammingIndex.Layout.purge(spark, root, "vec_id")
       }
       t("ham probe corpus r=15") {
         HammingIndex.hammingProbeIndex(spark, e, "vec_id", "embedding",

@@ -506,8 +506,8 @@ object ScaleProbe {
       // Warm BOTH scales before timing. Through round 7 only the 1x dir
       // was warmed, so the kx run paid the cold first read of the kx
       // parquet — at 64x that page-cache asymmetry dominated several
-      // ratios (q22 measured 9.2 cold vs ~4 warm on the same build,
-      // tools/Q22Probe). The ratio hunts quadratic/skew terms in the
+      // ratios (q22 measured 9.2 cold vs ~4 warm on the same build).
+      // The ratio hunts quadratic/skew terms in the
       // PLAN; input I/O scales linearly with replication by
       // construction, so both sides warm isolates the plan term.
       time(q, dir) // warm 1x
@@ -1058,7 +1058,7 @@ object ScaleProbe {
       val littered = probeLat()
       val f1 = files()
       val t0 = System.nanoTime()
-      graft.ops.VectorOps.ivfCompactIndex(spark, path)
+      graft.ops.VectorOps.IvfLayout.compact(spark, path)
       val compactSec = (System.nanoTime() - t0) / 1e9
       val compacted = probeLat()
       val f2 = files()

@@ -182,7 +182,7 @@ class AudioHashSpec extends AnyFunSuite {
         .filter(col("q_id") < col("n_id"))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(probe() === pairs)
-    HammingIndex.hammingDeleteIds(Seq(2L).toDF("id"), "id", root)
+    HammingIndex.Layout.delete(Seq(2L).toDF("id"), "id", root)
     assert(probe() === Set((1L, 3L), (2L, 3L)))
   }
 

@@ -664,9 +664,9 @@ class CorpusUpsertSpec extends AnyFunSuite {
     CorpusUpsert.applyBatch(revised, "doc_id", "rev1", r.ups, r.targets)
     val before = probeAll(r)
     assert(LexIndex.bm25PurgeIndex(spark, r.bm25, Rid).nonEmpty)
-    assert(VectorOps.ivfPurgeIndex(spark, r.ivf, Rid).nonEmpty)
-    assert(Pq.pqIvfPurgeIndex(spark, r.pq, Rid).nonEmpty)
-    assert(HammingIndex.hammingPurgeIndex(spark, r.ham, Rid).nonEmpty)
+    assert(VectorOps.IvfLayout.purge(spark, r.ivf, Rid).nonEmpty)
+    assert(VectorOps.IvfLayout.purge(spark, r.pq, Rid).nonEmpty)
+    assert(HammingIndex.Layout.purge(spark, r.ham, Rid).nonEmpty)
     Seq(r.bm25, r.ivf, r.pq, r.ham).foreach(p =>
       assert(!Tombstones.exists(spark, p)))
     // every superseded rid is physically gone
@@ -886,5 +886,20 @@ class CorpusUpsertSpec extends AnyFunSuite {
         $"embedding")
     val repB2 = CorpusUpsert.applyBatch(b2, "doc_id", "b2", r.ups, targets)
     assert(!repB2.alreadyApplied && repB2.nUpdates > 0)
+  }
+
+  test("a failing target never unwinds applyBatch while a sibling still publishes") {
+    val r = Roots(tmp("joinall")).bootstrap()
+    // no neardupWriteIndex: the near-dup root has no meta/, so its stage
+    // fails at once while BM25 is still staging
+    val targets = Seq(
+      CorpusUpsert.NearDupTarget(s"${r.root}/neardup", "text"),
+      CorpusUpsert.Bm25Target(r.bm25, "text"))
+    intercept[Exception](CorpusUpsert.applyBatch(
+      corpus0.select($"doc_id", $"text"), "doc_id", "b0", r.ups, targets))
+    val fs = new Path(r.ups).getFileSystem(
+      spark.sparkContext.hadoopConfiguration)
+    assert(fs.exists(new Path(s"${r.ups}/batches/b0/applied-bm25")),
+      "applyBatch rethrew before the BM25 target finished")
   }
 }

@@ -245,7 +245,7 @@ class HammingSpec extends AnyFunSuite {
     val fromFull = probe(full)
     assert(probe(inc) === fromFull)
     assert(fromFull.nonEmpty)
-    val report = HammingIndex.hammingCompactIndex(spark, inc,
+    val report = HammingIndex.Layout.compact(spark, inc,
       maxFilesPerDir = 1, targetBytes = 128L << 20)
     assert(report.nonEmpty, "appends produced no compactable litter")
     report.foreach { case (dir, (before, after)) =>

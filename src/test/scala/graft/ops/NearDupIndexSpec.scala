@@ -123,7 +123,7 @@ class NearDupIndexSpec extends AnyFunSuite {
     NearDupIndex.neardupAppendIndex(df.filter($"doc_id" >= 500),
       "doc_id", "text", root)
     val before = probePairs(root, df)
-    val report = NearDupIndex.neardupCompactIndex(spark, root,
+    val report = NearDupIndex.Layout.compact(spark, root,
       maxFilesPerDir = 1)
     assert(report.nonEmpty, "appends produced no compactable litter")
     report.foreach { case (dir, (nb, na)) =>
@@ -141,12 +141,12 @@ class NearDupIndexSpec extends AnyFunSuite {
       nBuckets = 8, nDocBuckets = 4)
     // delete the planted twins of the first two families (ids 1, 51)
     val dead = Seq(1L, 51L).toDF("doc_id")
-    NearDupIndex.neardupDeleteIds(dead, "doc_id", root)
+    NearDupIndex.Layout.delete(dead, "doc_id", root)
     val afterDelete = probePairs(root, df)
     assert(!afterDelete.exists(p => p._1 == 1L || p._2 == 1L ||
       p._1 == 51L || p._2 == 51L))
     // purge: physical drop, tombstones cleared, probe unchanged
-    val report = NearDupIndex.neardupPurgeIndex(spark, root, "doc_id")
+    val report = NearDupIndex.Layout.purge(spark, root, "doc_id")
     assert(report.nonEmpty)
     assert(spark.read.parquet(s"$root/buckets")
       .filter($"doc_id".isin(1L, 51L)).count() === 0)

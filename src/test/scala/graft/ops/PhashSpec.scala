@@ -134,7 +134,7 @@ class PhashSpec extends AnyFunSuite {
     // takedown removes the image from the INDEX side (it stops being
     // anyone's neighbor) while staying usable as a query — the
     // documented Tombstones contract
-    HammingIndex.hammingDeleteIds(Seq(2L).toDF("id"), "id", root)
+    HammingIndex.Layout.delete(Seq(2L).toDF("id"), "id", root)
     assert(probe() === Set((1L, 3L), (2L, 3L)))
   }
 

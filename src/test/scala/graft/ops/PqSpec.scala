@@ -169,7 +169,7 @@ class PqSpec extends AnyFunSuite {
     val slBefore = Pq.pqIvfShortlist(spark, apIdx, model, cents, "vec_id",
       query, 30, 3).collect().map(r => (r.getLong(0), r.getDouble(1))).toList
     assert(clusterFiles(apIdx).values.exists(_ > 1), "no litter to fold")
-    val folded = Pq.pqIvfCompactIndex(spark, apIdx, maxFilesPerCluster = 1)
+    val folded = VectorOps.IvfLayout.compact(spark, apIdx, maxFilesPerDir = 1)
     assert(folded.nonEmpty, "compaction found nothing over the bound")
     assert(clusterFiles(apIdx).values.forall(_ === 1),
       s"litter survived: ${clusterFiles(apIdx)}")
@@ -225,7 +225,7 @@ class PqSpec extends AnyFunSuite {
     // manual-append duplicate above included — compaction moves FILES,
     // never rows), and the batch ledger (underscore-hidden) survives
     val probeBefore = probe(idx)
-    Pq.pqIvfCompactIndex(spark, idx, maxFilesPerCluster = 1)
+    VectorOps.IvfLayout.compact(spark, idx, maxFilesPerDir = 1)
     val root2 = new org.apache.hadoop.fs.Path(idx)
     val fs = root2.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val perCluster = fs.listStatus(root2)
@@ -351,7 +351,7 @@ class PqSpec extends AnyFunSuite {
     }
     assert(kernelLut.toArray.toSeq === driverLut.toSeq)
     // takedown: deleted vectors can still ask, never be found
-    VectorOps.ivfDeleteIds(queries.select("vec_id"), "vec_id", idx)
+    VectorOps.IvfLayout.delete(queries.select("vec_id"), "vec_id", idx)
     val after = Pq.pqIvfProbeJoin(queries, idx, model, cents, "vec_id",
         "embedding", k = 5, nProbe = cents.length, overFetch = 1000)
       .collect().map(r => (r.getLong(0), r.getLong(1)))

@@ -165,7 +165,7 @@ class SimilaritySpec extends AnyFunSuite {
     assert(before.values.exists(_ > 4), s"appends produced no small-file litter: $before")
     val probeBefore = VectorOps.ivfProbeIndex(spark, dir, cents, "vec_id", query, 10, nProbe = 3)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toList
-    val report = VectorOps.ivfCompactIndex(spark, dir, maxFilesPerCluster = 4)
+    val report = VectorOps.IvfLayout.compact(spark, dir, maxFilesPerDir = 4)
     val after = clusterFiles()
     // every oversized cluster folded; compaction touched nothing else
     assert(report.nonEmpty)
@@ -900,7 +900,7 @@ class SimilaritySpec extends AnyFunSuite {
     }.sum / qids.size
     assert(recall >= 0.3, s"batch recall@5 = $recall — routing degenerated")
     // takedown: deleted vectors can still ASK but never be FOUND
-    VectorOps.ivfDeleteIds(queries.select("vec_id"), "vec_id", dir)
+    VectorOps.IvfLayout.delete(queries.select("vec_id"), "vec_id", dir)
     val after = VectorOps.ivfProbeJoin(queries, dir, cents, "vec_id",
         "embedding", k = 5, nProbe = cents.length)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
@@ -938,7 +938,7 @@ class SimilaritySpec extends AnyFunSuite {
     // tombstoning a snapshot member hides it from the live join but
     // not from the rids join (the cut replaces the exclusion)
     val victim = snapIds.orderBy("vec_id").head().getLong(0)
-    VectorOps.ivfDeleteIds(Seq(victim).toDF("vec_id"), "vec_id", full)
+    VectorOps.IvfLayout.delete(Seq(victim).toDF("vec_id"), "vec_id", full)
     val live = VectorOps.ivfProbeJoin(queries, full, cents, "vec_id",
         "embedding", k = 100000, nProbe = cents.length)
       .collect().map(_.getLong(1)).toSet

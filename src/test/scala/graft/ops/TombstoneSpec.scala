@@ -43,7 +43,7 @@ class TombstoneSpec extends AnyFunSuite {
       spark, path, cents, "vec_id", query, k = 12, nProbe = 4)
 
     val before = rows(probe(idxA))
-    VectorOps.ivfDeleteIds(delVecs, "vec_id", idxA)
+    VectorOps.IvfLayout.delete(delVecs, "vec_id", idxA)
     // the reference: same centroids over the surviving corpus only
     VectorOps.ivfAppendIndex(keptVecs, "vec_id", "embedding", idxB, cents)
     val want = rows(probe(idxB))
@@ -54,7 +54,7 @@ class TombstoneSpec extends AnyFunSuite {
       .join(delVecs.select("vec_id"), Seq("vec_id"), "left_semi")
       .count() === 0L)
 
-    val report = VectorOps.ivfPurgeIndex(spark, idxA, "vec_id")
+    val report = VectorOps.IvfLayout.purge(spark, idxA, "vec_id")
     assert(report.nonEmpty)
     assert(!Tombstones.exists(spark, idxA))
     assert(spark.read.parquet(idxA)
@@ -62,7 +62,7 @@ class TombstoneSpec extends AnyFunSuite {
       .count() === 0L)
     assert(rows(probe(idxA)) === want)
     // purge with no tombstones is a no-op
-    assert(VectorOps.ivfPurgeIndex(spark, idxA, "vec_id").isEmpty)
+    assert(VectorOps.IvfLayout.purge(spark, idxA, "vec_id").isEmpty)
   }
 
   test("IVF-PQ: delete → probe ≡ rebuild without the ids; purge is physical and probe-stable") {
@@ -76,12 +76,12 @@ class TombstoneSpec extends AnyFunSuite {
     def probe(path: String) = Pq.pqIvfProbe(
       spark, path, model, cents, "vec_id", query, k = 10, nProbe = 4)
 
-    Pq.pqIvfDeleteIds(delVecs, "vec_id", idxA)
+    VectorOps.IvfLayout.delete(delVecs, "vec_id", idxA)
     Pq.pqIvfAppendIndex(keptVecs, "vec_id", "embedding", idxB, model, cents)
     val want = rows(probe(idxB))
     assert(rows(probe(idxA)) === want)
 
-    assert(Pq.pqIvfPurgeIndex(spark, idxA, "vec_id").nonEmpty)
+    assert(VectorOps.IvfLayout.purge(spark, idxA, "vec_id").nonEmpty)
     assert(!Tombstones.exists(spark, idxA))
     assert(spark.read.parquet(idxA)
       .join(delVecs.select("vec_id"), Seq("vec_id"), "left_semi")
@@ -308,14 +308,14 @@ class TombstoneSpec extends AnyFunSuite {
           path, radius = 15)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
 
-    HammingIndex.hammingDeleteIds(delVecs, "vec_id", idxA)
+    HammingIndex.Layout.delete(delVecs, "vec_id", idxA)
     val want = probe(idxB) // full corpus queries, surviving index side
     assert(probe(idxA) === want)
     // deleted ids appear as q_id (still askable), never as n_id
     assert(want.exists { case (q, _, _) => q % 7 == 3 })
     assert(!probe(idxA).exists { case (_, n, _) => n % 7 == 3 })
 
-    assert(HammingIndex.hammingPurgeIndex(spark, idxA, "vec_id").nonEmpty)
+    assert(HammingIndex.Layout.purge(spark, idxA, "vec_id").nonEmpty)
     assert(!Tombstones.exists(spark, idxA))
     assert(spark.read.parquet(s"$idxA/bands")
       .join(delVecs.select("vec_id"), Seq("vec_id"), "left_semi")
@@ -334,7 +334,7 @@ class TombstoneSpec extends AnyFunSuite {
     assert(VectorOps.semDedupDeltaIndexed(delta, "vec_id", "embedding",
       threshold = 0.99, idx, cents).count() === 0L)
     // …and admitted once the base twin is taken down
-    VectorOps.ivfDeleteIds(embs.filter($"vec_id" === 3L), "vec_id", idx)
+    VectorOps.IvfLayout.delete(embs.filter($"vec_id" === 3L), "vec_id", idx)
     assert(VectorOps.semDedupDeltaIndexed(delta, "vec_id", "embedding",
       threshold = 0.99, idx, cents).count() === 1L)
   }
