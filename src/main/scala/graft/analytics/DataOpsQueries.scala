@@ -1090,21 +1090,20 @@ object DataOpsQueries {
         val labels = d.select(col("doc_id"),
           when(TextAnalysis.qualityScoreCol(col("text")) >= 0.65, 1.0)
             .otherwise(0.0).as("y"))
+        // no cache: trainLogReg checkpoints its own input, and the
+        // scoring pass reads a disjoint (holdout) slice
         val feats = Classifier.hashedFeatures(d, "doc_id", "text", dim = 1 << 15)
-          .cache()
-        try {
-          val isTrain = col("doc_id") % 5 =!= 0
-          val w = Classifier.trainLogReg(
-            feats.filter(isTrain), labels.filter(isTrain), "doc_id",
-            iters = 16, lr = 2.0)
-          Classifier.scoreLogReg(feats.filter(!isTrain), w, "doc_id")
-            .join(labels, Seq("doc_id"))
-            .select(least(floor(col("p") * 10), lit(9L)).cast("long").as("bucket"),
-              col("y"))
-            .groupBy("bucket")
-            .agg(count(lit(1)).as("n"), sum(col("y")).cast("long").as("n_pos"))
-            .orderBy("bucket")
-        } finally feats.unpersist()
+        val isTrain = col("doc_id") % 5 =!= 0
+        val w = Classifier.trainLogReg(
+          feats.filter(isTrain), labels.filter(isTrain), "doc_id",
+          iters = 16, lr = 2.0)
+        Classifier.scoreLogReg(feats.filter(!isTrain), w, "doc_id")
+          .join(labels, Seq("doc_id"))
+          .select(least(floor(col("p") * 10), lit(9L)).cast("long").as("bucket"),
+            col("y"))
+          .groupBy("bucket")
+          .agg(count(lit(1)).as("n"), sum(col("y")).cast("long").as("n_pos"))
+          .orderBy("bucket")
       }),
 
     // Exact batch kNN join over a broadcast query set — the dense

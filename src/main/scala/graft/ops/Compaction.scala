@@ -47,12 +47,12 @@ object Compaction {
     * drops every row); readers of the parent partitioned root handle
     * an empty partition directory fine.
     *
-    * Execution shape (round 18): ONE distributed stage job over every
-    * accepted directory — the union of their reads, `transform`ed,
-    * repartitioned to the per-directory file targets and written
-    * `partitionBy` a directory ordinal into a dot-prefixed staging
-    * root — then per-directory hide-rename publishes (file METADATA,
-    * pooled). The previous shape ran an independent read→write job
+    * Execution shape: ONE distributed stage job over every accepted
+    * directory, at every directory count — the union of their reads,
+    * `transform`ed, repartitioned to the per-directory file targets
+    * and written `partitionBy` a directory ordinal into a dot-prefixed
+    * staging root — then per-directory hide-rename publishes (file
+    * METADATA, pooled). The previous shape ran an independent read→write job
     * per directory (bounded 8-wide): correct, but a purge/compaction
     * over a 33–256-dir affected list was 33–256 driver-scheduled jobs
     * whose wall was scheduling, not data (round-17 probe: 63 s for
@@ -70,12 +70,11 @@ object Compaction {
     * filter/map that preserves extra columns (the purge anti-join and
     * the compaction identity both do).
     *
-    * Crash-safety is unchanged from the per-dir shape: the staging
-    * root is dot-prefixed (invisible to readers) and rewritten from
-    * scratch on every run; each directory publishes through the same
-    * checked hide → move-in → delete-hidden sequence, so a crash
-    * anywhere leaves every original row recoverable and a re-run
-    * completes the remaining dirs.
+    * Crash-safety: the staging root is dot-prefixed (invisible to
+    * readers) and rewritten from scratch on every run; each directory
+    * publishes through the checked hide → move-in → delete-hidden
+    * sequence, so a crash anywhere leaves every original row
+    * recoverable and a re-run completes the remaining dirs.
     */
   def rewriteDirs(
       spark: SparkSession,
@@ -110,87 +109,70 @@ object Compaction {
     fs.delete(stageRoot, true)
 
     val indexed = accepted.zipWithIndex
-    // where dir `i` of schema group `g` stages (the bulk path's
-    // partitionBy("_graft_dir") lands its rows there too)
+    // where dir `i` of schema group `g` stages (the stage job's
+    // partitionBy("_graft_dir") lands its rows there)
     def stagedDirOf(g: Int, i: Int): Path =
       IndexLayout.partitionPath(new Path(stageRoot, s"g$g"), "_graft_dir" -> i)
     def targetOfFiles(files: Array[org.apache.hadoop.fs.FileStatus]): Int =
       math.max(1,
         math.ceil(files.map(_.getLen).sum.toDouble / targetBytes).toInt)
 
-    val dirGroup: Map[Int, Int] =
-      if (accepted.size <= BulkRewriteThreshold) {
-        // SMALL dir lists stage per-dir, pooled (the pre-round-18
-        // shape): a read→coalesce→write job per dir, no exchange, no
-        // schema grouping — the bulk job's fixed costs (footer
-        // grouping, one shuffle, a partitioned commit) only amortize
-        // past a few dozen dirs (measured: the 33-dir BM25 purge is a
-        // wash, the 256-dir Hamming purge is 4× faster bulk)
-        dirPool.mapAll(indexed) { case ((dir, files), i) =>
-          transform(spark.read.parquet(dir.toString))
-            .coalesce(targetOfFiles(files))
-            .write.mode("overwrite")
-            .parquet(stagedDirOf(0, i).toString)
-        }
-        indexed.map { case (_, i) => i -> 0 }.toMap
-      } else {
-        // a caller may pass dirs of SEVERAL sub-layouts in one list
-        // (the BM25 purge rewrites postings tb= dirs AND doclen/
-        // together) — group by the files' parquet schema (one footer
-        // read per dir, driver metadata) and run one bulk stage job
-        // per schema group
-        val hConf = spark.sparkContext.hadoopConfiguration
-        def schemaKey(f: Path): String = {
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, hConf))
-          try r.getFooter.getFileMetaData.getSchema.toString finally r.close()
-        }
-        val groups = dirPool.mapAll(indexed) { case ((dir, files), i) =>
-          (schemaKey(files.head.getPath), (dir, files, i))
-        }.groupBy(_._1).values.map(_.map(_._2)).toSeq
+    // a caller may pass dirs of SEVERAL sub-layouts in one list (the
+    // BM25 purge rewrites postings tb= dirs AND doclen/ together) —
+    // group by the files' parquet schema (one footer read per dir,
+    // driver metadata) and run one bulk stage job per schema group
+    val hConf = spark.sparkContext.hadoopConfiguration
+    def schemaKey(f: Path): String = {
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, hConf))
+      try r.getFooter.getFileMetaData.getSchema.toString finally r.close()
+    }
+    val groups = dirPool.mapAll(indexed) { case ((dir, files), i) =>
+      (schemaKey(files.head.getPath), (dir, files, i))
+    }.groupBy(_._1).values.map(_.map(_._2)).toSeq
 
-        dirPool.mapAll(groups.zipWithIndex) { case (group, gi) =>
-          // per-dir file target from the ORIGINAL byte sizes (compacted
-          // bytes are ≤ original for both callers); the write lands
-          // ≤ target files per dir via a deterministic row-hash salt
-          // over the dir's target domain (SPARK-38388: never rand())
-          val targets: Map[Int, Int] = group.map { case (_, files, i) =>
-            i -> targetOfFiles(files)
-          }.toMap
-          val schema = spark.read.parquet(group.head._1.toString).schema
-          // ONE multi-path scan (a per-dir union's analysis cost grows
-          // superlinearly in the branch count — measured: the 256-dir
-          // Hamming purge spent ~15 s planning a 256-branch
-          // unionByName); the dir ordinal derives from each row's file
-          // path. transform applies once to the tagged scan (row-wise,
-          // so it commutes with the read order).
-          val byParent: Map[String, Int] = group.map { case (dir, _, i) =>
-            dir.toUri.getPath -> i
-          }.toMap
-          val dirTag = udf((fn: String) =>
-            byParent(new Path(fn).getParent.toUri.getPath))
-          val unioned = transform(
-            spark.read.schema(schema)
-              .parquet(group.map(_._1.toString): _*)
-              .withColumn("_graft_dir", dirTag(input_file_name())))
-          val dataCols = schema.fieldNames.map(col).toIndexedSeq
-          val targetOf = element_at(
-            map(targets.toSeq.flatMap { case (i, t) =>
-              Seq(lit(i), lit(t)) }: _*), col("_graft_dir"))
-          val salt = pmod(xxhash64(dataCols: _*), targetOf.cast("long"))
-          val nParts = math.max(1, math.min(
-            spark.conf.getOption("spark.sql.shuffle.partitions")
-              .flatMap(_.toIntOption).getOrElse(200),
-            targets.values.map(_.toLong).sum.min(Int.MaxValue.toLong).toInt))
-          unioned
-            .repartition(nParts, col("_graft_dir"), salt)
-            .write.mode("overwrite").partitionBy("_graft_dir")
-            .parquet(new Path(stageRoot, s"g$gi").toString)
-        }
-        groups.zipWithIndex.flatMap { case (group, gi) =>
-          group.map { case (_, _, i) => i -> gi }
-        }.toMap
-      }
+    dirPool.mapAll(groups.zipWithIndex) { case (group, gi) =>
+      // per-dir file target from the ORIGINAL byte sizes (compacted
+      // bytes are ≤ original for both callers); the write lands
+      // ≤ target files per dir via a deterministic row-hash salt over
+      // the dir's target domain (SPARK-38388: never rand())
+      val targets: Map[Int, Int] = group.map { case (_, files, i) =>
+        i -> targetOfFiles(files)
+      }.toMap
+      val schema = spark.read.parquet(group.head._1.toString).schema
+      // ONE multi-path scan (a per-dir union's analysis cost grows
+      // superlinearly in the branch count — measured: the 256-dir
+      // Hamming purge spent ~15 s planning a 256-branch unionByName);
+      // the dir ordinal derives from each row's file path. transform
+      // applies once to the tagged scan (row-wise, so it commutes with
+      // the read order).
+      val byParent: Map[String, Int] = group.map { case (dir, _, i) =>
+        dir.toUri.getPath -> i
+      }.toMap
+      val dirTag = udf((fn: String) =>
+        byParent(new Path(fn).getParent.toUri.getPath))
+      val unioned = transform(
+        spark.read.schema(schema)
+          .parquet(group.map(_._1.toString): _*)
+          .withColumn("_graft_dir", dirTag(input_file_name())))
+      val dataCols = schema.fieldNames.map(col).toIndexedSeq
+      val targetOf = element_at(
+        map(targets.toSeq.flatMap { case (i, t) =>
+          Seq(lit(i), lit(t)) }: _*), col("_graft_dir"))
+      val salt = pmod(xxhash64(dataCols: _*), targetOf.cast("long"))
+      val nParts = math.max(1, math.min(
+        spark.conf.getOption("spark.sql.shuffle.partitions")
+          .flatMap(_.toIntOption).getOrElse(200),
+        targets.values.map(_.toLong).sum.min(Int.MaxValue.toLong).toInt))
+      unioned
+        .repartition(nParts, col("_graft_dir"), salt)
+        .write.mode("overwrite").partitionBy("_graft_dir")
+        .parquet(new Path(stageRoot, s"g$gi").toString)
+    }
+    val dirGroup: Map[Int, Int] =
+      groups.zipWithIndex.flatMap { case (group, gi) =>
+        group.map { case (_, _, i) => i -> gi }
+      }.toMap
 
     // per-dir publish: hide originals, move the staged files in,
     // delete the hidden copies — the checked protocol, per directory,
@@ -245,12 +227,6 @@ object Compaction {
         s"$opName: could not delete staging root $stageRoot after publish")
     report.toMap
   }
-
-  /** Above this many accepted dirs the rewrite stages as ONE bulk job
-    * per schema group; at or below, per-dir pooled jobs (no exchange,
-    * no footer grouping) measured faster — see [[rewriteDirs]].
-    */
-  private val BulkRewriteThreshold = 32
 
   /** Deepest common ancestor of the given paths (all on one
     * filesystem — the layouts this serves never span stores).

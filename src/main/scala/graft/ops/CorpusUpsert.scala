@@ -33,12 +33,12 @@ import org.apache.spark.sql.functions._
   *      every retry because the batch's own `revs/batch=<key>` rows
   *      are excluded from the lookup; then record them (overwrite,
   *      idempotent).
-  *   3. Per index, in order: build the delta's index rows into a
-  *      staging dir that MIRRORS the index layout (`_graft_staged`
-  *      marker once complete), then PUBLISH by renaming each staged
-  *      file to a deterministic batch-keyed name inside the live
-  *      index, tombstone the superseded rids, and drop the
-  *      `applied-<index>` marker.
+  *   3. Per index, through [[IndexLayout.publish]]: build the delta's
+  *      index rows into a staging dir that MIRRORS the index layout
+  *      (`_graft_staged` marker once complete), then PUBLISH by
+  *      renaming each staged file to a deterministic batch-keyed name
+  *      inside the live index, tombstone the superseded rids, and
+  *      drop the `applied-<index>` marker.
   *   4. Drop the batch `done` marker.
   *
   * Exactly-once under redelivery, by construction: the per-target
@@ -118,6 +118,7 @@ object CorpusUpsert {
   def revOf(rid: Column): Column = rid.bitwiseAND(lit(MaxRev.toLong))
 
   /** One coordinated index: its root, its [[IndexLayout]], and `stage`,
+    * the family's delta writer (the same one its public append uses),
     * which writes the delta's rows (keyed by [[RidCol]]) under a
     * staging root mirroring that layout. `delete` tombstones superseded
     * rids (idempotent under re-runs by the [[Tombstones]] dedup
@@ -145,7 +146,7 @@ object CorpusUpsert {
       name: String = "ivf") extends IndexTarget {
     private[ops] def layout = VectorOps.IvfLayout
     private[ops] def stage(delta: DataFrame, stageDir: String): Unit =
-      VectorOps.ivfStageAppend(delta, RidCol, vecCol, path, stageDir,
+      VectorOps.ivfWriteDelta(delta, RidCol, vecCol, path, stageDir,
         centroids)
   }
 
@@ -157,7 +158,7 @@ object CorpusUpsert {
       name: String = "pqivf") extends IndexTarget {
     private[ops] def layout = VectorOps.IvfLayout
     private[ops] def stage(delta: DataFrame, stageDir: String): Unit =
-      Pq.pqIvfStageAppend(delta, RidCol, vecCol, path, stageDir, model,
+      Pq.pqIvfWriteDelta(delta, RidCol, vecCol, path, stageDir, model,
         centroids)
   }
 
@@ -171,7 +172,7 @@ object CorpusUpsert {
       name: String = "bm25") extends IndexTarget {
     private[ops] def layout = LexIndex.Layout
     private[ops] def stage(delta: DataFrame, stageDir: String): Unit =
-      LexIndex.stageAppend(delta, RidCol, textCol, path, stageDir)
+      LexIndex.writeDelta(delta, RidCol, textCol, path, stageDir)
     override private[ops] def delete(rids: DataFrame): Unit =
       LexIndex.bm25DeleteIds(rids, RidCol, path)
     override private[ops] def purge(spark: SparkSession)
@@ -188,7 +189,7 @@ object CorpusUpsert {
       name: String = "hamming") extends IndexTarget {
     private[ops] def layout = HammingIndex.Layout
     private[ops] def stage(delta: DataFrame, stageDir: String): Unit =
-      HammingIndex.stageAppend(delta, RidCol, vecCol, path, stageDir)
+      HammingIndex.writeDelta(delta, RidCol, vecCol, path, stageDir)
   }
 
   /** The [[NearDupIndex]] MinHash-LSH layout as a coordinated target:
@@ -203,7 +204,7 @@ object CorpusUpsert {
       name: String = "neardup") extends IndexTarget {
     private[ops] def layout = NearDupIndex.Layout
     private[ops] def stage(delta: DataFrame, stageDir: String): Unit =
-      NearDupIndex.stageAppend(delta, RidCol, textCol, path, stageDir)
+      NearDupIndex.writeDelta(delta, RidCol, textCol, path, stageDir)
   }
 
   final case class UpsertReport(
@@ -225,7 +226,7 @@ object CorpusUpsert {
     * runs inline — without it, every later batch's rev lookup (and
     * every [[currentRevs]] call) reads one parquet dir per batch ever
     * applied, the same unbounded-litter curve the index appends had
-    * before co-partitioning ([[HammingIndex.hammingAppendIndex]]). The
+    * before co-partitioning ([[HammingIndex.writeDelta]]). The
     * fold runs AFTER the done marker inside the same serialized apply,
     * so the quiesced-window contract holds by construction; a crash
     * mid-fold leaves lookups exact in every interleaving (compactRevs'
@@ -403,31 +404,24 @@ object CorpusUpsert {
     val oldRids = withRid.filter(col("old_rev").isNotNull)
       .select(ridExpr(col(docCol), col("old_rev")).as(RidCol))
 
-    // 3. per-index stage → publish → tombstone → marker. The four
-    // index layouts are INDEPENDENT (each has its own stage dir,
-    // applied marker, and tombstone set), so their blocks run
-    // concurrently — wall time is the slowest layout, not the sum (the
-    // serial contract is across BATCHES, not across an one batch's
+    // 3. per-index stage → publish → tombstone → marker, through the
+    // one IndexLayout.publish (the `applied-<index>` marker is its done
+    // marker). The index layouts are INDEPENDENT (each has its own
+    // stage dir, applied marker, and tombstone set), so their blocks
+    // run concurrently — wall time is the slowest layout, not the sum
+    // (the serial contract is across BATCHES, not across one batch's
     // indexes).
     indexPool.mapAll(targets) { t =>
-      val appliedM = new Path(batchDir, s"applied-${t.name}")
-      val stageDir = new Path(batchDir, s"stage-${t.name}")
-      if (!fs.exists(appliedM)) {
-        val stagedM = new Path(stageDir, "_graft_staged")
-        if (!fs.exists(stagedM)) {
-          t.stage(withRid, stageDir.toString)
-          touch(fs, stagedM)
-        }
-        publishStage(fs, stageDir, new Path(t.path), key)
+      IndexLayout.publish(spark, t.path,
+        new Path(batchDir, s"stage-${t.name}"), key,
+        new Path(batchDir, s"applied-${t.name}"),
         // an all-inserts batch (the bootstrap case) tombstones nothing;
         // skipping the write keeps the index tombstone-free, so probes
         // keep their fast no-tombstone path
-        if (nUpd > 0) t.delete(oldRids)
-        touch(fs, appliedM)
-      }
-      fs.delete(stageDir, true)
+        afterPublish = () => if (nUpd > 0) t.delete(oldRids))(
+        t.stage(withRid, _))
     }
-    touch(fs, doneMarker)
+    IndexLayout.touch(fs, doneMarker)
     // never fold on a BACKFILL re-apply (the batch was already done, so
     // nothing new landed in the ledger): the remaining backfill batches
     // NEED their per-batch revs, and the first re-applied batch would
@@ -892,47 +886,6 @@ object CorpusUpsert {
     if (!fs.exists(revsRoot)) Nil
     else IndexLayout.partitionDirs(fs, revsRoot, "batch")
       .filter(_.getName != revsDir(root, excludeKey).getName)
-  }
-
-  /** Publish a complete stage (`_graft_staged` present) into the live
-    * index root: every visible staged file moves — one atomic rename
-    * each — to `<index>/<same relative dir>/graft-ups-<key>-<staged
-    * name>`. Names derive from the staged files' OWN names, so a
-    * replayed half-publish finishes the remaining files without
-    * renumbering (the moved ones are simply gone from the stage).
-    */
-  private def publishStage(
-      fs: FileSystem, stageDir: Path, destRoot: Path, key: String): Unit = {
-    require(fs.exists(new Path(stageDir, "_graft_staged")),
-      s"publishStage: $stageDir has no _graft_staged marker")
-    def walk(dir: Path, rel: List[String]): Unit =
-      fs.listStatus(dir).foreach { st =>
-        val n = st.getPath.getName
-        if (st.isDirectory) {
-          if (!n.startsWith(".") && !n.startsWith("_"))
-            walk(st.getPath, rel :+ n)
-        } else if (!n.startsWith("_") && !n.startsWith(".")) {
-          val destDir = rel.foldLeft(destRoot)(new Path(_, _))
-          if (!fs.exists(destDir) && !fs.mkdirs(destDir))
-            throw new java.io.IOException(
-              s"publishStage: cannot create $destDir")
-          val dest = new Path(destDir, s"graft-ups-$key-$n")
-          if (!fs.exists(dest)) {
-            if (!fs.rename(st.getPath, dest))
-              throw new java.io.IOException(
-                s"publishStage: cannot publish ${st.getPath} -> $dest")
-          } else if (!fs.delete(st.getPath, false))
-            throw new java.io.IOException(
-              s"publishStage: $dest already published but stale stage " +
-                s"file ${st.getPath} cannot be deleted")
-        }
-      }
-    walk(stageDir, Nil)
-  }
-
-  private def touch(fs: FileSystem, p: Path): Unit = {
-    if (!fs.exists(p.getParent)) fs.mkdirs(p.getParent)
-    fs.create(p, true).close()
   }
 
   /** The per-index pool: every block is joined ([[WorkPool.mapAll]]),

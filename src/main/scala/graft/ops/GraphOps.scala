@@ -123,9 +123,10 @@ object GraphOps {
       // Stats reset (Iterate scaladoc): the step references `labels`
       // three times under joins, so checkpoint-inherited statistics
       // would cube per iteration and stall planning on long-diameter
-      // graphs; the rewrap costs one row conversion on the label
-      // relation.
-      val next = spark.createDataFrame(ck.rdd, ck.schema)
+      // graphs. Both checkpoint kinds leave a LogicalRDD leaf, which
+      // resetStats re-leafs without the stats, keeping its InternalRow
+      // blocks and output partitioning (no row conversion).
+      val next = org.apache.spark.sql.GraftIterate.resetStats(ck)
       val changed = next.as("n")
         .join(labels.as("o"), col("n.node") === col("o.node"))
         .filter(col("n.label") =!= col("o.label"))

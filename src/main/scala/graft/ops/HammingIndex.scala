@@ -77,55 +77,49 @@ object HammingIndex {
     import df.sparkSession.implicits._
     Seq((nBands, dimV, nBuckets)).toDF("nBands", "dim", "nBuckets")
       .write.mode("overwrite").parquet(s"$path/meta")
-    writeBands(df, idCol, vecCol, path, nBands, dimV, nBuckets,
-      overwrite = true)
+    // builds co-partition to the layout with a scale-adaptive salt
+    // ([[DirLayout.toDirs]]): the exchange is build-sized, file
+    // creation parallelizes across tasks, and files per directory stay
+    // bounded — measured 4.1 s → ~0.6 s on the gate build
+    Bands.write(DirLayout.toDirs(bandRows(df, idCol, vecCol, nBands, dimV,
+      nBuckets), nBands * nBuckets, col(idCol), Bands.cols: _*), path)
   }
 
   /** Append a delta of NEW vectors (new ids) under the persisted band
-    * geometry. `coPartition` (default true) shuffles the band rows to
-    * the (band, bb) directory layout before the write — ≤ one file per
-    * touched dir per append instead of tasks×dirs. The steady-state
-    * numbers that made this the DEFAULT (a 128k-code, 32-batch
-    * steady-append run): without it every append wrote 2,048 files
-    * (32 tasks × 64 dirs), probe latency grew linearly with the litter
-    * (3.4 s fresh → 25.3 s at 65k files) and the eventual compaction
-    * of 65k files cost 113 s — the shuffle it adds is delta-sized.
-    * Pass false for a corpus-scale delta where the layout's partition
-    * count would bottleneck write parallelism (then compact on the
-    * normal cadence).
+    * geometry: [[writeDelta]] staged and published into the live index
+    * by [[IndexLayout.append]].
     */
   def hammingAppendIndex(
       delta: DataFrame,
       idCol: String,
       vecCol: String,
-      path: String,
-      coPartition: Boolean = true): Unit = {
-    val (nBands, dim, nBuckets) = readMeta(delta.sparkSession, path)
-    writeBands(delta, idCol, vecCol, path, nBands, dim, nBuckets,
-      overwrite = false, coPartition = coPartition)
-  }
+      path: String): Unit =
+    IndexLayout.append(delta.sparkSession, path)(
+      writeDelta(delta, idCol, vecCol, path, _))
 
-  /** The [[graft.ops.CorpusUpsert]] staging hook: the delta's band
-    * rows under the REAL index's persisted geometry, written to a
-    * staging root mirroring the index layout (`bands/band=/bb=`) —
-    * published into the live index by file rename, never by a direct
-    * append.
+  /** The family's one delta writer, behind [[hammingAppendIndex]], the
+    * streaming sinks and [[CorpusUpsert.HammingTarget]]: the delta's
+    * band rows under the index at `indexPath`'s persisted geometry,
+    * written to `stagePath` in the index layout (`bands/band=/bb=`).
+    * The band rows co-partition with the (band, bb) directory layout
+    * first — ≤ one file per touched dir per batch instead of
+    * tasks×dirs. The steady-state numbers that made this the rule (a
+    * 128k-code, 32-batch steady-append run): without it every append
+    * wrote 2,048 files (32 tasks × 64 dirs), probe latency grew
+    * linearly with the litter (3.4 s fresh → 25.3 s at 65k files) and
+    * the eventual compaction of 65k files cost 113 s — the shuffle it
+    * adds is delta-sized.
     */
-  private[ops] def stageAppend(
+  private[graft] def writeDelta(
       delta: DataFrame,
       idCol: String,
       vecCol: String,
       indexPath: String,
       stagePath: String): Unit = {
     val (nBands, dim, nBuckets) = readMeta(delta.sparkSession, indexPath)
-    // co-partition the band rows with the directory layout before the
-    // dynamic-partition write: without this every input task opens a
-    // writer per (band, bb) dir it touches — up to tasks×nBands×nBuckets
-    // small files per batch (measured 4–5 s of the upsert stage wall at
-    // 256 dirs), all of which the publish then renames one by one. One
-    // delta-sized shuffle cuts it to ≤ one file per touched dir.
-    writeBands(delta, idCol, vecCol, stagePath, nBands, dim, nBuckets,
-      overwrite = true, coPartition = true)
+    Bands.write(DirLayout.appendToDirs(
+      bandRows(delta, idCol, vecCol, nBands, dim, nBuckets),
+      nBands * nBuckets, Bands.cols: _*), stagePath)
   }
 
   private def readMeta(spark: SparkSession, path: String): (Int, Int, Int) =
@@ -135,34 +129,20 @@ object HammingIndex {
       (m.getInt(0), m.getInt(1), m.getInt(2))
     }
 
-  private def writeBands(
+  /** (id, code, band, bv, bb): one row per (vector, band). */
+  private def bandRows(
       df: DataFrame,
       idCol: String,
       vecCol: String,
-      path: String,
       nBands: Int,
       dim: Int,
-      nBuckets: Int,
-      overwrite: Boolean,
-      coPartition: Boolean = false): Unit = {
+      nBuckets: Int): DataFrame = {
     val spec = VectorOps.BandSpec(nBands, dim)
-    val mode = if (overwrite) "overwrite" else "append"
-    val rows = VectorOps.binaryQuantize(df, idCol, vecCol)
+    VectorOps.binaryQuantize(df, idCol, vecCol)
       .select(col(idCol), col("code"),
         explode(sequence(lit(0), lit(nBands - 1))).as("band"))
       .withColumn("bv", spec.bandVal(col("code"), col("band")))
       .withColumn("bb", pmod(col("bv"), lit(nBuckets.toLong)).cast("int"))
-    val laidOut =
-      if (overwrite)
-        // builds co-partition to the layout with a scale-adaptive salt
-        // ([[DirLayout.toDirs]]): the exchange is build-sized, file
-        // creation parallelizes across tasks, and files per directory
-        // stay bounded — measured 4.1 s → ~0.6 s on the gate build
-        DirLayout.toDirs(rows, nBands * nBuckets, col(idCol), Bands.cols: _*)
-      else if (coPartition)
-        DirLayout.appendToDirs(rows, nBands * nBuckets, Bands.cols: _*)
-      else rows
-    Bands.write(laidOut, path, mode)
   }
 
   /** EXACT radius search served from the index: every `(q_id, n_id,

@@ -27,6 +27,14 @@ import org.apache.spark.sql.functions._
   * BM25 ([[LexIndex]]) reuses the listing and the affected-dir
   * derivation but keeps its own delete/purge (its tombstones carry the
   * document length, and its purge stages a negative stats row).
+  *
+  * Delta rows enter a live index ONE way, [[IndexLayout.publish]]:
+  * each family's delta writer stages the rows under a directory that
+  * mirrors the layout, and the publish renames them in under
+  * batch-keyed names. [[CorpusUpsert.applyBatch]], the public
+  * `*AppendIndex` calls ([[IndexLayout.append]]) and the streaming
+  * sinks differ only in where the stage lives, which key names the
+  * files and which marker says the batch is done.
   */
 final case class IndexLayout(name: String, subDirs: Seq[IndexLayout.SubDir]) {
   import IndexLayout._
@@ -110,14 +118,101 @@ object IndexLayout {
       keyed: Boolean = true) {
     def dir(root: String): String = if (name.isEmpty) root else s"$root/$name"
     def cols: Seq[Column] = partCols.map(col)
-    /** Write `df` as this sub-directory of `root`, partitioned by its
-      * columns.
+    /** Write `df` as this sub-directory of `root` (a build's index root
+      * or a delta's stage), partitioned by its columns, replacing what
+      * was there.
       */
-    def write(df: DataFrame, root: String, mode: String): Unit = {
-      val w = df.write.mode(mode)
+    def write(df: DataFrame, root: String): Unit = {
+      val w = df.write.mode("overwrite")
       (if (partCols.isEmpty) w else w.partitionBy(partCols: _*))
         .parquet(dir(root))
     }
+  }
+
+  /** Publish one delta into the live index at `root`, exactly once per
+    * `done` marker:
+    *
+    *   1. STAGE: unless `stage` holds a `_graft_staged` marker, `write`
+    *      (re)writes the delta's rows under `stage`, mirroring the
+    *      index layout, and the marker lands;
+    *   2. PUBLISH: every visible staged file moves, one checked atomic
+    *      rename each, to `<root>/<same relative dir>/graft-ups-<key>-
+    *      <staged name>`;
+    *   3. `afterPublish` runs (the upsert tombstones superseded rids
+    *      here);
+    *   4. the `done` marker lands, then the stage is dropped.
+    *
+    * Returns false, after dropping any leftover stage, when `done`
+    * already exists. Re-running the SAME call after a crash at any
+    * step converges: a missing marker re-stages from scratch (nothing
+    * was published — publishing requires it), and a half-published
+    * stage finishes without duplicates, because each target name
+    * derives from the staged file's own name and the moved files are
+    * gone from the stage. An additive row (BM25's `stats/`) therefore
+    * lands exactly once, which a direct `mode("append")` followed by a
+    * marker cannot promise.
+    */
+  private[graft] def publish(
+      spark: SparkSession,
+      root: String,
+      stage: Path,
+      key: String,
+      done: Path,
+      afterPublish: () => Unit = () => ())(write: String => Unit)
+      : Boolean = {
+    val fs = stage.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(done)) {
+      fs.delete(stage, true)
+      return false
+    }
+    val staged = new Path(stage, "_graft_staged")
+    if (!fs.exists(staged)) {
+      write(stage.toString)
+      touch(fs, staged)
+    }
+    def walk(dir: Path, dest: Path): Unit =
+      fs.listStatus(dir).foreach { st =>
+        val n = st.getPath.getName
+        if (n.startsWith("_") || n.startsWith(".")) ()
+        else if (st.isDirectory) walk(st.getPath, new Path(dest, n))
+        else {
+          if (!fs.exists(dest) && !fs.mkdirs(dest))
+            throw new java.io.IOException(s"publish: cannot create $dest")
+          val to = new Path(dest, s"graft-ups-$key-$n")
+          if (!fs.exists(to)) {
+            if (!fs.rename(st.getPath, to))
+              throw new java.io.IOException(
+                s"publish: cannot publish ${st.getPath} -> $to")
+          } else if (!fs.delete(st.getPath, false))
+            throw new java.io.IOException(
+              s"publish: $to already published but stale stage file " +
+                s"${st.getPath} cannot be deleted")
+        }
+      }
+    walk(stage, new Path(root))
+    afterPublish()
+    touch(fs, done)
+    fs.delete(stage, true)
+    true
+  }
+
+  /** A one-off append into the live index at `root`: [[publish]] under
+    * a fresh key, staged in the index's underscore-hidden
+    * `_graft_stage/<key>`. Nobody retries a fresh key, so its done
+    * marker lives inside the stage and goes with it; a caller that
+    * needs exactly-once across crashes keys its batches itself
+    * (the streaming sinks, [[CorpusUpsert.applyBatch]]).
+    */
+  private[graft] def append(spark: SparkSession, root: String)(
+      write: String => Unit): Unit = {
+    val key = java.util.UUID.randomUUID().toString
+    val stage = new Path(root, s"_graft_stage/$key")
+    publish(spark, root, stage, key, new Path(stage, "_graft_done"))(write)
+  }
+
+  private[graft] def touch(fs: FileSystem, p: Path): Unit = {
+    if (!fs.exists(p.getParent)) fs.mkdirs(p.getParent)
+    fs.create(p, true).close()
   }
 
   private val DefaultTargetBytes: Long = 128L << 20

@@ -109,33 +109,23 @@ object LexIndex {
     import docs.sparkSession.implicits._
     Seq((buckets, positional)).toDF("buckets", "positional")
       .write.mode("overwrite").parquet(s"$path/meta")
-    // postings/doclen/stats land in three independent subtrees — run
-    // them concurrently like the stageAppend path always has (wall =
-    // max of the three, not the sum; the postings hash-agg dominates,
-    // so the doclen/stats passes ride inside its tail)
-    writeParts(docs, idCol, textCol, path, buckets, overwrite = true,
-      positional, concurrent = true)
+    writeParts(docs, idCol, textCol, path, buckets, positional)(identity)
   }
 
   /** Append a delta of NEW documents (new ids — the ivfAppendIndex
-    * contract) under the index's persisted bucket fanout (and its
-    * persisted positional flag — an appended batch can never disagree
-    * with the layout it lands in). `coPartition` (default true)
-    * shuffles the postings to the tb= layout before the write — ≤ one
-    * file per touched bucket per append instead of tasks×buckets, the
-    * [[HammingIndex.hammingAppendIndex]] steady-state treatment; the
-    * shuffle is delta-sized. Pass false for corpus-scale deltas.
+    * contract): [[writeDelta]] staged and published into the live
+    * index by [[IndexLayout.append]], so all three sub-relations are
+    * written before any of their files becomes visible. Exactly-once
+    * across crashes needs a keyed publish — the stream sink
+    * ([[graft.streaming.LexIndexStream]]) or [[CorpusUpsert]].
     */
   def bm25AppendIndex(
       delta: DataFrame,
       idCol: String,
       textCol: String,
-      path: String,
-      coPartition: Boolean = true): Unit =
-    writeParts(delta, idCol, textCol, path,
-      readBuckets(delta.sparkSession, path), overwrite = false,
-      readPositional(delta.sparkSession, path), concurrent = true,
-      coPartition = coPartition)
+      path: String): Unit =
+    IndexLayout.append(delta.sparkSession, path)(
+      writeDelta(delta, idCol, textCol, path, _))
 
   /** (buckets, positional) in ONE cached read ([[MetaCache]] — a probe
     * used to pay one or two Spark head() jobs per call to re-learn the
@@ -159,38 +149,41 @@ object LexIndex {
   private def readPositional(spark: SparkSession, path: String): Boolean =
     readMeta(spark, path)._2
 
-  /** The [[graft.ops.CorpusUpsert]] staging hook: the delta's index
-    * rows under the REAL index's persisted geometry, written to a
-    * staging root that mirrors the index layout (postings/doclen/
-    * stats) — published into the live index by file rename, never by
-    * a direct append.
+  /** The family's one delta writer, behind [[bm25AppendIndex]], the
+    * streaming sink and [[CorpusUpsert.Bm25Target]]: the delta's
+    * postings/doclen/stats rows under the index at `indexPath`'s
+    * persisted bucket fanout and positional flag (an appended batch can
+    * never disagree with the layout it lands in), written to
+    * `stagePath` in the index layout. The postings co-partition with
+    * the tb= layout first — ≤ one file per touched bucket per batch
+    * instead of tasks×buckets, the [[HammingIndex.writeDelta]]
+    * steady-state treatment; the shuffle is delta-sized.
     */
-  private[ops] def stageAppend(
+  private[graft] def writeDelta(
       delta: DataFrame,
       idCol: String,
       textCol: String,
       indexPath: String,
-      stagePath: String): Unit =
-    writeParts(delta, idCol, textCol, stagePath,
-      readBuckets(delta.sparkSession, indexPath), overwrite = true,
-      readPositional(delta.sparkSession, indexPath),
-      // the three sub-relations land in three independent staging
-      // subtrees and publish atomically later — no ordering contract
-      // to preserve, so the stage pays max(postings, doclen, stats)
-      // wall instead of the sum
-      concurrent = true, coPartition = true)
+      stagePath: String): Unit = {
+    val (buckets, positional) = readMeta(delta.sparkSession, indexPath)
+    writeParts(delta, idCol, textCol, stagePath, buckets, positional)(
+      DirLayout.appendToDirs(_, buckets, Postings.cols: _*))
+  }
 
+  /** Write the postings/doclen/stats rows of `docs` under `path`; the
+    * postings rows pass through `layOut` before their aggregation. The
+    * three land in independent subtrees, so they are written
+    * concurrently (wall = max of the three, not the sum; the postings
+    * hash-agg dominates, so the doclen/stats passes ride inside its
+    * tail).
+    */
   private def writeParts(
       docs: DataFrame,
       idCol: String,
       textCol: String,
       path: String,
       buckets: Int,
-      overwrite: Boolean,
-      positional: Boolean,
-      concurrent: Boolean = false,
-      coPartition: Boolean = false): Unit = {
-    val mode = if (overwrite) "overwrite" else "append"
+      positional: Boolean)(layOut: DataFrame => DataFrame): Unit = {
     val toks = TextFunctions.tokens(col(textCol))
     val exploded =
       if (positional)
@@ -203,36 +196,27 @@ object LexIndex {
           sort_array(collect_list(col("p").cast("int"))).as("ps"))
       else
         g.agg(count(lit(1)).cast("double").as("tf"))
-    val writes: Seq[() => Unit] = Seq(
+    WorkPool.runAll(Seq(
       () => {
-        // co-partition with the tb layout — one file per touched
-        // bucket per batch instead of tasks×tb (the append/stage
-        // small-file treatment; see bm25AppendIndex). The exchange is
-        // SHARED with the (id, term) aggregation: repartition by tb
-        // BEFORE the groupBy and key the groupBy by (tb, id, w) — tb
-        // is an exchange-side column, so HashPartitioning(tb)
-        // satisfies the aggregation's clustering requirement and the
-        // plan runs ONE delta-sized exchange instead of the former
-        // groupBy exchange + repartition exchange (guide §2.4: two
-        // operations keyed compatibly share one exchange).
+        // a delta co-partitions with the tb layout (see writeDelta).
+        // The exchange is SHARED with the (id, term) aggregation:
+        // repartition by tb BEFORE the groupBy and key the groupBy by
+        // (tb, id, w) — tb is an exchange-side column, so
+        // HashPartitioning(tb) satisfies the aggregation's clustering
+        // requirement and the plan runs ONE delta-sized exchange
+        // instead of a groupBy exchange + a repartition exchange
+        // (guide §2.4: two operations keyed compatibly share one
+        // exchange).
         val rows = exploded.withColumn("tb", termBucket(col("w"), buckets))
-        val grouped =
-          if (coPartition)
-            agged(DirLayout.appendToDirs(rows, buckets, Postings.cols: _*)
-              .groupBy(col("tb"), col(idCol), col("w")))
-          else
-            agged(rows.groupBy(col("tb"), col(idCol), col("w")))
-        Postings.write(grouped, path, mode)
+        Postings.write(
+          agged(layOut(rows).groupBy(col("tb"), col(idCol), col("w"))),
+          path)
       },
       () => Doclen.write(
-        docs.select(col(idCol), size(toks).cast("double").as("dl")),
-        path, mode),
+        docs.select(col(idCol), size(toks).cast("double").as("dl")), path),
       () => Stats.write(
         docs.agg(count(lit(1)).as("n"),
-          sum(size(toks).cast("double")).as("sum_dl")),
-        path, mode))
-    if (concurrent) WorkPool.runAll(writes)
-    else writes.foreach(_())
+          sum(size(toks).cast("double")).as("sum_dl")), path)))
   }
 
   /** Fold append litter back into a bounded file layout — the

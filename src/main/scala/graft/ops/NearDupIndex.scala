@@ -100,41 +100,43 @@ object NearDupIndex {
     Seq((shingleN, numHashes, bands, nBuckets, nDocBuckets))
       .toDF("shingleN", "numHashes", "bands", "nBuckets", "nDocBuckets")
       .write.mode("overwrite").parquet(s"$path/meta")
-    writeRows(df, idCol, textCol, path, m, overwrite = true,
-      coPartition = false)
+    // builds co-partition to the layout with a scale-adaptive salt
+    // ([[DirLayout.toDirs]] — the HammingIndex build treatment):
+    // parallel file creation, bounded files per directory
+    writeRows(df, idCol, textCol, path, m)((rows, dirs, sub) =>
+      DirLayout.toDirs(rows, dirs, col(idCol), sub.cols: _*))
   }
 
-  /** Append a delta of NEW documents under the persisted geometry.
-    * `coPartition` (default true) shuffles the delta's rows to the
-    * directory layout before the write — ≤ one file per touched dir
-    * per append instead of tasks×dirs (the
-    * [[HammingIndex.hammingAppendIndex]] steady-state default; its
-    * measured litter curve applies verbatim to this layout).
+  /** Append a delta of NEW documents under the persisted geometry:
+    * [[writeDelta]] staged and published into the live index by
+    * [[IndexLayout.append]].
     */
   def neardupAppendIndex(
       delta: DataFrame,
       idCol: String,
       textCol: String,
-      path: String,
-      coPartition: Boolean = true): Unit =
-    writeRows(delta, idCol, textCol, path,
-      readMeta(delta.sparkSession, path), overwrite = false,
-      coPartition = coPartition)
+      path: String): Unit =
+    IndexLayout.append(delta.sparkSession, path)(
+      writeDelta(delta, idCol, textCol, path, _))
 
-  /** The [[CorpusUpsert]] staging hook: the delta's bucket and docs
-    * rows under the REAL index's persisted geometry, written to a
-    * staging root mirroring the layout — published into the live index
-    * by file rename, never by a direct append.
+  /** The family's one delta writer, behind [[neardupAppendIndex]], the
+    * streaming sink and [[CorpusUpsert.NearDupTarget]]: the delta's
+    * bucket and docs rows under the index at `indexPath`'s persisted
+    * geometry, written to `stagePath` in the index layout. Rows
+    * co-partition with the directory layout first — ≤ one file per
+    * touched dir per batch instead of tasks×dirs (the
+    * [[HammingIndex.writeDelta]] steady-state treatment; its measured
+    * litter curve applies verbatim to this layout).
     */
-  private[ops] def stageAppend(
+  private[graft] def writeDelta(
       delta: DataFrame,
       idCol: String,
       textCol: String,
       indexPath: String,
       stagePath: String): Unit =
     writeRows(delta, idCol, textCol, stagePath,
-      readMeta(delta.sparkSession, indexPath), overwrite = true,
-      coPartition = true)
+      readMeta(delta.sparkSession, indexPath))((rows, dirs, sub) =>
+      DirLayout.appendToDirs(rows, dirs, sub.cols: _*))
 
   private def readMeta(spark: SparkSession, path: String): Meta =
     MetaCache.cached(spark, s"$path/meta") {
@@ -172,44 +174,30 @@ object NearDupIndex {
       .withColumn("bb",
         pmod(col("bucket"), lit(m.nBuckets.toLong)).cast("int"))
 
+  /** Write the bucket and docs rows of `df` under `path`, each laid
+    * out by `layOut(rows, directory count, sub-directory)` first.
+    */
   private def writeRows(
       df: DataFrame,
       idCol: String,
       textCol: String,
       path: String,
-      m: Meta,
-      overwrite: Boolean,
-      coPartition: Boolean): Unit = {
-    val mode = if (overwrite) "overwrite" else "append"
+      m: Meta)(
+      layOut: (DataFrame, Int, IndexLayout.SubDir) => DataFrame): Unit = {
     val sets = shingleSets(df, idCol, textCol, m.shingleN)
-    val buckets = bandRows(sets, idCol, m)
-    val laidOut =
-      if (overwrite)
-        // builds co-partition to the layout with a scale-adaptive salt
-        // ([[DirLayout.toDirs]] — the HammingIndex build treatment):
-        // parallel file creation, bounded files per directory
-        DirLayout.toDirs(buckets, m.bands * m.nBuckets, col(idCol),
-          Buckets.cols: _*)
-      else if (coPartition)
-        DirLayout.appendToDirs(buckets, m.bands * m.nBuckets,
-          Buckets.cols: _*)
-      else buckets
-    val docRows = sets.withColumn("db",
-      pmod(col(idCol).cast("long"), lit(m.nDocBuckets.toLong)).cast("int"))
-    val docsLaidOut =
-      if (overwrite)
-        DirLayout.toDirs(docRows, m.nDocBuckets, col(idCol), Docs.cols: _*)
-      else if (coPartition)
-        DirLayout.appendToDirs(docRows, m.nDocBuckets, Docs.cols: _*)
-      else docRows
+    val buckets = layOut(bandRows(sets, idCol, m), m.bands * m.nBuckets,
+      Buckets)
+    val docRows = layOut(sets.withColumn("db",
+      pmod(col(idCol).cast("long"), lit(m.nDocBuckets.toLong)).cast("int")),
+      m.nDocBuckets, Docs)
     // the two sub-layouts are independent subtrees — write them
     // concurrently (the LexIndex.writeParts treatment): the buckets
     // pass re-shingles AND minhashes while the docs pass only
     // shingles, so the docs write rides inside the buckets tail
     // instead of serializing a second full shingle pass after it
     WorkPool.runAll(Seq(
-      () => Buckets.write(laidOut, path, mode),
-      () => Docs.write(docsLaidOut, path, mode)))
+      () => Buckets.write(buckets, path),
+      () => Docs.write(docRows, path)))
   }
 
   /** Near-duplicates of a query batch served from the index: every

@@ -226,7 +226,7 @@ object Pq {
       centroids: Array[Array[Double]]): Unit = {
     require(centroids.nonEmpty, "pqIvfWriteIndex: empty centroid table")
     VectorOps.Clusters.write(codedRows(df, idCol, vecCol, model, centroids),
-      path, "overwrite")
+      path)
   }
 
   /** Append a vector delta to a persisted IVF-PQ index — the
@@ -242,14 +242,13 @@ object Pq {
     * as with any vector store.
     *
     * 100 TB shape: one map-only assign+encode pass over the delta plus
-    * a partitioned append — the existing index is never read. The
+    * a partitioned stage write ([[pqIvfWriteDelta]]) published by
+    * [[IndexLayout.append]] — the existing index is never read. The
     * delta's `dv` is aligned to the index's recorded element type (same
     * parquet single-type-per-relation constraint, same cached footer
-    * read as the exact path). `autoCompact` has the exact path's
-    * publish caveat: opt-in, for quiesced maintenance windows. The rest
-    * of the lifecycle — delete, purge, compaction — is the exact
-    * path's [[VectorOps.IvfLayout]]: the two layouts are the same
-    * `cluster=` partitioning.
+    * read as the exact path). The rest of the lifecycle — delete,
+    * purge, compaction — is the exact path's [[VectorOps.IvfLayout]]:
+    * the two layouts are the same `cluster=` partitioning.
     */
   def pqIvfAppendIndex(
       delta: DataFrame,
@@ -257,24 +256,16 @@ object Pq {
       vecCol: String,
       path: String,
       model: PqModel,
-      centroids: Array[Array[Double]],
-      autoCompact: Boolean = false,
-      maxFilesPerCluster: Int = 8,
-      coPartition: Boolean = true): Map[String, (Int, Int)] = {
-    require(centroids.nonEmpty, "pqIvfAppendIndex: empty centroid table")
-    VectorOps.writeClusterRows(
-      codedRows(delta, idCol, vecCol, model, centroids),
-      path, stageDir = None, centroids.length, coPartition)
-    if (autoCompact)
-      VectorOps.IvfLayout.compact(delta.sparkSession, path, maxFilesPerCluster)
-    else Map.empty
-  }
+      centroids: Array[Array[Double]]): Unit =
+    IndexLayout.append(delta.sparkSession, path)(
+      pqIvfWriteDelta(delta, idCol, vecCol, path, _, model, centroids))
 
-  /** The [[graft.ops.CorpusUpsert]] staging hook for the compressed
-    * layout — [[VectorOps.ivfStageAppend]] plus the frozen-model PQ
-    * codes (same null-codes drop contract as every PQ write).
+  /** The compressed family's delta writer, behind [[pqIvfAppendIndex]],
+    * the streaming sink and [[CorpusUpsert.PqIvfTarget]]:
+    * [[VectorOps.ivfWriteDelta]] plus the frozen-model PQ codes (same
+    * null-codes drop contract as every PQ write).
     */
-  private[ops] def pqIvfStageAppend(
+  private[graft] def pqIvfWriteDelta(
       delta: DataFrame,
       idCol: String,
       vecCol: String,
@@ -282,10 +273,10 @@ object Pq {
       stagePath: String,
       model: PqModel,
       centroids: Array[Array[Double]]): Unit = {
-    require(centroids.nonEmpty, "pqIvfStageAppend: empty centroid table")
+    require(centroids.nonEmpty, "pqIvfAppendIndex: empty centroid table")
     VectorOps.writeClusterRows(
       codedRows(delta, idCol, vecCol, model, centroids),
-      indexPath, Some(stagePath), centroids.length, coPartition = true)
+      indexPath, stagePath, centroids.length)
   }
 
   /** (id, codes, dv, nrm, cluster) under the frozen centroids and model,

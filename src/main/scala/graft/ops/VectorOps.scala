@@ -2033,8 +2033,7 @@ object VectorOps {
       seed, refineIters = refineIters)
     require(base.nonEmpty, "ivfWriteIndex: empty corpus (or all zero-norm vectors)")
     Clusters.write(assignClusters(df, vecCol, indexedCents(base))
-      .select(col(idCol), col("dv"), col("nrm"), col("cluster")),
-      path, "overwrite")
+      .select(col(idCol), col("dv"), col("nrm"), col("cluster")), path)
     base
   }
 
@@ -2062,8 +2061,9 @@ object VectorOps {
 
   /** Append a vector delta to a persisted IVF index: each new vector is
     * assigned to its nearest EXISTING centroid (map-only — the centroid
-    * table rides the plan as literals) and appended into the matching
-    * `cluster=` partitions. Centroids are frozen, the standard IVF
+    * table rides the plan as literals) and published into the matching
+    * `cluster=` partitions ([[ivfWriteDelta]] staged, then
+    * [[IndexLayout.append]]). Centroids are frozen, the standard IVF
     * maintenance trade: every earlier AND later probe routes against
     * the same cut of the space, so probe results over the appended
     * index are IDENTICAL to an index written from scratch with the same
@@ -2072,94 +2072,67 @@ object VectorOps {
     * and rebuild when recall decays, exactly like any vector store.
     *
     * 100 TB shape: the delta is one map-only pass + a partitioned
-    * append; the existing index is never read, let alone re-shuffled.
+    * stage write and one rename per staged file; the existing index is
+    * never read, let alone re-shuffled.
     *
-    * `autoCompact = true` runs `IvfLayout.compact` after the append
-    * whenever a cluster's file count crossed `maxFilesPerCluster` —
-    * the measured probe-vs-litter curve (SCALE.md `ivf_litter`: 98 ms
+    * Compaction is a separate, explicit `IvfLayout.compact` call: the
+    * measured probe-vs-litter curve (SCALE.md `ivf_litter`: 98 ms
     * fresh → 206 ms at 33 files/cluster, pure per-file reader
     * overhead) says compaction CADENCE, not index size, governs probe
-    * latency, so the append is the natural place for the trigger.
-    * Under the knee the check is one driver file listing (no data
-    * touched); at the knee only the oversized clusters rewrite.
-    * Compaction preserves rows and probe results bit-identically
-    * (pinned in SimilaritySpec), but its publish protocol wants
-    * QUIESCED probes — a reader listing a cluster mid-rename can see a
-    * partial file set — so the trigger is OPT-IN: the default append
-    * is always safe to run concurrently with probes, and callers who
-    * own a maintenance window (no in-flight probes) pass
-    * `autoCompact = true` or schedule `IvfLayout.compact` themselves.
-    * Returns the compaction report (empty when nothing crossed the
-    * knee or `autoCompact` is off).
+    * latency, and compaction's publish protocol wants QUIESCED probes
+    * (a reader listing a cluster mid-rename can see a partial file
+    * set) — so a steady-state deployment compacts in its maintenance
+    * window, while the append itself is always safe next to probes.
     */
   def ivfAppendIndex(
       delta: DataFrame,
       idCol: String,
       vecCol: String,
       path: String,
-      centroids: Array[Array[Double]],
-      autoCompact: Boolean = false,
-      maxFilesPerCluster: Int = 8,
-      coPartition: Boolean = true): Map[String, (Int, Int)] = {
-    require(centroids.nonEmpty, "ivfAppendIndex: empty centroid table")
-    writeClusterRows(
-      assignClusters(delta, vecCol, indexedCents(centroids))
-        .select(col(idCol), col("dv"), col("nrm"), col("cluster")),
-      path, stageDir = None, centroids.length, coPartition)
-    if (autoCompact)
-      IvfLayout.compact(delta.sparkSession, path, maxFilesPerCluster)
-    else Map.empty
-  }
+      centroids: Array[Array[Double]]): Unit =
+    IndexLayout.append(delta.sparkSession, path)(
+      ivfWriteDelta(delta, idCol, vecCol, path, _, centroids))
 
-  /** The [[graft.ops.CorpusUpsert]] staging hook: the delta's index
-    * rows — cluster-assigned under the index's frozen centroids, `dv`
-    * aligned to the index's recorded element type — written to a
-    * staging root mirroring the index layout (`cluster=` dirs), to be
-    * published into the live index by file rename, never by a direct
-    * append.
+  /** The exact family's delta writer, behind [[ivfAppendIndex]], the
+    * streaming sink and [[CorpusUpsert.IvfTarget]]: the delta's index
+    * rows, cluster-assigned under the index's frozen centroids, written
+    * to `stagePath` in the index layout ([[writeClusterRows]]).
     */
-  private[ops] def ivfStageAppend(
+  private[graft] def ivfWriteDelta(
       delta: DataFrame,
       idCol: String,
       vecCol: String,
       indexPath: String,
       stagePath: String,
       centroids: Array[Array[Double]]): Unit = {
-    require(centroids.nonEmpty, "ivfStageAppend: empty centroid table")
+    require(centroids.nonEmpty, "ivfAppendIndex: empty centroid table")
     writeClusterRows(
       assignClusters(delta, vecCol, indexedCents(centroids))
         .select(col(idCol), col("dv"), col("nrm"), col("cluster")),
-      indexPath, Some(stagePath), centroids.length, coPartition = true)
+      indexPath, stagePath, centroids.length)
   }
 
-  /** The one writer behind the exact and PQ append and stage paths.
-    * `rows` carries `dv` in the delta's element type; the index stores
-    * `dv` in the element type of the corpus that built it (float stays
-    * float — see [[ivfWriteIndex]]), and parquet readers do not
-    * reconcile a float file with a double file in one scan, so `dv` is
-    * cast to the index's recorded type (a no-op column reference in the
-    * normal case). The recorded type is cached per path for the life
-    * of the JVM: the steady-append pattern pays the footer read once,
-    * not per batch, and the cache is trusted only while the index
-    * exists.
+  /** The one writer behind the exact and PQ delta writers. `rows`
+    * carries `dv` in the delta's element type; the index stores `dv` in
+    * the element type of the corpus that built it (float stays float —
+    * see [[ivfWriteIndex]]), and parquet readers do not reconcile a
+    * float file with a double file in one scan, so `dv` is cast to the
+    * index's recorded type (a no-op column reference in the normal
+    * case). The recorded type is cached per path for the life of the
+    * JVM: the steady-append pattern pays the footer read once, not per
+    * batch, and the cache is trusted only while the index exists.
     *
     * The rows co-partition with the cluster layout before the
-    * dynamic-partition write — ≤ one file per touched cluster instead
-    * of tasks×clusters, with file creation parallelized (the
-    * [[HammingIndex.hammingAppendIndex]] steady-state treatment; the
-    * shuffle is delta-sized). `coPartition = false` opts a corpus-scale
-    * append out.
-    *
-    * `stageDir = None` appends into the index at `indexPath` and
-    * records its dv type; `Some(dir)` overwrites the staging root
-    * `dir` and leaves the cache alone.
+    * dynamic-partition write to `stageDir` — ≤ one file per touched
+    * cluster instead of tasks×clusters, with file creation parallelized
+    * (the [[HammingIndex.writeDelta]] steady-state treatment; the
+    * shuffle is delta-sized).
     */
   private[ops] def writeClusterRows(
       rows: DataFrame,
       indexPath: String,
-      stageDir: Option[String],
-      nClusters: Int,
-      coPartition: Boolean): Unit = {
+      stageDir: String,
+      nClusters: Int): Unit = {
     val spark = rows.sparkSession
     val p = new org.apache.hadoop.fs.Path(indexPath)
     val indexElem =
@@ -2176,19 +2149,12 @@ object VectorOps {
         rows.withColumn("dv", col("dv").cast(t))
       case _ => rows
     }
-    val laidOut =
-      if (coPartition)
-        DirLayout.appendToDirs(aligned, nClusters, Clusters.cols: _*)
-      else aligned
-    stageDir match {
-      case Some(dir) => Clusters.write(laidOut, dir, "overwrite")
-      case None =>
-        Clusters.write(laidOut, indexPath, "append")
-        // the index now exists with this dv type — later appends in
-        // this JVM skip the footer read entirely
-        ivfDvTypeCache.put(indexPath,
-          indexElem.getOrElse(rows.schema("dv").dataType))
-    }
+    Clusters.write(
+      DirLayout.appendToDirs(aligned, nClusters, Clusters.cols: _*), stageDir)
+    // the published index holds this dv type — later deltas in this
+    // JVM skip the footer read entirely
+    ivfDvTypeCache.put(indexPath,
+      indexElem.getOrElse(rows.schema("dv").dataType))
   }
 
   /** The index relation with tombstoned ids excluded — what every

@@ -14,30 +14,25 @@ import org.apache.spark.sql.functions._
   * implicit in the scan, and compaction is a write-side file-count
   * choice.
   *
-  * Scale notes: `targetFiles` defaults to 1 to match the reference's
-  * one-file-per-day contract (ipynb:475), but is a parameter because a
-  * 100 TB day must fan out (SURVEY §7.4 item 3). Dedup on
-  * (chat_id, message_id) collapses webhook redelivery (at-least-once →
-  * exactly-once content, SURVEY §3.4).
+  * Scale notes: each day compacts to ONE file (`coalesce(1)`), the
+  * reference's one-file-per-day contract (ipynb:475). A 100 TB day
+  * would need a fan-out (SURVEY §7.4 item 3); no caller needs one
+  * today. Dedup on (chat_id, message_id) always runs: it collapses
+  * webhook redelivery (at-least-once → exactly-once content,
+  * SURVEY §3.4).
   */
 object EtlJob {
 
   /** Pure transform: raw updates for one day → enriched rows. */
-  def transform(
-      raw: DataFrame,
-      day: java.time.LocalDate,
-      dedup: Boolean = true): DataFrame = {
-    val flat = Flatten(raw, day)
-    if (dedup) flat.dropDuplicates("chat_id", "message_id") else flat
-  }
+  def transform(raw: DataFrame, day: java.time.LocalDate): DataFrame =
+    Flatten(raw, day).dropDuplicates("chat_id", "message_id")
 
   /** Run the ETL for one ingestion date. Returns (rows written, rejects). */
   def run(
       spark: SparkSession,
       rawDir: String,
       enrichedDir: String,
-      day: java.time.LocalDate,
-      targetFiles: Int = 1): (Long, Long) = {
+      day: java.time.LocalDate): (Long, Long) = {
     // Partition-pruned read: only this day's directory is listed/scanned,
     // the Spark analog of the reference's S3 Prefix= (ipynb:572).
     val dayDir = s"$rawDir/context_date=$day"
@@ -52,8 +47,7 @@ object EtlJob {
     try {
     val enriched = transform(raw, day)
     val nRejects = Flatten.rejects(raw).count()
-    val out = if (targetFiles == 1) enriched.coalesce(1)
-              else enriched.repartition(targetFiles)
+    val out = enriched.coalesce(1)
     // Row count rides the write itself as an observed metric — at scale
     // a re-read of the partition just to count what was written is a
     // second full scan of the day.

@@ -163,20 +163,16 @@ object IngestJob {
   /** Start the streaming job from ANY update-shaped source ([[fileSource]],
     * [[fromMessageStream]] over Kafka/MemoryStream, …). One output file
     * per micro-batch per partition — the raw zone stays append-only and
-    * replayable; the sink format/options are injectable the same way the
-    * source is (raw zone default: verbatim JSON, SURVEY §2.2).
+    * replayable, as verbatim JSON (SURVEY §2.2).
     */
   def startFrom(
       updates: DataFrame,
       rawDir: String,
       checkpointDir: String,
       chatId: Long,
-      trigger: Trigger = Trigger.AvailableNow(),
-      sinkFormat: String = "json",
-      sinkOptions: Map[String, String] = Map.empty): StreamingQuery =
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
     route(updates, chatId).writeStream
-      .format(sinkFormat)
-      .options(sinkOptions)
+      .format("json")
       .option("path", rawDir)
       .option("checkpointLocation", checkpointDir)
       .partitionBy("context_date")

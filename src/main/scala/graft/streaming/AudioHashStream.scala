@@ -35,9 +35,9 @@ object AudioHashStream {
       payloadCol: String,
       path: String,
       streamId: String = ""): Boolean =
-    VectorIndexStream.ledgered(batch, batchId, path, streamId) {
+    VectorIndexStream.publishBatch(batch, batchId, path, streamId) { stage =>
       val (codes, _) = AudioHash.audioFingerprint(batch, idCol, payloadCol)
-      HammingIndex.hammingAppendIndex(codes.toDF(), "id", "fp_diff", path)
+      HammingIndex.writeDelta(codes.toDF(), "id", "fp_diff", path, stage)
     }
 
   /** The stream writer: attach a checkpoint + trigger and `.start()`. */

@@ -11,10 +11,10 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   *
   * Idempotence needs NO extra `_graft_batches` ledger: the batch key
   * is `s<queryId>-<batchId>` and applyBatch's OWN marker protocol
-  * makes foreachBatch's at-least-once redelivery a no-op — strictly
-  * stronger than the ledgered-append streams, because even a crash
-  * INSIDE an apply resumes exactly-once (the ledger streams only
-  * protect the append-then-mark boundary).
+  * makes foreachBatch's at-least-once redelivery a no-op, and even a
+  * crash INSIDE an apply resumes exactly-once — per index it is the
+  * same [[graft.ops.IndexLayout.publish]] the index sinks run with
+  * their ledger entry as the done marker.
   *
   * Contracts: one upsert stream per coordination root (micro-batch
   * applies are serialized by the engine); at most one revision per

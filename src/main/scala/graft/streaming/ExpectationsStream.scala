@@ -7,8 +7,8 @@ import org.apache.spark.sql.streaming.DataStreamWriter
 /** Streaming expectations monitor ([[graft.ops.Expectations]]): each
   * micro-batch of newly-ingested rows appends its own row-local
   * violation counts (`(check, n_rows, n_violations)` — every column
-  * additive) through the staged-rename exactly-once publish
-  * ([[VectorIndexStream.ledgeredSingleFile]]), so neither
+  * additive) as one staged file through the index sinks' exactly-once
+  * publish ([[VectorIndexStream.publishBatch]]), so neither
   * at-least-once redelivery nor a crash between the parquet write and
   * the ledger marker can double-count. Readers re-sum via
   * [[graft.ops.Expectations.readReport]], which judges pass/fail over
@@ -33,9 +33,9 @@ object ExpectationsStream {
       checks: Seq[Expectations.Check],
       path: String,
       streamId: String = ""): Boolean =
-    VectorIndexStream.ledgeredSingleFile(batch, batchId, path, streamId) {
-      Expectations.rowLocalReport(batch, checks)
-    }
+    VectorIndexStream.publishBatch(batch, batchId, path, streamId)(
+      Expectations.rowLocalReport(batch, checks).coalesce(1)
+        .write.mode("overwrite").parquet(_))
 
   /** The stream writer: attach a checkpoint + trigger and `.start()`. */
   def monitorSink(

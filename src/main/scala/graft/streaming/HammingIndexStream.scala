@@ -8,8 +8,9 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * ([[graft.ops.HammingIndex]]) — the binary member of the streaming
   * index family ([[VectorIndexStream]] IVF/IVF-PQ, [[LexIndexStream]]
   * BM25): each micro-batch of new vectors appends its band rows under
-  * the index's persisted geometry, behind the SAME per-stream batch
-  * ledger (`_graft_batches/<streamId>/<id>`), so foreachBatch's
+  * the index's persisted geometry through the SAME staged publish
+  * and per-stream batch ledger (`_graft_batches/<streamId>/<id>`,
+  * [[VectorIndexStream.publishBatch]]), so foreachBatch's
   * at-least-once redelivery is a no-op instead of duplicate band
   * rows. The layout is append-pure (band rows are new-id appends), so
   * a stream-built index is row-identical to a batch build over the
@@ -28,9 +29,8 @@ object HammingIndexStream {
       vecCol: String,
       path: String,
       streamId: String = ""): Boolean =
-    VectorIndexStream.ledgered(batch, batchId, path, streamId) {
-      HammingIndex.hammingAppendIndex(batch, idCol, vecCol, path)
-    }
+    VectorIndexStream.publishBatch(batch, batchId, path, streamId)(
+      HammingIndex.writeDelta(batch, idCol, vecCol, path, _))
 
   /** The stream writer: attach a checkpoint + trigger and `.start()`.
     * The index root must already exist ([[HammingIndex

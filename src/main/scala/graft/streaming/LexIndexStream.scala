@@ -8,9 +8,11 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * ([[graft.ops.LexIndex]]) — the lexical twin of
   * [[VectorIndexStream]]: each micro-batch of new documents appends
   * its postings/doclen/stats under the index's persisted bucket
-  * fanout, behind the SAME per-stream batch ledger
-  * (`_graft_batches/<streamId>/<id>`), so foreachBatch's
-  * at-least-once redelivery is a no-op instead of a double-count.
+  * fanout through the SAME staged publish, with the per-stream batch
+  * ledger (`_graft_batches/<streamId>/<id>`) as its done marker
+  * ([[VectorIndexStream.publishBatch]]), so neither foreachBatch's
+  * at-least-once redelivery nor a crash before the ledger entry lands
+  * can count a batch's additive `stats/` row twice.
   * The index stays append-pure: stats are additive rows, postings
   * and doclen are new-id appends (the ivfAppendIndex contract), so a
   * stream-built index is row-identical to a batch build over the
@@ -29,9 +31,8 @@ object LexIndexStream {
       textCol: String,
       path: String,
       streamId: String = ""): Boolean =
-    VectorIndexStream.ledgered(batch, batchId, path, streamId) {
-      LexIndex.bm25AppendIndex(batch, idCol, textCol, path)
-    }
+    VectorIndexStream.publishBatch(batch, batchId, path, streamId)(
+      LexIndex.writeDelta(batch, idCol, textCol, path, _))
 
   /** Apply one micro-batch of takedown ids
     * ([[graft.ops.LexIndex.bm25DeleteIds]]) behind the batch ledger —

@@ -9,8 +9,9 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * streaming index family ([[VectorIndexStream]] IVF/IVF-PQ,
   * [[LexIndexStream]] BM25, [[HammingIndexStream]] MIH): each
   * micro-batch of new documents appends its bucket+shingle rows under
-  * the index's persisted geometry, behind the SAME per-stream batch
-  * ledger (`_graft_batches/<streamId>/<id>`), so foreachBatch's
+  * the index's persisted geometry through the SAME staged publish
+  * and per-stream batch ledger (`_graft_batches/<streamId>/<id>`,
+  * [[VectorIndexStream.publishBatch]]), so foreachBatch's
   * at-least-once redelivery is a no-op instead of duplicate rows. The
   * layout is append-pure (bucket and docs rows are new-id appends), so
   * a stream-built index is row-identical to a batch build over the
@@ -35,9 +36,8 @@ object NearDupIndexStream {
       textCol: String,
       path: String,
       streamId: String = ""): Boolean =
-    VectorIndexStream.ledgered(batch, batchId, path, streamId) {
-      NearDupIndex.neardupAppendIndex(batch, idCol, textCol, path)
-    }
+    VectorIndexStream.publishBatch(batch, batchId, path, streamId)(
+      NearDupIndex.writeDelta(batch, idCol, textCol, path, _))
 
   /** The stream writer: attach a checkpoint + trigger and `.start()`.
     * The index root must already exist ([[NearDupIndex

@@ -34,9 +34,9 @@ object PhashStream {
       payloadCol: String,
       path: String,
       streamId: String = ""): Boolean =
-    VectorIndexStream.ledgered(batch, batchId, path, streamId) {
+    VectorIndexStream.publishBatch(batch, batchId, path, streamId) { stage =>
       val (codes, _) = Phash.imageDHash(batch, idCol, payloadCol)
-      HammingIndex.hammingAppendIndex(codes.toDF(), "id", "phash_diff", path)
+      HammingIndex.writeDelta(codes.toDF(), "id", "phash_diff", path, stage)
     }
 
   /** The stream writer: attach a checkpoint + trigger and `.start()`. */

@@ -7,8 +7,8 @@ import org.apache.spark.sql.streaming.DataStreamWriter
 /** Streaming PII-incidence monitor ([[graft.ops.Pii]]): each
   * micro-batch of newly-ingested documents appends its own per-group
   * incidence ROWS ([[Pii.report]] — every column an additive count)
-  * through the staged-rename exactly-once publish
-  * ([[VectorIndexStream.ledgeredSingleFile]]), so neither at-least-once
+  * as one staged file through the index sinks' exactly-once publish
+  * ([[VectorIndexStream.publishBatch]]), so neither at-least-once
   * redelivery nor a crash between write and marker can double-count. Readers re-sum via
   * [[Pii.readReport]]; stream-built ≡ batch-built count for count
   * (PiiSpec pins it). The compliance dashboard's live feed — how much
@@ -26,9 +26,9 @@ object PiiStream {
       textCol: String,
       path: String,
       streamId: String = ""): Boolean =
-    VectorIndexStream.ledgeredSingleFile(batch, batchId, path, streamId) {
-      Pii.report(batch, groupCol, textCol)
-    }
+    VectorIndexStream.publishBatch(batch, batchId, path, streamId)(
+      Pii.report(batch, groupCol, textCol).coalesce(1)
+        .write.mode("overwrite").parquet(_))
 
   /** The stream writer: attach a checkpoint + trigger and `.start()`. */
   def monitorSink(

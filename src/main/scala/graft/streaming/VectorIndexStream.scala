@@ -1,45 +1,44 @@
 package graft.streaming
 
-import graft.ops.{Pq, VectorOps}
+import graft.ops.{IndexLayout, Pq, VectorOps}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.streaming.DataStreamWriter
 
 /** Streaming maintenance of a persisted IVF ANN index
   * ([[VectorOps.ivfWriteIndex]] layout): each micro-batch of new
-  * vectors is assigned to its nearest FROZEN centroid and appended into
-  * the matching `cluster=` partitions via [[VectorOps.ivfAppendIndex]].
-  * This closes the vector-store ingestion loop — embeddings arrive as a
-  * stream, the index stays continuously probeable, and probe results
-  * are identical to an index batch-built from the same rows under the
-  * same centroids (frozen-centroid equivalence, pinned in
-  * SimilaritySpec).
+  * vectors is assigned to its nearest FROZEN centroid and published
+  * into the matching `cluster=` partitions. This closes the
+  * vector-store ingestion loop — embeddings arrive as a stream, the
+  * index stays continuously probeable, and probe results are identical
+  * to an index batch-built from the same rows under the same centroids
+  * (frozen-centroid equivalence, pinned in SimilaritySpec).
   *
   * 100 TB shape: per micro-batch work is one map-only centroid
-  * assignment plus a partitioned append — the existing index is never
-  * read. Centroids ride the plan as literals; there is no driver state
-  * beyond them. Compaction cadence (the probe-vs-litter knee, SCALE.md
-  * `ivf_litter`) is the only maintenance concern; `autoCompact` is
-  * opt-in exactly as in [[VectorOps.ivfAppendIndex]] because the
-  * publish protocol wants quiesced probes — a steady-state deployment
-  * compacts in its maintenance window, not mid-stream.
+  * assignment plus a partitioned stage write and one rename per staged
+  * file — the existing index is never read. Centroids ride the plan as
+  * literals; there is no driver state beyond them. Compaction cadence
+  * (the probe-vs-litter knee, SCALE.md `ivf_litter`) is the only
+  * maintenance concern: its publish protocol wants quiesced probes, so
+  * a steady-state deployment calls `IvfLayout.compact` in its
+  * maintenance window, not mid-stream.
   *
   * Exactly-once: foreachBatch is at-least-once (a batch id can be
-  * redelivered after a restart) and a blind parquet append is not
-  * idempotent, so [[appendBatch]] keeps a batch ledger under the index
-  * root (`_graft_batches/<streamId>/<id>`, underscore-hidden from every
-  * parquet listing): a redelivered id is skipped whole. Batch ids are
-  * scoped to a checkpoint lineage, so the ledger is namespaced by the
-  * streaming query id (persisted in the checkpoint's metadata file —
-  * stable across restarts of the SAME checkpoint, fresh for a NEW one):
-  * pointing a new stream at an existing index restarts batch ids at 0,
-  * and without the namespace those ids would collide with the old
-  * ledger and be silently dropped. [[indexSink]] reads the id off the
+  * redelivered after a restart), so every index sink publishes through
+  * [[publishBatch]] — [[graft.ops.IndexLayout.publish]] keyed
+  * `<streamId>-<batchId>`, staged under the index's underscore-hidden
+  * `_graft_stage/`, with the batch ledger entry
+  * (`_graft_batches/<streamId>/<id>`, underscore-hidden from every
+  * parquet listing) as its done marker. A redelivered id is skipped
+  * whole, and a crash anywhere inside a batch converges on retry
+  * without duplicating a row. Batch ids are scoped to a checkpoint
+  * lineage, so the ledger is namespaced by the streaming query id
+  * (persisted in the checkpoint's metadata file — stable across
+  * restarts of the SAME checkpoint, fresh for a NEW one): pointing a
+  * new stream at an existing index restarts batch ids at 0, and
+  * without the namespace those ids would collide with the old ledger
+  * and be silently dropped. [[indexSink]] reads the id off the
   * stream-execution thread's `sql.streaming.queryId` local property.
-  * The marker lands AFTER the append, so a crash inside that narrow
-  * window can duplicate one batch — the standard foreachBatch
-  * idempotence trade; ANN probes tolerate it (a duplicated
-  * (id, vector) row ranks identically), and a compaction rebuild
-  * heals it.
   */
 object VectorIndexStream {
 
@@ -56,20 +55,15 @@ object VectorIndexStream {
       vecCol: String,
       path: String,
       centroids: Array[Array[Double]],
-      autoCompact: Boolean = false,
-      maxFilesPerCluster: Int = 8,
       streamId: String = ""): Boolean =
-    ledgered(batch, batchId, path, streamId) {
-      VectorOps.ivfAppendIndex(batch, idCol, vecCol, path, centroids,
-        autoCompact, maxFilesPerCluster)
-    }
+    publishBatch(batch, batchId, path, streamId)(
+      VectorOps.ivfWriteDelta(batch, idCol, vecCol, path, _, centroids))
 
   /** [[appendBatch]] for a persisted IVF-PQ index
     * ([[graft.ops.Pq.pqIvfWriteIndex]] layout): same ledger, same
-    * redelivery contract — the append is
-    * [[graft.ops.Pq.pqIvfAppendIndex]], so codes are computed under the
-    * FROZEN model and the streamed index stays bit-identical in content
-    * to a batch build over the same rows.
+    * redelivery contract — codes are computed under the FROZEN model,
+    * so the streamed index stays bit-identical in content to a batch
+    * build over the same rows.
     */
   def pqAppendBatch(
       batch: DataFrame,
@@ -79,80 +73,53 @@ object VectorIndexStream {
       path: String,
       model: Pq.PqModel,
       centroids: Array[Array[Double]],
-      autoCompact: Boolean = false,
-      maxFilesPerCluster: Int = 8,
       streamId: String = ""): Boolean =
-    ledgered(batch, batchId, path, streamId) {
-      Pq.pqIvfAppendIndex(batch, idCol, vecCol, path, model, centroids,
-        autoCompact, maxFilesPerCluster)
-    }
+    publishBatch(batch, batchId, path, streamId)(
+      Pq.pqIvfWriteDelta(batch, idCol, vecCol, path, _, model, centroids))
 
-  /** The at-least-once guard the INDEX sinks share: run `append` only
-    * when `streamId`/`batchId` has no ledger marker yet, then mark.
-    * The marker lands after the (multi-file, partitioned) append, so a
-    * crash between the two re-appends on retry — acceptable for the
-    * index layouts because duplicate rows there are id-keyed and
-    * bounded to the one crashed batch; ADDITIVE-COUNT report sinks
-    * must use [[ledgeredSingleFile]] instead, where the same window
-    * would skew re-summed totals forever.
+  /** The ledger marker of `streamId`/`batchId` under `path`. */
+  private def ledgerMarker(path: String, streamId: String, batchId: Long)
+      : Path =
+    new Path(path,
+      if (streamId.isEmpty) s"_graft_batches/$batchId"
+      else s"_graft_batches/$streamId/$batchId")
+
+  /** The exactly-once publish every index sink and report sink shares:
+    * [[graft.ops.IndexLayout.publish]] of what `write` stages (given
+    * the stage dir), keyed `<streamId>-<batchId>`, with the batch's
+    * ledger entry as the done marker. Returns false when the ledger
+    * says the batch already landed.
+    */
+  private[streaming] def publishBatch(
+      batch: DataFrame, batchId: Long, path: String, streamId: String)(
+      write: String => Unit): Boolean = {
+    val key = if (streamId.isEmpty) s"$batchId" else s"$streamId-$batchId"
+    IndexLayout.publish(batch.sparkSession, path,
+      new Path(path, s"_graft_stage/$key"), key,
+      ledgerMarker(path, streamId, batchId))(write)
+  }
+
+  /** The at-least-once guard of the NON-index sinks (drift, SCD2,
+    * sketches, deletes): run `apply` only when `streamId`/`batchId`
+    * has no ledger marker yet, then mark. The marker lands after the
+    * write, so a crash inside that narrow window repeats the write on
+    * retry — the standard foreachBatch idempotence trade. Tombstones
+    * deduplicate, an HLL union absorbs a repeated partial and the SCD2
+    * fold collapses an echoed change; a repeated drift batch counts
+    * twice.
     */
   private[streaming] def ledgered(
       batch: DataFrame, batchId: Long, path: String, streamId: String)(
-      append: => Unit): Boolean = {
-    val ledger =
-      if (streamId.isEmpty) s"_graft_batches/$batchId"
-      else s"_graft_batches/$streamId/$batchId"
-    val marker = new org.apache.hadoop.fs.Path(path, ledger)
+      apply: => Unit): Boolean = {
+    val marker = ledgerMarker(path, streamId, batchId)
     val fs = marker.getFileSystem(
       batch.sparkSession.sparkContext.hadoopConfiguration)
     if (fs.exists(marker)) false
     else {
-      append
-      fs.mkdirs(marker.getParent)
-      fs.create(marker, true).close()
+      apply
+      IndexLayout.touch(fs, marker)
       true
     }
-  }
-
-  /** Exactly-once publish for ADDITIVE-COUNT report sinks (PII and
-    * expectations monitors): the batch's rows are staged into a
-    * dot-hidden dir, published by ONE atomic rename to a batch-keyed
-    * file name, then marked. Every crash interleaving lands the rows
-    * at most once — a retry either sees the marker (no-op), or sees
-    * the published file (skips the write, re-marks), or re-stages from
-    * scratch. Count rows, unlike id-keyed index rows, cannot be
-    * deduplicated on read, so the plain [[ledgered]]'s append→marker
-    * window would double-count totals permanently. Report relations
-    * are group/check-scale — the single file per batch IS the right
-    * layout.
-    */
-  private[streaming] def ledgeredSingleFile(
-      batch: DataFrame, batchId: Long, path: String, streamId: String)(
-      rows: => DataFrame): Boolean = {
-    import org.apache.hadoop.fs.Path
-    val sid = if (streamId.isEmpty) "b" else streamId
-    val marker = new Path(path, s"_graft_batches/$sid/$batchId")
-    val fs = marker.getFileSystem(
-      batch.sparkSession.sparkContext.hadoopConfiguration)
-    if (fs.exists(marker)) return false
-    val visible = new Path(path, s"graft-batch-$sid-$batchId.parquet")
-    if (!fs.exists(visible)) {
-      val stage = new Path(path, s".stage-$sid-$batchId")
-      rows.coalesce(1).write.mode("overwrite").parquet(stage.toString)
-      val part = fs.listStatus(stage).map(_.getPath)
-        .find(p => p.getName.startsWith("part-") &&
-          p.getName.endsWith(".parquet"))
-        .getOrElse(throw new java.io.IOException(
-          s"ledgeredSingleFile: no staged part file in $stage"))
-      fs.mkdirs(visible.getParent)
-      if (!fs.rename(part, visible))
-        throw new java.io.IOException(
-          s"ledgeredSingleFile: cannot publish $part -> $visible")
-      fs.delete(stage, true)
-    }
-    fs.mkdirs(marker.getParent)
-    fs.create(marker, true).close()
-    true
   }
 
   /** The stream writer: attach a checkpoint + trigger and `.start()`.
@@ -164,12 +131,10 @@ object VectorIndexStream {
       idCol: String,
       vecCol: String,
       path: String,
-      centroids: Array[Array[Double]],
-      autoCompact: Boolean = false,
-      maxFilesPerCluster: Int = 8): DataStreamWriter[Row] =
+      centroids: Array[Array[Double]]): DataStreamWriter[Row] =
     stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
       appendBatch(batch, batchId, idCol, vecCol, path, centroids,
-        autoCompact, maxFilesPerCluster, runningQueryId(batch))
+        runningQueryId(batch))
       ()
     }
 
@@ -182,12 +147,10 @@ object VectorIndexStream {
       vecCol: String,
       path: String,
       model: Pq.PqModel,
-      centroids: Array[Array[Double]],
-      autoCompact: Boolean = false,
-      maxFilesPerCluster: Int = 8): DataStreamWriter[Row] =
+      centroids: Array[Array[Double]]): DataStreamWriter[Row] =
     stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
       pqAppendBatch(batch, batchId, idCol, vecCol, path, model, centroids,
-        autoCompact, maxFilesPerCluster, runningQueryId(batch))
+        runningQueryId(batch))
       ()
     }
 

@@ -36,9 +36,9 @@ object VideoHashStream {
       payloadCol: String,
       path: String,
       streamId: String = ""): Boolean =
-    VectorIndexStream.ledgered(batch, batchId, path, streamId) {
+    VectorIndexStream.publishBatch(batch, batchId, path, streamId) { stage =>
       val (codes, _, _) = VideoHash.videoFingerprint(batch, idCol, payloadCol)
-      HammingIndex.hammingAppendIndex(codes.toDF(), "id", "video_diff", path)
+      HammingIndex.writeDelta(codes.toDF(), "id", "video_diff", path, stage)
     }
 
   /** The stream writer: attach a checkpoint + trigger and `.start()`. */

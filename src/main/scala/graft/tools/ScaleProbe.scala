@@ -1044,7 +1044,8 @@ object ScaleProbe {
       }.min
       def files(): Int = new java.io.File(path).listFiles
         .filter(f => f.isDirectory && f.getName.startsWith("cluster="))
-        .map(_.listFiles.count(f => f.isFile && f.getName.startsWith("part-"))).sum
+        .map(_.listFiles.count(f => f.isFile &&
+          !f.getName.startsWith(".") && !f.getName.startsWith("_"))).sum
       probeLat() // warm
       val fresh = probeLat()
       val f0 = files()
@@ -1053,7 +1054,7 @@ object ScaleProbe {
       (1 to appends).foreach { i =>
         graft.ops.VectorOps.ivfAppendIndex(
           embs.withColumn("vec_id", col("vec_id") + lit(i * maxVid)),
-          "vec_id", "embedding", path, cents, autoCompact = false)
+          "vec_id", "embedding", path, cents)
       }
       val littered = probeLat()
       val f1 = files()
@@ -1065,21 +1066,22 @@ object ScaleProbe {
       println(f"[scale] ivf_litter probe_ms fresh=${fresh * 1000}%6.1f ($f0 files) " +
         f"after${appends}appends=${littered * 1000}%6.1f ($f1 files) " +
         f"compacted=${compacted * 1000}%6.1f ($f2 files, compaction ${compactSec}%.1f s)")
-      // Auto-compaction regime: the same steady drip with the
-      // ivfAppendIndex trigger ON — probe latency must hold near the
-      // fresh-index point with NO manual maintenance call, and the
-      // amortized trigger cost is visible as the per-append mean.
+      // Per-append compaction regime: the same steady drip with an
+      // IvfLayout.compact after every append — probe latency must hold
+      // near the fresh-index point, and the amortized compaction cost
+      // is visible as the per-append mean.
       val ta0 = System.nanoTime()
       (1 to appends).foreach { i =>
         graft.ops.VectorOps.ivfAppendIndex(
           embs.withColumn("vec_id", col("vec_id") + lit((appends + i) * maxVid)),
-          "vec_id", "embedding", path, cents, autoCompact = true)
+          "vec_id", "embedding", path, cents)
+        graft.ops.VectorOps.IvfLayout.compact(spark, path)
       }
       val appendSec = (System.nanoTime() - ta0) / 1e9
       val auto = probeLat()
       val f3 = files()
       println(f"[scale] ivf_litter_auto probe_ms after${appends}more_auto_appends=" +
-        f"${auto * 1000}%6.1f ($f3 files, ${appendSec / appends}%.2f s/append incl. trigger)")
+        f"${auto * 1000}%6.1f ($f3 files, ${appendSec / appends}%.2f s/append incl. compaction)")
     }
     // IVF-PQ probe latency under the nClusters ~ N rule: with expected
     // cluster size constant, the pruned ADC shortlist scans a

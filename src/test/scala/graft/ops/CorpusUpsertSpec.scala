@@ -95,8 +95,8 @@ class CorpusUpsertSpec extends AnyFunSuite {
     LexIndex.bm25WriteIndex(fc, Rid, "text", r.bm25, buckets = 8)
     HammingIndex.hammingWriteIndex(fc, Rid, "embedding", r.ham,
       nBands = 8, nBuckets = 8, dim = 64)
-    VectorOps.ivfStageAppend(fc, Rid, "embedding", r.ivf, r.ivf, cents)
-    Pq.pqIvfStageAppend(fc, Rid, "embedding", r.pq, r.pq, model, cents)
+    VectorOps.ivfWriteDelta(fc, Rid, "embedding", r.ivf, r.ivf, cents)
+    Pq.pqIvfWriteDelta(fc, Rid, "embedding", r.pq, r.pq, model, cents)
     r
   }
   private lazy val rebuiltProbes = probeAll(rebuilt)
@@ -180,7 +180,7 @@ class CorpusUpsertSpec extends AnyFunSuite {
     val conf = spark.sparkContext.hadoopConfiguration
     val stageDir = new Path(s"${r.ups}/batches/rev1/stage-bm25")
     val fs = stageDir.getFileSystem(conf)
-    LexIndex.stageAppend(withRid, Rid, "text", r.bm25, stageDir.toString)
+    LexIndex.writeDelta(withRid, Rid, "text", r.bm25, stageDir.toString)
     fs.create(new Path(stageDir, "_graft_staged"), true).close()
     // ...move HALF its doclen files by hand with the publish naming
     val doclenStage = new Path(stageDir, "doclen")
@@ -339,7 +339,7 @@ class CorpusUpsertSpec extends AnyFunSuite {
 
   test("positional postings ride the coordinated upsert: phrase/proximity probes ≡ rebuild") {
     val r = Roots(tmp("positional"))
-    // positional bootstrap: stageAppend inherits the flag from the
+    // positional bootstrap: the delta writer inherits the flag from the
     // real index's meta, so the whole lifecycle carries ps arrays
     LexIndex.bm25WriteIndex(
       corpus0.select($"doc_id".as(Rid), $"text").limit(0),

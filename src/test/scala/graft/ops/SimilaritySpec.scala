@@ -155,7 +155,7 @@ class SimilaritySpec extends AnyFunSuite {
     // test measures the MANUAL maintenance path)
     for (m <- 1 to 9)
       VectorOps.ivfAppendIndex(embs.filter(col("vec_id") % 10 === m),
-        "vec_id", "embedding", dir, cents, autoCompact = false)
+        "vec_id", "embedding", dir, cents)
     def clusterFiles() = new java.io.File(dir).listFiles
       .filter(f => f.isDirectory && f.getName.startsWith("cluster="))
       .map(d => d.getName -> d.listFiles.count { f =>
@@ -195,12 +195,12 @@ class SimilaritySpec extends AnyFunSuite {
     val base = embs.filter(col("vec_id") % 10 === 0)
     val cents = VectorOps.ivfWriteIndex(base, "vec_id", "embedding", dir,
       nCentroids = 8, kmeansIters = 4)
-    // the same nine-batch drip as the manual test, trigger ON with a
-    // tight knee so it must fire mid-sequence
+    // the same nine-batch drip as the manual test, compacting after
+    // every append with a tight knee so it must fire mid-sequence
     val reports = (1 to 9).map { m =>
       VectorOps.ivfAppendIndex(embs.filter(col("vec_id") % 10 === m),
-        "vec_id", "embedding", dir, cents, autoCompact = true,
-        maxFilesPerCluster = 4)
+        "vec_id", "embedding", dir, cents)
+      VectorOps.IvfLayout.compact(spark, dir, 4)
     }
     assert(reports.exists(_.nonEmpty), "the trigger never fired across nine appends")
     // invariant the trigger maintains: never more than the knee's file
@@ -212,8 +212,7 @@ class SimilaritySpec extends AnyFunSuite {
       }).toMap
     for ((cl, n) <- counts) assert(n <= 4, s"$cl has $n files after auto-compaction")
     // auto-compacted probe ≡ a from-scratch index on the same centroids
-    VectorOps.ivfAppendIndex(embs, "vec_id", "embedding", fullDir, cents,
-      autoCompact = false)
+    VectorOps.ivfAppendIndex(embs, "vec_id", "embedding", fullDir, cents)
     val got = VectorOps.ivfProbeIndex(spark, dir, cents, "vec_id", query, 10, nProbe = 3)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toList
     val expected = VectorOps.ivfProbeIndex(spark, fullDir, cents, "vec_id", query, 10, nProbe = 3)

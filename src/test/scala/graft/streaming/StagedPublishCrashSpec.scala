@@ -1,0 +1,125 @@
+package graft.streaming
+
+import graft.{Tables, TestSpark}
+import graft.ops.LexIndex
+import org.apache.hadoop.fs.{FSDataOutputStream, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.util.Progressable
+import org.apache.spark.sql.functions._
+import org.scalatest.funsuite.AnyFunSuite
+
+/** The local filesystem under the `faulty://` scheme, failing the next
+  * file creation or rename whose path matches [[FaultyFs.failOnce]] —
+  * a crash at one chosen filesystem mutation, with every write before
+  * it durable.
+  */
+class FaultyFs extends RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("faulty:///")
+  override def getScheme: String = "faulty"
+
+  override def create(f: Path, overwrite: Boolean, bufferSize: Int,
+      replication: Short, blockSize: Long, progress: Progressable)
+      : FSDataOutputStream = {
+    FaultyFs.check("create", f)
+    super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+  }
+
+  override def create(f: Path, permission: FsPermission, overwrite: Boolean,
+      bufferSize: Int, replication: Short, blockSize: Long,
+      progress: Progressable): FSDataOutputStream = {
+    FaultyFs.check("create", f)
+    super.create(f, permission, overwrite, bufferSize, replication,
+      blockSize, progress)
+  }
+
+  override def rename(src: Path, dst: Path): Boolean = {
+    FaultyFs.check("rename", dst)
+    super.rename(src, dst)
+  }
+}
+
+object FaultyFs {
+  @volatile private var armed: Option[(String, String => Boolean)] = None
+
+  /** Fail the next `op` ("create" or "rename") on a path matching `hit`. */
+  def failOnce(op: String)(hit: String => Boolean): Unit =
+    armed = Some(op -> hit)
+
+  private def check(op: String, p: Path): Unit = synchronized {
+    armed.foreach { case (o, hit) =>
+      if (o == op && hit(p.toString)) {
+        armed = None
+        throw new java.io.IOException(s"injected $op failure at $p")
+      }
+    }
+  }
+}
+
+class StagedPublishCrashSpec extends AnyFunSuite {
+  lazy val spark = TestSpark.spark
+  private lazy val docs = Tables.load(spark, TestSpark.Sf001, "documents")
+    .select("doc_id", "text")
+  private val terms = Seq("vector", "join", "scan")
+
+  /** A BM25 index over the base docs, under the `faulty://` scheme. */
+  private def bootstrap(tag: String): String = {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.faulty.impl", classOf[FaultyFs].getName)
+    val tmp = java.nio.file.Files.createTempDirectory(s"graft-publish-$tag")
+    val root = s"faulty://$tmp/idx"
+    LexIndex.bm25WriteIndex(docs.filter(col("doc_id") % 3 === 0),
+      "doc_id", "text", root, buckets = 8)
+    root
+  }
+
+  private def batch = docs.filter(col("doc_id") % 3 === 1)
+
+  private def append(root: String): Boolean =
+    LexIndexStream.appendBatch(batch, 0L, "doc_id", "text", root,
+      streamId = "s1")
+
+  /** Summed stats totals and doclen rows, then probe scores. */
+  private def state(root: String) = (
+    spark.read.parquet(s"$root/stats")
+      .agg(sum("n"), sum("sum_dl")).head().toSeq,
+    spark.read.parquet(s"$root/doclen").count(),
+    LexIndex.bm25ProbeIndex(spark, root, "doc_id", terms)
+      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap)
+
+  /** Totals first, so a double-counted batch fails with a short message. */
+  private def assertLikeClean(root: String): Unit = {
+    val (got, want) = (state(root), state(clean))
+    assert(got._1 === want._1)
+    assert(got._2 === want._2)
+    assert(got._3 === want._3)
+  }
+
+  private lazy val clean: String = {
+    val root = bootstrap("clean")
+    assert(append(root))
+    root
+  }
+
+  test("BM25 stream append: a crash after the rows land but before the " +
+      "ledger marker counts the batch once on retry") {
+    val root = bootstrap("marker")
+    FaultyFs.failOnce("create")(_.contains("/_graft_batches/"))
+    intercept[java.io.IOException](append(root))
+    // the crash window: the batch's rows are already in the index
+    assert(spark.read.parquet(s"$root/doclen").count() ===
+      state(clean)._2)
+    assert(append(root))
+    assertLikeClean(root)
+    assert(!append(root))
+  }
+
+  test("BM25 stream append: a crash mid-publish finishes on retry " +
+      "without duplicates") {
+    val root = bootstrap("midpub")
+    FaultyFs.failOnce("rename")(p =>
+      p.contains("/doclen/") && p.contains("graft-ups-"))
+    intercept[java.io.IOException](append(root))
+    assert(append(root))
+    assertLikeClean(root)
+  }
+}
