@@ -73,7 +73,7 @@ object Bench {
     def timeOne(name: String,
         fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
+      try { ops.Ckpt.scope(fn(spark, sfDir).count()); (System.nanoTime() - t0) / 1e9 }
       catch { case e: Throwable =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
         -1.0
@@ -94,7 +94,7 @@ object Bench {
       var stable = false
       while (reps < 8 && !stable) {
         val t0 = System.nanoTime()
-        try SparkEntry.queries("q01_scan_topk")(spark, sfDir).count()
+        try ops.Ckpt.scope(SparkEntry.queries("q01_scan_topk")(spark, sfDir).count())
         catch { case _: Throwable => () }
         val t = (System.nanoTime() - t0) / 1e9
         stable = t >= prev * 0.75 && t <= prev * 1.25

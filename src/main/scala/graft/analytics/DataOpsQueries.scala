@@ -433,9 +433,8 @@ object DataOpsQueries {
         // the base pass's kept set feeds the delta pass (which references
         // it more than once) — cut the lineage so the base subplan is
         // computed once, not re-expanded per reference
-        val baseKept = VectorOps.semDedupDelta(e.limit(0), base0,
-          "vec_id", "embedding", 0.9, cents)
-          .localCheckpoint(true)
+        val baseKept = Ckpt.checkpoint(VectorOps.semDedupDelta(e.limit(0), base0,
+          "vec_id", "embedding", 0.9, cents))
         VectorOps.semDedupDelta(baseKept, delta, "vec_id", "embedding", 0.9, cents)
           .select("vec_id").orderBy("vec_id")
       }),
@@ -5294,17 +5293,15 @@ object DataOpsQueries {
         // quantile/calibration subplans don't re-expand per consumer
         // (the before-plan carried 119 Exchanges from the repeats;
         // guide §3.3 on truncating repeated subtrees)
-        val med = Stats.exactQuantilesByGroup(
+        val med = Ckpt.checkpoint(Stats.exactQuantilesByGroup(
             ev.filter(col("d") <= lit("2024-01-15")),
             Seq("event_type"), "value", Seq(("yhat", 1, 2)))
-          .select("event_type", "yhat")
-          .localCheckpoint(true)
+          .select("event_type", "yhat"))
         val cal = ev.filter(col("d").between("2024-01-16", "2024-01-23"))
           .join(med, "event_type")
           .withColumn("s", abs(col("value") - col("yhat")))
-        val iv = Classifier.conformalCalibrate(
-          cal, Seq("event_type"), "s", "event_id", alphaNum = 1, alphaDen = 10)
-          .localCheckpoint(true)
+        val iv = Ckpt.checkpoint(Classifier.conformalCalibrate(
+          cal, Seq("event_type"), "s", "event_id", alphaNum = 1, alphaDen = 10))
         val applied = Classifier.conformalApply(
           ev.filter(col("d") > lit("2024-01-23")).join(med, "event_type"),
           iv, Seq("event_type"), "yhat")
@@ -5833,10 +5830,9 @@ object DataOpsQueries {
         // restores the scan-flat q140 shape. The REAL phash path
         // (imageDHash) is mapPartitions-produced data, not a giant
         // expression — this is stub-only.
-        val codes = docs(s, dir).select(col("doc_id"),
+        val codes = Ckpt.checkpoint(docs(s, dir).select(col("doc_id"),
           Phash.stubDHashDiff(col("doc_id"), length(col("text")))
-            .as("phash_diff"))
-          .localCheckpoint(true)
+            .as("phash_diff")))
         VectorOps.hammingKnnJoin(codes.filter(col("doc_id") < 8), codes,
             "doc_id", "phash_diff", k = 10)
           .orderBy("q_id", "rank")
@@ -5863,7 +5859,7 @@ object DataOpsQueries {
       (s, dir) => {
         // manifest consumed twice (tombstone derivation + the patch):
         // cut the 16-operator chain's lineage once, selectN-bounded
-        val man = ManifestV2.oracleChain(docs(s, dir)).localCheckpoint(true)
+        val man = Ckpt.checkpoint(ManifestV2.oracleChain(docs(s, dir)))
         val tombs = man.filter(col("doc_id") % 3 === 1).select("doc_id")
         ManifestV2.applyTombstones(man, tombs, "doc_id")
           .select(col("doc_id"), col("shard"), col("pos"))
@@ -6092,10 +6088,9 @@ object DataOpsQueries {
         (s, dir) => {
           // q213's eager cut: the 64-element stub array expression must
           // not fuse into the kNN join stage (JIT-cliff note)
-          val codes = docs(s, dir).select(col("doc_id"),
+          val codes = Ckpt.checkpoint(docs(s, dir).select(col("doc_id"),
             AudioHash.stubHkDiff(col("doc_id"), length(col("text")))
-              .as("fp_diff"))
-            .localCheckpoint(true)
+              .as("fp_diff")))
           VectorOps.hammingKnnJoin(codes.filter(col("doc_id") < 8), codes,
               "doc_id", "fp_diff", k = 10)
             .orderBy("q_id", "rank")
@@ -6185,8 +6180,7 @@ object DataOpsQueries {
           docs(s, dir).filter(col("doc_id") % 2000 === 0)
             .select((col("doc_id") + lit(10000000L)).as("doc_id")),
           "doc_id", idx)
-        val queries = base.filter(col("doc_id") % 1000 === 0)
-          .localCheckpoint(true)
+        val queries = Ckpt.checkpoint(base.filter(col("doc_id") % 1000 === 0))
         HammingIndex.hammingProbeIndex(s, queries, "doc_id", "phash_diff",
             idx, radius = 6)
           .orderBy("q_id", "n_id")
@@ -6283,10 +6277,9 @@ object DataOpsQueries {
       (s, dir) => {
         // q213's eager cut: the 64-element stub array expression must
         // not fuse into the kNN join stage (JIT-cliff note)
-        val codes = docs(s, dir).select(col("doc_id"),
+        val codes = Ckpt.checkpoint(docs(s, dir).select(col("doc_id"),
           VideoHash.stubTemporalDiff(col("doc_id"), length(col("text")))
-            .as("video_diff"))
-          .localCheckpoint(true)
+            .as("video_diff")))
         VectorOps.hammingKnnJoin(codes.filter(col("doc_id") < 8), codes,
             "doc_id", "video_diff", k = 10)
           .orderBy("q_id", "rank")
@@ -6813,7 +6806,7 @@ object DataOpsQueries {
           |FROM cum WHERE dl = 0 ORDER BY doc_id""".stripMargin),
         (s, dir) => {
           import s.implicits._
-          val man = ManifestV2.oracleChain(docs(s, dir)).localCheckpoint(true)
+          val man = Ckpt.checkpoint(ManifestV2.oracleChain(docs(s, dir)))
           val baseD = docs(s, dir)
             .select(col("doc_id"), length(col("text")).cast("long").as("len"))
           // spread the corpus-side kernel front — the q226 treatment
@@ -6835,10 +6828,9 @@ object DataOpsQueries {
           // cut the tiny hit set: applyTombstones consumes it twice
           // (the size-guard count + the manifest join), and each lazy
           // consumption would re-run the whole probe pipeline
-          val hits = VectorOps.slotProbePairs(probes, "probe_id", "img_diff",
+          val hits = Ckpt.checkpoint(VectorOps.slotProbePairs(probes, "probe_id", "img_diff",
               frames, "doc_id", "slot", "frame_diff", radius = 6)
-            .select(col("id").as("doc_id")).distinct()
-            .localCheckpoint(true)
+            .select(col("id").as("doc_id")).distinct())
           ManifestV2.applyTombstones(man, hits, "doc_id")
             .select(col("doc_id"), col("shard"), col("pos"))
             .orderBy("doc_id")
@@ -6916,7 +6908,7 @@ object DataOpsQueries {
                 VideoHash.stubFrameDiffScalar(vid, len, slot))
             }
             .toDF("fid", "frame_diff")
-          val probes = base.filter(col("doc_id") % 200 === 0)
+          val probes = Ckpt.checkpoint(base.filter(col("doc_id") % 200 === 0)
             .select(col("doc_id"), col("len"), lit(2L).as("seed"))
             .unionAll(base.filter(col("doc_id") % 200 === 100)
               .select(col("doc_id"), col("len"), lit(23L).as("seed")))
@@ -6924,8 +6916,7 @@ object DataOpsQueries {
             .map { case (fid, len, seed) =>
               (fid + 20000000L, VideoHash.stubFrameDiffScalar(fid, len, seed))
             }
-            .toDF("probe_id", "img_diff")
-            .localCheckpoint(true)
+            .toDF("probe_id", "img_diff"))
           val root = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
             "graft_stage", s"fridx_${Integer.toHexString(dir.hashCode)}")
           if (java.nio.file.Files.exists(root)) {

@@ -347,7 +347,7 @@ object AudioHash {
       nBands: Int = 8,
       maxIters: Int = 20): DataFrame = {
     val (codesDs, _) = audioFingerprint(media, idCol, payloadCol)
-    val codes = codesDs.toDF().localCheckpoint(true)
+    val codes = Ckpt.checkpoint(codesDs.toDF())
     val edges = VectorOps.hammingRadiusPairs(codes, "id", "fp_diff",
       radius = radius, nBands = nBands)
     val comps = GraphOps.connectedComponents(edges,

@@ -91,10 +91,10 @@ object Bpe {
     * checkpoint is materialized, so executor storage stays O(vocab),
     * not O(vocab · rounds).
     */
-  def trainMerges(hist: DataFrame, numMerges: Int, maxBatch: Int = 16): Seq[Merge] = {
-    var words = hist
-      .select(charSyms(col("word")).as("syms"), col("wc"))
-      .localCheckpoint()
+  def trainMerges(
+      hist: DataFrame, numMerges: Int, maxBatch: Int = 16): Seq[Merge] = Ckpt.scope {
+    var words = Ckpt.checkpoint(
+      hist.select(charSyms(col("word")).as("syms"), col("wc")))
     val out = scala.collection.mutable.ArrayBuffer.empty[Merge]
     var exhausted = false
     val window = math.max(2, 4 * maxBatch)
@@ -138,8 +138,8 @@ object Bpe {
           case (acc, (l, r, _)) => mergeExpr(acc, l, r)
         }
         val prev = words
-        words = words.select(rewritten.as("syms"), col("wc")).localCheckpoint()
-        Ckpt.release(prev)
+        words = Ckpt.checkpoint(words.select(rewritten.as("syms"), col("wc")))
+        Ckpt.release(prev) // superseded
       }
     }
     out.toSeq

@@ -15,9 +15,9 @@ import org.apache.spark.sql.functions._
   * weight-table join. The weight table is `dim`-bounded (never
   * corpus-scale) and broadcasts at the default dims; the corpus-scale
   * posting relation is never collected, and the only driver scalar is
-  * the example count. Lineage across iterations is truncated with an
-  * eager `localCheckpoint` per step, unpersisting the previous step's
-  * plan (the Bpe.trainMerges discipline).
+  * the example count. A step's materialized margins (early-stop mode)
+  * are released as soon as the step is applied (the Bpe.trainMerges
+  * discipline).
   */
 object Classifier {
 
@@ -192,7 +192,7 @@ object Classifier {
       sampleFrac: Double = 1.0,
       seed: Long = 42L,
       minSteps: Int = 3,
-      patience: Int = 2): TrainResult = {
+      patience: Int = 2): TrainResult = Ckpt.scope {
     require(iters >= 1, s"iters=$iters must be >= 1")
     require(patience >= 1, s"patience=$patience must be >= 1")
     require(sampleFrac > 0.0 && sampleFrac <= 1.0,
@@ -205,12 +205,10 @@ object Classifier {
     // One doc-keyed exchange up front, reused by every iteration's
     // margins agg + residual join + gradient join (localCheckpoint
     // preserves the partitioning in LogicalRDD).
-    val f = feats.select(col(idCol), col("idx"), col("x"))
-      .repartition(col(idCol))
-      .localCheckpoint(true)
-    val lab = labels.select(col(idCol), col("y"))
-      .repartition(col(idCol))
-      .localCheckpoint(true)
+    val f = Ckpt.checkpoint(feats.select(col(idCol), col("idx"), col("x"))
+      .repartition(col(idCol)))
+    val lab = Ckpt.checkpoint(labels.select(col(idCol), col("y"))
+      .repartition(col(idCol)))
     // The weight/AdaGrad state lives on the DRIVER (round 18): it is
     // MODEL-sized — one (w, G) pair per observed idx, dim-bounded and
     // independent of corpus size (the kmeansCentroids driver-table
@@ -223,7 +221,7 @@ object Classifier {
     // UNCHANGED: margins/gradient run the same Spark aggregations, and
     // the per-coordinate update applies the same double ops in the
     // same order (ClassifierSpec's 1e-10 reference-equivalence pin).
-    // This also retires the per-step Iterate.cut (the stats-compounding
+    // This also retires the per-step Ckpt.cut (the stats-compounding
     // hazard is gone with the weight DataFrame itself).
     val idxs: Array[Long] = f.select(col("idx")).distinct()
       .collect().map(_.getLong(0)).sorted
@@ -287,7 +285,7 @@ object Classifier {
           // another update once the improvement falls under `tol` —
           // with sampleFrac < 1 the comparison is across different
           // mini-batches, so tol should absorb that sampling noise.
-          val mj = margins.join(labi, Seq(idCol)).localCheckpoint(true)
+          val mj = Ckpt.checkpoint(margins.join(labi, Seq(idCol)))
           val p = sigmoid(col("m"))
           val loss = mj.agg(avg(-(col("y") * log(p + lit(lossEps)) +
             (lit(1.0) - col("y")) * log(lit(1.0) - p + lit(lossEps)))))
@@ -295,23 +293,19 @@ object Classifier {
           belowTol =
             if (steps >= minSteps && prevLoss - loss < tol) belowTol + 1
             else 0
-          if (belowTol >= patience) {
-            converged = true
-            Ckpt.release(mj)
-          } else {
+          if (belowTol >= patience) converged = true
+          else {
             prevLoss = loss
             applyStep(mj.select(col(idCol),
               (sigmoid(col("m")) - col("y")).as("r")))
-            Ckpt.release(mj)
           }
+          Ckpt.release(mj) // superseded by the next step's margins
         } else {
           applyStep(margins.join(labi, Seq(idCol))
             .select(col(idCol), (sigmoid(col("m")) - col("y")).as("r")))
         }
       }
     }
-    Ckpt.release(f)
-    Ckpt.release(lab)
     TrainResult(weightsDF, steps,
       if (tol > 0.0 && prevLoss != Double.MaxValue) prevLoss else Double.NaN)
   }
@@ -553,7 +547,7 @@ object Classifier {
       winnerCol: String,
       loserCol: String,
       iters: Int = 20,
-      localMatchRows: Long = 1000000L): DataFrame = {
+      localMatchRows: Long = 1000000L): DataFrame = Ckpt.scope {
     require(iters >= 1, "iters must be >= 1")
     val raw = comparisons
       .select(col(winnerCol).cast("string").as("w"),
@@ -562,18 +556,16 @@ object Classifier {
     // m_ij symmetrized: every unordered match counted once per direction,
     // so the per-i denominator sums over ALL of i's opponents in one
     // groupBy("i") with no union
-    val sym = raw.select(col("w").as("i"), col("l").as("j"))
+    val sym = Ckpt.cache(raw.select(col("w").as("i"), col("l").as("j"))
       .union(raw.select(col("l").as("i"), col("w").as("j")))
       .groupBy("i", "j").agg(count(lit(1)).cast("double").as("m"))
-      .repartition(col("i"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .repartition(col("i")))
     val wins = raw.groupBy(col("w").as("i"))
       .agg(count(lit(1)).cast("double").as("wins"))
-    val items = sym.select(col("i").as("item")).distinct()
+    val items = Ckpt.cache(sym.select(col("i").as("item")).distinct()
       .join(wins.withColumnRenamed("i", "item"), Seq("item"), "left")
       .select(col("item"), coalesce(col("wins"), lit(0.0)).as("wins"))
-      .repartition(col("item"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .repartition(col("item")))
     val nItems = items.count()
     // Small-tournament fast path: once the corpus has collapsed to the
     // item-pair match relation, EVERYTHING the MM iterations touch is
@@ -612,46 +604,41 @@ object Classifier {
         .map { case (i, ks) => i -> ks.map(_._2).sum.toLong }
       val spark = comparisons.sparkSession
       import spark.implicits._
-      val out = keys.map(i => (i, itemsL(i).toLong,
-          matchesL.getOrElse(i, 0L), pL(i)))
+      keys.map(i => (i, itemsL(i).toLong, matchesL.getOrElse(i, 0L), pL(i)))
         .toDF("item", "wins", "matches", "strength")
-      sym.unpersist(); items.unpersist()
-      return out
+    } else {
+      // Ckpt.cut, not bare checkpoint: the step plan references the
+      // previous state 4× under joins, so inherited checkpoint stats
+      // would compound doubly-exponentially (see Ckpt.cut's scaladoc).
+      var p = Ckpt.cut(items.select(col("item"), lit(1.0).as("p")))
+      var it = 0
+      while (it < iters) {
+        val withPj = sym
+          .join(p.select(col("item").as("j"), col("p").as("pj")), Seq("j"))
+        val denom = withPj
+          .join(p.select(col("item").as("i"), col("p").as("pi")), Seq("i"))
+          .groupBy(col("i").as("item"))
+          .agg(sum(col("m") / (col("pi") + col("pj"))).as("denom"))
+        val unscaled = items.join(denom, Seq("item"), "left")
+          .select(col("item"),
+            // an item with no matches keeps p = 1 (denominator undefined);
+            // zero-win items legitimately head to 0
+            when(col("denom").isNull, lit(1.0))
+              .otherwise(col("wins") / col("denom")).as("p0"))
+        val total = unscaled.agg(sum("p0").as("t"))
+        val next = Ckpt.cut(unscaled.crossJoin(broadcast(total))
+          .select(col("item"), (col("p0") * nItems / col("t")).as("p")))
+        Ckpt.release(p) // superseded
+        p = next
+        it += 1
+      }
+      items.join(p, Seq("item"))
+        .join(sym.groupBy(col("i").as("item"))
+          .agg(sum("m").cast("long").as("matches")), Seq("item"), "left")
+        .select(col("item"), col("wins").cast("long").as("wins"),
+          coalesce(col("matches"), lit(0L)).as("matches"),
+          col("p").as("strength"))
     }
-    // Iterate.cut, not bare localCheckpoint: the step plan references
-    // the previous state 4× under joins, so inherited checkpoint stats
-    // would compound doubly-exponentially (see Iterate's scaladoc).
-    var p = Iterate.cut(items.select(col("item"), lit(1.0).as("p")))
-    var it = 0
-    while (it < iters) {
-      val withPj = sym
-        .join(p.df.select(col("item").as("j"), col("p").as("pj")), Seq("j"))
-      val denom = withPj
-        .join(p.df.select(col("item").as("i"), col("p").as("pi")), Seq("i"))
-        .groupBy(col("i").as("item"))
-        .agg(sum(col("m") / (col("pi") + col("pj"))).as("denom"))
-      val unscaled = items.join(denom, Seq("item"), "left")
-        .select(col("item"),
-          // an item with no matches keeps p = 1 (denominator undefined);
-          // zero-win items legitimately head to 0
-          when(col("denom").isNull, lit(1.0))
-            .otherwise(col("wins") / col("denom")).as("p0"))
-      val total = unscaled.agg(sum("p0").as("t"))
-      val next = Iterate.cut(unscaled.crossJoin(broadcast(total))
-        .select(col("item"), (col("p0") * nItems / col("t")).as("p")))
-      p.release()
-      p = next
-      it += 1
-    }
-    val out = items.join(p.df, Seq("item"))
-      .join(sym.groupBy(col("i").as("item"))
-        .agg(sum("m").cast("long").as("matches")), Seq("item"), "left")
-      .select(col("item"), col("wins").cast("long").as("wins"),
-        coalesce(col("matches"), lit(0L)).as("matches"),
-        col("p").as("strength"))
-    sym.unpersist()
-    items.unpersist()
-    out
   }
 
   /** In-memory reference replaying [[bradleyTerry]]'s exact update, for

@@ -242,7 +242,7 @@ object CorpusUpsert {
       key: String,
       root: String,
       targets: Seq[IndexTarget],
-      autoFoldRevsAt: Int = 64): UpsertReport = {
+      autoFoldRevsAt: Int = 64): UpsertReport = Ckpt.scope {
     require(key.nonEmpty && key.forall(c =>
         c.isLetterOrDigit || c == '.' || c == '_' || c == '-'),
       s"applyBatch: key '$key' must be non-empty [A-Za-z0-9._-]")
@@ -264,172 +264,172 @@ object CorpusUpsert {
     val wasDone = fs.exists(doneMarker)
     if (wasDone && targets.forall(t =>
         fs.exists(new Path(batchDir, s"applied-${t.name}"))))
-      return UpsertReport(key, alreadyApplied = true, 0L, 0L, 0L)
+      UpsertReport(key, alreadyApplied = true, 0L, 0L, 0L)
+    else {
 
-    // 1. freeze the payload. A done batch whose delta is GONE was
-    // vacuumed ([[vacuumBatches]]) — re-freezing from the caller's
-    // redelivered frame would let a nondeterministic recomputation
-    // fork the backfilled index's content from the originals, so the
-    // backfill is refused (same horizon trade as the compacted
-    // ledger). A crash-retry can never trip this: `done` is the last
-    // write.
-    val deltaDir = new Path(batchDir, "delta")
-    val deltaFrozen = fs.exists(new Path(deltaDir, "_SUCCESS"))
-    require(!(fs.exists(doneMarker) && !deltaFrozen),
-      s"applyBatch: batch '$key' is done but its frozen delta is gone " +
-        "(vacuumed) — backfilling a later-added target requires the " +
-        "original payload; rebuild the new index from the corpus instead")
-    // the freeze write and the prior-rev materialization below read
-    // disjoint inputs (the caller's frame vs revs/batch= dirs) — start
-    // the freeze in the pool so the rev lookup's jobs fill its tail
-    // (guide §2.6; the await before `staged` keeps the read-frozen-
-    // bytes contract intact)
-    val freezeF =
-      if (deltaFrozen) None
-      else Some(indexPool.submit {
-        delta.write.mode("overwrite").parquet(deltaDir.toString) })
+      // 1. freeze the payload. A done batch whose delta is GONE was
+      // vacuumed ([[vacuumBatches]]) — re-freezing from the caller's
+      // redelivered frame would let a nondeterministic recomputation
+      // fork the backfilled index's content from the originals, so the
+      // backfill is refused (same horizon trade as the compacted
+      // ledger). A crash-retry can never trip this: `done` is the last
+      // write.
+      val deltaDir = new Path(batchDir, "delta")
+      val deltaFrozen = fs.exists(new Path(deltaDir, "_SUCCESS"))
+      require(!(fs.exists(doneMarker) && !deltaFrozen),
+        s"applyBatch: batch '$key' is done but its frozen delta is gone " +
+          "(vacuumed) — backfilling a later-added target requires the " +
+          "original payload; rebuild the new index from the corpus instead")
+      // the freeze write and the prior-rev materialization below read
+      // disjoint inputs (the caller's frame vs revs/batch= dirs) — start
+      // the freeze in the pool so the rev lookup's jobs fill its tail
+      // (guide §2.6; the await before `staged` keeps the read-frozen-
+      // bytes contract intact)
+      val freezeF =
+        if (deltaFrozen) None
+        else Some(indexPool.submit {
+          delta.write.mode("overwrite").parquet(deltaDir.toString) })
 
-    // 2. revision assignment. Once recorded, a batch's revs are
-    // FROZEN — a re-apply REUSES `revs/batch=<key>` instead of
-    // recomputing. The self-excluding recompute is only retry-stable
-    // while no LATER batch has landed (applies are serialized, so
-    // that covers every crash-retry); for a BACKFILL (re-running old
-    // batches against a target added later) the recompute would see
-    // the later batches' higher revs and assign a revision no other
-    // index has — corrupting the ledger and the new index at once.
-    // Reusing the recorded rows makes backfill exact through revision
-    // chains: new_rev is read back, and old_rev is derivable from it
-    // alone (new_rev = old + 1, or 0 first-seen ⇒ old = rev − 1 when
-    // rev > 0, else none).
-    // localCheckpoint ONCE: four index stagings then read materialized
-    // rows instead of each re-running the lookup join (and the rid
-    // range check fails the batch up front, before any index work).
-    val batchRevs = revsDir(root, key)
-    val revsFrozen = fs.exists(new Path(batchRevs, "_SUCCESS"))
-    // reaching here with the done marker set means a BACKFILL (some
-    // target lacks its marker). Backfill needs this batch's frozen
-    // revs; if compactRevs already folded them away, recomputing would
-    // assign revisions the other indexes never saw — refuse loudly.
-    // (A crash-retry can never trip this: `done` is the LAST write, so
-    // an incomplete apply either has no done marker, or has frozen
-    // revs — they land before any index work.)
-    require(!(fs.exists(doneMarker) && !revsFrozen),
-      s"applyBatch: batch '$key' is done but its revs/batch dir is gone " +
-        "(compacted) — backfilling a later-added target requires the " +
-        "per-batch rev ledger; re-apply batches newer than the last " +
-        "compaction only, or rebuild the new index from the corpus")
-    // `prior` is None exactly when NO other batch has ever recorded
-    // revs (the bootstrap batch of every root): the lookup join would
-    // be against an empty relation, so it is skipped outright —
-    // old_rev is null for every row, new_rev 0 — saving the empty
-    // checkpoint's driver jobs on the first batch of every lifecycle
-    val prior0: Option[DataFrame] =
-      if (revsFrozen)
-        Some(readRevDirs(spark, Seq(batchRevs.toString))
-          .select(col("doc").as(docCol),
-            when(col("rev") > 0, col("rev") - 1).as("old_rev"),
-            col("rev").as("frozen_rev")))
-      else if (revBatchDirs(fs, root, excludeKey = key).isEmpty) None
-      else
-        Some(priorRevs(spark, fs, root, excludeKey = key)
-          .withColumnRenamed("rev", "old_rev")
-          .withColumnRenamed("doc", docCol))
-    // ledger-sized; materialized NOW so its jobs overlap the in-flight
-    // freeze write instead of serializing after it
-    val prior = prior0.map(_.localCheckpoint(true))
-    freezeF.foreach(WorkPool.await(_))
-    // the fresh-freeze path just wrote these bytes from `delta`, so
-    // the schema is known — pinning it skips the footer-inference job;
-    // a re-apply over an already-frozen delta keeps inference (the
-    // frozen bytes are authoritative, the caller's frame is not)
-    val staged =
-      if (freezeF.isDefined)
-        spark.read.schema(delta.schema).parquet(deltaDir.toString)
-      else spark.read.parquet(deltaDir.toString)
-    val newRev =
-      if (revsFrozen)
-        coalesce(col("frozen_rev"), raise_error(concat(
-          lit(s"applyBatch: batch '$key' has frozen revs but doc "),
-          col(docCol).cast("string"),
-          lit(" is not in them — the redelivered payload diverged"))))
-      else
-        when(col("old_rev").isNull, lit(0))
-          .otherwise(when(col("old_rev") < MaxRev, col("old_rev") + 1)
-            .otherwise(raise_error(concat(
-              lit(s"applyBatch: rev overflow (> $MaxRev) for doc "),
-              col(docCol).cast("string")))))
-    // batch sizes ride the checkpoint job as observed metrics (zero
-    // extra jobs — the standalone count/countDistinct aggregate this
-    // replaces cost three AQE stage jobs per batch); the duplicate-doc
-    // check moved into the revs write's aggregation below, which sees
-    // every row before anything is recorded
-    val sizesObs = new org.apache.spark.sql.Observation()
-    val joined = prior match {
-      case Some(p) => staged.join(p, Seq(docCol), "left")
-      case None => staged.withColumn("old_rev",
-        lit(null).cast(org.apache.spark.sql.types.IntegerType))
+      // 2. revision assignment. Once recorded, a batch's revs are
+      // FROZEN — a re-apply REUSES `revs/batch=<key>` instead of
+      // recomputing. The self-excluding recompute is only retry-stable
+      // while no LATER batch has landed (applies are serialized, so
+      // that covers every crash-retry); for a BACKFILL (re-running old
+      // batches against a target added later) the recompute would see
+      // the later batches' higher revs and assign a revision no other
+      // index has — corrupting the ledger and the new index at once.
+      // Reusing the recorded rows makes backfill exact through revision
+      // chains: new_rev is read back, and old_rev is derivable from it
+      // alone (new_rev = old + 1, or 0 first-seen ⇒ old = rev − 1 when
+      // rev > 0, else none).
+      // localCheckpoint ONCE: four index stagings then read materialized
+      // rows instead of each re-running the lookup join (and the rid
+      // range check fails the batch up front, before any index work).
+      val batchRevs = revsDir(root, key)
+      val revsFrozen = fs.exists(new Path(batchRevs, "_SUCCESS"))
+      // reaching here with the done marker set means a BACKFILL (some
+      // target lacks its marker). Backfill needs this batch's frozen
+      // revs; if compactRevs already folded them away, recomputing would
+      // assign revisions the other indexes never saw — refuse loudly.
+      // (A crash-retry can never trip this: `done` is the LAST write, so
+      // an incomplete apply either has no done marker, or has frozen
+      // revs — they land before any index work.)
+      require(!(fs.exists(doneMarker) && !revsFrozen),
+        s"applyBatch: batch '$key' is done but its revs/batch dir is gone " +
+          "(compacted) — backfilling a later-added target requires the " +
+          "per-batch rev ledger; re-apply batches newer than the last " +
+          "compaction only, or rebuild the new index from the corpus")
+      // `prior` is None exactly when NO other batch has ever recorded
+      // revs (the bootstrap batch of every root): the lookup join would
+      // be against an empty relation, so it is skipped outright —
+      // old_rev is null for every row, new_rev 0 — saving the empty
+      // checkpoint's driver jobs on the first batch of every lifecycle
+      val prior0: Option[DataFrame] =
+        if (revsFrozen)
+          Some(readRevDirs(spark, Seq(batchRevs.toString))
+            .select(col("doc").as(docCol),
+              when(col("rev") > 0, col("rev") - 1).as("old_rev"),
+              col("rev").as("frozen_rev")))
+        else if (revBatchDirs(fs, root, excludeKey = key).isEmpty) None
+        else
+          Some(priorRevs(spark, fs, root, excludeKey = key)
+            .withColumnRenamed("rev", "old_rev")
+            .withColumnRenamed("doc", docCol))
+      // ledger-sized; materialized NOW so its jobs overlap the in-flight
+      // freeze write instead of serializing after it
+      val prior = prior0.map(Ckpt.checkpoint)
+      freezeF.foreach(WorkPool.await(_))
+      // the fresh-freeze path just wrote these bytes from `delta`, so
+      // the schema is known — pinning it skips the footer-inference job;
+      // a re-apply over an already-frozen delta keeps inference (the
+      // frozen bytes are authoritative, the caller's frame is not)
+      val staged =
+        if (freezeF.isDefined)
+          spark.read.schema(delta.schema).parquet(deltaDir.toString)
+        else spark.read.parquet(deltaDir.toString)
+      val newRev =
+        if (revsFrozen)
+          coalesce(col("frozen_rev"), raise_error(concat(
+            lit(s"applyBatch: batch '$key' has frozen revs but doc "),
+            col(docCol).cast("string"),
+            lit(" is not in them — the redelivered payload diverged"))))
+        else
+          when(col("old_rev").isNull, lit(0))
+            .otherwise(when(col("old_rev") < MaxRev, col("old_rev") + 1)
+              .otherwise(raise_error(concat(
+                lit(s"applyBatch: rev overflow (> $MaxRev) for doc "),
+                col(docCol).cast("string")))))
+      // batch sizes ride the checkpoint job as observed metrics (zero
+      // extra jobs — the standalone count/countDistinct aggregate this
+      // replaces cost three AQE stage jobs per batch); the duplicate-doc
+      // check moved into the revs write's aggregation below, which sees
+      // every row before anything is recorded
+      val sizesObs = new org.apache.spark.sql.Observation()
+      val joined = prior match {
+        case Some(p) => staged.join(p, Seq(docCol), "left")
+        case None => staged.withColumn("old_rev",
+          lit(null).cast(org.apache.spark.sql.types.IntegerType))
+      }
+      val withRid = Ckpt.checkpoint(joined
+        .withColumn("new_rev", newRev)
+        .withColumn(RidCol, ridExpr(col(docCol), col("new_rev")))
+        .drop("frozen_rev")
+        .observe(sizesObs, count(lit(1)).as("n"),
+          count(col("old_rev")).as("nUpd")))
+      val sizesRow = sizesObs.get
+      val nRows = sizesRow("n").asInstanceOf[Long]
+      val nUpd = sizesRow("nUpd").asInstanceOf[Long]
+      // record the batch's rev rows BEFORE any index work: currentRevs'
+      // contract ("mid-apply this already reports the incoming
+      // revision") requires it — a mid-apply reader post-filtering with
+      // currentRevs while an index had already published the new rid and
+      // tombstoned the old one would otherwise see NEITHER version. The
+      // write is a tiny one-file job, so serializing it buys visibility
+      // for almost no wall time. The per-doc aggregation REFUSES a batch
+      // carrying two rows for one doc (ambiguous — one revision per doc
+      // per batch) before the dir commits: a failed write leaves no
+      // _SUCCESS, so no index work starts and no crash window widens.
+      // When the revs are already frozen, that write succeeded once with
+      // the same frozen delta bytes, so the check is already proven.
+      if (!revsFrozen)
+        withRid.groupBy(col(docCol).cast("long").as("doc"))
+          .agg(when(count(lit(1)) > 1, raise_error(concat(
+              lit(s"applyBatch: duplicate $docCol rows in batch '$key' " +
+                "for doc "), col("doc").cast("string"),
+              lit(" — one revision per doc per batch"))))
+            .otherwise(max(col("new_rev"))).cast("int").as("rev"))
+          .coalesce(1)
+          .write.mode("overwrite").parquet(batchRevs.toString)
+      val oldRids = withRid.filter(col("old_rev").isNotNull)
+        .select(ridExpr(col(docCol), col("old_rev")).as(RidCol))
+
+      // 3. per-index stage → publish → tombstone → marker, through the
+      // one IndexLayout.publish (the `applied-<index>` marker is its done
+      // marker). The index layouts are INDEPENDENT (each has its own
+      // stage dir, applied marker, and tombstone set), so their blocks
+      // run concurrently — wall time is the slowest layout, not the sum
+      // (the serial contract is across BATCHES, not across one batch's
+      // indexes).
+      indexPool.mapAll(targets) { t =>
+        IndexLayout.publish(spark, t.path,
+          new Path(batchDir, s"stage-${t.name}"), key,
+          new Path(batchDir, s"applied-${t.name}"),
+          // an all-inserts batch (the bootstrap case) tombstones nothing;
+          // skipping the write keeps the index tombstone-free, so probes
+          // keep their fast no-tombstone path
+          afterPublish = () => if (nUpd > 0) t.delete(oldRids))(
+          t.stage(withRid, _))
+      }
+      IndexLayout.touch(fs, doneMarker)
+      // never fold on a BACKFILL re-apply (the batch was already done, so
+      // nothing new landed in the ledger): the remaining backfill batches
+      // NEED their per-batch revs, and the first re-applied batch would
+      // otherwise compact them all away and wedge the rest
+      if (autoFoldRevsAt > 0 && !wasDone &&
+          revBatchDirs(fs, root).size > autoFoldRevsAt)
+        compactRevs(spark, root)
+      UpsertReport(key, alreadyApplied = false, nRows, nUpd, nRows - nUpd)
     }
-    val withRid = joined
-      .withColumn("new_rev", newRev)
-      .withColumn(RidCol, ridExpr(col(docCol), col("new_rev")))
-      .drop("frozen_rev")
-      .observe(sizesObs, count(lit(1)).as("n"),
-        count(col("old_rev")).as("nUpd"))
-      .localCheckpoint(true)
-    prior.foreach(Ckpt.release) // folded into withRid's checkpoint above
-    val sizesRow = sizesObs.get
-    val nRows = sizesRow("n").asInstanceOf[Long]
-    val nUpd = sizesRow("nUpd").asInstanceOf[Long]
-    // record the batch's rev rows BEFORE any index work: currentRevs'
-    // contract ("mid-apply this already reports the incoming
-    // revision") requires it — a mid-apply reader post-filtering with
-    // currentRevs while an index had already published the new rid and
-    // tombstoned the old one would otherwise see NEITHER version. The
-    // write is a tiny one-file job, so serializing it buys visibility
-    // for almost no wall time. The per-doc aggregation REFUSES a batch
-    // carrying two rows for one doc (ambiguous — one revision per doc
-    // per batch) before the dir commits: a failed write leaves no
-    // _SUCCESS, so no index work starts and no crash window widens.
-    // When the revs are already frozen, that write succeeded once with
-    // the same frozen delta bytes, so the check is already proven.
-    if (!revsFrozen)
-      withRid.groupBy(col(docCol).cast("long").as("doc"))
-        .agg(when(count(lit(1)) > 1, raise_error(concat(
-            lit(s"applyBatch: duplicate $docCol rows in batch '$key' " +
-              "for doc "), col("doc").cast("string"),
-            lit(" — one revision per doc per batch"))))
-          .otherwise(max(col("new_rev"))).cast("int").as("rev"))
-        .coalesce(1)
-        .write.mode("overwrite").parquet(batchRevs.toString)
-    val oldRids = withRid.filter(col("old_rev").isNotNull)
-      .select(ridExpr(col(docCol), col("old_rev")).as(RidCol))
-
-    // 3. per-index stage → publish → tombstone → marker, through the
-    // one IndexLayout.publish (the `applied-<index>` marker is its done
-    // marker). The index layouts are INDEPENDENT (each has its own
-    // stage dir, applied marker, and tombstone set), so their blocks
-    // run concurrently — wall time is the slowest layout, not the sum
-    // (the serial contract is across BATCHES, not across one batch's
-    // indexes).
-    indexPool.mapAll(targets) { t =>
-      IndexLayout.publish(spark, t.path,
-        new Path(batchDir, s"stage-${t.name}"), key,
-        new Path(batchDir, s"applied-${t.name}"),
-        // an all-inserts batch (the bootstrap case) tombstones nothing;
-        // skipping the write keeps the index tombstone-free, so probes
-        // keep their fast no-tombstone path
-        afterPublish = () => if (nUpd > 0) t.delete(oldRids))(
-        t.stage(withRid, _))
-    }
-    IndexLayout.touch(fs, doneMarker)
-    // never fold on a BACKFILL re-apply (the batch was already done, so
-    // nothing new landed in the ledger): the remaining backfill batches
-    // NEED their per-batch revs, and the first re-applied batch would
-    // otherwise compact them all away and wedge the rest
-    if (autoFoldRevsAt > 0 && !wasDone &&
-        revBatchDirs(fs, root).size > autoFoldRevsAt)
-      compactRevs(spark, root)
-    UpsertReport(key, alreadyApplied = false, nRows, nUpd, nRows - nUpd)
   }
 
   /** Reclaim the frozen delta payloads of fully-applied batches — the
@@ -555,12 +555,12 @@ object CorpusUpsert {
       docIds: DataFrame,
       docCol: String,
       root: String,
-      targets: Seq[IndexTarget]): Unit = {
+      targets: Seq[IndexTarget]): Unit = Ckpt.scope {
     val spark = docIds.sparkSession
-    val rids = docIds.select(col(docCol).cast("long").as("doc")).distinct()
-      .join(currentRevs(spark, root), Seq("doc"))
-      .select(ridExpr(col("doc"), col("rev")).as(RidCol))
-      .localCheckpoint(true)
+    val rids = Ckpt.checkpoint(
+      docIds.select(col(docCol).cast("long").as("doc")).distinct()
+        .join(currentRevs(spark, root), Seq("doc"))
+        .select(ridExpr(col("doc"), col("rev")).as(RidCol)))
     indexPool.mapAll(targets)(_.delete(rids))
   }
 
@@ -755,10 +755,8 @@ object CorpusUpsert {
     // batch dir and re-runs the max-rev/tombstone subplan — measured
     // round 18 as ~half the as-of probe's ~30 driver-scheduled jobs.
     // Revision-gap validation (revsAsOf's fused raise_error) fires
-    // HERE, eagerly, as it did before the fusion. The checkpoint
-    // blocks are released by the ContextCleaner once the caller drops
-    // the returned relation.
-    cut.localCheckpoint(true)
+    // HERE, eagerly, as it did before the fusion.
+    Ckpt.checkpoint(cut)
   }
 
   /** Fold the rev ledger to its current max-rev rows — the

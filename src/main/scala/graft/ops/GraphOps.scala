@@ -54,17 +54,16 @@ object GraphOps {
       dstCol: String = "id_b",
       maxIterations: Int = 50,
       driverThreshold: Long = 1000000L,
-      checkpointDir: Option[String] = None): DataFrame = {
+      checkpointDir: Option[String] = None): DataFrame = Ckpt.scope {
     val spark = edges.sparkSession
     // Ids normalized to long on BOTH paths (the output schema must not
     // depend on which side of the threshold the graph lands). Edges with
     // a NULL or uncastable endpoint are DROPPED on both paths too — the
     // driver path would otherwise NPE on getLong while the distributed
     // path silently emitted a bogus (null, null) component.
-    val pairs = edges
+    val pairs = Ckpt.cache(edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .filter(col("src").isNotNull && col("dst").isNotNull))
     // The persisted pairs make the decide-and-collect single-cost: the
     // take() materializes (at most threshold+1 rows of) the edge lineage
     // once, and the big-graph loop reuses the persisted relation instead
@@ -73,87 +72,80 @@ object GraphOps {
     // would overflow toInt into a negative/wrapped take() argument.
     val takeN = math.min(driverThreshold, Int.MaxValue - 2L).toInt
     val taken = pairs.take(takeN + 1)
-    if (taken.length <= takeN) {
-      pairs.unpersist()
-      return driverUnionFind(spark, taken.map(r => (r.getLong(0), r.getLong(1))))
-    }
-    val sym = pairs
-      .union(pairs.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-      .cache() // reused every iteration; bounded by the pair relation
-    var labels = sym.select(col("src").as("node")).distinct()
-      .withColumn("label", col("node"))
-    val prevCkptDir = spark.sparkContext.getCheckpointDir
-    def clearDir(path: String): Unit = {
-      val p = new org.apache.hadoop.fs.Path(path)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIterations) {
-      // each node adopts min(own label, neighbors' labels, label's label)
-      // — the last term is pointer jumping, which collapses chains in
-      // O(log diameter) rounds instead of O(diameter)
-      val viaNeighbors = sym
-        .join(labels.withColumnRenamed("node", "dst2"), col("dst") === col("dst2"))
-        .select(col("src").as("node"), col("label"))
-      val viaLabels = labels.as("a")
-        .join(labels.as("b"), col("a.label") === col("b.node"))
-        .select(col("a.node").as("node"), col("b.label").as("label"))
-      // Superseded checkpoints are released by the ContextCleaner once
-      // the previous `labels` reference drops out of scope — the loop
-      // holds at most the current and in-flight copies strongly.
-      // Checkpoint FIRST: the changed-count then runs against the
-      // materialized result instead of re-executing the iteration's
-      // whole lineage a second time.
-      val grouped = labels.union(viaNeighbors).union(viaLabels)
-        .groupBy("node").agg(min("label").as("label"))
-      val ck = checkpointDir match {
-        case Some(dir) =>
-          // Alternate between two subdirs, clearing before reuse: the
-          // subdir being overwritten holds iteration i-2's checkpoint,
-          // which nothing references anymore (labels points at i-1).
-          val sub = s"$dir/graft_cc_${i % 2}"
-          clearDir(sub)
-          spark.sparkContext.setCheckpointDir(sub)
-          grouped.checkpoint(eager = true)
-        case None => grouped.localCheckpoint(eager = true)
+    if (taken.length <= takeN)
+      driverUnionFind(spark, taken.map(r => (r.getLong(0), r.getLong(1))))
+    else {
+      // reused every iteration; bounded by the pair relation
+      val sym = Ckpt.cache(pairs
+        .union(pairs.select(col("dst").as("src"), col("src").as("dst")))
+        .distinct())
+      var labels = sym.select(col("src").as("node")).distinct()
+        .withColumn("label", col("node"))
+      val prevCkptDir = spark.sparkContext.getCheckpointDir
+      def clearDir(path: String): Unit = {
+        val p = new org.apache.hadoop.fs.Path(path)
+        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        if (fs.exists(p)) fs.delete(p, true)
       }
-      // Stats reset (Iterate scaladoc): the step references `labels`
-      // three times under joins, so checkpoint-inherited statistics
-      // would cube per iteration and stall planning on long-diameter
-      // graphs. Both checkpoint kinds leave a LogicalRDD leaf, which
-      // resetStats re-leafs without the stats, keeping its InternalRow
-      // blocks and output partitioning (no row conversion).
-      val next = org.apache.spark.sql.GraftIterate.resetStats(ck)
-      val changed = next.as("n")
-        .join(labels.as("o"), col("n.node") === col("o.node"))
-        .filter(col("n.label") =!= col("o.label"))
-        .count()
-      // Iteration diagnostics (opt-in: -Dgraft.cc.verbose=true) — an
-      // iterative distributed job's convergence behavior is otherwise
-      // invisible in production logs; ScaleProbe reads these lines for
-      // the pointer-jumping iteration-count row.
-      if (sys.props.get("graft.cc.verbose").contains("true"))
-        System.err.println(s"[graft] connectedComponents: iteration ${i + 1} " +
-          s"changed=$changed checkpoint=${checkpointDir.fold("local")(_ => "reliable")}")
-      labels = next
-      converged = changed == 0
-      i += 1
-    }
-    sym.unpersist()
-    pairs.unpersist()
-    if (checkpointDir.isDefined) {
-      // drop the non-final subdir (the final one backs `labels`);
-      // restore whatever checkpoint dir the caller had configured
-      checkpointDir.foreach(dir => clearDir(s"$dir/graft_cc_${i % 2}"))
-      prevCkptDir match {
-        case Some(d) => spark.sparkContext.setCheckpointDir(d)
-        case None => () // no public API to unset; doc'd in the scaladoc
+      var converged = false
+      var i = 0
+      while (!converged && i < maxIterations) {
+        // each node adopts min(own label, neighbors' labels, label's label)
+        // — the last term is pointer jumping, which collapses chains in
+        // O(log diameter) rounds instead of O(diameter)
+        val viaNeighbors = sym
+          .join(labels.withColumnRenamed("node", "dst2"), col("dst") === col("dst2"))
+          .select(col("src").as("node"), col("label"))
+        val viaLabels = labels.as("a")
+          .join(labels.as("b"), col("a.label") === col("b.node"))
+          .select(col("a.node").as("node"), col("b.label").as("label"))
+        // Checkpoint FIRST: the changed-count then runs against the
+        // materialized result instead of re-executing the iteration's
+        // whole lineage a second time.
+        val grouped = labels.union(viaNeighbors).union(viaLabels)
+          .groupBy("node").agg(min("label").as("label"))
+        val next = checkpointDir match {
+          case Some(dir) =>
+            // Alternate between two subdirs, clearing before reuse: the
+            // subdir being overwritten holds iteration i-2's checkpoint,
+            // which nothing references anymore (labels points at i-1).
+            val sub = s"$dir/graft_cc_${i % 2}"
+            clearDir(sub)
+            spark.sparkContext.setCheckpointDir(sub)
+            // files, not blocks: the stats reset of Ckpt.cut, nothing to free
+            org.apache.spark.sql.GraftIterate.resetStats(grouped.checkpoint(eager = true))
+          // the step references `labels` three times under joins, so
+          // checkpoint-inherited statistics would cube per iteration
+          // (Ckpt.cut's scaladoc)
+          case None => Ckpt.cut(grouped)
+        }
+        val changed = next.as("n")
+          .join(labels.as("o"), col("n.node") === col("o.node"))
+          .filter(col("n.label") =!= col("o.label"))
+          .count()
+        // Iteration diagnostics (opt-in: -Dgraft.cc.verbose=true) — an
+        // iterative distributed job's convergence behavior is otherwise
+        // invisible in production logs; ScaleProbe reads these lines for
+        // the pointer-jumping iteration-count row.
+        if (sys.props.get("graft.cc.verbose").contains("true"))
+          System.err.println(s"[graft] connectedComponents: iteration ${i + 1} " +
+            s"changed=$changed checkpoint=${checkpointDir.fold("local")(_ => "reliable")}")
+        Ckpt.release(labels) // superseded
+        labels = next
+        converged = changed == 0
+        i += 1
       }
+      if (checkpointDir.isDefined) {
+        // drop the non-final subdir (the final one backs `labels`);
+        // restore whatever checkpoint dir the caller had configured
+        checkpointDir.foreach(dir => clearDir(s"$dir/graft_cc_${i % 2}"))
+        prevCkptDir match {
+          case Some(d) => spark.sparkContext.setCheckpointDir(d)
+          case None => () // no public API to unset; doc'd in the scaladoc
+        }
+      }
+      labels.select(col("node"), col("label").as("component"))
     }
-    labels.select(col("node"), col("label").as("component"))
   }
 
   /** Distributed PageRank over a directed edge relation, in SCALED
@@ -190,11 +182,11 @@ object GraphOps {
     * checkpoint materialization as an observed metric (one exact
     * integer, never a data collect — and no per-iteration broadcast
     * job); lineage AND inherited plan
-    * statistics are cut per iteration with [[Iterate.cut]] — the step
+    * statistics are cut per iteration with [[Ckpt.cut]] — the step
     * plan references the previous rank state twice, so a bare
     * localCheckpoint would compound its inherited stats
     * doubly-exponentially and stall planning past ~20 iterations (see
-    * Iterate's scaladoc; production PageRank runs 20–50 iterations).
+    * Ckpt.cut's scaladoc; production PageRank runs 20–50 iterations).
     *
     * @param edges directed (srcCol, dstCol); duplicate edges are
     *        deduplicated, NULL endpoints dropped
@@ -205,24 +197,22 @@ object GraphOps {
       srcCol: String = "src",
       dstCol: String = "dst",
       iterations: Int = 5,
-      scale: Long = 1000000000000L): DataFrame = {
+      scale: Long = 1000000000000L): DataFrame = Ckpt.scope {
     require(iterations >= 0, "iterations must be >= 0")
-    val pairs = edges
+    val pairs = Ckpt.cache(edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull)
       .distinct()
-      .repartition(col("src"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .repartition(col("src")))
     val nodes = pairs.select(col("src").as("node"))
       .union(pairs.select(col("dst").as("node")))
       .distinct()
     val outdeg = pairs.groupBy(col("src").as("node")).agg(count(lit(1)).as("outdeg"))
     // (node, outdeg) hash-partitioned by node; reused by every iteration's
     // final join, so cache it materialized.
-    val nodeDeg = nodes.join(outdeg, Seq("node"), "left")
+    val nodeDeg = Ckpt.cache(nodes.join(outdeg, Seq("node"), "left")
       .select(col("node"), coalesce(col("outdeg"), lit(0L)).as("outdeg"))
-      .repartition(col("node"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .repartition(col("node")))
     val n = nodeDeg.count()
     require(n > 0, "pageRank: empty graph")
     val base = scale / n
@@ -239,27 +229,25 @@ object GraphOps {
     def observed(df: DataFrame) = df.observe(obs,
       coalesce(sum(when(col("outdeg") === 0L, col("pr"))), lit(0L))
         .as("dang"))
-    var pr = Iterate.cut(observed(nodeDeg.withColumn("pr", lit(base))))
+    var pr = Ckpt.cut(observed(nodeDeg.withColumn("pr", lit(base))))
     var i = 0
     while (i < iterations) {
       val dang = obs.get("dang").asInstanceOf[Long]
-      val contrib = pr.df.filter(col("outdeg") > 0L)
+      val contrib = pr.filter(col("outdeg") > 0L)
         .join(pairs, col("node") === col("src"))
         .select(col("dst").as("node"), expr("pr div outdeg").as("c"))
       val inflow = contrib.groupBy("node").agg(sum("c").as("inflow"))
       obs = dangObs()
-      val next = Iterate.cut(observed(nodeDeg.join(inflow, Seq("node"), "left")
+      val next = Ckpt.cut(observed(nodeDeg.join(inflow, Seq("node"), "left")
         .select(col("node"), col("outdeg"),
           (lit(tele) +
             expr(s"(85 * (coalesce(inflow, 0L) + ${dang / n}L)) div 100").cast("long"))
             .as("pr"))))
-      pr.release()
+      Ckpt.release(pr) // superseded
       pr = next
       i += 1
     }
-    nodeDeg.unpersist()
-    pairs.unpersist()
-    pr.df.select(col("node"), col("pr").as("pr_units"))
+    pr.select(col("node"), col("pr").as("pr_units"))
   }
 
   /** The q151 oracle, generated for any iteration count so the engine
@@ -312,19 +300,19 @@ object GraphOps {
     * neighbor-label join (adjacency ⋈ node-scale label table), one
     * (node, label) hash agg with map-side combine, and a per-node
     * argmax as a max(struct) agg — no window over unbounded
-    * neighborhoods. Label tables ride [[Iterate.cut]] (checkpoint +
+    * neighborhoods. Label tables ride [[Ckpt.cut]] (checkpoint +
     * stats reset), the q154/q120 loop discipline.
     */
   def labelPropagation(
       edges: DataFrame,
       srcCol: String = "src",
       dstCol: String = "dst",
-      iterations: Int = 5): DataFrame = {
+      iterations: Int = 5): DataFrame = Ckpt.scope {
     require(iterations >= 0, "iterations must be >= 0")
     val pairs = edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull && col("src") =!= col("dst"))
-    val und = pairs
+    val und = Ckpt.cache(pairs
       .union(pairs.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
       // partitioned by the JOIN key: the adjacency's only consumer in
@@ -332,26 +320,24 @@ object GraphOps {
       // cache lets a co-partitioned label table join without
       // re-exchanging the edge relation each iteration (src, the old
       // key, satisfied nothing the loop needs)
-      .repartition(col("dst"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .repartition(col("dst")))
     val nodes = und.select(col("src").as("node")).distinct()
-    var labels = Iterate.cut(nodes.withColumn("label", col("node")))
+    var labels = Ckpt.cut(nodes.withColumn("label", col("node")))
     var i = 0
     while (i < iterations) {
-      val nbr = und.join(labels.df.select(col("node").as("dst"),
+      val nbr = und.join(labels.select(col("node").as("dst"),
           col("label").as("nl")), Seq("dst"))
         .select(col("src").as("node"), col("nl"))
       val counts = nbr.groupBy("node", "nl").agg(count(lit(1)).as("c"))
-      val next = Iterate.cut(counts
+      val next = Ckpt.cut(counts
         .groupBy("node")
         .agg(max(struct(col("c"), (-col("nl")).as("neg"))).as("m"))
         .select(col("node"), (-col("m.neg")).as("label")))
-      labels.release()
+      Ckpt.release(labels) // superseded
       labels = next
       i += 1
     }
-    und.unpersist()
-    labels.df.select("node", "label")
+    labels.select("node", "label")
   }
 
   /** The q187 oracle: the exact recurrence above, unrolled — each l_i

@@ -62,8 +62,7 @@ object ManifestV2 {
     // three needed columns once (eager localCheckpoint; at 100 TB this
     // is the standard inter-stage materialization any manifest
     // pipeline pays, and it is ONE corpus pass instead of three).
-    val g = gated.select(col("doc_id"), col("source"), col("text"))
-      .localCheckpoint(true)
+    val g = Ckpt.checkpoint(gated.select(col("doc_id"), col("source"), col("text")))
     val sel = TextAnalysis.dsirResample(g, "doc_id", "text",
       col("doc_id") % 7 === 0, n = SelectN, vocabSize = VocabSize,
       seed = Seed)
@@ -327,7 +326,7 @@ object ManifestV2 {
       itersBudget: Int = 16,
       tol: Double = 1e-3,
       gateQuantile: Option[Double] = None,
-      trainedWeights: Option[DataFrame] = None): DataFrame = {
+      trainedWeights: Option[DataFrame] = None): DataFrame = Ckpt.scope {
     require(gateQuantile.forall(q => q >= 0.0 && q < 1.0),
       s"gateQuantile=$gateQuantile out of [0, 1)")
     // lengthFeature: the q28-style weak label weights a length term
@@ -342,8 +341,7 @@ object ManifestV2 {
         val labels = corpus.select(col("doc_id"),
           when(TextAnalysis.qualityScoreCol(col("text")) >= 0.65, 1.0)
             .otherwise(0.0).as("y"))
-        val f = feats0
-          .localCheckpoint(true) // two consumers (train + score): one pass
+        val f = Ckpt.checkpoint(feats0) // two consumers (train + score): one pass
         (f, Classifier.trainLogReg(f, labels, "doc_id",
           iters = itersBudget, lr = 2.0, tol = tol))
     }
@@ -367,12 +365,9 @@ object ManifestV2 {
         if (row.isNullAt(0)) Double.MaxValue else row.getDouble(0)
       case None => pThreshold
     }
-    // NO release of the feats checkpoint here: the RETURNED relation
-    // still reads it (scored derives from feats), so a release would be
-    // a use-after-free at the caller's action — the pre-round-18
-    // `unpersist()` on this line only LOOKED like a release (it was the
-    // silent CacheManager no-op Ckpt documents). The blocks are
-    // ContextCleaner-reclaimed once the caller drops the manifest.
+    // the RETURNED relation reads the feats checkpoint (scored derives
+    // from feats), so the scope hands it to the caller's scope instead
+    // of freeing it — the round-18 use-after-free cannot recur
     survivors.join(
       scored.filter(col("p") >= thr).select("doc_id"), Seq("doc_id"))
   }
@@ -413,13 +408,14 @@ object ManifestV2 {
       pThreshold: Double,
       packBudget: Long = 512L,
       gateQuantile: Option[Double] = None,
-      trainedWeights: Option[DataFrame] = None): DataFrame = {
+      trainedWeights: Option[DataFrame] = None): DataFrame = Ckpt.scope {
     val gated = classifierGate(docs, gopherSurvivors(docs), pThreshold,
       gateQuantile = gateQuantile, trainedWeights = trainedWeights)
     // the packing join consumes the manifest twice (rows + token
     // counts); the relation is selectN-bounded, so cut its
-    // whole-chain lineage before fanning out
-    val manifest = selectAndShard(gated).localCheckpoint(true)
+    // whole-chain lineage before fanning out; the scope then frees the
+    // gate's and the selection's checkpoints, which nothing reads past it
+    val manifest = Ckpt.checkpoint(selectAndShard(gated))
     manifest.join(
       Packing.packGreedy(manifest, "doc_id", "n_tok", packBudget)
         .select(col("doc_id"), col("bin_id")),

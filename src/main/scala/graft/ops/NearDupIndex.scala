@@ -240,18 +240,12 @@ object NearDupIndex {
       pruneDocLookup: Boolean = true,
       pruneListing: Boolean = true): DataFrame = {
     val m = readMeta(spark, path)
-    // materialized ONCE (localCheckpoint): the query shingle sets feed
+    // materialized ONCE (checkpoint): the query shingle sets feed
     // the band rows AND the exact-Jaccard verify join — without the
     // checkpoint the shingle pass recomputes per consumer (A/B'd at
     // sf0.1: probe 3.1 s → 2.8 s, dedupGate 4.4 s → 3.6 s).
-    // LIFETIME: the checkpoint backs the RETURNED (lazy) relation, so
-    // it cannot be unpersisted here; it is released by the
-    // ContextCleaner once the caller drops the result. Callers holding
-    // a long-lived session over many probe batches should consume the
-    // result promptly rather than retaining the relation.
-    val qsets = shingleSets(queries, idCol, textCol, m.shingleN)
-      .select(col(idCol).as("q_id"), col("sh").as("qsh"))
-      .localCheckpoint(true)
+    val qsets = Ckpt.checkpoint(shingleSets(queries, idCol, textCol, m.shingleN)
+      .select(col(idCol).as("q_id"), col("sh").as("qsh")))
     probeFromSets(spark, qsets, idCol, path, m, threshold, maxBucket,
       pruneDocLookup, pruneListing)
   }
@@ -364,7 +358,7 @@ object NearDupIndex {
       textCol: String,
       path: String,
       threshold: Double = 0.5,
-      maxBucket: Int = 1000): DataFrame = {
+      maxBucket: Int = 1000): DataFrame = Ckpt.scope {
     val spark = batch.sparkSession
     val m = readMeta(spark, path)
     // ONE shingle pass over the batch (batch-sized, so the checkpoint
@@ -372,9 +366,8 @@ object NearDupIndex {
     // within-batch pair mining previously each re-shingled (and the
     // miner re-minhashed) the same rows from scratch — round-17 probe:
     // the gate paid the batch's shingle front three times.
-    val bsets = shingleSets(batch, idCol, textCol, m.shingleN)
-      .select(col(idCol).as("q_id"), col("sh").as("qsh"))
-      .localCheckpoint(true)
+    val bsets = Ckpt.checkpoint(shingleSets(batch, idCol, textCol, m.shingleN)
+      .select(col(idCol).as("q_id"), col("sh").as("qsh")))
     val vsIndex = probeFromSets(spark, bsets, idCol, path, m,
         threshold, maxBucket, pruneDocLookup = true, pruneListing = true)
       .select(col("q_id").as("id"), col("n_id").as("dup_of"),
@@ -391,16 +384,13 @@ object NearDupIndex {
       .filter(col("rn") === 1)
       .drop("rn")
     // the gate's verdict is BATCH-sized (one row per batch doc), so
-    // materializing it lets the batch shingle checkpoint above be
-    // released HERE instead of leaking per gate call for the JVM's
+    // materializing it lets the scope free the batch shingle checkpoint
+    // above HERE instead of leaking it per gate call for the JVM's
     // lifetime (round-17 verdict item); the one retained block is the
-    // returned relation itself, ContextCleaner-released when dropped
-    val out = batch.select(col(idCol))
+    // returned relation itself
+    Ckpt.checkpoint(batch.select(col(idCol))
       .join(elected.withColumnRenamed("id", idCol), Seq(idCol), "left")
       .select(col(idCol), col("dup_of").isNull.as("kept"),
-        col("dup_of"), col("jaccard"))
-      .localCheckpoint(true)
-    Ckpt.release(bsets)
-    out
+        col("dup_of"), col("jaccard")))
   }
 }

@@ -320,8 +320,7 @@ object Phash {
     // assignment join — cut it eagerly so the corpus is decoded ONCE
     // (the q213/q214 pattern; without it lazy eval re-decodes per
     // consumer, the one cost that dominates at 100 TB)
-    val codes = imageDHash(media, idCol, payloadCol)._1.toDF()
-      .localCheckpoint(true)
+    val codes = Ckpt.checkpoint(imageDHash(media, idCol, payloadCol)._1.toDF())
     val edges = VectorOps.hammingRadiusPairs(codes, "id",
       "phash_diff", radius = radius, nBands = nBands)
     val comps = GraphOps.connectedComponents(edges,

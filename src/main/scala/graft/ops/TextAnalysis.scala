@@ -1239,7 +1239,7 @@ object TextAnalysis {
       .distinct()
     // {self} ∪ {1-deletions}, deduped per word (deleting either of two
     // equal adjacent chars yields the same variant). Materialized ONCE
-    // (localCheckpoint): the variant expansion feeds the skew guard's
+    // (checkpoint): the variant expansion feeds the skew guard's
     // bucket-size aggregate AND both sides of the candidate self-join —
     // without the checkpoint the explode ran three times (the guard
     // pass was a full extra expansion, measured ~1/3 of the q162 wall).
@@ -1249,7 +1249,7 @@ object TextAnalysis {
     // key from the task that hit it (round-17 opt: the guard pass was
     // its own ~0.3 s job at sf0.1, and at corpus scale a full extra
     // scan of the key set).
-    val keyed = words
+    val keyed = Ckpt.checkpoint(words
       .select(when(length(col("w")) <= maxKeyLen, col("w"))
         .otherwise(raise_error(concat(
           lit("editDistance1Pairs: key "), substring(col("w"), 1, 32),
@@ -1259,8 +1259,7 @@ object TextAnalysis {
         "concat(array(w), transform(sequence(1, length(w)), " +
           "i -> concat(substr(w, 1, i - 1), substr(w, i + 1))))")))
         .as("v"))
-      .select(col("w"), xxhash64(col("v")).as("vh"))
-      .localCheckpoint(true)
+      .select(col("w"), xxhash64(col("v")).as("vh")))
     val worst = keyed.groupBy("vh").agg(count(lit(1)).as("n"))
       .agg(max("n")).head().getLong(0)
     require(worst <= maxBucket,

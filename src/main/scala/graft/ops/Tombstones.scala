@@ -111,7 +111,7 @@ object Tombstones {
       targetBytes: Long,
       opName: String,
       beforeRewrite: DataFrame => Unit = _ => (),
-      beforeClear: () => Unit = () => ()): Map[String, (Int, Int)] =
+      beforeClear: () => Unit = () => ()): Map[String, (Int, Int)] = Ckpt.scope {
     ids(spark, indexRoot, idCol) match {
       case None => Map.empty
       case Some(tombs0) =>
@@ -121,21 +121,20 @@ object Tombstones {
         // per-dir jobs would re-read the tombstone files and re-run
         // the distinct — takedown-sized work, but multiplied by up to
         // hundreds of dirs it dominated the round-17 purge probe
-        val tombs = tombs0.localCheckpoint(true)
-        try {
-          // layout hooks around the rewrite, for layouts that must stage
-          // derived state off the PRE-rewrite data (LexIndex stages the
-          // negative stats row here) and publish it before the tombstone
-          // clear — both run inside the same crash-idempotent protocol
-          beforeRewrite(tombs)
-          val affected = layout.affectedDirs(spark, indexRoot, idCol, tombs)
-          val report = Compaction.rewriteDirs(spark, affected, targetBytes,
-            opName,
-            shouldRewrite = (_, _) => true,
-            transform = df => df.join(tombs, Seq(idCol), "left_anti"))
-          beforeClear()
-          clear(spark, indexRoot)
-          report
-        } finally Ckpt.release(tombs)
+        val tombs = Ckpt.checkpoint(tombs0)
+        // layout hooks around the rewrite, for layouts that must stage
+        // derived state off the PRE-rewrite data (LexIndex stages the
+        // negative stats row here) and publish it before the tombstone
+        // clear — both run inside the same crash-idempotent protocol
+        beforeRewrite(tombs)
+        val affected = layout.affectedDirs(spark, indexRoot, idCol, tombs)
+        val report = Compaction.rewriteDirs(spark, affected, targetBytes,
+          opName,
+          shouldRewrite = (_, _) => true,
+          transform = df => df.join(tombs, Seq(idCol), "left_anti"))
+        beforeClear()
+        clear(spark, indexRoot)
+        report
     }
+  }
 }

@@ -714,7 +714,7 @@ object VectorOps {
     // double vectors (measured: this cut halved the 64×-probe time).
     // Upstream relations therefore do NOT need their own checkpoint
     // when they are consumed by the slot miners alone.
-    val packed = binaryQuantize(fid, "fid", "v").localCheckpoint(true)
+    val packed = Ckpt.checkpoint(binaryQuantize(fid, "fid", "v"))
     val bands =
       if (nBands > 0) nBands
       else hammingParamsFor(math.max(packed.count(), 1L), dim, radius).nBands
@@ -805,7 +805,7 @@ object VectorOps {
         col(vecCol).as("v")))
     val dim = fid.select(size(rawVec(fid, "v")).as("d")).limit(1).head()
       .getInt(0)
-    val packed = binaryQuantize(fid, "fid", "v").localCheckpoint(true)
+    val packed = Ckpt.checkpoint(binaryQuantize(fid, "fid", "v"))
     val bands =
       if (nBands > 0) nBands
       else hammingParamsFor(math.max(packed.count(), 1L), dim, radius).nBands

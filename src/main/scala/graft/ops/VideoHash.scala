@@ -533,8 +533,7 @@ object VideoHash {
       payloadCol: String,
       radius: Int = 6,
       nBands: Int = 8): DataFrame = {
-    val codes = videoFingerprint(media, idCol, payloadCol)._1.toDF()
-      .localCheckpoint(true)
+    val codes = Ckpt.checkpoint(videoFingerprint(media, idCol, payloadCol)._1.toDF())
     VectorOps.hammingRadiusPairs(codes, "id", "video_diff",
       radius = radius, nBands = nBands)
   }
@@ -551,8 +550,7 @@ object VideoHash {
       radius: Int = 6,
       nBands: Int = 8,
       maxIters: Int = 20): DataFrame = {
-    val codes = videoFingerprint(media, idCol, payloadCol)._1.toDF()
-      .localCheckpoint(true)
+    val codes = Ckpt.checkpoint(videoFingerprint(media, idCol, payloadCol)._1.toDF())
     val edges = VectorOps.hammingRadiusPairs(codes, "id",
       "video_diff", radius = radius, nBands = nBands)
     val comps = GraphOps.connectedComponents(edges,

@@ -23,7 +23,13 @@ private[graft] final class WorkPool(threadName: String) {
           t
         }))
 
-  def submit[A](body: => A): Future[A] = Future(body)(ec)
+  /** Runs `body` in the submitter's [[Ckpt.scope]], so what it
+    * materializes is freed with the submitter's scope.
+    */
+  def submit[A](body: => A): Future[A] = {
+    val unit = Ckpt.inCurrentScope(body)
+    Future(unit())(ec)
+  }
 
   /** `f` over every element concurrently, joined ([[WorkPool.joinAll]]). */
   def mapAll[A, B](xs: Seq[A])(f: A => B): Seq[B] =

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.ops.Ckpt
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -32,19 +33,17 @@ object EtlJob {
       spark: SparkSession,
       rawDir: String,
       enrichedDir: String,
-      day: java.time.LocalDate): (Long, Long) = {
+      day: java.time.LocalDate): (Long, Long) = Ckpt.scope {
     // Partition-pruned read: only this day's directory is listed/scanned,
     // the Spark analog of the reference's S3 Prefix= (ipynb:572).
     val dayDir = s"$rawDir/context_date=$day"
     // cached: the rejects count and the enriched write otherwise each
     // pay a full scan + JSON parse of the day
-    val raw = spark.read
+    val raw = Ckpt.cache(spark.read
       .schema(TelegramSchema.updateSchema)
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", TelegramSchema.CorruptCol)
-      .json(dayDir)
-      .cache()
-    try {
+      .json(dayDir))
     val enriched = transform(raw, day)
     val nRejects = Flatten.rejects(raw).count()
     val out = enriched.coalesce(1)
@@ -62,7 +61,6 @@ object EtlJob {
       .parquet(enrichedDir)
     val n = obs.get("n_rows").asInstanceOf[Long]
     (n, nRejects)
-    } finally raw.unpersist()
   }
 
   /** Register the enriched zone as the `telegram` table (the Athena

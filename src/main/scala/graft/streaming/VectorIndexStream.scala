@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.ops.{IndexLayout, Pq, VectorOps}
+import graft.ops.{Ckpt, IndexLayout, Pq, VectorOps}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.streaming.DataStreamWriter
@@ -88,11 +88,13 @@ object VectorIndexStream {
     * [[graft.ops.IndexLayout.publish]] of what `write` stages (given
     * the stage dir), keyed `<streamId>-<batchId>`, with the batch's
     * ledger entry as the done marker. Returns false when the ledger
-    * says the batch already landed.
+    * says the batch already landed. One [[graft.ops.Ckpt.scope]] per
+    * batch: `foreachBatch` runs on the stream's own thread, outside any
+    * caller's scope, so the batch frees what it materialized here.
     */
   private[streaming] def publishBatch(
       batch: DataFrame, batchId: Long, path: String, streamId: String)(
-      write: String => Unit): Boolean = {
+      write: String => Unit): Boolean = Ckpt.scope {
     val key = if (streamId.isEmpty) s"$batchId" else s"$streamId-$batchId"
     IndexLayout.publish(batch.sparkSession, path,
       new Path(path, s"_graft_stage/$key"), key,
@@ -106,11 +108,12 @@ object VectorIndexStream {
     * retry — the standard foreachBatch idempotence trade. Tombstones
     * deduplicate, an HLL union absorbs a repeated partial and the SCD2
     * fold collapses an echoed change; a repeated drift batch counts
-    * twice.
+    * twice. One [[graft.ops.Ckpt.scope]] per batch, as in
+    * [[publishBatch]].
     */
   private[streaming] def ledgered(
       batch: DataFrame, batchId: Long, path: String, streamId: String)(
-      apply: => Unit): Boolean = {
+      apply: => Unit): Boolean = Ckpt.scope {
     val marker = ledgerMarker(path, streamId, batchId)
     val fs = marker.getFileSystem(
       batch.sparkSession.sparkContext.hadoopConfiguration)

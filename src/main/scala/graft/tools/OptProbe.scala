@@ -254,12 +254,12 @@ object OptProbe {
       }
     }
 
-    if (on("clf")) {
+    if (on("clf")) Ckpt.scope {
       val labels = d.select(col("doc_id"),
         when(TextAnalysis.qualityScoreCol(col("text")) >= 0.65, 1.0)
           .otherwise(0.0).as("y"))
-      val feats = Classifier.hashedFeatures(d, "doc_id", "text",
-        dim = 1 << 15).cache()
+      val feats = Ckpt.cache(Classifier.hashedFeatures(d, "doc_id", "text",
+        dim = 1 << 15))
       val isTrain = col("doc_id") % 5 =!= 0
       t("clf features cache") { feats.count() }
       val w = jobs(spark, "clfTrain16") {
@@ -275,7 +275,6 @@ object OptProbe {
           .agg(count(lit(1)).as("n"), sum(col("y")).cast("long").as("n_pos"))
           .count()
       }
-      feats.unpersist()
     }
 
     if (on("pr")) {

@@ -798,11 +798,11 @@ object ScaleProbe {
     // agreement (recall for the kNN pairs, kept-set agreement for the
     // delta dedup). The k-means fit is timed separately so the note
     // can subtract the (identical, driver-side) fit cost.
-    if (only.forall(_.exists("hier4096".startsWith))) {
+    if (only.forall(_.exists("hier4096".startsWith))) graft.ops.Ckpt.scope {
       val nC = 4096
       val sr = 8 * nC
-      val e64 = graft.analytics.DataOpsQueries
-        .twinCorpus(Tables.load(spark, tmp, "embeddings")).cache()
+      val e64 = graft.ops.Ckpt.cache(graft.analytics.DataOpsQueries
+        .twinCorpus(Tables.load(spark, tmp, "embeddings")))
       e64.count() // materialize: timings below measure the operator
       val tFit0 = System.nanoTime()
       val cents = graft.ops.VectorOps.kmeansCentroids(
@@ -891,7 +891,6 @@ object ScaleProbe {
           f"hier=${tHierR}%6.2fs speedup=${tFlatR / tHierR}%5.2f " +
           f"obj_flat=$objFlat%.4f obj_hier=$objHier%.4f")
       }
-      e64.unpersist()
     }
     // The same ≥4096-cluster regime on a corpus WITH coarse structure —
     // hier routing's target case (IVF itself presumes clusterable
@@ -900,19 +899,18 @@ object ScaleProbe {
     // 64 members, hash-derived (deterministic, no Random): jitter 0.05
     // against center norms ≈ 4.6 keeps same-center cosines ≈ 0.999 —
     // clusters k-means can find and coarse groups can cover.
-    if (only.forall(_.exists("hierclustered".startsWith))) {
+    if (only.forall(_.exists("hierclustered".startsWith))) graft.ops.Ckpt.scope {
       val nC = 4096
       val sr = 8 * nC
       def u(h: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
         pmod(h, lit(2000L)).cast("double") / 500.0 - 2.0 // uniform-ish [-2, 2)
-      val corpus = spark.range(nC * 64L).select(
+      val corpus = graft.ops.Ckpt.cache(spark.range(nC * 64L).select(
           col("id").as("vec_id"), pmod(col("id"), lit(nC.toLong)).as("c"))
         .select(col("vec_id"),
           transform(sequence(lit(0), lit(63)), d =>
             (u(xxhash64(col("c"), d)) +
               lit(0.05) * u(xxhash64(col("vec_id"), d, lit(7))))
-              .cast("float")).as("embedding"))
-        .cache()
+              .cast("float")).as("embedding")))
       corpus.count()
       def knnC(thresh: Int, probes: Int): (Double, Set[(Long, Long)]) = {
         val t0 = System.nanoTime()
@@ -932,7 +930,6 @@ object ScaleProbe {
         println(f"[scale] hierclustered_knn probes=$probes%-2d flat=${tF}%6.2fs " +
           f"hier=${tH}%6.2fs speedup=${tF / tH}%5.2f recall_vs_flat=$rec%.4f")
       }
-      corpus.unpersist()
     }
     // q21's stage decomposition (round-10 verdict Next #6): cumulative
     // cuts through minhashLshPairs' dataflow — shingle sets, minhash

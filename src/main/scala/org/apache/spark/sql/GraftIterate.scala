@@ -3,7 +3,7 @@ package org.apache.spark.sql
 import org.apache.spark.sql.classic.{Dataset => CDataset}
 import org.apache.spark.sql.execution.LogicalRDD
 
-/** Package-internal helper for [[graft.ops.Iterate]]'s per-iteration
+/** Package-internal helper for [[graft.ops.Ckpt.cut]]'s per-iteration
   * stats reset (see that scaladoc for WHY stats must reset: inherited
   * `originStats` compound multiplicatively across iterations and hit a
   * BigInteger planning cliff).
@@ -31,7 +31,7 @@ object GraftIterate {
           LogicalRDD(l.output, l.rdd, l.outputPartitioning,
             l.outputOrdering, l.isStreaming, l.stream)(session, None, None))
       case _ =>
-        // non-checkpointed input (not the Iterate.cut path): fall back
+        // non-checkpointed input (not the Ckpt.cut path): fall back
         // to a fresh internal-row leaf — still conversion-free
         session.internalCreateDataFrame(ds.queryExecution.toRdd, df.schema)
     }

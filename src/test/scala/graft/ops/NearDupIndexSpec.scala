@@ -209,6 +209,10 @@ class NearDupIndexSpec extends AnyFunSuite {
       s"dedupGate retained ${retained.size} block sets (want 1: the result)")
     Ckpt.release(gated) // Dataset.unpersist is a no-op on checkpoints
     assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty)
+    // in a scope, the result's block set is freed when the scope closes
+    Ckpt.scope(NearDupIndex.dedupGate(batch, "doc_id", "text", root).count())
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty,
+      "dedupGate in a scope retained block sets after the scope closed")
   }
 
   test("stream-built index probes identically to a batch build; redelivered batch appends nothing") {
