@@ -2,6 +2,7 @@
 """Same-box A/B of the BENCHMARK.json workloads: parent checkout vs change.
 
 Usage: python3 scripts/perfbench_ab.py PARENT_DIR CHANGE_DIR [--pairs N] [--seed0 S]
+           [--workload W]... [--claim WORKLOAD:METRIC]...
 
 Both directories are full checkouts (make the parent one with
 `git archive <parent> | tar -x -C PARENT_DIR`). For each pair i
@@ -22,6 +23,17 @@ It prints failed/attempted for every run, and last, per workload, one
 traced run (--trace 1) per side on seed 7: every per-layer count, and
 every other per-layer metric whose value differs between the sides. Exit 1 if any run failed, any
 operation failed, or any metric is worse.
+
+--workload W (repeatable) runs only the named workloads; the default is
+every workload in BENCHMARK.json.
+
+--claim WORKLOAD:METRIC (repeatable) tests a claimed gain on one
+end-to-end metric of one workload by the rule for a small sandbox: the
+change must win at least nine tenths of the pairs run (a tie counts for
+neither side), and its median must beat the parent's by more than the
+parent's interquartile range. The script prints pairs won against pairs
+run, the median difference against that range, and whether the claim is
+met; an unmet claim also exits 1.
 """
 
 import argparse
@@ -73,6 +85,34 @@ def verdict(parent, change, bound, lower_better):
     return "ok"
 
 
+def claim_met(workload, metric, pairs, pairs_run):
+    """Print and judge one claimed gain; `pairs` holds the (parent,
+    change) runs of every pair where both sides ran."""
+    name = metric["name"]
+    sign = 1.0 if metric["better"] == "lower" else -1.0
+    diffs = [sign * (p["metrics"][name]["value"] - c["metrics"][name]["value"])
+             for p, c in pairs]
+    won = sum(d > 0 for d in diffs)
+    lost = sum(d < 0 for d in diffs)
+    print(f"claim {workload}:{name}: change won {won} of {pairs_run} pairs "
+          f"({lost} lost, {len(diffs) - won - lost} tied, "
+          f"{pairs_run - len(diffs)} not run on both sides)")
+    if not pairs:
+        print("  claim NOT met: no complete pair")
+        return False
+    parent = [p["metrics"][name]["value"] for p, _ in pairs]
+    change = [c["metrics"][name]["value"] for _, c in pairs]
+    q1, pm, q3 = quartiles(parent)
+    cm = quartiles(change)[1]
+    gain = sign * (pm - cm)
+    print(f"  median parent {pm:.2f}  change {cm:.2f}  gain {gain:+.2f} "
+          f"vs parent IQR {q3 - q1:.2f}")
+    met = won >= 0.9 * pairs_run and gain > q3 - q1
+    print(f"  claim {'met' if met else 'NOT met'} (needs >= 9/10 of pairs "
+          "won and a median gain above the parent's IQR)")
+    return met
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__,
                                  formatter_class=argparse.RawDescriptionHelpFormatter)
@@ -80,20 +120,40 @@ def main():
     ap.add_argument("change_dir")
     ap.add_argument("--pairs", type=int, default=5)
     ap.add_argument("--seed0", type=int, default=501)
+    ap.add_argument("--workload", action="append", default=[],
+                    help="run only this workload (repeatable)")
+    ap.add_argument("--claim", action="append", default=[],
+                    metavar="WORKLOAD:METRIC",
+                    help="test a claimed gain (repeatable)")
     args = ap.parse_args()
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
         bench = json.load(f)
     seconds = bench["run_seconds"]
     workloads = [w["name"] for w in bench["workloads"]]
+    unknown = [w for w in args.workload if w not in workloads]
+    if unknown:
+        ap.error(f"unknown workload(s) {unknown}; BENCHMARK.json has {workloads}")
+    if args.workload:
+        workloads = [w for w in workloads if w in args.workload]
+    metrics = {m["name"]: m for m in bench["end_to_end"]}
+    claims = []
+    for c in args.claim:
+        w, _, name = c.partition(":")
+        if w not in workloads or name not in metrics:
+            ap.error(f"--claim {c}: need a run workload {workloads} and an "
+                     f"end-to-end metric {sorted(metrics)}")
+        claims.append((w, metrics[name]))
     sides = {"parent": os.path.abspath(args.parent_dir),
              "change": os.path.abspath(args.change_dir)}
 
     results = {(w, s): [] for w in workloads for s in sides}
+    pairs = {w: [] for w in workloads}  # (parent run, change run) per seed
     bad = False
     for i in range(args.pairs):
         seed = args.seed0 + i
         order = ["parent", "change"] if i % 2 == 0 else ["change", "parent"]
         for w in workloads:
+            pair = {}
             for side in order:
                 r = run(sides[side], w, seed, seconds, 0)
                 if r is None:
@@ -101,10 +161,13 @@ def main():
                     print(f"{w} seed {seed} {side}: run FAILED", flush=True)
                     continue
                 results[(w, side)].append(r)
+                pair[side] = r
                 if r["failed"]:
                     bad = True
                 print(f"{w} seed {seed} {side}: failed/attempted "
                       f"{r['failed']}/{r['attempted']}", flush=True)
+            if len(pair) == 2:
+                pairs[w].append((pair["parent"], pair["change"]))
 
     print()
     for w in workloads:
@@ -127,6 +190,9 @@ def main():
             cm = quartiles(vals["change"])[1]
             delta = 100.0 * (cm / pm - 1.0) if pm else float("nan")
             print(f"  {name:<14} {'  '.join(row)}  {delta:+6.1f}%  {v}")
+
+    for w, m in claims:
+        bad |= not claim_met(w, m, pairs[w], args.pairs)
 
     print()
     for w in workloads:

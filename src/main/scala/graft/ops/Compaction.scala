@@ -119,19 +119,14 @@ object Compaction {
 
     // a caller may pass dirs of SEVERAL sub-layouts in one list (the
     // BM25 purge rewrites postings tb= dirs AND doclen/ together) —
-    // group by the files' parquet schema (one footer read per dir,
-    // driver metadata) and run one bulk stage job per schema group
-    val hConf = spark.sparkContext.hadoopConfiguration
-    def schemaKey(f: Path): String = {
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, hConf))
-      try r.getFooter.getFileMetaData.getSchema.toString finally r.close()
-    }
+    // group by the Spark schema `spark.read.parquet(dir)` would infer
+    // (one footer read per dir on the driver, no job) and run one bulk
+    // stage job per schema group, which opens with that schema
     val groups = dirPool.mapAll(indexed) { case ((dir, files), i) =>
-      (schemaKey(files.head.getPath), (dir, files, i))
-    }.groupBy(_._1).values.map(_.map(_._2)).toSeq
+      (IndexLayout.filesSchema(spark, files), (dir, files, i))
+    }.groupBy(_._1).toSeq.map { case (schema, g) => (schema, g.map(_._2)) }
 
-    dirPool.mapAll(groups.zipWithIndex) { case (group, gi) =>
+    dirPool.mapAll(groups.zipWithIndex) { case ((schema, group), gi) =>
       // per-dir file target from the ORIGINAL byte sizes (compacted
       // bytes are ≤ original for both callers); the write lands
       // ≤ target files per dir via a deterministic row-hash salt over
@@ -139,7 +134,6 @@ object Compaction {
       val targets: Map[Int, Int] = group.map { case (_, files, i) =>
         i -> targetOfFiles(files)
       }.toMap
-      val schema = spark.read.parquet(group.head._1.toString).schema
       // ONE multi-path scan (a per-dir union's analysis cost grows
       // superlinearly in the branch count — measured: the 256-dir
       // Hamming purge spent ~15 s planning a 256-branch unionByName);
@@ -170,7 +164,7 @@ object Compaction {
         .parquet(new Path(stageRoot, s"g$gi").toString)
     }
     val dirGroup: Map[Int, Int] =
-      groups.zipWithIndex.flatMap { case (group, gi) =>
+      groups.zipWithIndex.flatMap { case ((_, group), gi) =>
         group.map { case (_, _, i) => i -> gi }
       }.toMap
 

@@ -340,13 +340,13 @@ object CorpusUpsert {
       val prior = prior0.map(Ckpt.checkpoint)
       freezeF.foreach(WorkPool.await(_))
       // the fresh-freeze path just wrote these bytes from `delta`, so
-      // the schema is known — pinning it skips the footer-inference job;
-      // a re-apply over an already-frozen delta keeps inference (the
-      // frozen bytes are authoritative, the caller's frame is not)
+      // the schema is known; a re-apply over an already-frozen delta
+      // takes it from the frozen bytes (authoritative — the caller's
+      // frame is not), read on the driver. Neither runs a job.
       val staged =
         if (freezeF.isDefined)
           spark.read.schema(delta.schema).parquet(deltaDir.toString)
-        else spark.read.parquet(deltaDir.toString)
+        else IndexLayout.readDir(spark, deltaDir.toString)
       val newRev =
         if (revsFrozen)
           coalesce(col("frozen_rev"), raise_error(concat(
@@ -847,6 +847,9 @@ object CorpusUpsert {
     * columns, so ledger reads pin it instead of paying a per-read
     * schema-inference job (one driver-scheduled footer job per read,
     * and the lifecycle queries read the ledger many times per run).
+    * A constant rather than [[IndexLayout.readFiles]]' footer read: the
+    * schema is known without any I/O, and an empty ledger (no batch
+    * dir yet) still gets a typed empty relation.
     */
   private val RevsSchema = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField("doc",

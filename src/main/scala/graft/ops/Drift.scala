@@ -97,7 +97,7 @@ object Drift {
     * geometry (additive rows — never read-modify-write).
     */
   def psiAppendObserved(batch: DataFrame, valueCol: String, path: String): Unit = {
-    val binWidth = batch.sparkSession.read.parquet(s"$path/meta")
+    val binWidth = IndexLayout.readDir(batch.sparkSession, s"$path/meta")
       .select("binWidth").head().getDouble(0)
     hist(batch, valueCol, binWidth, "n").write.mode("append")
       .parquet(s"$path/obs")
@@ -109,10 +109,11 @@ object Drift {
     * snapshots, which DriftSpec pins stream-vs-batch.
     */
   def psiFromStats(spark: SparkSession, path: String): DataFrame = {
-    val eps = spark.read.parquet(s"$path/meta").select("eps").head().getDouble(0)
-    val o = spark.read.parquet(s"$path/ref")
+    val eps = IndexLayout.readDir(spark, s"$path/meta")
+      .select("eps").head().getDouble(0)
+    val o = IndexLayout.readDir(spark, s"$path/ref")
       .groupBy("bucket").agg(sum("n").as("n_old"))
-    val n = spark.read.parquet(s"$path/obs")
+    val n = IndexLayout.readDir(spark, s"$path/obs")
       .groupBy("bucket").agg(sum("n").as("n_new"))
     psiRelation(o, n, eps)
   }

@@ -75,8 +75,8 @@ object HammingIndex {
     val dimV = d
     VectorOps.BandSpec(nBands, dimV) // validate geometry before any write
     import df.sparkSession.implicits._
-    Seq((nBands, dimV, nBuckets)).toDF("nBands", "dim", "nBuckets")
-      .write.mode("overwrite").parquet(s"$path/meta")
+    IndexLayout.Meta.write(
+      Seq((nBands, dimV, nBuckets)).toDF("nBands", "dim", "nBuckets"), path)
     // builds co-partition to the layout with a scale-adaptive salt
     // ([[DirLayout.toDirs]]): the exchange is build-sized, file
     // creation parallelizes across tasks, and files per directory stay
@@ -123,9 +123,8 @@ object HammingIndex {
   }
 
   private def readMeta(spark: SparkSession, path: String): (Int, Int, Int) =
-    MetaCache.cached(spark, s"$path/meta") {
-      val m = spark.read.parquet(s"$path/meta")
-        .select("nBands", "dim", "nBuckets").head()
+    MetaCache.meta(spark, path) { meta =>
+      val m = meta.select("nBands", "dim", "nBuckets").head()
       (m.getInt(0), m.getInt(1), m.getInt(2))
     }
 
@@ -210,7 +209,7 @@ object HammingIndex {
     // broadcast would ship |corpus|·nBands·(1+cb) rows to every task —
     // the round-12 probe measured 18.9× vs 8.6× at 64× for exactly
     // that hint before it was removed
-    val slice = spark.read.parquet(Bands.dir(path)).filter(prune) // pruned
+    val slice = Bands.read(spark, path).filter(prune) // pruned
     (if (includeTombstoned) slice
      else Tombstones.excludeFrom(slice, path, idCol))
       .join(probes, Seq("band", "bv", "bb"))

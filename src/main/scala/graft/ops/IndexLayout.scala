@@ -1,8 +1,9 @@
 package graft.ops
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.sql.{Column, DataFrame, GraftParquet, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** The directory layout of one persisted-index family, described ONCE
   * as data — which sub-directories sit under the index root, which
@@ -24,6 +25,9 @@ import org.apache.spark.sql.functions._
   * The families' writers take their `partitionBy` columns and
   * sub-directory names from the same constant ([[IndexLayout.SubDir.write]]),
   * so what the writer lays out and what maintenance lists cannot drift.
+  * Every read of a persisted index opens through the mirror,
+  * [[IndexLayout.SubDir.read]], which resolves the schema on the driver
+  * instead of scheduling Spark's schema-inference job.
   * BM25 ([[LexIndex]]) reuses the listing and the affected-dir
   * derivation but keeps its own delete/purge (its tombstones carry the
   * document length, and its purge stages a negative stats row).
@@ -61,7 +65,7 @@ final case class IndexLayout(name: String, subDirs: Seq[IndexLayout.SubDir]) {
       : Seq[Path] =
     subDirs.filter(_.keyed).flatMap { s =>
       if (s.partCols.isEmpty) Seq(new Path(s.dir(root)))
-      else spark.read.parquet(s.dir(root))
+      else s.read(spark, root)
         .select((idCol +: s.partCols).map(col): _*)
         .join(tombs, Seq(idCol), "left_semi")
         .select(s.cols: _*).distinct()
@@ -127,6 +131,83 @@ object IndexLayout {
       (if (partCols.isEmpty) w else w.partitionBy(partCols: _*))
         .parquet(dir(root))
     }
+    /** Open this sub-directory of `root` — the read-side mirror of
+      * [[write]] and the one way a persisted index is read: the
+      * relation `spark.read.parquet(dir)` returns, with no Spark job
+      * ([[IndexLayout.readDir]]).
+      */
+    def read(spark: SparkSession, root: String): DataFrame =
+      readDir(spark, dir(root))
+  }
+
+  /** The geometry sub-directory (`meta/`, one row of layout constants)
+    * of the BM25, Hamming and near-dup families — outside their
+    * [[IndexLayout]]s (maintenance never touches it), read through
+    * [[MetaCache.meta]].
+    */
+  val Meta: SubDir = SubDir("meta", keyed = false)
+
+  /** `spark.read.parquet(dir)` without its schema-inference job. Spark
+    * infers a directory's schema in a one-task job that reads one data
+    * file's footer (the lexicographically first data file, when no
+    * summary file exists). Here the driver reads that same footer
+    * through Spark's own conversion ([[GraftParquet.footerSchema]]) and
+    * opens `spark.read.schema(s).parquet(dir)`: the same relation,
+    * partition columns still discovered from directory names, zero
+    * jobs. A directory without a data file (missing, empty, or a
+    * bootstrapped partitioned index with no partition yet), or one
+    * carrying a streaming sink's `_spark_metadata` log (which replaces
+    * the listing), opens exactly as `spark.read.parquet` does, failures
+    * included. Parquet summary files (`_metadata`, `_common_metadata`)
+    * are skipped: no index writer emits them (Spark's default summary
+    * level is NONE).
+    */
+  private[graft] def readDir(spark: SparkSession, dir: String): DataFrame =
+    dataSchema(spark, dir) match {
+      case Some(s) => spark.read.schema(s).parquet(dir)
+      case None => spark.read.parquet(dir)
+    }
+
+  /** Explicitly listed data files (non-empty, one layout's schema) opened
+    * the [[readDir]] way — Spark's inference touches the first path in
+    * sorted order, so that file's footer gives the schema.
+    */
+  private[graft] def readFiles(
+      spark: SparkSession, files: Seq[FileStatus]): DataFrame =
+    spark.read.schema(filesSchema(spark, files))
+      .parquet(files.map(_.getPath.toString): _*)
+
+  /** The schema Spark's inference gives a read of `files` (non-empty):
+    * the footer of the first in path order.
+    */
+  private[graft] def filesSchema(
+      spark: SparkSession, files: Seq[FileStatus]): StructType = {
+    require(files.nonEmpty, "filesSchema: no data file")
+    GraftParquet.footerSchema(spark, files.minBy(_.getPath.toString))
+  }
+
+  /** The schema Spark's inference would return for `dir`, read from the
+    * same file's footer on the driver; None when [[readDir]] must defer
+    * to `spark.read.parquet` (see there).
+    */
+  private[graft] def dataSchema(
+      spark: SparkSession, dir: String): Option[StructType] = {
+    val root = new Path(dir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // depth-first over sorted names (a directory sorts as `name/`, so
+    // the first file found is the first full path in string order)
+    def data(name: String): Boolean = !GraftParquet.hiddenName(name) &&
+      name != "_metadata" && name != "_common_metadata"
+    def first(d: Path): Option[FileStatus] =
+      fs.listStatus(d).toSeq
+        .filter(s => data(s.getPath.getName))
+        .sortBy(s => s.getPath.getName + (if (s.isDirectory) "/" else ""))
+        .iterator
+        .flatMap(s => if (s.isDirectory) first(s.getPath) else Some(s))
+        .nextOption()
+    if (!fs.exists(root) || !fs.getFileStatus(root).isDirectory) None
+    else if (fs.exists(new Path(root, "_spark_metadata"))) None
+    else first(root).map(GraftParquet.footerSchema(spark, _))
   }
 
   /** Publish one delta into the live index at `root`, exactly once per

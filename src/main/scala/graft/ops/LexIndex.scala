@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Persisted BM25 lexical index — the lexical twin of the persisted
@@ -34,9 +35,14 @@ import org.apache.spark.sql.functions._
   * 100 TB shape: the build is the postings hash-agg (map-side
   * combine) plus two cheap projections; a probe reads only the query
   * terms' partition directories (|terms| buckets of `buckets`), the
-  * per-term df comes from those postings, and the only joins are
-  * broadcast (df, stats) plus the doclen attach on doc id. Scoring
-  * arithmetic is bit-for-bit [[TextAnalysis.bm25Scores]]'s.
+  * per-term df is a window count over those postings, and the only
+  * joins are the broadcast stats row, the doclen attach on doc id and,
+  * once a delete has landed, the tombstone anti-join. Opening the
+  * index costs no Spark job ([[IndexLayout.SubDir.read]]), and the
+  * tombstone rows are scanned once for both the anti-join and the
+  * N/avgdl decrement: a live probe with tombstones present runs 9 jobs
+  * (LexIndexSpec pins it). Scoring arithmetic is bit-for-bit
+  * [[TextAnalysis.bm25Scores]]'s.
   */
 object LexIndex {
 
@@ -107,8 +113,8 @@ object LexIndex {
       positional: Boolean = false): Unit = {
     require(buckets >= 1, s"buckets=$buckets must be >= 1")
     import docs.sparkSession.implicits._
-    Seq((buckets, positional)).toDF("buckets", "positional")
-      .write.mode("overwrite").parquet(s"$path/meta")
+    IndexLayout.Meta.write(
+      Seq((buckets, positional)).toDF("buckets", "positional"), path)
     writeParts(docs, idCol, textCol, path, buckets, positional)(identity)
   }
 
@@ -134,8 +140,7 @@ object LexIndex {
     * construction.
     */
   private def readMeta(spark: SparkSession, path: String): (Int, Boolean) =
-    MetaCache.cached(spark, s"$path/meta") {
-      val meta = spark.read.parquet(s"$path/meta")
+    MetaCache.meta(spark, path) { meta =>
       val hasPos = meta.columns.contains("positional")
       if (hasPos) {
         val r = meta.select("buckets", "positional").head()
@@ -287,7 +292,7 @@ object LexIndex {
           s"bm25PurgeIndex(spark, \"$path\") before new deletes")
     }
     ids.select(col(idCol)).distinct()
-      .join(spark.read.parquet(s"$path/doclen"), Seq(idCol))
+      .join(Doclen.read(spark, path), Seq(idCol))
       .select(col(idCol), col("dl"))
       .write.mode("append").parquet(Tombstones.dir(path))
   }
@@ -299,9 +304,8 @@ object LexIndex {
     */
   private def tombstoneRows(
       spark: SparkSession, path: String, idCol: String): Option[DataFrame] =
-    if (!Tombstones.exists(spark, path)) None
-    else Some(spark.read.parquet(s"${Tombstones.dir(path)}/part-*")
-      .select(col(idCol), col("dl")).distinct())
+    Tombstones.rows(spark, path)
+      .map(_.select(col(idCol), col("dl")).distinct())
 
   /** One hex key per tombstone-set STATE (the sorted data-file names):
     * retries of a crashed purge see the same files, hence the same key
@@ -349,7 +353,7 @@ object LexIndex {
     val fs = statsDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val staged = fs.exists(new Path(stage, "_SUCCESS"))
     if (!(staged && !fs.exists(statsDir))) { // else: resume the swap
-      spark.read.parquet(s"$path/doclen")
+      Doclen.read(spark, path)
         .agg(count(lit(1)).as("n"),
           coalesce(sum(col("dl")), lit(0.0)).as("sum_dl"))
         .coalesce(1)
@@ -475,7 +479,11 @@ object LexIndex {
     // pinned against the Catalyst expression), costing zero Spark jobs
     val probeBuckets =
       queryTerms.distinct.map(termBucketLocal(_, buckets)).distinct
-    val doclen = spark.read.parquet(s"$path/doclen")
+    // live: the tombstone rows are read ONCE and the one distinct
+    // (id, dl) relation feeds both the slice anti-join and the N/avgdl
+    // decrement — the plan scans them once and reuses the exchange
+    val tombs =
+      if (rids.isEmpty) tombstoneRows(spark, path, idCol) else None
     val (lens, stats0) = rids match {
       case Some(r) =>
         // the purge guard rides the doclen cut (zero extra jobs — it
@@ -488,9 +496,9 @@ object LexIndex {
         (glens,
           glens.agg(count(lit(1)).cast("double").as("n_docs"),
             avg(col("dl")).as("avgdl")))
-      case None => (doclen, corpusStats(spark, path, idCol))
+      case None => (Doclen.read(spark, path), corpusStats(spark, path, tombs))
     }
-    val slice0 = spark.read.parquet(s"$path/postings")
+    val slice0 = Postings.read(spark, path)
       .filter(col("tb").isin(probeBuckets: _*)) // partition-pruned
       .filter(col("w").isin(queryTerms.distinct: _*))
       .select(col(idCol), col("w"), col("tf"))
@@ -501,10 +509,14 @@ object LexIndex {
     val tf = rids match {
       case Some(r) => slice0.join(r.select(col(idCol)), Seq(idCol),
         "left_semi")
-      case None => Tombstones.excludeFrom(slice0, path, idCol)
+      case None => tombs.fold(slice0)(t =>
+        slice0.join(t.select(col(idCol)), Seq(idCol), "left_anti"))
     }
-    val dfreq = tf.groupBy("w").agg(count(lit(1)).cast("double").as("df"))
-    tf.join(broadcast(dfreq), Seq("w"))
+    // df per term is a window count over the cut slice: one exchange
+    // by term and one pass over the slice (an aggregate joined back
+    // would scan it twice and add a broadcast stage)
+    tf.withColumn("df",
+        count(lit(1)).over(Window.partitionBy("w")).cast("double"))
       .join(lens, Seq(idCol))
       .crossJoin(broadcast(stats0))
       .select(col(idCol), okapiScore(col("tf"), col("df"), k1, b).as("term"))
@@ -562,7 +574,7 @@ object LexIndex {
       spark: SparkSession, path: String, idCol: String,
       idSet: DataFrame, op: String): Unit = {
     val purged = idSet
-      .join(spark.read.parquet(s"$path/doclen"), Seq(idCol), "left_anti")
+      .join(Doclen.read(spark, path), Seq(idCol), "left_anti")
       .limit(1).collect() // bounded: 0 or 1 row
     require(purged.isEmpty,
       s"$op: id ${purged.headOption.map(_.get(0)).getOrElse("?")} " +
@@ -580,7 +592,7 @@ object LexIndex {
   private def guardedSnapshotLens(
       spark: SparkSession, path: String, idCol: String,
       idSet: DataFrame, op: String): DataFrame =
-    idSet.join(spark.read.parquet(s"$path/doclen"), Seq(idCol), "left")
+    idSet.join(Doclen.read(spark, path), Seq(idCol), "left")
       .select(col(idCol),
         when(col("dl").isNull, raise_error(concat(
             lit(s"$op: id "), col(idCol).cast("string"),
@@ -595,38 +607,37 @@ object LexIndex {
     * tombstones exist, the CURRENT generation's published negative row
     * — the purge's publish→clear crash window — is EXCLUDED from
     * Σ(stats), so the live term and the physical row can never both
-    * count. dl values are integer-valued doubles: every path is exact,
-    * bit-identical to a rebuild without the ids. Shared by
-    * [[bm25ProbeIndex]] and [[bm25PhraseRank]].
+    * count. ONE aggregate over the stats rows ∪ one (−1, −dl) row per
+    * distinct tombstone row; dl values are integer-valued doubles, so
+    * every sum is exact in any order and the result is bit-identical to
+    * a rebuild without the ids. `tombs` is [[tombstoneRows]], which the
+    * caller may share with its slice anti-join. Shared by
+    * [[bm25ProbeIndex]], [[bm25PhraseRank]], [[bm25ProximityRank]] and
+    * the batch joins.
     */
   private def corpusStats(
-      spark: SparkSession, path: String, idCol: String): DataFrame =
-    tombstoneRows(spark, path, idCol) match {
+      spark: SparkSession, path: String, tombs: Option[DataFrame]): DataFrame = {
+    val rows = tombs match {
       case Some(t) =>
         import org.apache.hadoop.fs.Path
-        val statsDir = new Path(s"$path/stats")
+        val statsDir = new Path(Stats.dir(path))
         val fs = statsDir.getFileSystem(
           spark.sparkContext.hadoopConfiguration)
         val gen = tombstoneBatchKey(fs, path)
-        val files = fs.listStatus(statsDir).map(_.getPath)
-          .filter(p => p.getName.endsWith(".parquet") &&
-            !p.getName.startsWith(".") && !p.getName.startsWith("_") &&
-            p.getName != s"graft-neg-$gen.parquet")
-          .map(_.toString)
-        val statsBase = spark.read.parquet(files.toIndexedSeq: _*)
-          .agg(sum("n").as("n_l"), sum("sum_dl").as("sum_dl"))
-        val del = t.agg(count(lit(1)).as("d_n"),
-          coalesce(sum(col("dl")), lit(0.0)).as("d_dl"))
-        statsBase.crossJoin(del) // 1 × 1 rows
-          .select((col("n_l") - col("d_n")).cast("double").as("n_docs"),
-            ((col("sum_dl") - col("d_dl"))
-              / (col("n_l") - col("d_n")).cast("double")).as("avgdl"))
-      case None =>
-        spark.read.parquet(s"$path/stats")
-          .agg(sum("n").as("n_l"), sum("sum_dl").as("sum_dl"))
-          .select(col("n_l").cast("double").as("n_docs"),
-            (col("sum_dl") / col("n_l").cast("double")).as("avgdl"))
+        val files = fs.listStatus(statsDir).toSeq
+          .filter(st => st.isFile && {
+            val n = st.getPath.getName
+            n.endsWith(".parquet") && !n.startsWith(".") &&
+              !n.startsWith("_") && n != s"graft-neg-$gen.parquet"
+          })
+        IndexLayout.readFiles(spark, files).select("n", "sum_dl")
+          .unionByName(t.select(lit(-1L).as("n"), (-col("dl")).as("sum_dl")))
+      case None => Stats.read(spark, path)
     }
+    rows.agg(sum("n").as("n_l"), sum("sum_dl").as("sum_dl"))
+      .select(col("n_l").cast("double").as("n_docs"),
+        (col("sum_dl") / col("n_l").cast("double")).as("avgdl"))
+  }
 
   /** Candidate gather shared by the positional probes: for each doc
     * containing ALL of `terms`, a `w → ps` map of just those terms'
@@ -663,7 +674,7 @@ object LexIndex {
     val buckets = readBuckets(spark, path)
     val probeBuckets =
       terms.distinct.map(termBucketLocal(_, buckets)).distinct
-    val slice0 = spark.read.parquet(s"$path/postings")
+    val slice0 = Postings.read(spark, path)
       .filter(col("tb").isin(probeBuckets: _*)) // partition-pruned
       .filter(col("w").isin(terms.distinct: _*))
       .select(col(idCol), col("w"), col("ps"))
@@ -761,8 +772,8 @@ object LexIndex {
           glens.agg(count(lit(1)).cast("double").as("n_docs"),
             avg(col("dl")).as("avgdl")))
       case None =>
-        (spark.read.parquet(s"$path/doclen"),
-          corpusStats(spark, path, idCol))
+        (Doclen.read(spark, path),
+          corpusStats(spark, path, tombstoneRows(spark, path, idCol)))
     }
     val dfp = m.agg(count(lit(1)).cast("double").as("df_p"))
     val score = okapiScore(col("phrase_tf").cast("double"), col("df_p"),
@@ -869,8 +880,8 @@ object LexIndex {
           glens.agg(count(lit(1)).cast("double").as("n_docs"),
             avg(col("dl")).as("avgdl")))
       case None =>
-        (spark.read.parquet(s"$path/doclen"),
-          corpusStats(spark, path, idCol))
+        (Doclen.read(spark, path),
+          corpusStats(spark, path, tombstoneRows(spark, path, idCol)))
     }
     val dfp = m.agg(count(lit(1)).cast("double").as("df_p"))
     val ptf = lit(terms.size.toDouble) / col("span").cast("double")
@@ -937,7 +948,7 @@ object LexIndex {
       .withColumn("tb", termBucket(col("w"), buckets))
       .select("tb").distinct().collect().map(_.getInt(0)).toSeq
     val postings = Tombstones.excludeFrom(
-      spark.read.parquet(s"$path/postings")
+      Postings.read(spark, path)
         .filter(col("tb").isin(probeBuckets: _*)) // partition-pruned
         .select(col(idCol), col("w"), col("ps")),
       path, idCol)
@@ -959,12 +970,11 @@ object LexIndex {
   private def scoreAndRank(
       m: DataFrame, path: String, idCol: String, qidCol: String,
       carry: String, ptf: Column, k: Int, k1: Double, b: Double): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val spark = m.sparkSession
-    val lens = spark.read.parquet(s"$path/doclen")
+    val lens = Doclen.read(spark, path)
     val dfp = m.groupBy(col(qidCol))
       .agg(count(lit(1)).cast("double").as("df_p"))
-    val stats = corpusStats(spark, path, idCol)
+    val stats = corpusStats(spark, path, tombstoneRows(spark, path, idCol))
     val byScore = Window.partitionBy(qidCol)
       .orderBy(col("bm25").desc, col(idCol))
     m.join(lens, Seq(idCol))

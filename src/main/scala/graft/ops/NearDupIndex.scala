@@ -97,9 +97,9 @@ object NearDupIndex {
     require(nDocBuckets >= 1, s"nDocBuckets=$nDocBuckets must be >= 1")
     val m = Meta(shingleN, numHashes, bands, nBuckets, nDocBuckets)
     import df.sparkSession.implicits._
-    Seq((shingleN, numHashes, bands, nBuckets, nDocBuckets))
-      .toDF("shingleN", "numHashes", "bands", "nBuckets", "nDocBuckets")
-      .write.mode("overwrite").parquet(s"$path/meta")
+    IndexLayout.Meta.write(
+      Seq((shingleN, numHashes, bands, nBuckets, nDocBuckets)).toDF(
+        "shingleN", "numHashes", "bands", "nBuckets", "nDocBuckets"), path)
     // builds co-partition to the layout with a scale-adaptive salt
     // ([[DirLayout.toDirs]] — the HammingIndex build treatment):
     // parallel file creation, bounded files per directory
@@ -139,8 +139,8 @@ object NearDupIndex {
       DirLayout.appendToDirs(rows, dirs, sub.cols: _*))
 
   private def readMeta(spark: SparkSession, path: String): Meta =
-    MetaCache.cached(spark, s"$path/meta") {
-      val r = spark.read.parquet(s"$path/meta")
+    MetaCache.meta(spark, path) { meta =>
+      val r = meta
         .select("shingleN", "numHashes", "bands", "nBuckets", "nDocBuckets")
         .head()
       Meta(r.getInt(0), r.getInt(1), r.getInt(2), r.getInt(3), r.getInt(4))
@@ -283,7 +283,7 @@ object NearDupIndex {
         .reduce(_ || _)
     }
     val idx = Tombstones.excludeFrom(
-      spark.read.parquet(Buckets.dir(path)).filter(prune), // pruned at listing
+      Buckets.read(spark, path).filter(prune), // pruned at listing
       path, idCol)
     // Skew guard on the INDEX side, scan-path-identical: rank-prune to
     // maxBucket+1 rows per (band, bucket) — WindowGroupLimit bounds a
@@ -306,7 +306,7 @@ object NearDupIndex {
       .distinct() // each pair verified once, however many bands agree
     val docsRel = {
       val all = Tombstones.excludeFrom(
-        spark.read.parquet(Docs.dir(path)), path, idCol)
+        Docs.read(spark, path), path, idCol)
       if (!pruneDocLookup) all
       else {
         val dbs = candidates

@@ -245,8 +245,8 @@ object Pq {
     * a partitioned stage write ([[pqIvfWriteDelta]]) published by
     * [[IndexLayout.append]] — the existing index is never read. The
     * delta's `dv` is aligned to the index's recorded element type (same
-    * parquet single-type-per-relation constraint, same cached footer
-    * read as the exact path). The rest of the lifecycle — delete,
+    * parquet single-type-per-relation constraint, same driver-side
+    * footer read as the exact path). The rest of the lifecycle — delete,
     * purge, compaction — is the exact path's [[VectorOps.IvfLayout]]:
     * the two layouts are the same `cluster=` partitioning.
     */
@@ -313,7 +313,7 @@ object Pq {
       centroids, idCol, query, rows, nProbe)
 
   /** [[pqIvfShortlist]] over an ALREADY-OPENED index relation: a query
-    * workload opens `spark.read.parquet(path)` once and probes it many
+    * workload opens [[VectorOps.ivfOpenIndex]] once and probes it many
     * times, paying the partition-directory listing once instead of per
     * probe. At nClusters ~ N the listing is O(nClusters) driver work —
     * ScaleProbe `ivfpq_probe` measures cold (path API) 1603 ms vs warm

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -45,13 +45,18 @@ object Tombstones {
     */
   def dir(indexRoot: String): String = s"$indexRoot/_graft_tombstones"
 
-  def exists(spark: SparkSession, indexRoot: String): Boolean = {
+  /** The tombstone set's data files — empty when no delete ever landed. */
+  private def files(spark: SparkSession, indexRoot: String): Seq[FileStatus] = {
     val p = new Path(dir(indexRoot))
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p) && fs.listStatus(p).exists(s =>
+    if (!fs.exists(p)) Nil
+    else fs.listStatus(p).toSeq.filter(s =>
       s.isFile && !s.getPath.getName.startsWith("_") &&
         !s.getPath.getName.startsWith(".")) // local-FS .crc sidecars
   }
+
+  def exists(spark: SparkSession, indexRoot: String): Boolean =
+    files(spark, indexRoot).nonEmpty
 
   /** Append `ids` (deduplicated within the batch; duplicates vs prior
     * deletes are allowed and harmless) to the index's tombstone set.
@@ -60,19 +65,26 @@ object Tombstones {
     ids.select(col(idCol)).distinct()
       .write.mode("append").parquet(dir(indexRoot))
 
+  /** Every tombstone row as written (duplicates included), or None when
+    * no delete has ever landed. The listed data files are opened by
+    * path ([[IndexLayout.readFiles]]): no schema-inference job, and no
+    * warning — opening the underscore-prefixed directory itself logs
+    * Spark's "All paths were ignored", and a `part-*` glob its
+    * "Assume no metadata directory" stack trace.
+    */
+  private[ops] def rows(spark: SparkSession, indexRoot: String)
+      : Option[DataFrame] = {
+    val found = files(spark, indexRoot)
+    if (found.isEmpty) None else Some(IndexLayout.readFiles(spark, found))
+  }
+
   /** The current tombstoned-id set as a one-column distinct frame, or
     * None when no delete has ever landed (the common case — probes
     * then skip the anti-join entirely).
     */
   def ids(spark: SparkSession, indexRoot: String, idCol: String)
       : Option[DataFrame] =
-    if (!exists(spark, indexRoot)) None
-    // glob the data files rather than opening the underscore-prefixed
-    // dir itself: Spark reads the latter fine but logs an "All paths
-    // were ignored" warning per open (the name trips its hidden-path
-    // LOG filter); `exists` guarantees the glob is non-empty
-    else Some(spark.read.parquet(s"${dir(indexRoot)}/part-*")
-      .select(col(idCol)).distinct())
+    rows(spark, indexRoot).map(_.select(col(idCol)).distinct())
 
   /** Anti-join the tombstone set out of an index relation — identity
     * when no tombstones exist. `idCol` must be the index relation's id

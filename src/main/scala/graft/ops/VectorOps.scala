@@ -2052,13 +2052,6 @@ object VectorOps {
     */
   val IvfLayout: IndexLayout = IndexLayout("ivf", Seq(Clusters))
 
-  /** Per-path `dv` element type of persisted IVF indexes — fixed at
-    * creation, so [[writeClusterRows]] reads the parquet footer once per
-    * path per JVM instead of once per append batch.
-    */
-  private val ivfDvTypeCache = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.types.DataType]()
-
   /** Append a vector delta to a persisted IVF index: each new vector is
     * assigned to its nearest EXISTING centroid (map-only — the centroid
     * table rides the plan as literals) and published into the matching
@@ -2118,9 +2111,9 @@ object VectorOps {
     * see [[ivfWriteIndex]]), and parquet readers do not reconcile a
     * float file with a double file in one scan, so `dv` is cast to the
     * index's recorded type (a no-op column reference in the normal
-    * case). The recorded type is cached per path for the life of the
-    * JVM: the steady-append pattern pays the footer read once, not per
-    * batch, and the cache is trusted only while the index exists.
+    * case). The recorded type is one data file's footer, read on the
+    * driver ([[IndexLayout.dataSchema]] — no Spark job); an index with
+    * no data file yet takes the delta's type.
     *
     * The rows co-partition with the cluster layout before the
     * dynamic-partition write to `stageDir` — ≤ one file per touched
@@ -2133,17 +2126,8 @@ object VectorOps {
       indexPath: String,
       stageDir: String,
       nClusters: Int): Unit = {
-    val spark = rows.sparkSession
-    val p = new org.apache.hadoop.fs.Path(indexPath)
-    val indexElem =
-      if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-        Some(ivfDvTypeCache.computeIfAbsent(indexPath,
-          _ => spark.read.parquet(indexPath).schema("dv").dataType))
-      else {
-        // deleting and re-creating an index at the same path drops the entry
-        ivfDvTypeCache.remove(indexPath)
-        None
-      }
+    val indexElem = IndexLayout.dataSchema(rows.sparkSession,
+      Clusters.dir(indexPath)).map(_("dv").dataType)
     val aligned = indexElem match {
       case Some(t) if rows.schema("dv").dataType != t =>
         rows.withColumn("dv", col("dv").cast(t))
@@ -2151,23 +2135,19 @@ object VectorOps {
     }
     Clusters.write(
       DirLayout.appendToDirs(aligned, nClusters, Clusters.cols: _*), stageDir)
-    // the published index holds this dv type — later deltas in this
-    // JVM skip the footer read entirely
-    ivfDvTypeCache.put(indexPath,
-      indexElem.getOrElse(rows.schema("dv").dataType))
   }
 
   /** The index relation with tombstoned ids excluded — what every
     * probe should scan. Warm-workload callers (the
     * [[Pq.pqIvfShortlistFrom]] open-once pattern) open through this
-    * instead of `spark.read.parquet(path)` so deletes are visible to
-    * them too.
+    * instead of opening the index root themselves, so deletes are
+    * visible to them too.
     */
   def ivfOpenIndex(
       spark: org.apache.spark.sql.SparkSession,
       path: String,
       idCol: String): DataFrame =
-    Tombstones.excludeFrom(spark.read.parquet(path), path, idCol)
+    Tombstones.excludeFrom(Clusters.read(spark, path), path, idCol)
 
   /** Top-k cosine probe against a persisted [[ivfWriteIndex]] index:
     * reads ONLY the query's `nProbe` nearest cluster partitions
@@ -2190,7 +2170,7 @@ object VectorOps {
     // tombstone anti-join AFTER the cluster prune: the excluded set is
     // joined against the nProbe-partition slice, never the full index
     Tombstones.excludeFrom(
-      spark.read.parquet(path).filter(col("cluster").isin(probes: _*)),
+      Clusters.read(spark, path).filter(col("cluster").isin(probes: _*)),
       path, idCol)
       .select(col(idCol),
         round(dot(col("dv"), lit(query.toArray)) / (col("nrm") * lit(qNorm)), 6).as("cosine"))
@@ -2316,7 +2296,7 @@ object VectorOps {
       rids: Option[DataFrame]): DataFrame = {
     val probed = q.select("cluster").distinct()
       .collect().map(_.getInt(0)).toSeq
-    val slice0 = spark.read.parquet(path)
+    val slice0 = Clusters.read(spark, path)
       .filter(col("cluster").isin(probed: _*))
     rids match {
       case Some(r) => slice0.join(r.select(col(idCol)), Seq(idCol),

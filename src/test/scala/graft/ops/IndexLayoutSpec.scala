@@ -1,7 +1,10 @@
 package graft.ops
 
 import graft.{Tables, TestSpark}
+import scala.util.Try
+
 import org.apache.hadoop.fs.Path
+import org.apache.spark.JobCounter
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -117,5 +120,70 @@ class IndexLayoutSpec extends AnyFunSuite {
       assert(f.layout.affectedDirs(spark, root, "id", tombs).map(key).toSet
         === holding)
     }
+  }
+
+  /** `body`'s result and how many Spark jobs it ran. */
+  private def counted[A](body: => A): (A, Int) = {
+    val (a, jobs) = JobCounter(spark.sparkContext)(body)
+    (a, jobs.size)
+  }
+
+  families.foreach { f =>
+    test(s"${f.name}: SubDir.read opens every sub-directory with " +
+        "spark.read.parquet's schema and no Spark job") {
+      val root = tmp(s"read-${f.name}")
+      f.buildAndAppend(root)
+      f.delete(Seq(Victim).toDF("id"), root)
+      val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val subs = f.layout.subDirs ++
+        Seq(IndexLayout.Meta).filter(m => fs.exists(new Path(m.dir(root))))
+      for (s <- subs) {
+        val want = spark.read.parquet(s.dir(root)).schema
+        assert(s.partCols.forall(want.fieldNames.contains), s.dir(root))
+        val (got, jobs) = counted(s.read(spark, root).schema)
+        assert(jobs === 0, s.dir(root))
+        assert(got === want, s.dir(root))
+      }
+      // the tombstone set: explicit data files, same schema as the dir
+      val (got, jobs) = counted(Tombstones.rows(spark, root).get.schema)
+      assert(jobs === 0)
+      assert(got === spark.read.parquet(Tombstones.dir(root)).schema)
+      // the counter sees the inference job the reader avoids
+      assert(counted(
+        spark.read.parquet(f.layout.subDirs.head.dir(root)))._2 >= 1)
+    }
+  }
+
+  test("a bootstrapped empty index reads exactly as spark.read.parquet " +
+      "reads it, failures included") {
+    val empty = Seq.empty[(Long, String)].toDF("id", "text")
+    val emptyVecs = Seq.empty[(Long, Seq[Double])].toDF("id", "embedding")
+    val boots = Seq[(IndexLayout, String => Unit)](
+      LexIndex.Layout -> (root =>
+        LexIndex.bm25WriteIndex(empty, "id", "text", root, buckets = 4)),
+      NearDupIndex.Layout -> (root => NearDupIndex.neardupWriteIndex(
+        empty, "id", "text", root, nBuckets = 4, nDocBuckets = 4)),
+      HammingIndex.Layout -> (root => HammingIndex.hammingWriteIndex(
+        emptyVecs, "id", "embedding", root, nBands = 4, nBuckets = 4,
+        dim = 64)))
+    var failures = 0
+    for ((layout, boot) <- boots) {
+      val root = tmp(s"boot-${layout.name}")
+      boot(root)
+      for (s <- layout.subDirs :+ IndexLayout.Meta) {
+        val want = Try(spark.read.parquet(s.dir(root)).schema)
+        val got = Try(s.read(spark, root).schema)
+        assert(got.isSuccess === want.isSuccess, s.dir(root))
+        if (want.isSuccess) assert(got.get === want.get, s.dir(root))
+        else {
+          failures += 1
+          assert(got.failed.get.getClass === want.failed.get.getClass)
+          assert(got.failed.get.getMessage === want.failed.get.getMessage)
+        }
+      }
+    }
+    // the partitioned sub-directories hold no partition yet: those
+    // reads fail, as they always did
+    assert(failures > 0)
   }
 }

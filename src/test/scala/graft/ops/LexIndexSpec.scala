@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.{Tables, TestSpark}
+import org.apache.spark.JobCounter
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -194,5 +195,23 @@ class LexIndexSpec extends AnyFunSuite {
       val got = words.map(LexIndex.termBucketForTest(_, buckets))
       assert(got === expected, s"buckets=$buckets")
     }
+  }
+
+  test("a live probe with tombstones present runs a pinned number of jobs") {
+    val root = java.nio.file.Files.createTempDirectory("graft-lex-jobs").toString + "/idx"
+    LexIndex.bm25WriteIndex(docs, "doc_id", "text", root, buckets = 16)
+    LexIndex.bm25DeleteIds(docs.filter(col("doc_id") % 7 === 0), "doc_id", root)
+    // warm the meta/ read (a MetaCache miss is one more job, once)
+    LexIndex.bm25ProbeIndex(spark, root, "doc_id", terms).collect()
+    val (rows, jobs) = JobCounter(spark.sparkContext)(
+      LexIndex.bm25ProbeIndex(spark, root, "doc_id", terms).collect())
+    assert(rows.nonEmpty)
+    val sites = jobs.map(_.stageInfos.lastOption.map(_.name).getOrElse("?"))
+    // no schema-inference job (stage "parquet at <read site>"): the
+    // probe opens every relation with a driver-resolved schema
+    assert(!sites.exists(_.startsWith("parquet at")), sites.mkString("; "))
+    // the tombstone set is scanned once and feeds both the anti-join and
+    // the N/avgdl decrement; stats is one aggregate; df is a window
+    assert(jobs.size === 9, sites.mkString("; "))
   }
 }
