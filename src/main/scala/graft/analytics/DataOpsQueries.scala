@@ -4711,13 +4711,12 @@ object DataOpsQueries {
 
     // Takedown against the persisted BM25 index through the PHYSICAL
     // half of the lifecycle: build over the full corpus, delete 1/5 of
-    // the docs (negative stats row keeps N/avgdl exact), PURGE (the
-    // affected term buckets + doclen rewrite through the checked
-    // publish protocol, tombstones cleared), then probe. The oracle is
-    // q117's BM25 relation over a corpus that never contained the
-    // deleted docs — scores must match bit-for-bit, which holds
-    // because doclen sums are integer-valued doubles (Σall − Σdeleted
-    // is exact).
+    // the docs, PURGE (the affected term buckets + doclen rewrite
+    // through the checked publish protocol, tombstones cleared), then
+    // probe. The oracle is q117's BM25 relation over a corpus that
+    // never contained the deleted docs — scores must match
+    // bit-for-bit, which holds because N/avgdl aggregate the surviving
+    // doclen rows, whose dl are integer-valued doubles (exact sums).
     NamedQuery(
       "q194_bm25_delete",
       Some("""WITH t AS (SELECT doc_id, string_split(text, ' ') tok
@@ -4746,9 +4745,9 @@ object DataOpsQueries {
         val d = docs(s, dir)
         LexIndex.bm25WriteIndex(d, "doc_id", "text", root.toString,
           buckets = 32)
-        LexIndex.bm25DeleteIds(d.filter(col("doc_id") % 5 === 1),
+        LexIndex.Layout.delete(d.filter(col("doc_id") % 5 === 1),
           "doc_id", root.toString)
-        LexIndex.bm25PurgeIndex(s, root.toString, "doc_id")
+        LexIndex.Layout.purge(s, root.toString, "doc_id")
         LexIndex.bm25ProbeIndex(s, root.toString, "doc_id",
             Seq("vector", "join", "scan"))
           .orderBy(col("bm25").desc, col("doc_id")).limit(25)

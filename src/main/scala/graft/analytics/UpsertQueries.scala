@@ -272,7 +272,7 @@ object UpsertQueries {
         val d = docs(s, dir)
         LexIndex.bm25WriteIndex(d, "doc_id", "text", root.toString,
           buckets = 32, positional = true)
-        LexIndex.bm25DeleteIds(d.filter(col("doc_id") % 7 === 3),
+        LexIndex.Layout.delete(d.filter(col("doc_id") % 7 === 3),
           "doc_id", root.toString)
         def probe(phrase: Seq[String]): DataFrame =
           LexIndex.bm25PhraseProbe(s, root.toString, "doc_id", phrase)
@@ -338,7 +338,7 @@ object UpsertQueries {
         val d = docs(s, dir)
         LexIndex.bm25WriteIndex(d, "doc_id", "text", root.toString,
           buckets = 32, positional = true)
-        LexIndex.bm25DeleteIds(d.filter(col("doc_id") % 7 === 3),
+        LexIndex.Layout.delete(d.filter(col("doc_id") % 7 === 3),
           "doc_id", root.toString)
         def probe(terms: Seq[String], w: Int): DataFrame =
           LexIndex.bm25ProximityProbe(s, root.toString, "doc_id", terms, w)
@@ -378,7 +378,7 @@ object UpsertQueries {
         val d = docs(s, dir)
         LexIndex.bm25WriteIndex(d, "doc_id", "text", root.toString,
           buckets = 32, positional = true)
-        LexIndex.bm25DeleteIds(d.filter(col("doc_id") % 7 === 3),
+        LexIndex.Layout.delete(d.filter(col("doc_id") % 7 === 3),
           "doc_id", root.toString)
         LexIndex.bm25PhraseRank(s, root.toString, "doc_id",
             Seq("vector", "scan"))
@@ -425,7 +425,7 @@ object UpsertQueries {
         val d = docs(s, dir)
         LexIndex.bm25WriteIndex(d, "doc_id", "text", root.toString,
           buckets = 32, positional = true)
-        LexIndex.bm25DeleteIds(d.filter(col("doc_id") % 7 === 3),
+        LexIndex.Layout.delete(d.filter(col("doc_id") % 7 === 3),
           "doc_id", root.toString)
         LexIndex.bm25ProximityRank(s, root.toString, "doc_id",
             Seq("vector", "window"), window = 5)
@@ -485,7 +485,7 @@ object UpsertQueries {
         val d = docs(s, dir)
         LexIndex.bm25WriteIndex(d, "doc_id", "text", root.toString,
           buckets = 32, positional = true)
-        LexIndex.bm25DeleteIds(d.filter(col("doc_id") % 7 === 3),
+        LexIndex.Layout.delete(d.filter(col("doc_id") % 7 === 3),
           "doc_id", root.toString)
         val qs = Seq(
           (1, Seq("vector", "scan")),
@@ -582,7 +582,7 @@ object UpsertQueries {
         val d = docs(s, dir)
         LexIndex.bm25WriteIndex(d, "doc_id", "text", root.toString,
           buckets = 32, positional = true)
-        LexIndex.bm25DeleteIds(d.filter(col("doc_id") % 7 === 3),
+        LexIndex.Layout.delete(d.filter(col("doc_id") % 7 === 3),
           "doc_id", root.toString)
         val qs = Seq(
           (1, Seq("vector", "window")),

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 /** Shared small-file compaction for append-accumulating parquet
   * directories (the persisted-index maintenance primitive behind
-  * [[IndexLayout.compact]] and [[LexIndex.bm25CompactIndex]]):
+  * [[IndexLayout.compact]]):
   * fold any directory over `maxFilesPerDir` visible files into
   * ⌈bytes / targetBytes⌉ files, atomically enough for concurrent
   * READERS — originals are hidden by rename only after the compacted

@@ -63,7 +63,7 @@ import org.apache.spark.sql.functions._
   * duplicates by the [[Tombstones]] contract. This is strictly
   * stronger than a mode("append") retry, whose multi-job commit can
   * leave a torn batch no marker protocol can repair (BM25's append is
-  * THREE writes — postings, doclen, stats).
+  * two writes — postings and doclen).
   *
   * Crash-recovery order (documented contract): re-run the SAME
   * `applyBatch` call until it returns. Serialization: one apply at a
@@ -120,23 +120,16 @@ object CorpusUpsert {
   /** One coordinated index: its root, its [[IndexLayout]], and `stage`,
     * the family's delta writer (the same one its public append uses),
     * which writes the delta's rows (keyed by [[RidCol]]) under a
-    * staging root mirroring that layout. `delete` tombstones superseded
-    * rids (idempotent under re-runs by the [[Tombstones]] dedup
-    * contract); the quiesced-window `purge` (physical tombstone drop)
-    * and `compact` (append-litter fold) come from the layout. Only
-    * [[Bm25Target]] overrides them.
+    * staging root mirroring that layout. The tombstone delete of
+    * superseded rids (idempotent under re-runs by the [[Tombstones]]
+    * dedup contract), the quiesced-window purge and the compaction are
+    * the layout's own.
     */
   sealed trait IndexTarget {
     def name: String
     def path: String
     private[ops] def layout: IndexLayout
     private[ops] def stage(delta: DataFrame, stageDir: String): Unit
-    private[ops] def delete(rids: DataFrame): Unit =
-      layout.delete(rids, RidCol, path)
-    private[ops] def purge(spark: SparkSession): Map[String, (Int, Int)] =
-      layout.purge(spark, path, RidCol)
-    private[ops] def compact(spark: SparkSession): Map[String, (Int, Int)] =
-      layout.compact(spark, path)
   }
 
   final case class IvfTarget(
@@ -162,10 +155,6 @@ object CorpusUpsert {
         centroids)
   }
 
-  /** BM25 keeps its own delete (tombstones carry `dl`), purge (stages a
-    * negative stats row) and compaction (refused while tombstones pend)
-    * on top of [[LexIndex.Layout]].
-    */
   final case class Bm25Target(
       path: String,
       textCol: String,
@@ -173,14 +162,6 @@ object CorpusUpsert {
     private[ops] def layout = LexIndex.Layout
     private[ops] def stage(delta: DataFrame, stageDir: String): Unit =
       LexIndex.writeDelta(delta, RidCol, textCol, path, stageDir)
-    override private[ops] def delete(rids: DataFrame): Unit =
-      LexIndex.bm25DeleteIds(rids, RidCol, path)
-    override private[ops] def purge(spark: SparkSession)
-        : Map[String, (Int, Int)] =
-      LexIndex.bm25PurgeIndex(spark, path, RidCol)
-    override private[ops] def compact(spark: SparkSession)
-        : Map[String, (Int, Int)] =
-      LexIndex.bm25CompactIndex(spark, path)
   }
 
   final case class HammingTarget(
@@ -417,7 +398,8 @@ object CorpusUpsert {
           // an all-inserts batch (the bootstrap case) tombstones nothing;
           // skipping the write keeps the index tombstone-free, so probes
           // keep their fast no-tombstone path
-          afterPublish = () => if (nUpd > 0) t.delete(oldRids))(
+          afterPublish = () =>
+            if (nUpd > 0) t.layout.delete(oldRids, RidCol, t.path))(
           t.stage(withRid, _))
       }
       IndexLayout.touch(fs, doneMarker)
@@ -495,9 +477,8 @@ object CorpusUpsert {
     *
     *   1. per-target PURGE (concurrently across targets — each is its
     *      own layout): the physical drop of tombstoned rows, clearing
-    *      each index's tombstone set. FIRST because compaction refuses
-    *      while tombstones pend, and purging first avoids rewriting
-    *      the same bytes twice;
+    *      each index's tombstone set. FIRST because purging first
+    *      avoids rewriting the same bytes twice;
     *   2. per-target COMPACT (concurrently): fold append litter into
     *      bounded files — probe-score-identical by each layout's
     *      contract;
@@ -527,8 +508,8 @@ object CorpusUpsert {
     def eachTarget(pass: IndexTarget => Map[String, (Int, Int)]) =
       targets.map(_.name).zip(
         indexPool.mapAll(targets)(pass)).toMap
-    val purged = eachTarget(_.purge(spark))
-    val compacted = eachTarget(_.compact(spark))
+    val purged = eachTarget(t => t.layout.purge(spark, t.path, RidCol))
+    val compacted = eachTarget(t => t.layout.compact(spark, t.path))
     val vacuumed = vacuumBatches(spark, root, keepBatches)
     val fs = new Path(root).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
@@ -561,7 +542,7 @@ object CorpusUpsert {
       docIds.select(col(docCol).cast("long").as("doc")).distinct()
         .join(currentRevs(spark, root), Seq("doc"))
         .select(ridExpr(col("doc"), col("rev")).as(RidCol)))
-    indexPool.mapAll(targets)(_.delete(rids))
+    indexPool.mapAll(targets)(t => t.layout.delete(rids, RidCol, t.path))
   }
 
   /** The current `(doc, rev)` per document — max rev over every batch

@@ -28,9 +28,9 @@ import org.apache.spark.sql.types.StructType
   * Every read of a persisted index opens through the mirror,
   * [[IndexLayout.SubDir.read]], which resolves the schema on the driver
   * instead of scheduling Spark's schema-inference job.
-  * BM25 ([[LexIndex]]) reuses the listing and the affected-dir
-  * derivation but keeps its own delete/purge (its tombstones carry the
-  * document length, and its purge stages a negative stats row).
+  * All five families (exact IVF and IVF-PQ, BM25, Hamming, near-dup)
+  * run this lifecycle unmodified: no family keeps state a delete or a
+  * purge must adjust beside its rows.
   *
   * Delta rows enter a live index ONE way, [[IndexLayout.publish]]:
   * each family's delta writer stages the rows under a directory that
@@ -229,9 +229,9 @@ object IndexLayout {
     * was published — publishing requires it), and a half-published
     * stage finishes without duplicates, because each target name
     * derives from the staged file's own name and the moved files are
-    * gone from the stage. An additive row (BM25's `stats/`) therefore
-    * lands exactly once, which a direct `mode("append")` followed by a
-    * marker cannot promise.
+    * gone from the stage. A batch's rows therefore land exactly once,
+    * which a direct `mode("append")` followed by a marker cannot
+    * promise.
     */
   private[graft] def publish(
       spark: SparkSession,

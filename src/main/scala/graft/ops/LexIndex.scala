@@ -17,11 +17,10 @@ import org.apache.spark.sql.functions._
   *     reproduce the scan-path scores exactly.
   *   - `doclen/` — (<idCol>, dl), one row per document (every
   *     document, matching [[TextAnalysis.bm25Scores]]'s corpus-wide
-  *     N/avgdl).
-  *   - `stats/` — one (n, sum_dl) row PER WRITE: additive, so an
-  *     append is a pure append here too and the probe derives
-  *     N = Σn, avgdl = Σsum_dl / Σn from a table with one row per
-  *     batch ever written — never a corpus pass.
+  *     N/avgdl). It is also the ONE source of the corpus statistics:
+  *     N and avgdl are one aggregate over `doclen/` minus the
+  *     tombstone set, so there is no side copy to keep consistent
+  *     under deletes and purges.
   *   - `meta/` — (buckets): the term-bucket fanout, persisted so
   *     append/probe can never hash terms into a different layout than
   *     the index was written under.
@@ -30,33 +29,34 @@ import org.apache.spark.sql.functions._
   * ids are NEW — postings/doclen rows stay unique per (term, doc) and
   * (doc), so append ≡ from-scratch rebuild gives identical probe
   * scores (LexIndexSpec pins it, plus probe ≡ the scan-path
-  * bm25Scores on the same corpus).
+  * bm25Scores on the same corpus). Delete, purge and compaction are
+  * the shared [[IndexLayout]] lifecycle over [[Layout]].
   *
   * 100 TB shape: the build is the postings hash-agg (map-side
-  * combine) plus two cheap projections; a probe reads only the query
+  * combine) plus one cheap projection; a probe reads only the query
   * terms' partition directories (|terms| buckets of `buckets`), the
   * per-term df is a window count over those postings, and the only
-  * joins are the broadcast stats row, the doclen attach on doc id and,
-  * once a delete has landed, the tombstone anti-join. Opening the
-  * index costs no Spark job ([[IndexLayout.SubDir.read]]), and the
-  * tombstone rows are scanned once for both the anti-join and the
-  * N/avgdl decrement: a live probe with tombstones present runs 9 jobs
-  * (LexIndexSpec pins it). Scoring arithmetic is bit-for-bit
-  * [[TextAnalysis.bm25Scores]]'s.
+  * joins are the doclen attach on doc id, the broadcast one-row
+  * N/avgdl aggregate and, once a delete has landed, the tombstone
+  * anti-join. A live probe therefore reads all of `doclen/`, for
+  * both the dl attach and N/avgdl; computing the aggregate once per
+  * index generation and reusing it across probes is what would remove
+  * that full read. Opening the index costs no Spark job
+  * ([[IndexLayout.SubDir.read]]); a live probe with tombstones present
+  * runs 8 jobs (LexIndexSpec pins it). Scoring arithmetic is
+  * bit-for-bit [[TextAnalysis.bm25Scores]]'s.
   */
 object LexIndex {
 
   private val Postings = IndexLayout.SubDir("postings", Seq("tb"))
   private val Doclen = IndexLayout.SubDir("doclen")
-  private val Stats = IndexLayout.SubDir("stats", keyed = false)
 
-  /** `postings/` × tb, the flat keyed `doclen/` and the flat `stats/`
-    * (no id column): the listing [[bm25CompactIndex]] folds and the
-    * affected dirs [[bm25PurgeIndex]] rewrites. BM25 keeps its own
-    * delete and purge on top — its tombstones carry `dl`, and the purge
-    * stages a negative stats row.
+  /** `postings/` × tb and the flat keyed `doclen/`: the listing
+    * compaction folds and the affected dirs a purge rewrites. An index
+    * written before N/avgdl derived from `doclen/` may still hold a
+    * `stats/` directory; nothing reads it.
     */
-  val Layout: IndexLayout = IndexLayout("bm25", Seq(Postings, Doclen, Stats))
+  val Layout: IndexLayout = IndexLayout("bm25", Seq(Postings, Doclen))
 
   /** Stable term bucket: layout hash only — scores never depend on it. */
   private def termBucket(w: org.apache.spark.sql.Column, buckets: Int) =
@@ -120,7 +120,7 @@ object LexIndex {
 
   /** Append a delta of NEW documents (new ids — the ivfAppendIndex
     * contract): [[writeDelta]] staged and published into the live
-    * index by [[IndexLayout.append]], so all three sub-relations are
+    * index by [[IndexLayout.append]], so both sub-relations are
     * written before any of their files becomes visible. Exactly-once
     * across crashes needs a keyed publish — the stream sink
     * ([[graft.streaming.LexIndexStream]]) or [[CorpusUpsert]].
@@ -156,7 +156,7 @@ object LexIndex {
 
   /** The family's one delta writer, behind [[bm25AppendIndex]], the
     * streaming sink and [[CorpusUpsert.Bm25Target]]: the delta's
-    * postings/doclen/stats rows under the index at `indexPath`'s
+    * postings/doclen rows under the index at `indexPath`'s
     * persisted bucket fanout and positional flag (an appended batch can
     * never disagree with the layout it lands in), written to
     * `stagePath` in the index layout. The postings co-partition with
@@ -175,12 +175,11 @@ object LexIndex {
       DirLayout.appendToDirs(_, buckets, Postings.cols: _*))
   }
 
-  /** Write the postings/doclen/stats rows of `docs` under `path`; the
+  /** Write the postings/doclen rows of `docs` under `path`; the
     * postings rows pass through `layOut` before their aggregation. The
-    * three land in independent subtrees, so they are written
-    * concurrently (wall = max of the three, not the sum; the postings
-    * hash-agg dominates, so the doclen/stats passes ride inside its
-    * tail).
+    * two land in independent subtrees, so they are written
+    * concurrently (wall = max of the two, not the sum; the postings
+    * hash-agg dominates, so the doclen pass rides inside its tail).
     */
   private def writeParts(
       docs: DataFrame,
@@ -218,227 +217,7 @@ object LexIndex {
           path)
       },
       () => Doclen.write(
-        docs.select(col(idCol), size(toks).cast("double").as("dl")), path),
-      () => Stats.write(
-        docs.agg(count(lit(1)).as("n"),
-          sum(size(toks).cast("double")).as("sum_dl")), path)))
-  }
-
-  /** Fold append litter back into a bounded file layout — the
-    * [[IndexLayout.compact]] pass over [[Layout]]: every `postings/tb=`
-    * partition, plus the flat `doclen/` and `stats/` directories,
-    * holding more than `maxFilesPerDir` files is rewritten to
-    * ⌈bytes / targetBytes⌉ files (the hidden-rename publish protocol
-    * of [[Compaction.compactDirs]]).
-    * Rows — including the additive stats rows — are unchanged, so
-    * probe scores are identical before and after (LexIndexSpec pins
-    * it). Returns per-compacted-directory (files before, after).
-    */
-  def bm25CompactIndex(
-      spark: SparkSession,
-      path: String,
-      maxFilesPerDir: Int = 8,
-      targetBytes: Long = 128L << 20): Map[String, (Int, Int)] = {
-    // compacting stats/ would fold a generation-keyed graft-neg row
-    // into an anonymous part file, erasing the name probes use to
-    // exclude the current generation's published row while its
-    // tombstones still exist — run the purge to completion first
-    // (maintenance passes are serialized by contract anyway)
-    require(!Tombstones.exists(spark, path),
-      s"bm25CompactIndex: tombstones pending on $path — run " +
-        "bm25PurgeIndex to completion before compacting")
-    Layout.compact(spark, path, maxFilesPerDir, targetBytes)
-  }
-
-  /** Tombstone documents out of the index ([[Tombstones]] — the
-    * persisted-index delete lifecycle). ONE write — the tombstone
-    * append itself — so the delete is atomic by construction: there is
-    * no second artifact to fall out of sync with, a crash mid-append
-    * leaves a legal subset of the ids deleted, and a retry (or a
-    * redelivered streaming batch) merely appends duplicate rows, which
-    * every tombstone reader deduplicates.
-    *
-    * BM25's tombstone rows CARRY the document length: `(idCol, dl)`
-    * captured from `doclen/` at delete time. That makes the probe's
-    * N/avgdl decrement a function of the tombstone set ALONE — exact
-    * (`dl` are integer-valued doubles) and, crucially, independent of
-    * whether a purge has already physically dropped the doclen rows,
-    * so probes stay bit-identical to a rebuild-without-the-ids through
-    * EVERY purge-crash interleaving (an earlier design derived the
-    * decrement from tombstones ⋈ doclen, which went silently stale in
-    * the window between a purge's rewrite and its negative-row
-    * publish; the design before that wrote the negative row at delete
-    * time — two non-atomic writes that could double-decrement on
-    * retry). Ids not present in `doclen/` (never indexed, or already
-    * purged) contribute no tombstone row — there is nothing to exclude
-    * or account.
-    *
-    * One refusal: while a crashed purge sits in its published-but-not-
-    * cleared window (visible `graft-neg-<key>` row for the CURRENT
-    * tombstone generation), new deletes would change the generation
-    * under the published row and make its coverage unattributable —
-    * re-run [[bm25PurgeIndex]] (cheap: skips to the clear) first.
-    */
-  def bm25DeleteIds(ids: DataFrame, idCol: String, path: String): Unit = {
-    val spark = ids.sparkSession
-    if (Tombstones.exists(spark, path)) {
-      import org.apache.hadoop.fs.Path
-      val statsDir = new Path(s"$path/stats")
-      val fs = statsDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val key = tombstoneBatchKey(fs, path)
-      require(!fs.exists(new Path(statsDir, s"graft-neg-$key.parquet")),
-        s"bm25DeleteIds: a purge of the current tombstone generation " +
-          s"published its stats row but did not clear — re-run " +
-          s"bm25PurgeIndex(spark, \"$path\") before new deletes")
-    }
-    ids.select(col(idCol)).distinct()
-      .join(Doclen.read(spark, path), Seq(idCol))
-      .select(col(idCol), col("dl"))
-      .write.mode("append").parquet(Tombstones.dir(path))
-  }
-
-  /** The deduplicated `(id, dl)` tombstone rows, or None when no
-    * delete has landed. `dl` per id is stable (doclen rows are
-    * immutable between build/append and purge), so distinct rows ≡
-    * distinct ids.
-    */
-  private def tombstoneRows(
-      spark: SparkSession, path: String, idCol: String): Option[DataFrame] =
-    Tombstones.rows(spark, path)
-      .map(_.select(col(idCol), col("dl")).distinct())
-
-  /** One hex key per tombstone-set STATE (the sorted data-file names):
-    * retries of a crashed purge see the same files, hence the same key
-    * — the idempotence handle for the staged negative stats row.
-    */
-  private def tombstoneBatchKey(
-      fs: org.apache.hadoop.fs.FileSystem, path: String): String = {
-    import org.apache.hadoop.fs.Path
-    val names = fs.listStatus(new Path(Tombstones.dir(path)))
-      .filter(s => s.isFile && !s.getPath.getName.startsWith("_") &&
-        !s.getPath.getName.startsWith("."))
-      .map(_.getPath.getName).sorted
-    val md = java.security.MessageDigest.getInstance("MD5")
-    md.update(names.mkString("\n").getBytes("UTF-8"))
-    md.digest().map("%02x".format(_)).mkString.take(16)
-  }
-
-  /** Total stats repair: rebuild `stats/` as one row aggregated from
-    * the CURRENT `doclen/`. REFUSED while tombstones pend: the very
-    * state that suggests a repair (a crashed purge) is one where the
-    * crashed rewrite may already have dropped some tombstoned doclen
-    * rows — a rebuild from that doclen would exclude them while probes
-    * still subtract the full tombstone-carried decrement (and a later
-    * purge publishes the same negative row again), leaving N/avgdl
-    * permanently under-counted for the already-rewritten subset. The
-    * recovery order is therefore: run [[bm25PurgeIndex]] TO COMPLETION
-    * first — it is idempotent across mid-rewrite crashes, deletes
-    * superseded stage generations, and derives its negative row from
-    * the tombstone rows' carried `dl` (never from doclen), so it is a
-    * total repair by itself; rebuild after the clear if a physically
-    * fresh single-row `stats/` is wanted. Runs in the quiesced
-    * maintenance window; staged write-then-swap so a crash never
-    * leaves `stats/` empty (re-run completes the swap).
-    */
-  def bm25RebuildStats(spark: SparkSession, path: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    require(!Tombstones.exists(spark, path),
-      s"bm25RebuildStats: tombstones pending on $path — a crashed purge " +
-        "may already have dropped tombstoned doclen rows, so a rebuild " +
-        "from the current doclen would double-count their decrement; run " +
-        "bm25PurgeIndex to completion first (idempotent; handles " +
-        "mid-rewrite crashes and superseded generations), then rebuild")
-    val statsDir = new Path(s"$path/stats")
-    val stage = new Path(s"$path/.stats_rebuild")
-    val fs = statsDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staged = fs.exists(new Path(stage, "_SUCCESS"))
-    if (!(staged && !fs.exists(statsDir))) { // else: resume the swap
-      Doclen.read(spark, path)
-        .agg(count(lit(1)).as("n"),
-          coalesce(sum(col("dl")), lit(0.0)).as("sum_dl"))
-        .coalesce(1)
-        .write.mode("overwrite").parquet(stage.toString)
-      if (fs.exists(statsDir) && !fs.delete(statsDir, true))
-        throw new java.io.IOException(s"bm25RebuildStats: cannot drop $statsDir")
-    }
-    if (!fs.rename(stage, statsDir))
-      throw new java.io.IOException(
-        s"bm25RebuildStats: cannot publish $stage -> $statsDir")
-  }
-
-  /** Physically drop tombstoned documents' postings/doclen rows and
-    * clear the tombstone set — quiesced-window maintenance through the
-    * shared [[Compaction.rewriteDirs]] publish protocol; only the
-    * `tb=` buckets that actually hold a tombstoned doc's terms (plus
-    * `doclen/`) are rewritten. The probe's live N/avgdl decrement is a
-    * function of the tombstone rows alone (they carry `dl`), so the
-    * purge's job is to swap that live term for a physical NEGATIVE
-    * `stats/` row in a way no crash can double- or under-count:
-    *
-    *   1. stage `(−n, −Σdl)` over the DEDUPLICATED tombstone rows into
-    *      a dot-hidden dir `stats/.neg_stage_<key>` — the value is
-    *      reproducible at any time (tombstones are frozen until the
-    *      clear), so retries recompute or reuse it identically; stage
-    *      dirs from an older generation (a crash + newer deletes) are
-    *      simply deleted, their never-published value superseded;
-    *   2. rewrite the affected dirs (idempotent);
-    *   3. rename the staged part file to `stats/graft-neg-<key>.parquet`
-    *      (atomic; skipped if already published). While tombstones
-    *      still exist, probes EXCLUDE this generation's published row
-    *      — so the publish→clear window double-counts nothing;
-    *   4. clear the tombstones (the published row takes over).
-    *
-    * The one corner that needs cooperation: new deletes inside the
-    * publish→clear window would change the generation under the
-    * published row, so [[bm25DeleteIds]] refuses them until the purge
-    * is re-run (which skips straight to the clear).
-    */
-  def bm25PurgeIndex(
-      spark: SparkSession,
-      path: String,
-      idCol: String,
-      targetBytes: Long = 128L << 20): Map[String, (Int, Int)] = {
-    import org.apache.hadoop.fs.Path
-    val statsDir = new Path(s"$path/stats")
-    val fs = statsDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!Tombstones.exists(spark, path)) return Map.empty
-    val key = tombstoneBatchKey(fs, path)
-    val visible = new Path(statsDir, s"graft-neg-$key.parquet")
-    val stage = new Path(statsDir, s".neg_stage_$key")
-    fs.listStatus(statsDir).map(_.getPath)
-      .filter(p => p.getName.startsWith(".neg_stage_") &&
-        p.getName != s".neg_stage_$key")
-      .foreach(p => fs.delete(p, true)) // superseded, never published
-    Tombstones.purge(spark, path, idCol, Layout,
-      targetBytes = targetBytes, opName = "bm25PurgeIndex",
-      beforeRewrite = _ => {
-        val stageValid = fs.exists(new Path(stage, "_SUCCESS")) &&
-          fs.exists(stage) && fs.listStatus(stage).exists(
-            _.getPath.getName.startsWith("part-"))
-        if (!fs.exists(visible) && !stageValid) {
-          // from the tombstone rows' carried dl — NOT doclen, whose
-          // rows a crashed earlier attempt may already have dropped
-          tombstoneRows(spark, path, idCol).get
-            .agg((lit(0L) - count(lit(1))).as("n"),
-              (lit(0.0) - coalesce(sum(col("dl")), lit(0.0))).as("sum_dl"))
-            .coalesce(1)
-            .write.mode("overwrite").parquet(stage.toString)
-        }
-      },
-      beforeClear = () => {
-        if (!fs.exists(visible)) {
-          val part = fs.listStatus(stage).map(_.getPath)
-            .find(p => p.getName.startsWith("part-") &&
-              p.getName.endsWith(".parquet"))
-            .getOrElse(throw new java.io.IOException(
-              s"bm25PurgeIndex: staged negative stats row missing in $stage"))
-          if (!fs.rename(part, visible))
-            throw new java.io.IOException(
-              s"bm25PurgeIndex: cannot publish $part -> $visible")
-        }
-        fs.delete(stage, true)
-        ()
-      })
+        docs.select(col(idCol), size(toks).cast("double").as("dl")), path)))
   }
 
   /** BM25 scores for `queryTerms` over the persisted index — the
@@ -446,8 +225,8 @@ object LexIndex {
     * Okapi formula, same rounding), returning `(<idCol>, bm25)` for
     * every document matching ≥ 1 term. The postings scan prunes to
     * the query terms' `tb=` directories at file listing. Tombstoned
-    * documents ([[bm25DeleteIds]]) are excluded from the scanned slice
-    * and from the per-term document frequencies.
+    * documents (`Layout.delete`) are excluded from the scanned slice,
+    * the per-term document frequencies and N/avgdl.
     */
   def bm25ProbeIndex(
       spark: SparkSession,
@@ -479,25 +258,7 @@ object LexIndex {
     // pinned against the Catalyst expression), costing zero Spark jobs
     val probeBuckets =
       queryTerms.distinct.map(termBucketLocal(_, buckets)).distinct
-    // live: the tombstone rows are read ONCE and the one distinct
-    // (id, dl) relation feeds both the slice anti-join and the N/avgdl
-    // decrement — the plan scans them once and reuses the exchange
-    val tombs =
-      if (rids.isEmpty) tombstoneRows(spark, path, idCol) else None
-    val (lens, stats0) = rids match {
-      case Some(r) =>
-        // the purge guard rides the doclen cut (zero extra jobs — it
-        // was an eager anti-join collect per probe): a snapshot id
-        // with no doclen row raises from the projection, and the
-        // snapshot-stats aggregate below consumes EVERY lens row, so
-        // the guard cannot be pruned away by a selective consumer
-        val glens = guardedSnapshotLens(spark, path, idCol,
-          r.select(col(idCol)), "bm25ProbeRids")
-        (glens,
-          glens.agg(count(lit(1)).cast("double").as("n_docs"),
-            avg(col("dl")).as("avgdl")))
-      case None => (Doclen.read(spark, path), corpusStats(spark, path, tombs))
-    }
+    val (lens, stats) = corpus(spark, path, idCol, rids, "bm25ProbeRids")
     val slice0 = Postings.read(spark, path)
       .filter(col("tb").isin(probeBuckets: _*)) // partition-pruned
       .filter(col("w").isin(queryTerms.distinct: _*))
@@ -509,8 +270,7 @@ object LexIndex {
     val tf = rids match {
       case Some(r) => slice0.join(r.select(col(idCol)), Seq(idCol),
         "left_semi")
-      case None => tombs.fold(slice0)(t =>
-        slice0.join(t.select(col(idCol)), Seq(idCol), "left_anti"))
+      case None => Tombstones.excludeFrom(slice0, path, idCol)
     }
     // df per term is a window count over the cut slice: one exchange
     // by term and one pass over the slice (an aggregate joined back
@@ -518,7 +278,7 @@ object LexIndex {
     tf.withColumn("df",
         count(lit(1)).over(Window.partitionBy("w")).cast("double"))
       .join(lens, Seq(idCol))
-      .crossJoin(broadcast(stats0))
+      .crossJoin(broadcast(stats))
       .select(col(idCol), okapiScore(col("tf"), col("df"), k1, b).as("term"))
       .groupBy(col(idCol))
       .agg(round(sum("term"), 6).as("bm25"))
@@ -601,42 +361,29 @@ object LexIndex {
               " CorpusUpsert.revsAsOf)"))))
           .otherwise(col("dl")).as("dl"))
 
-  /** One (n_docs, avgdl) row — Σ(stats rows) minus the live tombstone
-    * decrement (the tombstone rows carry dl, so the decrement is
-    * takedown-sized and independent of purge progress). While
-    * tombstones exist, the CURRENT generation's published negative row
-    * — the purge's publish→clear crash window — is EXCLUDED from
-    * Σ(stats), so the live term and the physical row can never both
-    * count. ONE aggregate over the stats rows ∪ one (−1, −dl) row per
-    * distinct tombstone row; dl values are integer-valued doubles, so
-    * every sum is exact in any order and the result is bit-identical to
-    * a rebuild without the ids. `tombs` is [[tombstoneRows]], which the
-    * caller may share with its slice anti-join. Shared by
-    * [[bm25ProbeIndex]], [[bm25PhraseRank]], [[bm25ProximityRank]] and
-    * the batch joins.
+  /** The corpus a score reads `dl` and N/avgdl from, as `(lens,
+    * stats)`: `lens` is `(idCol, dl)` per corpus document and `stats`
+    * its one `(n_docs, avgdl)` row. Live (`rids` None): `doclen/` minus
+    * the tombstone set — exact through every purge interleaving, since
+    * a purge drops from `doclen/` only ids the tombstones already
+    * exclude. Snapshot: [[guardedSnapshotLens]], whose purge guard
+    * fires in the stats aggregate (it consumes every lens row, so a
+    * selective consumer cannot prune the guard away). dl values are
+    * integer-valued doubles, so the sum under avg is exact in any
+    * order and N/avgdl is bit-identical to a rebuild without the ids.
+    * Shared by [[bm25Probe]], the rank entries and the batch joins.
     */
-  private def corpusStats(
-      spark: SparkSession, path: String, tombs: Option[DataFrame]): DataFrame = {
-    val rows = tombs match {
-      case Some(t) =>
-        import org.apache.hadoop.fs.Path
-        val statsDir = new Path(Stats.dir(path))
-        val fs = statsDir.getFileSystem(
-          spark.sparkContext.hadoopConfiguration)
-        val gen = tombstoneBatchKey(fs, path)
-        val files = fs.listStatus(statsDir).toSeq
-          .filter(st => st.isFile && {
-            val n = st.getPath.getName
-            n.endsWith(".parquet") && !n.startsWith(".") &&
-              !n.startsWith("_") && n != s"graft-neg-$gen.parquet"
-          })
-        IndexLayout.readFiles(spark, files).select("n", "sum_dl")
-          .unionByName(t.select(lit(-1L).as("n"), (-col("dl")).as("sum_dl")))
-      case None => Stats.read(spark, path)
+  private def corpus(
+      spark: SparkSession, path: String, idCol: String,
+      rids: Option[DataFrame], op: String): (DataFrame, DataFrame) = {
+    val lens = rids match {
+      case Some(r) =>
+        guardedSnapshotLens(spark, path, idCol, r.select(col(idCol)), op)
+      case None =>
+        Tombstones.excludeFrom(Doclen.read(spark, path), path, idCol)
     }
-    rows.agg(sum("n").as("n_l"), sum("sum_dl").as("sum_dl"))
-      .select(col("n_l").cast("double").as("n_docs"),
-        (col("sum_dl") / col("n_l").cast("double")).as("avgdl"))
+    (lens, lens.agg(count(lit(1)).cast("double").as("n_docs"),
+      avg(col("dl")).as("avgdl")))
   }
 
   /** Candidate gather shared by the positional probes: for each doc
@@ -764,17 +511,8 @@ object LexIndex {
     // full-doclen join, the stats aggregate consumes every lens row
     // (the purge guard fires there), and the eager per-probe guard
     // collect is gone
-    val (lens, stats) = rids match {
-      case Some(r) =>
-        val glens = guardedSnapshotLens(spark, path, idCol,
-          r.select(col(idCol)), "positional probe (rids)")
-        (glens,
-          glens.agg(count(lit(1)).cast("double").as("n_docs"),
-            avg(col("dl")).as("avgdl")))
-      case None =>
-        (Doclen.read(spark, path),
-          corpusStats(spark, path, tombstoneRows(spark, path, idCol)))
-    }
+    val (lens, stats) =
+      corpus(spark, path, idCol, rids, "positional probe (rids)")
     val dfp = m.agg(count(lit(1)).cast("double").as("df_p"))
     val score = okapiScore(col("phrase_tf").cast("double"), col("df_p"),
       k1, b)
@@ -872,17 +610,8 @@ object LexIndex {
       guardRids = false)
     // snapshot lens/stats carry the fused purge guard — see
     // [[bm25PhraseRank]]
-    val (lens, stats) = rids match {
-      case Some(r) =>
-        val glens = guardedSnapshotLens(spark, path, idCol,
-          r.select(col(idCol)), "positional probe (rids)")
-        (glens,
-          glens.agg(count(lit(1)).cast("double").as("n_docs"),
-            avg(col("dl")).as("avgdl")))
-      case None =>
-        (Doclen.read(spark, path),
-          corpusStats(spark, path, tombstoneRows(spark, path, idCol)))
-    }
+    val (lens, stats) =
+      corpus(spark, path, idCol, rids, "positional probe (rids)")
     val dfp = m.agg(count(lit(1)).cast("double").as("df_p"))
     val ptf = lit(terms.size.toDouble) / col("span").cast("double")
     val score = okapiScore(ptf, col("df_p"), k1, b)
@@ -971,10 +700,9 @@ object LexIndex {
       m: DataFrame, path: String, idCol: String, qidCol: String,
       carry: String, ptf: Column, k: Int, k1: Double, b: Double): DataFrame = {
     val spark = m.sparkSession
-    val lens = Doclen.read(spark, path)
+    val (lens, stats) = corpus(spark, path, idCol, None, "")
     val dfp = m.groupBy(col(qidCol))
       .agg(count(lit(1)).cast("double").as("df_p"))
-    val stats = corpusStats(spark, path, tombstoneRows(spark, path, idCol))
     val byScore = Window.partitionBy(qidCol)
       .orderBy(col("bm25").desc, col(idCol))
     m.join(lens, Seq(idCol))

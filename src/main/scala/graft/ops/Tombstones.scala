@@ -30,13 +30,17 @@ import org.apache.spark.sql.functions._
   *     ([[Compaction.rewriteDirs]]); the tombstone set is cleared only
   *     after every one published, so a crash anywhere leaves probes
   *     correct (anti-join still live) and the purge re-runnable
-  *     (already-purged dirs no longer match the semi-join).
+  *     (already-purged dirs no longer match the semi-join). No family
+  *     keeps derived state beside its rows — BM25's N/avgdl is an
+  *     aggregate over `doclen/` minus the tombstone set — so a purge
+  *     that stops at any step changes no probe result.
   *
   * Duplicate tombstone rows are legal (re-deleting an id appends
-  * again); every reader goes through [[ids]]' distinct. The sketch
-  * tables ([[Sketches]]) are deliberately NOT in this family — see
-  * the note there: HLL/CMS states are not subtractive, so their
-  * delete path is rebuild-from-slices.
+  * again); every reader goes through [[ids]]' distinct, whose id
+  * projection also reads the `(id, dl)` rows older BM25 indexes
+  * wrote. The sketch tables ([[Sketches]]) are deliberately NOT in
+  * this family — see the note there: HLL/CMS states are not
+  * subtractive, so their delete path is rebuild-from-slices.
   */
 object Tombstones {
 
@@ -121,9 +125,7 @@ object Tombstones {
       idCol: String,
       layout: IndexLayout,
       targetBytes: Long,
-      opName: String,
-      beforeRewrite: DataFrame => Unit = _ => (),
-      beforeClear: () => Unit = () => ()): Map[String, (Int, Int)] = Ckpt.scope {
+      opName: String): Map[String, (Int, Int)] = Ckpt.scope {
     ids(spark, indexRoot, idCol) match {
       case None => Map.empty
       case Some(tombs0) =>
@@ -134,17 +136,11 @@ object Tombstones {
         // the distinct — takedown-sized work, but multiplied by up to
         // hundreds of dirs it dominated the round-17 purge probe
         val tombs = Ckpt.checkpoint(tombs0)
-        // layout hooks around the rewrite, for layouts that must stage
-        // derived state off the PRE-rewrite data (LexIndex stages the
-        // negative stats row here) and publish it before the tombstone
-        // clear — both run inside the same crash-idempotent protocol
-        beforeRewrite(tombs)
         val affected = layout.affectedDirs(spark, indexRoot, idCol, tombs)
         val report = Compaction.rewriteDirs(spark, affected, targetBytes,
           opName,
           shouldRewrite = (_, _) => true,
           transform = df => df.join(tombs, Seq(idCol), "left_anti"))
-        beforeClear()
         clear(spark, indexRoot)
         report
     }

@@ -1,6 +1,5 @@
 package graft.pipeline
 
-import graft.ops.Ckpt
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -33,34 +32,35 @@ object EtlJob {
       spark: SparkSession,
       rawDir: String,
       enrichedDir: String,
-      day: java.time.LocalDate): (Long, Long) = Ckpt.scope {
+      day: java.time.LocalDate): (Long, Long) = {
     // Partition-pruned read: only this day's directory is listed/scanned,
     // the Spark analog of the reference's S3 Prefix= (ipynb:572).
     val dayDir = s"$rawDir/context_date=$day"
-    // cached: the rejects count and the enriched write otherwise each
-    // pay a full scan + JSON parse of the day
-    val raw = Ckpt.cache(spark.read
+    val raw = spark.read
       .schema(TelegramSchema.updateSchema)
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", TelegramSchema.CorruptCol)
-      .json(dayDir))
-    val enriched = transform(raw, day)
-    val nRejects = Flatten.rejects(raw).count()
-    val out = enriched.coalesce(1)
-    // Row count rides the write itself as an observed metric — at scale
-    // a re-read of the partition just to count what was written is a
-    // second full scan of the day.
-    val obs = org.apache.spark.sql.Observation(s"etl_$day")
+      .json(dayDir)
+    // Both counts ride the one write as observed metrics, so the day is
+    // scanned and parsed once: rejects are counted on the raw scan,
+    // below Flatten's filter; rows on what is written. A re-read of
+    // the partition (or a separate rejects job) is a second full scan
+    // of the day at scale.
+    val rejectsObs = org.apache.spark.sql.Observation(s"etl_rejects_$day")
+    val scanned = raw.observe(rejectsObs,
+      count_if(!Flatten.isFlattenable(raw)).as("n_rejects"))
+    val out = transform(scanned, day).coalesce(1)
+    val rowsObs = org.apache.spark.sql.Observation(s"etl_$day")
     // Idempotent per-day write: dynamic partition overwrite replaces ONLY
     // this day's partition, so a retried/backfilled run never duplicates
     // rows (plain Append would double the day on every re-run).
-    out.observe(obs, count(lit(1)).as("n_rows")).write
+    out.observe(rowsObs, count(lit(1)).as("n_rows")).write
       .mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("context_date")
       .parquet(enrichedDir)
-    val n = obs.get("n_rows").asInstanceOf[Long]
-    (n, nRejects)
+    (rowsObs.get("n_rows").asInstanceOf[Long],
+      rejectsObs.get("n_rejects").asInstanceOf[Long])
   }
 
   /** Register the enriched zone as the `telegram` table (the Athena

@@ -7,17 +7,18 @@ import org.apache.spark.sql.streaming.DataStreamWriter
 /** Streaming maintenance of the persisted BM25 lexical index
   * ([[graft.ops.LexIndex]]) — the lexical twin of
   * [[VectorIndexStream]]: each micro-batch of new documents appends
-  * its postings/doclen/stats under the index's persisted bucket
-  * fanout through the SAME staged publish, with the per-stream batch
-  * ledger (`_graft_batches/<streamId>/<id>`) as its done marker
+  * its postings/doclen under the index's persisted bucket fanout
+  * through the SAME staged publish, with the per-stream batch ledger
+  * (`_graft_batches/<streamId>/<id>`) as its done marker
   * ([[VectorIndexStream.publishBatch]]), so neither foreachBatch's
   * at-least-once redelivery nor a crash before the ledger entry lands
-  * can count a batch's additive `stats/` row twice.
-  * The index stays append-pure: stats are additive rows, postings
-  * and doclen are new-id appends (the ivfAppendIndex contract), so a
-  * stream-built index is row-identical to a batch build over the
-  * same documents — LexIndexSpec pins stream ≡ batch probe scores
-  * and redelivery idempotence.
+  * can count a batch's documents twice.
+  * The index stays append-pure: postings and doclen are new-id
+  * appends (the ivfAppendIndex contract), so a stream-built index is
+  * row-identical to a batch build over the same documents —
+  * LexIndexSpec pins stream ≡ batch probe scores and redelivery
+  * idempotence. Takedown streams use the layout-blind
+  * [[VectorIndexStream.deleteSink]].
   */
 object LexIndexStream {
 
@@ -33,40 +34,6 @@ object LexIndexStream {
       streamId: String = ""): Boolean =
     VectorIndexStream.publishBatch(batch, batchId, path, streamId)(
       LexIndex.writeDelta(batch, idCol, textCol, path, _))
-
-  /** Apply one micro-batch of takedown ids
-    * ([[graft.ops.LexIndex.bm25DeleteIds]]) behind the batch ledger —
-    * the streaming half of the delete lifecycle. The delete is a
-    * single tombstone append (idempotent under redelivery by itself —
-    * duplicate ids are legal); the ledger still short-circuits a
-    * redelivered batch to O(1) and keeps the tombstone dir free of
-    * duplicate batch files. Ledger namespace is kept apart from append
-    * streams' so a delete stream and an append stream over the same
-    * index can share batch ids.
-    */
-  def deleteBatch(
-      batch: DataFrame,
-      batchId: Long,
-      idCol: String,
-      path: String,
-      streamId: String = ""): Boolean =
-    VectorIndexStream.ledgered(batch, batchId, path,
-      VectorIndexStream.deleteLedgerId(streamId)) {
-      LexIndex.bm25DeleteIds(batch, idCol, path)
-    }
-
-  /** The delete-stream writer: micro-batches of (idCol) takedown
-    * requests; attach a checkpoint + trigger and `.start()`.
-    */
-  def deleteSink(
-      stream: DataFrame,
-      idCol: String,
-      path: String): DataStreamWriter[Row] =
-    stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      deleteBatch(batch, batchId, idCol, path,
-        VectorIndexStream.runningQueryId(batch))
-      ()
-    }
 
   /** The stream writer: attach a checkpoint + trigger and `.start()`.
     * The index root must already exist (bm25WriteIndex, possibly over

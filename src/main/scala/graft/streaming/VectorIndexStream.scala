@@ -175,10 +175,8 @@ object VectorIndexStream {
 
   /** Apply one micro-batch of takedown ids behind the batch ledger —
     * the streaming half of the [[graft.ops.Tombstones]] delete
-    * lifecycle, shared by every tombstone-only layout (exact IVF,
-    * IVF-PQ, Hamming — a delete is layout-blind: it only appends ids
-    * under the root). BM25 has its own ([[LexIndexStream.deleteBatch]])
-    * because its delete also writes the negative stats row.
+    * lifecycle, shared by every index family (a delete is
+    * layout-blind: it only appends ids under the root).
     */
   def deleteBatch(
       batch: DataFrame,
@@ -191,8 +189,8 @@ object VectorIndexStream {
     }
 
   /** The delete-stream writer: micro-batches of (idCol) takedown
-    * requests against an exact-IVF, IVF-PQ, or Hamming index root;
-    * attach a checkpoint + trigger and `.start()`.
+    * requests against any persisted index root; attach a checkpoint +
+    * trigger and `.start()`.
     */
   def deleteSink(
       stream: DataFrame,

@@ -89,11 +89,11 @@ object OptProbe {
         LexIndex.bm25WriteIndex(d, "doc_id", "text", root, buckets = 32)
       }
       t("bm25 delete 1/5") {
-        LexIndex.bm25DeleteIds(d.filter(col("doc_id") % 5 === 1),
+        LexIndex.Layout.delete(d.filter(col("doc_id") % 5 === 1),
           "doc_id", root)
       }
       jobs(spark, "bm25Purge") {
-        LexIndex.bm25PurgeIndex(spark, root, "doc_id")
+        LexIndex.Layout.purge(spark, root, "doc_id")
       }
       t("bm25 probe 3 terms") {
         LexIndex.bm25ProbeIndex(spark, root, "doc_id",
@@ -109,7 +109,7 @@ object OptProbe {
           positional = true)
       }
       t("bm25 delete 1/7 (pos)") {
-        LexIndex.bm25DeleteIds(d.filter(col("doc_id") % 7 === 3),
+        LexIndex.Layout.delete(d.filter(col("doc_id") % 7 === 3),
           "doc_id", rootP)
       }
       t("phrase probe") {

@@ -361,8 +361,8 @@ object ScaleProbe {
         // against the pruned band slice; candidates carry q141's MIH
         // bucket-collision term (the solver prices/refuses it — see
         // hamming_solver below). q194 is q117's build + bucket-pruned
-        // probe with a delete (doclen semi-join for the negative stats
-        // row, O(|ids|) append) and a PURGE in the middle — the purge
+        // probe with a delete (an O(|ids|) tombstone append) and a
+        // PURGE in the middle — the purge
         // rewrites only tb= buckets holding a deleted doc's terms
         // (at this corpus that is most buckets — an honest worst case:
         // 1/5 of docs deleted touches nearly every term bucket; the

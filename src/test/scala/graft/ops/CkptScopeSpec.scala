@@ -69,11 +69,11 @@ class CkptScopeSpec extends AnyFunSuite {
         NearDupIndex.Layout.delete(docs.filter($"doc_id" % 5 === 0), "doc_id", root)
         () => NearDupIndex.Layout.purge(spark, root, "doc_id")
       },
-      "LexIndex.bm25PurgeIndex" -> { () =>
+      "LexIndex.Layout.purge" -> { () =>
         val root = tmp("bm25")
         LexIndex.bm25WriteIndex(docs, "doc_id", "text", root, buckets = 8)
-        LexIndex.bm25DeleteIds(docs.filter($"doc_id" % 5 === 0), "doc_id", root)
-        () => LexIndex.bm25PurgeIndex(spark, root, "doc_id")
+        LexIndex.Layout.delete(docs.filter($"doc_id" % 5 === 0), "doc_id", root)
+        () => LexIndex.Layout.purge(spark, root, "doc_id")
       },
       "EtlJob.run" -> { () =>
         val raw = tmp("raw")

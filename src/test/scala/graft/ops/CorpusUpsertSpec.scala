@@ -663,7 +663,7 @@ class CorpusUpsertSpec extends AnyFunSuite {
     CorpusUpsert.applyBatch(corpus0, "doc_id", "base", r.ups, r.targets)
     CorpusUpsert.applyBatch(revised, "doc_id", "rev1", r.ups, r.targets)
     val before = probeAll(r)
-    assert(LexIndex.bm25PurgeIndex(spark, r.bm25, Rid).nonEmpty)
+    assert(LexIndex.Layout.purge(spark, r.bm25, Rid).nonEmpty)
     assert(VectorOps.IvfLayout.purge(spark, r.ivf, Rid).nonEmpty)
     assert(VectorOps.IvfLayout.purge(spark, r.pq, Rid).nonEmpty)
     assert(HammingIndex.Layout.purge(spark, r.ham, Rid).nonEmpty)

@@ -75,7 +75,7 @@ class IndexLayoutSpec extends AnyFunSuite {
     Family("bm25", LexIndex.Layout, root => {
       LexIndex.bm25WriteIndex(base(docs), "id", "text", root, buckets = 8)
       LexIndex.bm25AppendIndex(delta(docs), "id", "text", root)
-    }, (ids, root) => LexIndex.bm25DeleteIds(ids, "id", root), None))
+    }, (ids, root) => LexIndex.Layout.delete(ids, "id", root), None))
 
   private def key(p: Path): String = p.toUri.getPath.stripSuffix("/")
 

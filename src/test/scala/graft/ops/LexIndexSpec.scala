@@ -81,17 +81,16 @@ class LexIndexSpec extends AnyFunSuite {
       else d.listFiles.count(f => f.isFile && !f.getName.startsWith(".")
         && !f.getName.startsWith("_"))
     }
-    val statsBefore = fileCount(s"$root/stats")
-    assert(statsBefore > 8, s"fixture should litter stats ($statsBefore files)")
-    val folded = LexIndex.bm25CompactIndex(spark, root, maxFilesPerDir = 2,
+    val doclenBefore = fileCount(s"$root/doclen")
+    assert(doclenBefore > 8, s"fixture should litter doclen ($doclenBefore files)")
+    val folded = LexIndex.Layout.compact(spark, root, maxFilesPerDir = 2,
       targetBytes = 1L << 30)
     assert(folded.nonEmpty, "compaction found nothing to fold")
-    assert(fileCount(s"$root/stats") <= 2)
     assert(fileCount(s"$root/doclen") <= 2)
     for (tb <- new java.io.File(s"$root/postings").listFiles
         if tb.isDirectory && tb.getName.startsWith("tb="))
       assert(fileCount(tb.toString) <= 2, s"${tb.getName} not folded")
-    // rows (including the additive stats rows) unchanged → scores identical
+    // rows unchanged → scores identical
     assert(scores(LexIndex.bm25ProbeIndex(spark, root, "doc_id", terms)) === before)
   }
 
@@ -200,7 +199,7 @@ class LexIndexSpec extends AnyFunSuite {
   test("a live probe with tombstones present runs a pinned number of jobs") {
     val root = java.nio.file.Files.createTempDirectory("graft-lex-jobs").toString + "/idx"
     LexIndex.bm25WriteIndex(docs, "doc_id", "text", root, buckets = 16)
-    LexIndex.bm25DeleteIds(docs.filter(col("doc_id") % 7 === 0), "doc_id", root)
+    LexIndex.Layout.delete(docs.filter(col("doc_id") % 7 === 0), "doc_id", root)
     // warm the meta/ read (a MetaCache miss is one more job, once)
     LexIndex.bm25ProbeIndex(spark, root, "doc_id", terms).collect()
     val (rows, jobs) = JobCounter(spark.sparkContext)(
@@ -210,8 +209,8 @@ class LexIndexSpec extends AnyFunSuite {
     // no schema-inference job (stage "parquet at <read site>"): the
     // probe opens every relation with a driver-resolved schema
     assert(!sites.exists(_.startsWith("parquet at")), sites.mkString("; "))
-    // the tombstone set is scanned once and feeds both the anti-join and
-    // the N/avgdl decrement; stats is one aggregate; df is a window
-    assert(jobs.size === 9, sites.mkString("; "))
+    // N/avgdl is one aggregate over doclen minus the tombstone set;
+    // df is a window
+    assert(jobs.size === 8, sites.mkString("; "))
   }
 }

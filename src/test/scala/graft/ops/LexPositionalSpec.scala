@@ -153,11 +153,11 @@ class LexPositionalSpec extends AnyFunSuite {
     val (a, b) = (tmp("delA"), tmp("delB"))
     LexIndex.bm25WriteIndex(docs, "doc_id", "text", a, buckets = 8,
       positional = true)
-    LexIndex.bm25DeleteIds(docs.filter($"doc_id" % 7 === 3), "doc_id", a)
+    LexIndex.Layout.delete(docs.filter($"doc_id" % 7 === 3), "doc_id", a)
     LexIndex.bm25WriteIndex(docs.filter($"doc_id" % 7 =!= 3), "doc_id",
       "text", b, buckets = 8, positional = true)
     assert(phrase(a, "vector", "scan") === phrase(b, "vector", "scan"))
-    LexIndex.bm25PurgeIndex(spark, a, "doc_id")
+    LexIndex.Layout.purge(spark, a, "doc_id")
     assert(!Tombstones.exists(spark, a))
     assert(phrase(a, "vector", "scan") === phrase(b, "vector", "scan"))
     assert(prox(a, 5, "vector", "window") === prox(b, 5, "vector", "window"))
@@ -181,7 +181,7 @@ class LexPositionalSpec extends AnyFunSuite {
       "doc_id", "text", idx))
     val beforePhrase = phrase(idx, "vector", "scan")
     val beforeProx = prox(idx, 5, "vector", "window")
-    val report = LexIndex.bm25CompactIndex(spark, idx, maxFilesPerDir = 1)
+    val report = LexIndex.Layout.compact(spark, idx, maxFilesPerDir = 1)
     assert(report.nonEmpty)
     assert(phrase(idx, "vector", "scan") === beforePhrase)
     assert(prox(idx, 5, "vector", "window") === beforeProx)
@@ -300,7 +300,7 @@ class LexPositionalSpec extends AnyFunSuite {
     val idx = tmp("phjoindel")
     LexIndex.bm25WriteIndex(docs, "doc_id", "text", idx, buckets = 8,
       positional = true)
-    LexIndex.bm25DeleteIds(docs.filter($"doc_id" % 7 === 3), "doc_id", idx)
+    LexIndex.Layout.delete(docs.filter($"doc_id" % 7 === 3), "doc_id", idx)
     val phrases = Seq((1, Seq("vector", "scan"))).toDF("qid", "phrase")
     val got = LexIndex.bm25PhraseJoin(phrases, idx, "doc_id", "qid",
         "phrase", k = 100)
@@ -365,7 +365,7 @@ class LexPositionalSpec extends AnyFunSuite {
     val victim = LexIndex.bm25PhraseRank(spark, fullIdx, "doc_id", ph,
         rids = Some(snapIds))
       .select("doc_id").head().getLong(0)
-    LexIndex.bm25DeleteIds(Seq(victim).toDF("doc_id"), "doc_id", fullIdx)
+    LexIndex.Layout.delete(Seq(victim).toDF("doc_id"), "doc_id", fullIdx)
     assert(!LexIndex.bm25PhraseProbe(spark, fullIdx, "doc_id", ph)
       .collect().map(_.getLong(0)).contains(victim))
     assert(LexIndex.bm25PhraseProbe(spark, fullIdx, "doc_id", ph,

@@ -89,6 +89,29 @@ class TombstoneSpec extends AnyFunSuite {
     assert(rows(probe(idxA)) === want)
   }
 
+  private def bm25Scores(path: String): Map[Long, Double] =
+    LexIndex.bm25ProbeIndex(spark, path, "doc_id", Seq("vector", "join", "scan"))
+      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+
+  /** A fresh BM25 index over `corpus` under `path`: the reference a
+    * lifecycle state must probe identically to.
+    */
+  private def bm25Rebuild(corpus: DataFrame, path: String): Map[Long, Double] = {
+    LexIndex.bm25WriteIndex(corpus, "doc_id", "text", path, buckets = 8)
+    bm25Scores(path)
+  }
+
+  /** (N, Σdl) over the index's `doclen/`: the corpus statistics. */
+  private def doclenTotals(path: String): (Long, Double) = {
+    val r = spark.read.parquet(s"$path/doclen")
+      .agg(count(lit(1)), sum("dl")).head()
+    (r.getLong(0), r.getDouble(1))
+  }
+
+  private def hasRows(dir: String, ids: DataFrame): Boolean =
+    !spark.read.parquet(dir)
+      .join(ids.select("doc_id"), Seq("doc_id"), "left_semi").isEmpty
+
   test("BM25: delete ≡ rebuild without the ids bit-identically (incl. N/avgdl); double-delete idempotent; purge physical") {
     val root = tmp("lex")
     val (idxA, idxB) = (s"$root/a", s"$root/b")
@@ -101,199 +124,152 @@ class TombstoneSpec extends AnyFunSuite {
       LexIndex.bm25ProbeIndex(spark, path, "doc_id", terms)
         .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
 
-    LexIndex.bm25DeleteIds(delDocs, "doc_id", idxA)
+    LexIndex.Layout.delete(delDocs, "doc_id", idxA)
     val want = scores(idxB)
     assert(scores(idxA) === want)
 
-    // re-delete: no second negative stats row for the same ids
-    val statRows = spark.read.parquet(s"$idxA/stats").count()
-    LexIndex.bm25DeleteIds(delDocs, "doc_id", idxA)
-    assert(spark.read.parquet(s"$idxA/stats").count() === statRows)
+    // re-delete and deleting a never-indexed id change no score
+    LexIndex.Layout.delete(delDocs, "doc_id", idxA)
     assert(scores(idxA) === want)
-    // deleting a never-indexed id adds no stats row either
-    LexIndex.bm25DeleteIds(Seq(999999L).toDF("doc_id"), "doc_id", idxA)
-    assert(spark.read.parquet(s"$idxA/stats").count() === statRows)
+    LexIndex.Layout.delete(Seq(999999L).toDF("doc_id"), "doc_id", idxA)
+    assert(scores(idxA) === want)
 
-    assert(LexIndex.bm25PurgeIndex(spark, idxA, "doc_id").nonEmpty)
+    assert(LexIndex.Layout.purge(spark, idxA, "doc_id").nonEmpty)
     assert(!Tombstones.exists(spark, idxA))
-    assert(spark.read.parquet(s"$idxA/postings")
-      .join(delDocs.select("doc_id"), Seq("doc_id"), "left_semi")
-      .count() === 0L)
-    assert(spark.read.parquet(s"$idxA/doclen")
-      .join(delDocs.select("doc_id"), Seq("doc_id"), "left_semi")
-      .count() === 0L)
+    assert(!hasRows(s"$idxA/postings", delDocs))
+    assert(!hasRows(s"$idxA/doclen", delDocs))
     assert(scores(idxA) === want)
+    // the corpus statistics are the surviving doclen rows: equal to the
+    // rebuilt index's
+    assert(doclenTotals(idxA) === doclenTotals(idxB))
 
-    // the purge left EXACTLY one published negative stats row for this
-    // tombstone generation, and stats totals now equal the rebuilt
-    // index's (the decrement materialized physically)
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(idxA).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val negFiles = fs.listStatus(new Path(s"$idxA/stats"))
-      .map(_.getPath.getName).filter(_.startsWith("graft-neg-"))
-    assert(negFiles.length === 1)
-    def statTotals(p: String): (Long, Double) = {
-      val r = spark.read.parquet(s"$p/stats")
-        .agg(sum("n"), sum("sum_dl")).head()
-      (r.getLong(0), r.getDouble(1))
-    }
-    assert(statTotals(idxA) === statTotals(idxB))
-
-    // re-delete ALREADY-PURGED ids (a retry long after the fact): the
-    // second generation's decrement is zero — scores and totals stay
-    // put through a full second delete → purge cycle
-    LexIndex.bm25DeleteIds(delDocs, "doc_id", idxA)
+    // re-delete ALREADY-PURGED ids (a retry long after the fact):
+    // scores and totals stay put through a full second delete → purge
+    LexIndex.Layout.delete(delDocs, "doc_id", idxA)
     assert(scores(idxA) === want)
-    LexIndex.bm25PurgeIndex(spark, idxA, "doc_id")
+    LexIndex.Layout.purge(spark, idxA, "doc_id")
     assert(!Tombstones.exists(spark, idxA))
     assert(scores(idxA) === want)
-    assert(statTotals(idxA) === statTotals(idxB))
+    assert(doclenTotals(idxA) === doclenTotals(idxB))
   }
 
-  test("BM25 purge crash windows: stale stages superseded; mid-rewrite scores exact; publish→clear window excludes the row, refuses new deletes") {
+  test("BM25 purge crash windows: probes exact, deletes accepted, purge converges") {
+    import org.apache.hadoop.fs.{FileUtil, Path}
     val root = tmp("lexcrash")
-    val idx = s"$root/a"
-    LexIndex.bm25WriteIndex(docs, "doc_id", "text", idx, buckets = 8)
-    val delDocs = docs.filter($"doc_id" % 5 === 1)
-    LexIndex.bm25DeleteIds(delDocs, "doc_id", idx)
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(idx).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val idxB = s"$root/b"
-    LexIndex.bm25WriteIndex(docs.filter($"doc_id" % 5 =!= 1),
-      "doc_id", "text", idxB, buckets = 8)
-    def scores(path: String): Map[Long, Double] =
-      LexIndex.bm25ProbeIndex(spark, path, "doc_id",
-          Seq("vector", "join", "scan"))
-        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val want = scores(idxB)
+    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val del1 = docs.filter($"doc_id" % 5 === 1)
+    val del2 = docs.filter($"doc_id" % 5 === 2)
+    val want1 = bm25Rebuild(docs.filter($"doc_id" % 5 =!= 1), s"$root/ref1")
+    val want2 = bm25Rebuild(
+      docs.filter($"doc_id" % 5 =!= 1 && $"doc_id" % 5 =!= 2), s"$root/ref2")
+    assert(want1 !== want2) // the second set actually moves the scores
 
-    // a never-published stage from an older crashed generation is
-    // simply superseded (its value is reproducible from the tombstone
-    // rows), not a refusal
-    fs.mkdirs(new Path(s"$idx/stats/.neg_stage_deadbeefdeadbeef"))
-
-    // snapshot the tombstone files so crashed states can be
-    // reconstructed with IDENTICAL file names (→ identical generation
-    // key) after a clean purge
-    val tombSnapshot = s"$root/tombsnap"
-    fs.mkdirs(new Path(tombSnapshot))
-    org.apache.hadoop.fs.FileUtil.copy(fs,
-      new Path(Tombstones.dir(idx)), fs, new Path(tombSnapshot),
-      false, spark.sparkContext.hadoopConfiguration)
-    assert(scores(idx) === want) // pre-purge: live decrement
-    LexIndex.bm25PurgeIndex(spark, idx, "doc_id")
-    assert(!fs.exists(new Path(s"$idx/stats/.neg_stage_deadbeefdeadbeef")))
-    assert(scores(idx) === want) // post-purge: physical row
-    val negFile = fs.listStatus(new Path(s"$idx/stats"))
-      .map(_.getPath).find(_.getName.startsWith("graft-neg-")).get
-
-    // crash window "published but not cleared": restore the tombstone
-    // files next to the published graft-neg row. Probes must exclude
-    // that row while its generation's tombstones exist — the carried
-    // dl decrement and the physical row never both count — and new
-    // deletes are refused until the purge is re-run.
-    def restoreTombs(): Unit =
-      org.apache.hadoop.fs.FileUtil.copy(fs,
-        new Path(s"$tombSnapshot/_graft_tombstones"), fs,
-        new Path(Tombstones.dir(idx)),
-        false, spark.sparkContext.hadoopConfiguration)
-    restoreTombs()
-    assert(Tombstones.exists(spark, idx))
-    assert(scores(idx) === want)
-    val ex = intercept[IllegalArgumentException] {
-      LexIndex.bm25DeleteIds(docs.filter($"doc_id" % 5 === 2)
-        .select("doc_id"), "doc_id", idx)
+    /** Both crash states continue the same way: a delete inside the
+      * window is accepted and counts at once, and re-running the purge
+      * converges to a physically clean index.
+      */
+    def deleteInWindowThenRepurge(idx: String): Unit = {
+      LexIndex.Layout.delete(del2, "doc_id", idx)
+      assert(bm25Scores(idx) === want2)
+      LexIndex.Layout.purge(spark, idx, "doc_id")
+      assert(!Tombstones.exists(spark, idx))
+      assert(bm25Scores(idx) === want2)
+      for (d <- Seq(del1, del2); sub <- Seq("postings", "doclen"))
+        assert(!hasRows(s"$idx/$sub", d), s"$sub still holds deleted rows")
+      assert(doclenTotals(idx) === doclenTotals(s"$root/ref2"))
+      // a further re-run finds nothing to do
+      assert(LexIndex.Layout.purge(spark, idx, "doc_id").isEmpty)
+      assert(bm25Scores(idx) === want2)
     }
-    assert(ex.getMessage.contains("re-run"))
 
-    // crash window "mid-rewrite": doclen rows already dropped,
-    // NOTHING published, tombstones live — drop the neg row from the
-    // published state above to construct it. The decrement rides the
-    // tombstone rows' carried dl, so probes stay exact even though
-    // the tombstoned doclen rows no longer exist.
-    assert(fs.delete(negFile, false))
-    assert(scores(idx) === want)
+    // "rewrite done, tombstones not cleared": a clean purge, then the
+    // tombstone files it cleared restored from a snapshot
+    val done = s"$root/done"
+    LexIndex.bm25WriteIndex(docs, "doc_id", "text", done, buckets = 8)
+    LexIndex.Layout.delete(del1, "doc_id", done)
+    val snap = s"$root/tombsnap"
+    assert(FileUtil.copy(fs, new Path(Tombstones.dir(done)), fs,
+      new Path(snap), false, conf))
+    assert(bm25Scores(done) === want1)
+    LexIndex.Layout.purge(spark, done, "doc_id")
+    assert(!Tombstones.exists(spark, done))
+    assert(FileUtil.copy(fs, new Path(snap), fs,
+      new Path(Tombstones.dir(done)), false, conf))
+    assert(Tombstones.exists(spark, done))
+    assert(bm25Scores(done) === want1)
+    deleteInWindowThenRepurge(done)
 
-    // retrying the purge from THIS state re-stages the identical value
-    // from the tombstone rows, publishes, clears; scores stay put
-    LexIndex.bm25PurgeIndex(spark, idx, "doc_id")
-    assert(!Tombstones.exists(spark, idx))
-    assert(scores(idx) === want)
-    // compaction refuses while tombstones pend (it would fold the
-    // generation-keyed row); runs clean after the purge finished
-    LexIndex.bm25DeleteIds(docs.filter($"doc_id" % 5 === 2)
-      .select("doc_id"), "doc_id", idx)
-    val cex = intercept[IllegalArgumentException] {
-      LexIndex.bm25CompactIndex(spark, idx)
-    }
-    assert(cex.getMessage.contains("tombstones pending"))
+    // "mid-rewrite": the tombstoned doclen rows already dropped, the
+    // postings not yet rewritten, tombstones live
+    val mid = s"$root/mid"
+    LexIndex.bm25WriteIndex(docs, "doc_id", "text", mid, buckets = 8)
+    LexIndex.Layout.delete(del1, "doc_id", mid)
+    val kept = spark.read.parquet(s"$mid/doclen")
+      .join(del1.select("doc_id"), Seq("doc_id"), "left_anti")
+    kept.coalesce(1).write.parquet(s"$root/doclen_rewrite")
+    assert(fs.delete(new Path(s"$mid/doclen"), true))
+    assert(fs.rename(new Path(s"$root/doclen_rewrite"), new Path(s"$mid/doclen")))
+    assert(!hasRows(s"$mid/doclen", del1) && hasRows(s"$mid/postings", del1))
+    assert(bm25Scores(mid) === want1)
+    deleteInWindowThenRepurge(mid)
   }
 
-  test("bm25RebuildStats refuses while tombstones pend — even after a crashed rewrite dropped tombstoned doclen rows — and rebuilds exactly after the purge completes") {
-    val root = tmp("lexrebuild")
-    val idx = s"$root/a"
-    LexIndex.bm25WriteIndex(docs, "doc_id", "text", idx, buckets = 8)
-    val delDocs = docs.filter($"doc_id" % 5 === 1)
-    LexIndex.bm25DeleteIds(delDocs, "doc_id", idx)
-    def scores(path: String): Map[Long, Double] =
-      LexIndex.bm25ProbeIndex(spark, path, "doc_id",
-          Seq("vector", "join", "scan"))
-        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val idxB = s"$root/b"
-    LexIndex.bm25WriteIndex(docs.filter($"doc_id" % 5 =!= 1),
-      "doc_id", "text", idxB, buckets = 8)
-    val want = scores(idxB)
-
-    // plain pending-tombstone state: rebuild must refuse
-    val ex1 = intercept[IllegalArgumentException] {
-      LexIndex.bm25RebuildStats(spark, idx)
-    }
-    assert(ex1.getMessage.contains("bm25PurgeIndex"))
-
-    // the ADVICE hazard state: a crashed purge already dropped SOME
-    // tombstoned doclen rows (simulate the partial rewrite by hand),
-    // tombstones still pending. A rebuild from this doclen would
-    // exclude the dropped docs from the totals while probes still
-    // subtract the full tombstone-carried decrement — refuse here too.
-    val doclen = s"$idx/doclen"
-    val oneDeleted = delDocs.select($"doc_id").orderBy($"doc_id")
-      .head().getLong(0)
-    val remaining = spark.read.parquet(doclen)
-      .filter($"doc_id" =!= oneDeleted)
-      .collect()
-    val stageDir = s"$root/doclen_rewrite"
-    spark.createDataFrame(
-        spark.sparkContext.parallelize(remaining.toIndexedSeq),
-        spark.read.parquet(doclen).schema)
-      .coalesce(1).write.mode("overwrite").parquet(stageDir)
+  test("BM25 indexes in the stats/ layout: probe, delete, purge, compact") {
     import org.apache.hadoop.fs.Path
-    val fs = new Path(idx).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.delete(new Path(doclen), true))
-    assert(fs.rename(new Path(stageDir), new Path(doclen)))
-    val ex2 = intercept[IllegalArgumentException] {
-      LexIndex.bm25RebuildStats(spark, idx)
-    }
-    assert(ex2.getMessage.contains("bm25PurgeIndex"))
-    // probes stay exact through the crash state (the carried-dl design)
-    assert(scores(idx) === want)
+    val root = tmp("lexlegacy")
+    val idx = s"$root/idx"
+    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val del1 = docs.filter($"doc_id" % 5 === 1)
+    val del2 = docs.filter($"doc_id" % 5 === 2)
+    val want1 = bm25Rebuild(docs.filter($"doc_id" % 5 =!= 1), s"$root/ref1")
+    val want2 = bm25Rebuild(
+      docs.filter($"doc_id" % 5 =!= 1 && $"doc_id" % 5 =!= 2), s"$root/ref2")
+    // the older layout, by hand: postings/doclen/meta as written today,
+    // plus a `stats/` directory of additive (n, sum_dl) rows with a
+    // published `graft-neg-<key>` row (values nothing must read), and
+    // tombstone files carrying (doc_id, dl)
+    LexIndex.bm25WriteIndex(docs, "doc_id", "text", idx, buckets = 8)
+    val doclen = spark.read.parquet(s"$idx/doclen")
+    doclen.agg(count(lit(1)).as("n"), sum("dl").as("sum_dl"))
+      .write.parquet(s"$idx/stats")
+    Seq((-3L, -42.0)).toDF("n", "sum_dl").coalesce(1)
+      .write.parquet(s"$root/neg")
+    val negPart = fs.listStatus(new Path(s"$root/neg")).map(_.getPath)
+      .find(_.getName.startsWith("part-")).get
+    assert(fs.rename(negPart,
+      new Path(s"$idx/stats/graft-neg-00112233deadbeef.parquet")))
+    doclen.join(del1.select("doc_id"), Seq("doc_id"))
+      .select("doc_id", "dl").coalesce(1)
+      .write.parquet(Tombstones.dir(idx))
+    assert(bm25Scores(idx) === want1)
 
-    // the documented recovery: purge TO COMPLETION (idempotent across
-    // the partial rewrite), then rebuild — stats/ becomes one fresh
-    // row and probes still match the rebuilt-without-ids index
-    LexIndex.bm25PurgeIndex(spark, idx, "doc_id")
+    // an id-only delete lands next to the (doc_id, dl) file; the
+    // tombstone set reads the same whichever schema sorts first
+    val tombDir = new Path(Tombstones.dir(idx))
+    def dataFiles = fs.listStatus(tombDir).map(_.getPath)
+      .filterNot(p => p.getName.startsWith(".") || p.getName.startsWith("_"))
+    val Array(dlFile) = dataFiles
+    LexIndex.Layout.delete(del2, "doc_id", idx)
+    assert(dataFiles.length >= 2)
+    val first = new Path(tombDir, "0-legacy.parquet")
+    val last = new Path(tombDir, "z-legacy.parquet")
+    assert(fs.rename(dlFile, first))
+    assert(bm25Scores(idx) === want2)
+    assert(fs.rename(first, last))
+    assert(bm25Scores(idx) === want2)
+
+    // the purge rewrites postings/doclen only (small files, so the
+    // compaction below has litter to fold) and leaves stats/ alone
+    val purged = LexIndex.Layout.purge(spark, idx, "doc_id",
+      targetBytes = 512)
+    assert(purged.nonEmpty && !purged.keys.exists(_.contains("stats")))
     assert(!Tombstones.exists(spark, idx))
-    assert(scores(idx) === want)
-    LexIndex.bm25RebuildStats(spark, idx)
-    assert(scores(idx) === want)
-    // the rebuilt stats row equals the surviving doclen totals exactly
-    val st = spark.read.parquet(s"$idx/stats")
-      .agg(sum("n"), sum("sum_dl")).head()
-    val dl = spark.read.parquet(doclen)
-      .agg(count(lit(1)), sum("dl")).head()
-    assert(st.getLong(0) === dl.getLong(0))
-    assert(st.getDouble(1) === dl.getDouble(1))
+    assert(bm25Scores(idx) === want2)
+    val compacted = LexIndex.Layout.compact(spark, idx, maxFilesPerDir = 1)
+    assert(compacted.nonEmpty && !compacted.keys.exists(_.contains("stats")))
+    assert(bm25Scores(idx) === want2)
+    assert(doclenTotals(idx) === doclenTotals(s"$root/ref2"))
   }
 
   test("Hamming: delete → probe ≡ rebuild without the ids; deleted ids still usable as queries; purge physical") {
@@ -361,15 +337,18 @@ class TombstoneSpec extends AnyFunSuite {
         $"embedding"),
       0L, "vec_id", "embedding", ivf, cents, streamId = "d1"))
 
-    // BM25 delete stream: ledger prevents the double-negative-stats
+    // a BM25 index takes the same delete stream; a redelivered batch
+    // adds no tombstone file, and probes equal a rebuild without the ids
     val lex = s"$root/lex"
     LexIndex.bm25WriteIndex(docs, "doc_id", "text", lex, buckets = 8)
     val dIds = docs.filter($"doc_id" % 5 === 1).select("doc_id")
-    assert(graft.streaming.LexIndexStream.deleteBatch(
+    assert(graft.streaming.VectorIndexStream.deleteBatch(
       dIds, 7L, "doc_id", lex, streamId = "d2"))
-    val statRows = spark.read.parquet(s"$lex/stats").count()
-    assert(!graft.streaming.LexIndexStream.deleteBatch(
+    val nLexTomb = spark.read.parquet(s"$lex/_graft_tombstones").count()
+    assert(!graft.streaming.VectorIndexStream.deleteBatch(
       dIds, 7L, "doc_id", lex, streamId = "d2"))
-    assert(spark.read.parquet(s"$lex/stats").count() === statRows)
+    assert(spark.read.parquet(s"$lex/_graft_tombstones").count() === nLexTomb)
+    assert(bm25Scores(lex) ===
+      bm25Rebuild(docs.filter($"doc_id" % 5 =!= 1), s"$root/lexref"))
   }
 }

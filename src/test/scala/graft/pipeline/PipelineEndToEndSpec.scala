@@ -74,6 +74,21 @@ class PipelineEndToEndSpec extends AnyFunSuite {
     assert(spark.table("telegram").count() === before)
   }
 
+  test("ETL counts rejects on the write: corrupt line + edited_message") {
+    val raw = Files.createTempDirectory("raw_rejects")
+    val day = java.time.LocalDate.of(2024, 1, 9)
+    val d = Files.createDirectories(raw.resolve(s"context_date=$day"))
+    Files.write(d.resolve("c.json"), Seq(
+      msg(21, 301, 11, "Ana", false, t2 + 86400, Some("one")),
+      """{"update_id":22,"message":{"message_id":302,""",
+      msg(23, 303, 12, "Bob", false, t2 + 86460, Some("three")),
+      """{"update_id":24,"edited_message":{"message_id":301,"chat":{"id":-100,"type":"group"},"date":1704893000}}"""
+    ).mkString("\n").getBytes("UTF-8"))
+    val enriched = Files.createTempDirectory("enriched_rejects").toString
+    assert(EtlJob.run(spark, raw.toString, enriched, day) === ((2L, 2L)))
+    assert(spark.read.parquet(enriched).count() === 2L)
+  }
+
   test("U2 compaction: one parquet file per day partition") {
     val d = new java.io.File(s"$enrichedDir/context_date=$day1")
     assert(d.listFiles().count(_.getName.endsWith(".parquet")) === 1)

@@ -78,10 +78,10 @@ class StagedPublishCrashSpec extends AnyFunSuite {
     LexIndexStream.appendBatch(batch, 0L, "doc_id", "text", root,
       streamId = "s1")
 
-  /** Summed stats totals and doclen rows, then probe scores. */
+  /** Doclen totals (N and Σdl) and doclen rows, then probe scores. */
   private def state(root: String) = (
-    spark.read.parquet(s"$root/stats")
-      .agg(sum("n"), sum("sum_dl")).head().toSeq,
+    spark.read.parquet(s"$root/doclen")
+      .agg(count(lit(1)), sum("dl")).head().toSeq,
     spark.read.parquet(s"$root/doclen").count(),
     LexIndex.bm25ProbeIndex(spark, root, "doc_id", terms)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap)
