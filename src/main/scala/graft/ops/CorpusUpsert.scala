@@ -211,7 +211,7 @@ object CorpusUpsert {
     * fold runs AFTER the done marker inside the same serialized apply,
     * so the quiesced-window contract holds by construction; a crash
     * mid-fold leaves lookups exact in every interleaving (compactRevs'
-    * invariant) and the next batch's trigger re-runs it. ≤ 0 disables.
+    * invariant) and the next batch's trigger finishes it. ≤ 0 disables.
     * The fold
     * TRADES the backfill horizon (see the object doc): a later-added
     * target can only backfill batches whose per-batch revs survive,
@@ -492,10 +492,12 @@ object CorpusUpsert {
     * rows are reclaimed), the vacuum and the fold bound BACKFILL and
     * as-of granularity — pass `keepBatches` / `foldRevs = false` on
     * the cadence that keeps the history you need. Idempotent end to
-    * end: every stage is individually idempotent and the order is
-    * data-independent, so after a crash anywhere, re-running the SAME
-    * call completes the pass. Serialized with applies like every
-    * maintenance operation (the quiesced-window rule).
+    * end: every purge, compaction and the fold is one rewrite publish
+    * that a re-run finishes before it lists anything
+    * ([[Compaction.publishRewrite]]), the vacuum only deletes, and the
+    * order is data-independent, so after a crash anywhere, re-running
+    * the SAME call completes the pass. Serialized with applies like
+    * every maintenance operation (the quiesced-window rule).
     */
   def maintain(
       spark: SparkSession,
@@ -743,12 +745,16 @@ object CorpusUpsert {
   /** Fold the rev ledger to its current max-rev rows — the
     * maintenance pass the per-batch `revs/batch=<key>` dirs need on a
     * long-lived root (one dir per batch ever applied, like any ledger
-    * litter). Staged write → swap into `batch=$CompactedKey`, then the
-    * superseded batch dirs are deleted; a crash between the swap and
-    * the deletes leaves duplicates whose max-rev fold is identical
-    * (re-run to finish the deletes), so the pass is idempotent and
-    * rev lookups are correct in every interleaving. Run it in the
-    * quiesced maintenance window (no concurrent applyBatch — the
+    * litter). One rewrite publish under `revs/`
+    * ([[Compaction.publishRewrite]]): the fold is staged as
+    * `batch=$CompactedKey`, published into that dir, and then the
+    * superseded batch dirs and the dir's earlier files are deleted. A
+    * crash between the publish and the deletes leaves duplicates whose
+    * max-rev fold is identical, so rev lookups are exact in every
+    * interleaving, and re-running finishes the publish first. A
+    * `batch=$CompactedKey-old` dir (left by an interrupted fold of an
+    * earlier release) is folded and deleted like any batch. Run it in
+    * the quiesced maintenance window (no concurrent applyBatch — the
     * serialized-applies contract already says so). A crashed batch
     * awaiting its retry (revs recorded, no done marker) is detected
     * and makes the pass SKIP (stderr note, no fold): folding an
@@ -760,8 +766,10 @@ object CorpusUpsert {
     * in later batches' self-excluding lookups like any other batch.
     */
   def compactRevs(spark: SparkSession, root: String): Unit = {
-    val revsRoot = new Path(s"$root/revs")
-    val fs = revsRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val revsRoot = s"$root/revs"
+    Compaction.finishRewrite(spark, revsRoot, "compactRevs")
+    val fs = new Path(revsRoot).getFileSystem(
+      spark.sparkContext.hadoopConfiguration)
     val old = revBatchDirs(fs, root)
     if (old.size <= 1) return
     // a CRASHED batch awaiting its retry (revs recorded, no done
@@ -782,33 +790,20 @@ object CorpusUpsert {
         "re-run their applyBatch to completion first")
       return
     }
-    val stage = new Path(revsRoot, s".revs_compact")
-    priorRevs(spark, fs, root, excludeKey = "")
-      .select(col("doc"), col("rev").cast("int").as("rev"))
-      .coalesce(1)
-      .write.mode("overwrite").parquet(stage.toString)
     val dest = revsDir(root, CompactedKey)
-    val aside = revsDir(root, s"$CompactedKey-old")
-    // a LEFTOVER aside dir (a prior pass crashed between its publish
-    // and its deletes) goes first: its rows were just folded into the
-    // freshly staged result by the excludeKey = "" scan above, and
-    // rename-onto-existing fails on local FS (nests on HDFS), so the
-    // documented re-run-to-finish recovery would otherwise wedge here
-    // on every retry
-    if (fs.exists(aside) && !fs.delete(aside, true))
-      throw new java.io.IOException(
-        s"compactRevs: cannot delete leftover $aside")
-    // an earlier compacted partition (already folded into the stage)
-    // moves ASIDE — still a visible batch= dir, so no crash point ever
-    // hides its rows from a lookup; duplicates fold identically under
-    // the max-rev aggregation until the final deletes land
-    if (fs.exists(dest) && !fs.rename(dest, aside))
-      throw new java.io.IOException(s"compactRevs: cannot move $dest aside")
-    if (!fs.rename(stage, dest))
-      throw new java.io.IOException(s"compactRevs: cannot publish $stage -> $dest")
-    (old.filterNot(p => p.getName == dest.getName) :+ aside).foreach { p =>
-      if (fs.exists(p) && !fs.delete(p, true))
-        throw new java.io.IOException(s"compactRevs: cannot delete superseded $p")
+    Compaction.publishRewrite(spark, revsRoot, "compactRevs") { stage =>
+      priorRevs(spark, fs, root, excludeKey = "")
+        .select(col("doc"), col("rev").cast("int").as("rev"))
+        .coalesce(1)
+        .write.mode("overwrite")
+        .parquet(new Path(stage, dest.getName).toString)
+      // the compacted dir receives the fold, so its earlier files are
+      // superseded one by one; every other batch dir goes whole
+      old.flatMap { p =>
+        if (p.getName != dest.getName) Seq(p)
+        else fs.listStatus(p).toSeq.map(_.getPath)
+          .filter(f => IndexLayout.visible(f.getName))
+      }
     }
   }
 

@@ -72,9 +72,8 @@ object Drift {
   /** Freeze the REFERENCE side of a monitored PSI under `path`:
     * `ref/` holds the reference histogram, `meta/` the bucket geometry
     * (binWidth, eps), `obs/` starts empty and accumulates ADDITIVE
-    * (bucket, n) rows from [[psiAppendObserved]] — the
-    * [[LexIndex]]-stats pattern, so a streamed observation side is a
-    * pure append and redelivery (behind the stream ledger) is a no-op.
+    * (bucket, n) rows ([[psiObserved]]), one published batch at a
+    * time ([[graft.streaming.DriftStream]]).
     */
   def psiWriteRef(
       ref: DataFrame,
@@ -93,14 +92,15 @@ object Drift {
       .parquet(s"$path/obs")
   }
 
-  /** Append one observed batch's bucket counts under the persisted
-    * geometry (additive rows — never read-modify-write).
+  /** One observed batch's `obs/` rows: its bucket counts under the
+    * geometry persisted at `path` (additive rows — never
+    * read-modify-write).
     */
-  def psiAppendObserved(batch: DataFrame, valueCol: String, path: String): Unit = {
+  private[graft] def psiObserved(
+      batch: DataFrame, valueCol: String, path: String): DataFrame = {
     val binWidth = IndexLayout.readDir(batch.sparkSession, s"$path/meta")
       .select("binWidth").head().getDouble(0)
-    hist(batch, valueCol, binWidth, "n").write.mode("append")
-      .parquet(s"$path/obs")
+    hist(batch, valueCol, binWidth, "n")
   }
 
   /** The monitored PSI report: reference histogram vs everything the

@@ -32,13 +32,16 @@ import org.apache.spark.sql.types.StructType
   * run this lifecycle unmodified: no family keeps state a delete or a
   * purge must adjust beside its rows.
   *
-  * Delta rows enter a live index ONE way, [[IndexLayout.publish]]:
+  * Rows enter or leave a live index ONE way, [[IndexLayout.publish]]:
   * each family's delta writer stages the rows under a directory that
   * mirrors the layout, and the publish renames them in under
   * batch-keyed names. [[CorpusUpsert.applyBatch]], the public
   * `*AppendIndex` calls ([[IndexLayout.append]]) and the streaming
   * sinks differ only in where the stage lives, which key names the
-  * files and which marker says the batch is done.
+  * files and which marker says the batch is done. A rewrite
+  * ([[compact]], [[purge]]) is the same publish of a stage at the
+  * root's fixed `_graft_stage/rewrite`, whose last step deletes the
+  * files the staged rows replace ([[Compaction.publishRewrite]]).
   */
 final case class IndexLayout(name: String, subDirs: Seq[IndexLayout.SubDir]) {
   import IndexLayout._
@@ -83,10 +86,10 @@ final case class IndexLayout(name: String, subDirs: Seq[IndexLayout.SubDir]) {
     Tombstones.add(ids, idCol, root)
 
   /** Physically drop tombstoned rows from [[affectedDirs]] only and
-    * clear the tombstone set, through the shared
-    * [[Compaction.rewriteDirs]] publish protocol. Quiesced-window
-    * maintenance, idempotent across crashes ([[Tombstones]] has the
-    * full story). Returns dirName → (filesBefore, filesAfter).
+    * clear the tombstone set, through the shared rewrite publish
+    * ([[Compaction.rewriteDirs]]). Quiesced-window maintenance;
+    * re-running the same call after a crash converges ([[Tombstones]]
+    * has the full story). Returns dirName → (filesBefore, filesAfter).
     */
   def purge(
       spark: SparkSession,
@@ -97,16 +100,17 @@ final case class IndexLayout(name: String, subDirs: Seq[IndexLayout.SubDir]) {
 
   /** Fold append litter back into a bounded file layout: every leaf
     * directory holding more than `maxFilesPerDir` files is rewritten to
-    * ⌈bytes / targetBytes⌉ files ([[Compaction.compactDirs]]). Rows
-    * are unchanged, so probe results are identical before and after.
-    * Returns per-compacted-directory (files before, after).
+    * ⌈bytes / targetBytes⌉ files, in one rewrite publish
+    * ([[Compaction.compact]]). Rows are unchanged, so probe results are
+    * identical before and after. Returns per-compacted-directory
+    * (files before, after).
     */
   def compact(
       spark: SparkSession,
       root: String,
       maxFilesPerDir: Int = 8,
       targetBytes: Long = DefaultTargetBytes): Map[String, (Int, Int)] =
-    Compaction.compactDirs(spark, leafDirs(spark, root), maxFilesPerDir,
+    Compaction.compact(spark, root, leafDirs(spark, root), maxFilesPerDir,
       targetBytes, s"$name compact")
 }
 
@@ -196,11 +200,9 @@ object IndexLayout {
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // depth-first over sorted names (a directory sorts as `name/`, so
     // the first file found is the first full path in string order)
-    def data(name: String): Boolean = !GraftParquet.hiddenName(name) &&
-      name != "_metadata" && name != "_common_metadata"
     def first(d: Path): Option[FileStatus] =
       fs.listStatus(d).toSeq
-        .filter(s => data(s.getPath.getName))
+        .filter(s => visible(s.getPath.getName))
         .sortBy(s => s.getPath.getName + (if (s.isDirectory) "/" else ""))
         .iterator
         .flatMap(s => if (s.isDirectory) first(s.getPath) else Some(s))
@@ -210,17 +212,28 @@ object IndexLayout {
     else first(root).map(GraftParquet.footerSchema(spark, _))
   }
 
-  /** Publish one delta into the live index at `root`, exactly once per
-    * `done` marker:
+  /** Whether a reader's data listing sees `name`: Spark's own listing
+    * filter ([[GraftParquet.hiddenName]]: no `_`/`.` prefix unless a
+    * `col=value` partition name), minus the parquet summary files,
+    * which no index writer emits. The one predicate behind the
+    * publish walk, the rewrite listing and the tombstone listing.
+    */
+  private[graft] def visible(name: String): Boolean =
+    !GraftParquet.hiddenName(name) &&
+      name != "_metadata" && name != "_common_metadata"
+
+  /** Publish one delta into the live data at `root`, exactly once per
+    * `done` marker — the only code that changes what a reader of a
+    * live directory sees:
     *
     *   1. STAGE: unless `stage` holds a `_graft_staged` marker, `write`
     *      (re)writes the delta's rows under `stage`, mirroring the
-    *      index layout, and the marker lands;
-    *   2. PUBLISH: every visible staged file moves, one checked atomic
-    *      rename each, to `<root>/<same relative dir>/graft-ups-<key>-
-    *      <staged name>`;
+    *      layout under `root`, and the marker lands;
+    *   2. PUBLISH: every [[visible]] staged file moves, one checked
+    *      atomic rename each, to `<root>/<same relative dir>/graft-ups-
+    *      <key>-<staged name>`;
     *   3. `afterPublish` runs (the upsert tombstones superseded rids
-    *      here);
+    *      here; a rewrite deletes the files it replaced);
     *   4. the `done` marker lands, then the stage is dropped.
     *
     * Returns false, after dropping any leftover stage, when `done`
@@ -254,7 +267,7 @@ object IndexLayout {
     def walk(dir: Path, dest: Path): Unit =
       fs.listStatus(dir).foreach { st =>
         val n = st.getPath.getName
-        if (n.startsWith("_") || n.startsWith(".")) ()
+        if (!visible(n)) ()
         else if (st.isDirectory) walk(st.getPath, new Path(dest, n))
         else {
           if (!fs.exists(dest) && !fs.mkdirs(dest))

@@ -25,15 +25,18 @@ import org.apache.spark.sql.functions._
   *     entirely when no tombstones exist (one driver `exists` check).
   *   - Purge: the physical drop, run in a quiesced maintenance window
   *     like compaction. Only the [[IndexLayout.affectedDirs]] — the
-  *     directories that CONTAIN tombstoned rows — are rewritten,
-  *     through the checked hide-rename publish protocol
-  *     ([[Compaction.rewriteDirs]]); the tombstone set is cleared only
-  *     after every one published, so a crash anywhere leaves probes
-  *     correct (anti-join still live) and the purge re-runnable
-  *     (already-purged dirs no longer match the semi-join). No family
-  *     keeps derived state beside its rows — BM25's N/avgdl is an
-  *     aggregate over `doclen/` minus the tombstone set — so a purge
-  *     that stops at any step changes no probe result.
+  *     directories that CONTAIN tombstoned rows — are rewritten, in
+  *     one rewrite publish ([[Compaction.rewriteDirs]]: the purged
+  *     copies move in, then the originals are deleted); the tombstone
+  *     set is cleared only after that publish completed, so
+  *     re-running the same call after a crash anywhere converges. A
+  *     crash between the publish's renames and its deletes leaves a
+  *     rewritten directory's surviving rows visible twice (never zero
+  *     times) until that re-run, which finishes the publish before it
+  *     lists anything — the quiesced-window contract every
+  *     maintenance pass has. No family keeps derived state beside its
+  *     rows — BM25's N/avgdl is an aggregate over `doclen/` minus the
+  *     tombstone set.
   *
   * Duplicate tombstone rows are legal (re-deleting an id appends
   * again); every reader goes through [[ids]]' distinct, whose id
@@ -55,8 +58,7 @@ object Tombstones {
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) Nil
     else fs.listStatus(p).toSeq.filter(s =>
-      s.isFile && !s.getPath.getName.startsWith("_") &&
-        !s.getPath.getName.startsWith(".")) // local-FS .crc sidecars
+      s.isFile && IndexLayout.visible(s.getPath.getName))
   }
 
   def exists(spark: SparkSession, indexRoot: String): Boolean =
@@ -136,10 +138,10 @@ object Tombstones {
         // the distinct — takedown-sized work, but multiplied by up to
         // hundreds of dirs it dominated the round-17 purge probe
         val tombs = Ckpt.checkpoint(tombs0)
-        val affected = layout.affectedDirs(spark, indexRoot, idCol, tombs)
-        val report = Compaction.rewriteDirs(spark, affected, targetBytes,
+        val report = Compaction.rewriteDirs(spark, indexRoot,
+          layout.affectedDirs(spark, indexRoot, idCol, tombs), targetBytes,
           opName,
-          shouldRewrite = (_, _) => true,
+          shouldRewrite = _ => true,
           transform = df => df.join(tombs, Seq(idCol), "left_anti"))
         clear(spark, indexRoot)
         report

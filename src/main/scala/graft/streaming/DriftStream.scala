@@ -6,16 +6,18 @@ import org.apache.spark.sql.streaming.DataStreamWriter
 
 /** Streaming PSI drift monitor ([[graft.ops.Drift]]): the reference
   * histogram is frozen once ([[Drift.psiWriteRef]]); each micro-batch
-  * of newly-ingested rows appends its bucket counts additively behind
-  * the SAME per-stream batch ledger the index sinks use, so
-  * at-least-once redelivery never double-counts a batch. The live
-  * report ([[Drift.psiFromStats]]) is identical to running the batch
-  * [[Drift.psiReport]] over the raw snapshots — DriftSpec pins it.
+  * of newly-ingested rows publishes its bucket counts into `obs/`
+  * through the SAME keyed publish the index sinks use
+  * ([[VectorIndexStream.publishBatch]], the stage mirroring `obs/`),
+  * so neither redelivery nor a retry after a crash double-counts a
+  * batch. The live report ([[Drift.psiFromStats]]) is identical to
+  * running the batch [[Drift.psiReport]] over the raw snapshots —
+  * DriftSpec pins it.
   */
 object DriftStream {
 
-  /** Append one micro-batch's bucket counts if its (streamId, batchId)
-    * has no ledger marker yet. Returns true when appended.
+  /** Publish one micro-batch's bucket counts unless its
+    * (streamId, batchId) already landed. Returns true when published.
     */
   def appendBatch(
       batch: DataFrame,
@@ -23,9 +25,9 @@ object DriftStream {
       valueCol: String,
       path: String,
       streamId: String = ""): Boolean =
-    VectorIndexStream.ledgered(batch, batchId, path, streamId) {
-      Drift.psiAppendObserved(batch, valueCol, path)
-    }
+    VectorIndexStream.publishBatch(batch, batchId, path, streamId)(stage =>
+      Drift.psiObserved(batch, valueCol, path)
+        .write.mode("overwrite").parquet(s"$stage/obs"))
 
   /** The stream writer: attach a checkpoint + trigger and `.start()`.
     * The monitor root must already exist ([[Drift.psiWriteRef]]) so

@@ -5,8 +5,9 @@ import org.apache.spark.sql.streaming.DataStreamWriter
 
 /** Streaming maintenance of an SCD Type-2 change LOG: each micro-batch
   * appends its raw change rows (append-only additive rows — the
-  * SketchStream/LexIndex contract, never read-modify-write) behind the
-  * shared per-stream batch ledger, and readers FOLD the accumulated log
+  * SketchStream/LexIndex contract, never read-modify-write) through
+  * the shared keyed publish ([[VectorIndexStream.publishBatch]]), so a
+  * batch lands exactly once, and readers FOLD the accumulated log
   * into the versioned dimension with [[graft.ops.Scd2.fromChanges]].
   * Fold-on-read makes stream-built ≡ batch-built exact by construction
   * (same rows, same fold), and gives the dimension time travel for
@@ -22,9 +23,8 @@ object Scd2Stream {
       batchId: Long,
       path: String,
       streamId: String = ""): Boolean =
-    VectorIndexStream.ledgered(batch, batchId, path, streamId) {
-      batch.write.mode("append").parquet(path)
-    }
+    VectorIndexStream.publishBatch(batch, batchId, path, streamId)(
+      batch.write.mode("overwrite").parquet(_))
 
   /** The stream writer: attach a checkpoint + trigger and `.start()`. */
   def changeSink(stream: DataFrame, path: String): DataStreamWriter[Row] =

@@ -6,9 +6,10 @@ import org.apache.spark.sql.streaming.DataStreamWriter
 
 /** Streaming maintenance of a persisted HLL sketch table
   * ([[graft.ops.Sketches]]): each micro-batch appends its own
-  * per-group partial-sketch ROWS (the additive-rows contract LexIndex
-  * uses for stats — never read-modify-write), behind the shared
-  * per-stream batch ledger so at-least-once redelivery is a no-op.
+  * per-group partial-sketch ROWS (additive rows — never
+  * read-modify-write) through the shared keyed publish
+  * ([[VectorIndexStream.publishBatch]]), so a batch lands exactly
+  * once across redelivery and crash retries.
   * Readers roll the partials up with `hll_union_agg`
   * ([[Sketches.readSketchTable]]); union is lossless at equal lgK, so
   * a stream-built table answers every rollup identically to a batch
@@ -19,8 +20,8 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   */
 object SketchStream {
 
-  /** Append one micro-batch's partial sketches if its
-    * (streamId, batchId) has no ledger marker yet.
+  /** Publish one micro-batch's partial sketches unless its
+    * (streamId, batchId) already landed.
     */
   def appendBatch(
       batch: DataFrame,
@@ -30,10 +31,9 @@ object SketchStream {
       path: String,
       lgK: Int = 12,
       streamId: String = ""): Boolean =
-    VectorIndexStream.ledgered(batch, batchId, path, streamId) {
+    VectorIndexStream.publishBatch(batch, batchId, path, streamId)(
       Sketches.hllAgg(batch, groupCols, valueCol, lgK)
-        .write.mode("append").parquet(path)
-    }
+        .write.mode("overwrite").parquet(_))
 
   /** The stream writer: attach a checkpoint + trigger and `.start()`. */
   def sketchSink(
@@ -62,10 +62,9 @@ object SketchStream {
       depth: Int = 4,
       width: Int = 2048,
       streamId: String = ""): Boolean =
-    VectorIndexStream.ledgered(batch, batchId, path, streamId) {
+    VectorIndexStream.publishBatch(batch, batchId, path, streamId)(
       Sketches.cmAgg(batch, groupCols, valueCol, depth, width)
-        .write.mode("append").parquet(path)
-    }
+        .write.mode("overwrite").parquet(_))
 
   def cmSink(
       stream: DataFrame,
@@ -93,10 +92,9 @@ object SketchStream {
       path: String,
       k: Int = 200,
       streamId: String = ""): Boolean =
-    VectorIndexStream.ledgered(batch, batchId, path, streamId) {
+    VectorIndexStream.publishBatch(batch, batchId, path, streamId)(
       Sketches.kllAgg(batch, groupCols, valueCol, k)
-        .write.mode("append").parquet(path)
-    }
+        .write.mode("overwrite").parquet(_))
 
   def kllSink(
       stream: DataFrame,
@@ -123,10 +121,9 @@ object SketchStream {
       path: String,
       lgK: Int = 12,
       streamId: String = ""): Boolean =
-    VectorIndexStream.ledgered(batch, batchId, path, streamId) {
+    VectorIndexStream.publishBatch(batch, batchId, path, streamId)(
       Sketches.thetaAgg(batch, groupCols, valueCol, lgK)
-        .write.mode("append").parquet(path)
-    }
+        .write.mode("overwrite").parquet(_))
 
   def thetaSink(
       stream: DataFrame,

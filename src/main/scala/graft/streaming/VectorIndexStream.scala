@@ -84,45 +84,24 @@ object VectorIndexStream {
       if (streamId.isEmpty) s"_graft_batches/$batchId"
       else s"_graft_batches/$streamId/$batchId")
 
-  /** The exactly-once publish every index sink and report sink shares:
+  /** The exactly-once publish every streaming sink shares:
     * [[graft.ops.IndexLayout.publish]] of what `write` stages (given
-    * the stage dir), keyed `<streamId>-<batchId>`, with the batch's
-    * ledger entry as the done marker. Returns false when the ledger
-    * says the batch already landed. One [[graft.ops.Ckpt.scope]] per
-    * batch: `foreachBatch` runs on the stream's own thread, outside any
-    * caller's scope, so the batch frees what it materialized here.
+    * the stage dir, mirroring the data under `into`, which defaults to
+    * `path`), keyed `<streamId>-<batchId>`, with the batch's ledger
+    * entry under `path` as the done marker. Returns false when the
+    * ledger says the batch already landed. One
+    * [[graft.ops.Ckpt.scope]] per batch: `foreachBatch` runs on the
+    * stream's own thread, outside any caller's scope, so the batch
+    * frees what it materialized here.
     */
   private[streaming] def publishBatch(
-      batch: DataFrame, batchId: Long, path: String, streamId: String)(
-      write: String => Unit): Boolean = Ckpt.scope {
+      batch: DataFrame, batchId: Long, path: String, streamId: String,
+      into: String = "")(write: String => Unit): Boolean = Ckpt.scope {
     val key = if (streamId.isEmpty) s"$batchId" else s"$streamId-$batchId"
-    IndexLayout.publish(batch.sparkSession, path,
-      new Path(path, s"_graft_stage/$key"), key,
+    val root = if (into.isEmpty) path else into
+    IndexLayout.publish(batch.sparkSession, root,
+      new Path(root, s"_graft_stage/$key"), key,
       ledgerMarker(path, streamId, batchId))(write)
-  }
-
-  /** The at-least-once guard of the NON-index sinks (drift, SCD2,
-    * sketches, deletes): run `apply` only when `streamId`/`batchId`
-    * has no ledger marker yet, then mark. The marker lands after the
-    * write, so a crash inside that narrow window repeats the write on
-    * retry — the standard foreachBatch idempotence trade. Tombstones
-    * deduplicate, an HLL union absorbs a repeated partial and the SCD2
-    * fold collapses an echoed change; a repeated drift batch counts
-    * twice. One [[graft.ops.Ckpt.scope]] per batch, as in
-    * [[publishBatch]].
-    */
-  private[streaming] def ledgered(
-      batch: DataFrame, batchId: Long, path: String, streamId: String)(
-      apply: => Unit): Boolean = Ckpt.scope {
-    val marker = ledgerMarker(path, streamId, batchId)
-    val fs = marker.getFileSystem(
-      batch.sparkSession.sparkContext.hadoopConfiguration)
-    if (fs.exists(marker)) false
-    else {
-      apply
-      IndexLayout.touch(fs, marker)
-      true
-    }
   }
 
   /** The stream writer: attach a checkpoint + trigger and `.start()`.
@@ -173,10 +152,14 @@ object VectorIndexStream {
   private[streaming] def deleteLedgerId(streamId: String): String =
     s"deletes-$streamId"
 
-  /** Apply one micro-batch of takedown ids behind the batch ledger —
+  /** Publish one micro-batch of takedown ids into the tombstone set —
     * the streaming half of the [[graft.ops.Tombstones]] delete
     * lifecycle, shared by every index family (a delete is
-    * layout-blind: it only appends ids under the root).
+    * layout-blind: it only adds ids under the root). The rows publish
+    * into [[graft.ops.Tombstones.dir]] itself (the publish walk skips
+    * `_` names, so a root-level stage could not carry them), and the
+    * ledger stays under the root: a purge's clear deletes the
+    * tombstone dir.
     */
   def deleteBatch(
       batch: DataFrame,
@@ -184,9 +167,9 @@ object VectorIndexStream {
       idCol: String,
       path: String,
       streamId: String = ""): Boolean =
-    ledgered(batch, batchId, path, deleteLedgerId(streamId)) {
-      graft.ops.Tombstones.add(batch, idCol, path)
-    }
+    publishBatch(batch, batchId, path, deleteLedgerId(streamId),
+      into = graft.ops.Tombstones.dir(path))(
+      batch.select(idCol).distinct().write.mode("overwrite").parquet(_))
 
   /** The delete-stream writer: micro-batches of (idCol) takedown
     * requests against any persisted index root; attach a checkpoint +

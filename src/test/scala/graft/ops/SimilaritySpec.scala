@@ -175,12 +175,12 @@ class SimilaritySpec extends AnyFunSuite {
     }
     for ((cl, n) <- before if !report.contains(cl))
       assert(after(cl) === n, s"$cl was rewritten despite being under the threshold")
-    // no hidden temp/backup litter left behind
-    val hidden = new java.io.File(dir).listFiles
-      .filter(f => f.isDirectory && f.getName.startsWith("cluster="))
-      .flatMap(_.listFiles.filter(f => f.getName.startsWith(".graft_compact_tmp") ||
-        f.getName.endsWith(".old")))
-    assert(hidden.isEmpty, s"litter: ${hidden.map(_.getName).toSeq}")
+    // no rewrite litter left behind: no stage under the root's fixed
+    // rewrite path, no hidden `.old` copy anywhere in the index
+    assert(!new java.io.File(s"$dir/_graft_stage/rewrite").exists)
+    val hidden = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+      .toArray.toSeq.map(_.toString).filter(_.endsWith(".old"))
+    assert(hidden.isEmpty, s"litter: $hidden")
     // rows and probe results are bit-identical
     assert(spark.read.parquet(dir).count() === embs.count())
     val probeAfter = VectorOps.ivfProbeIndex(spark, dir, cents, "vec_id", query, 10, nProbe = 3)

@@ -1,59 +1,9 @@
 package graft.streaming
 
-import graft.{Tables, TestSpark}
+import graft.{FaultyFs, Tables, TestSpark}
 import graft.ops.LexIndex
-import org.apache.hadoop.fs.{FSDataOutputStream, Path, RawLocalFileSystem}
-import org.apache.hadoop.fs.permission.FsPermission
-import org.apache.hadoop.util.Progressable
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-
-/** The local filesystem under the `faulty://` scheme, failing the next
-  * file creation or rename whose path matches [[FaultyFs.failOnce]] —
-  * a crash at one chosen filesystem mutation, with every write before
-  * it durable.
-  */
-class FaultyFs extends RawLocalFileSystem {
-  override def getUri: java.net.URI = java.net.URI.create("faulty:///")
-  override def getScheme: String = "faulty"
-
-  override def create(f: Path, overwrite: Boolean, bufferSize: Int,
-      replication: Short, blockSize: Long, progress: Progressable)
-      : FSDataOutputStream = {
-    FaultyFs.check("create", f)
-    super.create(f, overwrite, bufferSize, replication, blockSize, progress)
-  }
-
-  override def create(f: Path, permission: FsPermission, overwrite: Boolean,
-      bufferSize: Int, replication: Short, blockSize: Long,
-      progress: Progressable): FSDataOutputStream = {
-    FaultyFs.check("create", f)
-    super.create(f, permission, overwrite, bufferSize, replication,
-      blockSize, progress)
-  }
-
-  override def rename(src: Path, dst: Path): Boolean = {
-    FaultyFs.check("rename", dst)
-    super.rename(src, dst)
-  }
-}
-
-object FaultyFs {
-  @volatile private var armed: Option[(String, String => Boolean)] = None
-
-  /** Fail the next `op` ("create" or "rename") on a path matching `hit`. */
-  def failOnce(op: String)(hit: String => Boolean): Unit =
-    armed = Some(op -> hit)
-
-  private def check(op: String, p: Path): Unit = synchronized {
-    armed.foreach { case (o, hit) =>
-      if (o == op && hit(p.toString)) {
-        armed = None
-        throw new java.io.IOException(s"injected $op failure at $p")
-      }
-    }
-  }
-}
 
 class StagedPublishCrashSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -63,8 +13,7 @@ class StagedPublishCrashSpec extends AnyFunSuite {
 
   /** A BM25 index over the base docs, under the `faulty://` scheme. */
   private def bootstrap(tag: String): String = {
-    spark.sparkContext.hadoopConfiguration
-      .set("fs.faulty.impl", classOf[FaultyFs].getName)
+    FaultyFs.install(spark)
     val tmp = java.nio.file.Files.createTempDirectory(s"graft-publish-$tag")
     val root = s"faulty://$tmp/idx"
     LexIndex.bm25WriteIndex(docs.filter(col("doc_id") % 3 === 0),
