@@ -24,7 +24,7 @@ object Bench {
       "q41_stream_dedup", "q62_stream_join", "q69_stream_enrich",
       // q104/q110 are also real micro-batch runs (stage + 4-batch
       // stream + probe) — they join the streaming section below; their
-      // batch twins (ivfAppendIndex/pqIvfAppendIndex + probe, the
+      // batch twins (IvfTarget/PqIvfTarget append + probe, the
       // identical data paths) are what SimilaritySpec/PqSpec pin and
       // what q39/q108 bench.
       "q104_stream_ivf", "q110_stream_ivfpq",

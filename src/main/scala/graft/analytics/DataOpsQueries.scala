@@ -573,8 +573,8 @@ object DataOpsQueries {
             StructField("embedding", ArrayType(FloatType)))))
           .option("maxFilesPerTrigger", "1")
           .parquet(src)
-        val q = graft.streaming.VectorIndexStream
-          .pqIndexSink(stream, "vec_id", "embedding", idx, model, cents)
+        val q = graft.streaming.VectorIndexStream.indexSink(stream,
+            "vec_id", CorpusUpsert.PqIvfTarget(idx, "embedding", model, cents))
           .option("checkpointLocation", ckpt)
           .trigger(Trigger.AvailableNow())
           .start()
@@ -620,8 +620,8 @@ object DataOpsQueries {
             StructField("embedding", ArrayType(FloatType)))))
           .option("maxFilesPerTrigger", "1")
           .parquet(src)
-        val q = graft.streaming.VectorIndexStream
-          .indexSink(stream, "vec_id", "embedding", idx, cents)
+        val q = graft.streaming.VectorIndexStream.indexSink(stream,
+            "vec_id", CorpusUpsert.IvfTarget(idx, "embedding", cents))
           .option("checkpointLocation", ckpt)
           .trigger(Trigger.AvailableNow())
           .start()
@@ -6098,7 +6098,8 @@ object DataOpsQueries {
 
     // The streaming perceptual-hash INDEX in the gate (round-14 Next
     // #3): stub phash codes arrive as micro-batches
-    // (HammingIndexStream.indexSink — the ledgered append machinery
+    // (VectorIndexStream.indexSink of a HammingTarget — the ledgered
+    // append machinery
     // PhashStream/AudioHashStream delegate to after their decode
     // step), building the persisted MIH index under a fixed geometry;
     // then a TAKEDOWN lands (HammingIndex.Layout.delete) and the index is
@@ -6169,8 +6170,8 @@ object DataOpsQueries {
             StructField("doc_id", LongType),
             StructField("phash_diff", ArrayType(DoubleType)))))
           .option("maxFilesPerTrigger", "1").parquet(src)
-        val q = graft.streaming.HammingIndexStream
-          .indexSink(stream, "doc_id", "phash_diff", idx)
+        val q = graft.streaming.VectorIndexStream.indexSink(stream,
+            "doc_id", CorpusUpsert.HammingTarget(idx, "phash_diff"))
           .option("checkpointLocation", ckpt)
           .trigger(Trigger.AvailableNow())
           .start()
@@ -6839,7 +6840,7 @@ object DataOpsQueries {
     // The streaming FRAME index in the gate (the 14th real stream) —
     // the live half of the cross-modal probe: stub frame codes arrive
     // as micro-batches under their composite fid = vid·64 + slot keys
-    // (HammingIndexStream.indexSink — the same ledgered append q219
+    // (VectorIndexStream.indexSink — the same ledgered append q219
     // pins for whole-object codes), building the persisted 256-bit MIH
     // index; a TAKEDOWN lands (every frame of the banned videos,
     // HammingIndex.Layout.delete) and the q226 probe library queries
@@ -6934,8 +6935,8 @@ object DataOpsQueries {
               StructField("fid", LongType),
               StructField("frame_diff", ArrayType(DoubleType)))))
             .option("maxFilesPerTrigger", "1").parquet(src)
-          val q = graft.streaming.HammingIndexStream
-            .indexSink(stream, "fid", "frame_diff", idx)
+          val q = graft.streaming.VectorIndexStream.indexSink(stream,
+              "fid", CorpusUpsert.HammingTarget(idx, "frame_diff"))
             .option("checkpointLocation", ckpt)
             .trigger(Trigger.AvailableNow())
             .start()

@@ -1006,8 +1006,8 @@ object UpsertQueries {
         NearDupIndex.neardupWriteIndex(d.filter(col("doc_id") % 2 === 0),
           "doc_id", "text", root.toString, shingleN = 3, numHashes = 32,
           bands = 8, nBuckets = 32, nDocBuckets = 16)
-        NearDupIndex.neardupAppendIndex(d.filter(col("doc_id") % 2 === 1),
-          "doc_id", "text", root.toString)
+        CorpusUpsert.NearDupTarget(root.toString, "text")
+          .append(d.filter(col("doc_id") % 2 === 1), "doc_id")
         NearDupIndex.neardupProbeIndex(s, d, "doc_id", "text",
             root.toString, threshold = 0.5, maxBucket = 1000,
             pruneDocLookup = false, pruneListing = false)

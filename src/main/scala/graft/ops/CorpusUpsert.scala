@@ -37,8 +37,9 @@ import org.apache.spark.sql.functions._
   *      index rows into a staging dir that MIRRORS the index layout
   *      (`_graft_staged` marker once complete), then PUBLISH by
   *      renaming each staged file to a deterministic batch-keyed name
-  *      inside the live index, tombstone the superseded rids, and
-  *      drop the `applied-<index>` marker.
+  *      inside the live index, tombstone the superseded rids (a keyed
+  *      publish of its own, marker `tombstoned-<index>`), and drop the
+  *      `applied-<index>` marker.
   *   4. Drop the batch `done` marker.
   *
   * Exactly-once under redelivery, by construction: the per-target
@@ -59,11 +60,11 @@ import org.apache.spark.sql.functions._
   * re-publishing renames only the staged files still present (each
   * rename is a per-file atomic move to a name derived from the staged
   * file's own name, so a half-published stage completes without
-  * duplicating the files already moved). Tombstone re-adds are legal
-  * duplicates by the [[Tombstones]] contract. This is strictly
-  * stronger than a mode("append") retry, whose multi-job commit can
-  * leave a torn batch no marker protocol can repair (BM25's append is
-  * two writes — postings and doclen).
+  * duplicating the files already moved). The superseded-rid
+  * tombstones publish the same way, so they too land once. This is
+  * strictly stronger than a mode("append") retry, whose multi-job
+  * commit can leave a torn batch no marker protocol can repair (BM25's
+  * append is two writes — postings and doclen).
   *
   * Crash-recovery order (documented contract): re-run the SAME
   * `applyBatch` call until it returns. Serialization: one apply at a
@@ -117,32 +118,89 @@ object CorpusUpsert {
 
   def revOf(rid: Column): Column = rid.bitwiseAND(lit(MaxRev.toLong))
 
-  /** One coordinated index: its root, its [[IndexLayout]], and `stage`,
-    * the family's delta writer (the same one its public append uses),
-    * which writes the delta's rows (keyed by [[RidCol]]) under a
-    * staging root mirroring that layout. The tombstone delete of
-    * superseded rids (idempotent under re-runs by the [[Tombstones]]
-    * dedup contract), the quiesced-window purge and the compaction are
-    * the layout's own.
+  /** The one write handle of a persisted index: its root, its
+    * [[IndexLayout]], and `stage`, the family's delta writer, which
+    * writes a delta's rows (keyed by `idCol`) under a staging root
+    * mirroring that layout. Rows reach the live index through one of
+    * three doors, which differ only in which publish runs the stage:
+    *
+    *   - [[append]]: a one-off [[IndexLayout.append]] under a fresh key;
+    *   - [[graft.streaming.VectorIndexStream.appendBatch]] /
+    *     `indexSink`: the keyed, ledgered publish of a micro-batch;
+    *   - [[applyBatch]]: the coordinated upsert, keyed by [[RidCol]].
+    *
+    * Every door appends NEW ids only — a revision goes through
+    * [[applyBatch]], a removal through the layout's tombstone delete,
+    * quiesced-window purge and compaction. A delta lands under a fixed
+    * geometry: the IVF targets carry theirs (centroids, PQ model), and
+    * BM25, Hamming and near-dup read the root's `meta/`, so their
+    * index must already exist (the family's build, possibly over an
+    * empty frame).
+    *
+    * 100 TB shape, for every family: one map-only pass over the delta
+    * plus a stage write co-partitioned with the layout (≤ one file per
+    * touched directory) and one rename per staged file — the existing
+    * index is never read, let alone re-shuffled.
     */
   sealed trait IndexTarget {
     def name: String
     def path: String
     private[ops] def layout: IndexLayout
-    private[ops] def stage(delta: DataFrame, stageDir: String): Unit
+    private[graft] def stage(
+        delta: DataFrame, idCol: String, stageDir: String): Unit
+
+    /** Publish `delta`'s rows (keyed by `idCol`) into the live index
+      * in one [[IndexLayout.append]]: every sub-relation is written
+      * before any of its files becomes visible. Exactly-once across
+      * crashes needs a keyed publish — the stream door or
+      * [[applyBatch]].
+      */
+    def append(delta: DataFrame, idCol: String): Unit =
+      IndexLayout.append(delta.sparkSession, path)(stage(delta, idCol, _))
   }
 
+  /** The exact IVF layout ([[VectorOps.ivfWriteIndex]]): each new
+    * vector is assigned to its nearest EXISTING centroid (map-only — the
+    * centroid table rides the plan as literals) and lands in the
+    * matching `cluster=` partitions. Centroids are frozen, the standard
+    * IVF maintenance trade: every earlier AND later probe routes against
+    * the same cut of the space, so probe results over the appended
+    * index are IDENTICAL to an index written from scratch with the same
+    * centroids (SimilaritySpec pins this); the cost is assignment drift
+    * if the delta's distribution wanders from the fit corpus — re-fit
+    * and rebuild when recall decays, exactly like any vector store.
+    *
+    * Compaction is a separate, explicit `IvfLayout.compact` call: the
+    * measured probe-vs-litter curve (SCALE.md `ivf_litter`: 98 ms
+    * fresh → 206 ms at 33 files/cluster, pure per-file reader
+    * overhead) says compaction CADENCE, not index size, governs probe
+    * latency, and compaction's publish protocol wants QUIESCED probes
+    * (a reader listing a cluster mid-rename can see a partial file
+    * set) — so a steady-state deployment compacts in its maintenance
+    * window, while an append is always safe next to probes.
+    */
   final case class IvfTarget(
       path: String,
       vecCol: String,
       centroids: Array[Array[Double]],
       name: String = "ivf") extends IndexTarget {
     private[ops] def layout = VectorOps.IvfLayout
-    private[ops] def stage(delta: DataFrame, stageDir: String): Unit =
-      VectorOps.ivfWriteDelta(delta, RidCol, vecCol, path, stageDir,
+    private[graft] def stage(
+        delta: DataFrame, idCol: String, stageDir: String): Unit =
+      VectorOps.ivfWriteDelta(delta, idCol, vecCol, path, stageDir,
         centroids)
   }
 
+  /** The IVF-PQ layout ([[Pq.pqIvfWriteIndex]]) — the compressed twin
+    * of [[IvfTarget]]. Both the coarse centroids AND the PQ model are
+    * frozen — the sub-codebooks are part of the index's geometry
+    * exactly like the centroid cut, so a row's codes are a pure
+    * function of its vector: an appended index is BIT-IDENTICAL in
+    * content to one rebuilt from scratch over the same rows (PqSpec
+    * pins probe identity through [[Pq.pqIvfProbeFrom]]). Re-fit model +
+    * centroids and rebuild offline when recall decays. The rest of the
+    * lifecycle is the exact path's [[VectorOps.IvfLayout]].
+    */
   final case class PqIvfTarget(
       path: String,
       vecCol: String,
@@ -150,42 +208,60 @@ object CorpusUpsert {
       centroids: Array[Array[Double]],
       name: String = "pqivf") extends IndexTarget {
     private[ops] def layout = VectorOps.IvfLayout
-    private[ops] def stage(delta: DataFrame, stageDir: String): Unit =
-      Pq.pqIvfWriteDelta(delta, RidCol, vecCol, path, stageDir, model,
+    private[graft] def stage(
+        delta: DataFrame, idCol: String, stageDir: String): Unit =
+      Pq.pqIvfWriteDelta(delta, idCol, vecCol, path, stageDir, model,
         centroids)
   }
 
+  /** The BM25 layout ([[LexIndex.bm25WriteIndex]]): a delta's postings
+    * and doclen land under the index's persisted bucket fanout, so a
+    * stream- or append-built index is row-identical to a batch build
+    * over the same documents (LexIndexSpec pins stream ≡ batch probe
+    * scores).
+    */
   final case class Bm25Target(
       path: String,
       textCol: String,
       name: String = "bm25") extends IndexTarget {
     private[ops] def layout = LexIndex.Layout
-    private[ops] def stage(delta: DataFrame, stageDir: String): Unit =
-      LexIndex.writeDelta(delta, RidCol, textCol, path, stageDir)
+    private[graft] def stage(
+        delta: DataFrame, idCol: String, stageDir: String): Unit =
+      LexIndex.writeDelta(delta, idCol, textCol, path, stageDir)
   }
 
+  /** The multi-index Hamming layout ([[HammingIndex.hammingWriteIndex]],
+    * built with an explicit `dim`): a delta's band rows land under the
+    * persisted band geometry. Also the index the perceptual-hash
+    * streams ([[graft.streaming.PhashStream]] and its audio and video
+    * twins) stage their decoded codes through.
+    */
   final case class HammingTarget(
       path: String,
       vecCol: String,
       name: String = "hamming") extends IndexTarget {
     private[ops] def layout = HammingIndex.Layout
-    private[ops] def stage(delta: DataFrame, stageDir: String): Unit =
-      HammingIndex.writeDelta(delta, RidCol, vecCol, path, stageDir)
+    private[graft] def stage(
+        delta: DataFrame, idCol: String, stageDir: String): Unit =
+      HammingIndex.writeDelta(delta, idCol, vecCol, path, stageDir)
   }
 
-  /** The [[NearDupIndex]] MinHash-LSH layout as a coordinated target:
-    * a revision's bucket+shingle rows stage under the persisted
-    * geometry and the superseded rid tombstones out, so the ingest
-    * dedup gate ([[NearDupIndex.dedupGate]]) always judges against the
-    * corpus's CURRENT revisions.
+  /** The [[NearDupIndex]] MinHash-LSH layout: a delta's bucket+shingle
+    * rows land under the persisted geometry. As an [[applyBatch]]
+    * target the superseded rid tombstones out, so the ingest dedup
+    * gate ([[NearDupIndex.dedupGate]]) always judges against the
+    * corpus's CURRENT revisions; as a stream it is the arrival half of
+    * the incremental-dedup loop — a gate job probes each incoming batch
+    * and routes only the KEPT docs into this index.
     */
   final case class NearDupTarget(
       path: String,
       textCol: String,
       name: String = "neardup") extends IndexTarget {
     private[ops] def layout = NearDupIndex.Layout
-    private[ops] def stage(delta: DataFrame, stageDir: String): Unit =
-      NearDupIndex.writeDelta(delta, RidCol, textCol, path, stageDir)
+    private[graft] def stage(
+        delta: DataFrame, idCol: String, stageDir: String): Unit =
+      NearDupIndex.writeDelta(delta, idCol, textCol, path, stageDir)
   }
 
   final case class UpsertReport(
@@ -395,12 +471,18 @@ object CorpusUpsert {
         IndexLayout.publish(spark, t.path,
           new Path(batchDir, s"stage-${t.name}"), key,
           new Path(batchDir, s"applied-${t.name}"),
-          // an all-inserts batch (the bootstrap case) tombstones nothing;
-          // skipping the write keeps the index tombstone-free, so probes
-          // keep their fast no-tombstone path
+          // the superseded rids tombstone out through their own keyed
+          // publish, so a retry after a crash before `applied` never
+          // lands them twice. An all-inserts batch (the bootstrap case)
+          // tombstones nothing; skipping the write keeps the index
+          // tombstone-free, so probes keep their fast no-tombstone path
           afterPublish = () =>
-            if (nUpd > 0) t.layout.delete(oldRids, RidCol, t.path))(
-          t.stage(withRid, _))
+            if (nUpd > 0)
+              IndexLayout.publish(spark, Tombstones.dir(t.path),
+                new Path(batchDir, s"stage-${t.name}-tombs"), key,
+                new Path(batchDir, s"tombstoned-${t.name}"))(
+                Tombstones.write(oldRids, RidCol, _)))(
+          t.stage(withRid, RidCol, _))
       }
       IndexLayout.touch(fs, doneMarker)
       // never fold on a BACKFILL re-apply (the batch was already done, so

@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   *     ([[VectorOps.BandSpec]]), persisted so append/probe can never
   *     split a code differently than the index was written under.
   *
-  * Append contract (the [[VectorOps.ivfAppendIndex]] one): delta ids
+  * Append contract (every [[CorpusUpsert.IndexTarget]]'s): delta ids
   * are NEW — band rows stay unique per (band, id), so append ≡
   * from-scratch rebuild gives identical probe results (HammingSpec
   * pins it). `Layout.compact` folds append litter in place via the
@@ -85,20 +85,8 @@ object HammingIndex {
       nBuckets), nBands * nBuckets, col(idCol), Bands.cols: _*), path)
   }
 
-  /** Append a delta of NEW vectors (new ids) under the persisted band
-    * geometry: [[writeDelta]] staged and published into the live index
-    * by [[IndexLayout.append]].
-    */
-  def hammingAppendIndex(
-      delta: DataFrame,
-      idCol: String,
-      vecCol: String,
-      path: String): Unit =
-    IndexLayout.append(delta.sparkSession, path)(
-      writeDelta(delta, idCol, vecCol, path, _))
-
-  /** The family's one delta writer, behind [[hammingAppendIndex]], the
-    * streaming sinks and [[CorpusUpsert.HammingTarget]]: the delta's
+  /** The family's one delta writer, behind [[CorpusUpsert.HammingTarget]]
+    * (every append door, and the perceptual-hash streams): the delta's
     * band rows under the index at `indexPath`'s persisted geometry,
     * written to `stagePath` in the index layout (`bands/band=/bb=`).
     * The band rows co-partition with the (band, bb) directory layout
@@ -110,7 +98,7 @@ object HammingIndex {
     * the eventual compaction of 65k files cost 113 s — the shuffle it
     * adds is delta-sized.
     */
-  private[graft] def writeDelta(
+  private[ops] def writeDelta(
       delta: DataFrame,
       idCol: String,
       vecCol: String,

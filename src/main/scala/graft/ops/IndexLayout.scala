@@ -35,12 +35,13 @@ import org.apache.spark.sql.types.StructType
   * Rows enter or leave a live index ONE way, [[IndexLayout.publish]]:
   * each family's delta writer stages the rows under a directory that
   * mirrors the layout, and the publish renames them in under
-  * batch-keyed names. [[CorpusUpsert.applyBatch]], the public
-  * `*AppendIndex` calls ([[IndexLayout.append]]) and the streaming
-  * sinks differ only in where the stage lives, which key names the
-  * files and which marker says the batch is done. A rewrite
-  * ([[compact]], [[purge]]) is the same publish of a stage at the
-  * root's fixed `_graft_stage/rewrite`, whose last step deletes the
+  * batch-keyed names. A family's delta writer has one caller, its
+  * [[CorpusUpsert.IndexTarget]], whose three doors — the one-off
+  * `append` ([[IndexLayout.append]]), the stream sink and
+  * [[CorpusUpsert.applyBatch]] — differ only in where the stage lives,
+  * which key names the files and which marker says the batch is done.
+  * A rewrite ([[compact]], [[purge]]) is the same publish of a stage at
+  * the root's fixed `_graft_stage/rewrite`, whose last step deletes the
   * files the staged rows replace ([[Compaction.publishRewrite]]).
   */
 final case class IndexLayout(name: String, subDirs: Seq[IndexLayout.SubDir]) {

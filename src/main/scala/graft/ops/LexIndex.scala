@@ -25,7 +25,7 @@ import org.apache.spark.sql.functions._
   *     append/probe can never hash terms into a different layout than
   *     the index was written under.
   *
-  * Append contract (the [[VectorOps.ivfAppendIndex]] one): delta doc
+  * Append contract (every [[CorpusUpsert.IndexTarget]]'s): delta doc
   * ids are NEW — postings/doclen rows stay unique per (term, doc) and
   * (doc), so append ≡ from-scratch rebuild gives identical probe
   * scores (LexIndexSpec pins it, plus probe ≡ the scan-path
@@ -118,21 +118,6 @@ object LexIndex {
     writeParts(docs, idCol, textCol, path, buckets, positional)(identity)
   }
 
-  /** Append a delta of NEW documents (new ids — the ivfAppendIndex
-    * contract): [[writeDelta]] staged and published into the live
-    * index by [[IndexLayout.append]], so both sub-relations are
-    * written before any of their files becomes visible. Exactly-once
-    * across crashes needs a keyed publish — the stream sink
-    * ([[graft.streaming.LexIndexStream]]) or [[CorpusUpsert]].
-    */
-  def bm25AppendIndex(
-      delta: DataFrame,
-      idCol: String,
-      textCol: String,
-      path: String): Unit =
-    IndexLayout.append(delta.sparkSession, path)(
-      writeDelta(delta, idCol, textCol, path, _))
-
   /** (buckets, positional) in ONE cached read ([[MetaCache]] — a probe
     * used to pay one or two Spark head() jobs per call to re-learn the
     * layout geometry). Indexes written before the positional layout
@@ -154,8 +139,8 @@ object LexIndex {
   private def readPositional(spark: SparkSession, path: String): Boolean =
     readMeta(spark, path)._2
 
-  /** The family's one delta writer, behind [[bm25AppendIndex]], the
-    * streaming sink and [[CorpusUpsert.Bm25Target]]: the delta's
+  /** The family's one delta writer, behind [[CorpusUpsert.Bm25Target]]
+    * (every append door): the delta's
     * postings/doclen rows under the index at `indexPath`'s
     * persisted bucket fanout and positional flag (an appended batch can
     * never disagree with the layout it lands in), written to
@@ -164,7 +149,7 @@ object LexIndex {
     * instead of tasks×buckets, the [[HammingIndex.writeDelta]]
     * steady-state treatment; the shuffle is delta-sized.
     */
-  private[graft] def writeDelta(
+  private[ops] def writeDelta(
       delta: DataFrame,
       idCol: String,
       textCol: String,

@@ -107,20 +107,8 @@ object NearDupIndex {
       DirLayout.toDirs(rows, dirs, col(idCol), sub.cols: _*))
   }
 
-  /** Append a delta of NEW documents under the persisted geometry:
-    * [[writeDelta]] staged and published into the live index by
-    * [[IndexLayout.append]].
-    */
-  def neardupAppendIndex(
-      delta: DataFrame,
-      idCol: String,
-      textCol: String,
-      path: String): Unit =
-    IndexLayout.append(delta.sparkSession, path)(
-      writeDelta(delta, idCol, textCol, path, _))
-
-  /** The family's one delta writer, behind [[neardupAppendIndex]], the
-    * streaming sink and [[CorpusUpsert.NearDupTarget]]: the delta's
+  /** The family's one delta writer, behind [[CorpusUpsert.NearDupTarget]]
+    * (every append door): the delta's
     * bucket and docs rows under the index at `indexPath`'s persisted
     * geometry, written to `stagePath` in the index layout. Rows
     * co-partition with the directory layout first — ≤ one file per
@@ -128,7 +116,7 @@ object NearDupIndex {
     * [[HammingIndex.writeDelta]] steady-state treatment; its measured
     * litter curve applies verbatim to this layout).
     */
-  private[graft] def writeDelta(
+  private[ops] def writeDelta(
       delta: DataFrame,
       idCol: String,
       textCol: String,
@@ -348,7 +336,7 @@ object NearDupIndex {
     * Batch ids must be NEW (the family's append contract; under
     * [[CorpusUpsert]] the rid key guarantees it).
     *
-    * The caller appends the kept docs ([[neardupAppendIndex]]) —
+    * The caller appends the kept docs ([[CorpusUpsert.NearDupTarget]]) —
     * gate + append is the incremental-dedup loop that replaces
     * re-mining pairs over corpus+batch from scratch.
     */

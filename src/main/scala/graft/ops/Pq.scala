@@ -229,43 +229,12 @@ object Pq {
       path)
   }
 
-  /** Append a vector delta to a persisted IVF-PQ index — the
-    * compressed twin of [[VectorOps.ivfAppendIndex]], closing the one
-    * gap in the streaming-corpus story (the exact index had append ≡
-    * rebuild; the PQ layout was overwrite-only). Both the coarse
-    * centroids AND the PQ model are frozen — the sub-codebooks are part
-    * of the index's geometry exactly like the centroid cut, so a row's
-    * codes are a pure function of its vector: an appended index is
-    * BIT-IDENTICAL in content to one rebuilt from scratch over the same
-    * rows (PqSpec pins probe identity through [[pqIvfProbeFrom]]).
-    * Re-fit model + centroids and rebuild offline when recall decays,
-    * as with any vector store.
-    *
-    * 100 TB shape: one map-only assign+encode pass over the delta plus
-    * a partitioned stage write ([[pqIvfWriteDelta]]) published by
-    * [[IndexLayout.append]] — the existing index is never read. The
-    * delta's `dv` is aligned to the index's recorded element type (same
-    * parquet single-type-per-relation constraint, same driver-side
-    * footer read as the exact path). The rest of the lifecycle — delete,
-    * purge, compaction — is the exact path's [[VectorOps.IvfLayout]]:
-    * the two layouts are the same `cluster=` partitioning.
-    */
-  def pqIvfAppendIndex(
-      delta: DataFrame,
-      idCol: String,
-      vecCol: String,
-      path: String,
-      model: PqModel,
-      centroids: Array[Array[Double]]): Unit =
-    IndexLayout.append(delta.sparkSession, path)(
-      pqIvfWriteDelta(delta, idCol, vecCol, path, _, model, centroids))
-
-  /** The compressed family's delta writer, behind [[pqIvfAppendIndex]],
-    * the streaming sink and [[CorpusUpsert.PqIvfTarget]]:
+  /** The compressed family's delta writer, behind
+    * [[CorpusUpsert.PqIvfTarget]] (every append door):
     * [[VectorOps.ivfWriteDelta]] plus the frozen-model PQ codes (same
     * null-codes drop contract as every PQ write).
     */
-  private[graft] def pqIvfWriteDelta(
+  private[ops] def pqIvfWriteDelta(
       delta: DataFrame,
       idCol: String,
       vecCol: String,
@@ -273,7 +242,7 @@ object Pq {
       stagePath: String,
       model: PqModel,
       centroids: Array[Array[Double]]): Unit = {
-    require(centroids.nonEmpty, "pqIvfAppendIndex: empty centroid table")
+    require(centroids.nonEmpty, "PqIvfTarget: empty centroid table")
     VectorOps.writeClusterRows(
       codedRows(delta, idCol, vecCol, model, centroids),
       indexPath, stagePath, centroids.length)

@@ -71,6 +71,16 @@ object Tombstones {
     ids.select(col(idCol)).distinct()
       .write.mode("append").parquet(dir(indexRoot))
 
+  /** Write `ids` (deduplicated) as tombstone rows to `stageDir` — the
+    * stage of a keyed [[IndexLayout.publish]] into [[dir]], which lands
+    * a batch's tombstones exactly once (the delete stream,
+    * [[CorpusUpsert.applyBatch]]'s superseded rids).
+    */
+  private[graft] def write(
+      ids: DataFrame, idCol: String, stageDir: String): Unit =
+    ids.select(col(idCol)).distinct()
+      .write.mode("overwrite").parquet(stageDir)
+
   /** Every tombstone row as written (duplicates included), or None when
     * no delete has ever landed. The listed data files are opened by
     * path ([[IndexLayout.readFiles]]): no schema-inference job, and no

@@ -1899,8 +1899,9 @@ object VectorOps {
     * is |base ∩ occupied clusters| — O(|delta| · cluster slice), never
     * O(|base|²). For a persisted corpus use [[semDedupDeltaIndexed]],
     * which prunes the base scan to the delta's clusters at file
-    * listing; its survivors then [[ivfAppendIndex]] straight back into
-    * the same index — the two calls are the whole steady-state loop.
+    * listing; its survivors then append ([[CorpusUpsert.IvfTarget]])
+    * straight back into the same index — the two calls are the whole
+    * steady-state loop.
     */
   def semDedupDelta(
       base: DataFrame,
@@ -1926,7 +1927,7 @@ object VectorOps {
   }
 
   /** [[semDedupDelta]] with the kept corpus read from a persisted
-    * [[ivfWriteIndex]]/[[ivfAppendIndex]] index instead of a DataFrame:
+    * [[ivfWriteIndex]] index instead of a DataFrame:
     * the index is partitioned by `cluster`, so the base scan is pruned
     * AT FILE LISTING to the clusters the delta actually occupies — a
     * small delta against a 100 TB corpus reads only its own clusters'
@@ -1935,8 +1936,8 @@ object VectorOps {
     * driver collect — index metadata scale, not data scale.
     *
     * `centroids` must be the table the index was built with (same
-    * contract as [[ivfProbeIndex]]). Survivors are the rows to
-    * [[ivfAppendIndex]] back into the same index.
+    * contract as [[ivfProbeIndex]]). Survivors are the rows to append
+    * ([[CorpusUpsert.IvfTarget]]) back into the same index.
     *
     * Assignment here is deliberately FLAT (no `hierThreshold` knob):
     * the delta's cluster ids must match the ids the index was WRITTEN
@@ -2052,53 +2053,19 @@ object VectorOps {
     */
   val IvfLayout: IndexLayout = IndexLayout("ivf", Seq(Clusters))
 
-  /** Append a vector delta to a persisted IVF index: each new vector is
-    * assigned to its nearest EXISTING centroid (map-only — the centroid
-    * table rides the plan as literals) and published into the matching
-    * `cluster=` partitions ([[ivfWriteDelta]] staged, then
-    * [[IndexLayout.append]]). Centroids are frozen, the standard IVF
-    * maintenance trade: every earlier AND later probe routes against
-    * the same cut of the space, so probe results over the appended
-    * index are IDENTICAL to an index written from scratch with the same
-    * centroids (SimilaritySpec pins this); the cost is assignment drift
-    * if the delta's distribution wanders from the fit corpus — re-fit
-    * and rebuild when recall decays, exactly like any vector store.
-    *
-    * 100 TB shape: the delta is one map-only pass + a partitioned
-    * stage write and one rename per staged file; the existing index is
-    * never read, let alone re-shuffled.
-    *
-    * Compaction is a separate, explicit `IvfLayout.compact` call: the
-    * measured probe-vs-litter curve (SCALE.md `ivf_litter`: 98 ms
-    * fresh → 206 ms at 33 files/cluster, pure per-file reader
-    * overhead) says compaction CADENCE, not index size, governs probe
-    * latency, and compaction's publish protocol wants QUIESCED probes
-    * (a reader listing a cluster mid-rename can see a partial file
-    * set) — so a steady-state deployment compacts in its maintenance
-    * window, while the append itself is always safe next to probes.
+  /** The exact family's delta writer, behind [[CorpusUpsert.IvfTarget]]
+    * (every append door): the delta's index rows, cluster-assigned
+    * under the index's frozen centroids, written to `stagePath` in the
+    * index layout ([[writeClusterRows]]).
     */
-  def ivfAppendIndex(
-      delta: DataFrame,
-      idCol: String,
-      vecCol: String,
-      path: String,
-      centroids: Array[Array[Double]]): Unit =
-    IndexLayout.append(delta.sparkSession, path)(
-      ivfWriteDelta(delta, idCol, vecCol, path, _, centroids))
-
-  /** The exact family's delta writer, behind [[ivfAppendIndex]], the
-    * streaming sink and [[CorpusUpsert.IvfTarget]]: the delta's index
-    * rows, cluster-assigned under the index's frozen centroids, written
-    * to `stagePath` in the index layout ([[writeClusterRows]]).
-    */
-  private[graft] def ivfWriteDelta(
+  private[ops] def ivfWriteDelta(
       delta: DataFrame,
       idCol: String,
       vecCol: String,
       indexPath: String,
       stagePath: String,
       centroids: Array[Array[Double]]): Unit = {
-    require(centroids.nonEmpty, "ivfAppendIndex: empty centroid table")
+    require(centroids.nonEmpty, "IvfTarget: empty centroid table")
     writeClusterRows(
       assignClusters(delta, vecCol, indexedCents(centroids))
         .select(col(idCol), col("dv"), col("nrm"), col("cluster")),

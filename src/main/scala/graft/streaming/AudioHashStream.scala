@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.ops.{AudioHash, HammingIndex}
+import graft.ops.{AudioHash, CorpusUpsert}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.streaming.DataStreamWriter
 
@@ -37,7 +37,8 @@ object AudioHashStream {
       streamId: String = ""): Boolean =
     VectorIndexStream.publishBatch(batch, batchId, path, streamId) { stage =>
       val (codes, _) = AudioHash.audioFingerprint(batch, idCol, payloadCol)
-      HammingIndex.writeDelta(codes.toDF(), "id", "fp_diff", path, stage)
+      CorpusUpsert.HammingTarget(path, "fp_diff")
+        .stage(codes.toDF(), "id", stage)
     }
 
   /** The stream writer: attach a checkpoint + trigger and `.start()`. */
@@ -46,9 +47,6 @@ object AudioHashStream {
       idCol: String,
       payloadCol: String,
       path: String): DataStreamWriter[Row] =
-    stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      appendBatch(batch, batchId, idCol, payloadCol, path,
-        VectorIndexStream.runningQueryId(batch))
-      ()
-    }
+    VectorIndexStream.sink(stream)(
+      appendBatch(_, _, idCol, payloadCol, path, _))
 }

@@ -49,9 +49,5 @@ object CorpusUpsertStream {
       docCol: String,
       root: String,
       targets: Seq[CorpusUpsert.IndexTarget]): DataStreamWriter[Row] =
-    stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      applyBatch(batch, batchId, docCol, root, targets,
-        VectorIndexStream.runningQueryId(batch))
-      ()
-    }
+    VectorIndexStream.sink(stream)(applyBatch(_, _, docCol, root, targets, _))
 }

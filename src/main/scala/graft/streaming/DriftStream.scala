@@ -37,9 +37,5 @@ object DriftStream {
       stream: DataFrame,
       valueCol: String,
       path: String): DataStreamWriter[Row] =
-    stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      appendBatch(batch, batchId, valueCol, path,
-        VectorIndexStream.runningQueryId(batch))
-      ()
-    }
+    VectorIndexStream.sink(stream)(appendBatch(_, _, valueCol, path, _))
 }

@@ -42,11 +42,7 @@ object ExpectationsStream {
       stream: DataFrame,
       checks: Seq[Expectations.Check],
       path: String): DataStreamWriter[Row] =
-    stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      appendBatch(batch, batchId, checks, path,
-        VectorIndexStream.runningQueryId(batch))
-      ()
-    }
+    VectorIndexStream.sink(stream)(appendBatch(_, _, checks, path, _))
 
   /** Totals + pass/fail over everything appended so far — delegates to
     * [[graft.ops.Expectations.readReport]].

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.ops.{HammingIndex, Phash}
+import graft.ops.{CorpusUpsert, Phash}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.streaming.DataStreamWriter
 
@@ -36,7 +36,8 @@ object PhashStream {
       streamId: String = ""): Boolean =
     VectorIndexStream.publishBatch(batch, batchId, path, streamId) { stage =>
       val (codes, _) = Phash.imageDHash(batch, idCol, payloadCol)
-      HammingIndex.writeDelta(codes.toDF(), "id", "phash_diff", path, stage)
+      CorpusUpsert.HammingTarget(path, "phash_diff")
+        .stage(codes.toDF(), "id", stage)
     }
 
   /** The stream writer: attach a checkpoint + trigger and `.start()`. */
@@ -45,9 +46,6 @@ object PhashStream {
       idCol: String,
       payloadCol: String,
       path: String): DataStreamWriter[Row] =
-    stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      appendBatch(batch, batchId, idCol, payloadCol, path,
-        VectorIndexStream.runningQueryId(batch))
-      ()
-    }
+    VectorIndexStream.sink(stream)(
+      appendBatch(_, _, idCol, payloadCol, path, _))
 }

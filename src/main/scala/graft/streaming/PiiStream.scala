@@ -36,9 +36,6 @@ object PiiStream {
       groupCol: String,
       textCol: String,
       path: String): DataStreamWriter[Row] =
-    stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      appendBatch(batch, batchId, groupCol, textCol, path,
-        VectorIndexStream.runningQueryId(batch))
-      ()
-    }
+    VectorIndexStream.sink(stream)(
+      appendBatch(_, _, groupCol, textCol, path, _))
 }

@@ -28,11 +28,7 @@ object Scd2Stream {
 
   /** The stream writer: attach a checkpoint + trigger and `.start()`. */
   def changeSink(stream: DataFrame, path: String): DataStreamWriter[Row] =
-    stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      appendBatch(batch, batchId, path,
-        VectorIndexStream.runningQueryId(batch))
-      ()
-    }
+    VectorIndexStream.sink(stream)(appendBatch(_, _, path, _))
 
   /** Fold the accumulated change log into the current dimension. */
   def readDimension(

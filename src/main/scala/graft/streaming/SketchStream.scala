@@ -42,11 +42,8 @@ object SketchStream {
       valueCol: String,
       path: String,
       lgK: Int = 12): DataStreamWriter[Row] =
-    stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      appendBatch(batch, batchId, groupCols, valueCol, path, lgK,
-        VectorIndexStream.runningQueryId(batch))
-      ()
-    }
+    VectorIndexStream.sink(stream)(
+      appendBatch(_, _, groupCols, valueCol, path, lgK, _))
 
   /** CountMin twin: append one micro-batch's partial cell counts
     * ([[Sketches.cmAgg]] rows are additive — readers re-sum via
@@ -73,11 +70,8 @@ object SketchStream {
       path: String,
       depth: Int = 4,
       width: Int = 2048): DataStreamWriter[Row] =
-    stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      cmAppendBatch(batch, batchId, groupCols, valueCol, path, depth, width,
-        VectorIndexStream.runningQueryId(batch))
-      ()
-    }
+    VectorIndexStream.sink(stream)(
+      cmAppendBatch(_, _, groupCols, valueCol, path, depth, width, _))
 
   /** KLL quantile twin: append one micro-batch's per-group partial
     * sketches ([[Sketches.kllAgg]] rows — readers merge via
@@ -102,11 +96,8 @@ object SketchStream {
       valueCol: String,
       path: String,
       k: Int = 200): DataStreamWriter[Row] =
-    stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      kllAppendBatch(batch, batchId, groupCols, valueCol, path, k,
-        VectorIndexStream.runningQueryId(batch))
-      ()
-    }
+    VectorIndexStream.sink(stream)(
+      kllAppendBatch(_, _, groupCols, valueCol, path, k, _))
 
   /** Theta set-algebra twin: append one micro-batch's per-group partial
     * sketches ([[Sketches.thetaAgg]] rows — readers union via
@@ -131,9 +122,6 @@ object SketchStream {
       valueCol: String,
       path: String,
       lgK: Int = 12): DataStreamWriter[Row] =
-    stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      thetaAppendBatch(batch, batchId, groupCols, valueCol, path, lgK,
-        VectorIndexStream.runningQueryId(batch))
-      ()
-    }
+    VectorIndexStream.sink(stream)(
+      thetaAppendBatch(_, _, groupCols, valueCol, path, lgK, _))
 }

@@ -1,30 +1,32 @@
 package graft.streaming
 
-import graft.ops.{Ckpt, IndexLayout, Pq, VectorOps}
+import graft.ops.{Ckpt, CorpusUpsert, IndexLayout, Tombstones}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.streaming.DataStreamWriter
 
-/** Streaming maintenance of a persisted IVF ANN index
-  * ([[VectorOps.ivfWriteIndex]] layout): each micro-batch of new
-  * vectors is assigned to its nearest FROZEN centroid and published
-  * into the matching `cluster=` partitions. This closes the
-  * vector-store ingestion loop — embeddings arrive as a stream, the
-  * index stays continuously probeable, and probe results are identical
-  * to an index batch-built from the same rows under the same centroids
-  * (frozen-centroid equivalence, pinned in SimilaritySpec).
+/** Streaming maintenance of every persisted index family: each
+  * micro-batch of new rows is staged by the index's one write handle
+  * ([[graft.ops.CorpusUpsert.IndexTarget]] — exact IVF and IVF-PQ
+  * under frozen centroids and model, BM25 under its bucket fanout,
+  * Hamming under its band geometry, near-dup under its banding) and
+  * published into the live index. This closes the ingestion loop —
+  * rows arrive as a stream, the index stays continuously probeable,
+  * and, because every layout is append-pure under its frozen
+  * geometry, a stream-built index probes identically to one
+  * batch-built from the same rows (pinned per family in
+  * SimilaritySpec, PqSpec, LexIndexSpec, HammingSpec and
+  * NearDupIndexSpec, and for all five at once in IndexLayoutSpec).
   *
-  * 100 TB shape: per micro-batch work is one map-only centroid
-  * assignment plus a partitioned stage write and one rename per staged
-  * file — the existing index is never read. Centroids ride the plan as
-  * literals; there is no driver state beyond them. Compaction cadence
-  * (the probe-vs-litter knee, SCALE.md `ivf_litter`) is the only
-  * maintenance concern: its publish protocol wants quiesced probes, so
-  * a steady-state deployment calls `IvfLayout.compact` in its
-  * maintenance window, not mid-stream.
+  * 100 TB shape: per micro-batch work is the target's map-only stage
+  * write plus one rename per staged file — the existing index is never
+  * read. Compaction cadence (the probe-vs-litter knee, SCALE.md
+  * `ivf_litter`) is the only maintenance concern: its publish protocol
+  * wants quiesced probes, so a steady-state deployment calls the
+  * layout's `compact` in its maintenance window, not mid-stream.
   *
   * Exactly-once: foreachBatch is at-least-once (a batch id can be
-  * redelivered after a restart), so every index sink publishes through
+  * redelivered after a restart), so every sink publishes through
   * [[publishBatch]] — [[graft.ops.IndexLayout.publish]] keyed
   * `<streamId>-<batchId>`, staged under the index's underscore-hidden
   * `_graft_stage/`, with the batch ledger entry
@@ -37,7 +39,7 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * restarts of the SAME checkpoint, fresh for a NEW one): pointing a
   * new stream at an existing index restarts batch ids at 0, and
   * without the namespace those ids would collide with the old ledger
-  * and be silently dropped. [[indexSink]] reads the id off the
+  * and be silently dropped. [[sink]] reads the id off the
   * stream-execution thread's `sql.streaming.queryId` local property.
   */
 object VectorIndexStream {
@@ -52,30 +54,10 @@ object VectorIndexStream {
       batch: DataFrame,
       batchId: Long,
       idCol: String,
-      vecCol: String,
-      path: String,
-      centroids: Array[Array[Double]],
+      target: CorpusUpsert.IndexTarget,
       streamId: String = ""): Boolean =
-    publishBatch(batch, batchId, path, streamId)(
-      VectorOps.ivfWriteDelta(batch, idCol, vecCol, path, _, centroids))
-
-  /** [[appendBatch]] for a persisted IVF-PQ index
-    * ([[graft.ops.Pq.pqIvfWriteIndex]] layout): same ledger, same
-    * redelivery contract — codes are computed under the FROZEN model,
-    * so the streamed index stays bit-identical in content to a batch
-    * build over the same rows.
-    */
-  def pqAppendBatch(
-      batch: DataFrame,
-      batchId: Long,
-      idCol: String,
-      vecCol: String,
-      path: String,
-      model: Pq.PqModel,
-      centroids: Array[Array[Double]],
-      streamId: String = ""): Boolean =
-    publishBatch(batch, batchId, path, streamId)(
-      Pq.pqIvfWriteDelta(batch, idCol, vecCol, path, _, model, centroids))
+    publishBatch(batch, batchId, target.path, streamId)(
+      target.stage(batch, idCol, _))
 
   /** The ledger marker of `streamId`/`batchId` under `path`. */
   private def ledgerMarker(path: String, streamId: String, batchId: Long)
@@ -105,44 +87,29 @@ object VectorIndexStream {
   }
 
   /** The stream writer: attach a checkpoint + trigger and `.start()`.
-    * Centroids are frozen for the life of the sink (the IVF maintenance
-    * contract); re-fit and rebuild offline when recall decays.
+    * The target's geometry (centroids, PQ model, the root's `meta/`) is
+    * frozen for the life of the sink; re-fit and rebuild offline when
+    * recall decays.
     */
   def indexSink(
       stream: DataFrame,
       idCol: String,
-      vecCol: String,
-      path: String,
-      centroids: Array[Array[Double]]): DataStreamWriter[Row] =
+      target: CorpusUpsert.IndexTarget): DataStreamWriter[Row] =
+    sink(stream)(appendBatch(_, _, idCol, target, _))
+
+  /** The one `foreachBatch` writer every sink is: `body` gets each
+    * micro-batch, its id and the running query's id — set by
+    * StreamExecution on the micro-batch thread, stable for a checkpoint
+    * lineage, and empty only outside a real stream (a body called
+    * directly), where the flat ledger layout is fine.
+    */
+  private[streaming] def sink(stream: DataFrame)(
+      body: (DataFrame, Long, String) => Any): DataStreamWriter[Row] =
     stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      appendBatch(batch, batchId, idCol, vecCol, path, centroids,
-        runningQueryId(batch))
+      body(batch, batchId, Option(batch.sparkSession.sparkContext
+        .getLocalProperty("sql.streaming.queryId")).getOrElse(""))
       ()
     }
-
-  /** The IVF-PQ sink — [[indexSink]] with the compressed layout.
-    * Model + centroids are frozen for the life of the sink.
-    */
-  def pqIndexSink(
-      stream: DataFrame,
-      idCol: String,
-      vecCol: String,
-      path: String,
-      model: Pq.PqModel,
-      centroids: Array[Array[Double]]): DataStreamWriter[Row] =
-    stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      pqAppendBatch(batch, batchId, idCol, vecCol, path, model, centroids,
-        runningQueryId(batch))
-      ()
-    }
-
-  /** Set by StreamExecution on the micro-batch thread; stable for a
-    * checkpoint lineage. Null only outside a real stream (tests calling
-    * the body directly), where the flat ledger layout is fine.
-    */
-  private[streaming] def runningQueryId(batch: DataFrame): String =
-    Option(batch.sparkSession.sparkContext
-      .getLocalProperty("sql.streaming.queryId")).getOrElse("")
 
   /** Delete streams ledger under `deletes-<streamId>` so a delete
     * stream and an append stream over the SAME index never collide on
@@ -156,7 +123,7 @@ object VectorIndexStream {
     * the streaming half of the [[graft.ops.Tombstones]] delete
     * lifecycle, shared by every index family (a delete is
     * layout-blind: it only adds ids under the root). The rows publish
-    * into [[graft.ops.Tombstones.dir]] itself (the publish walk skips
+    * into [[Tombstones.dir]] itself (the publish walk skips
     * `_` names, so a root-level stage could not carry them), and the
     * ledger stays under the root: a purge's clear deletes the
     * tombstone dir.
@@ -168,8 +135,7 @@ object VectorIndexStream {
       path: String,
       streamId: String = ""): Boolean =
     publishBatch(batch, batchId, path, deleteLedgerId(streamId),
-      into = graft.ops.Tombstones.dir(path))(
-      batch.select(idCol).distinct().write.mode("overwrite").parquet(_))
+      into = Tombstones.dir(path))(Tombstones.write(batch, idCol, _))
 
   /** The delete-stream writer: micro-batches of (idCol) takedown
     * requests against any persisted index root; attach a checkpoint +
@@ -179,8 +145,5 @@ object VectorIndexStream {
       stream: DataFrame,
       idCol: String,
       path: String): DataStreamWriter[Row] =
-    stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      deleteBatch(batch, batchId, idCol, path, runningQueryId(batch))
-      ()
-    }
+    sink(stream)(deleteBatch(_, _, idCol, path, _))
 }

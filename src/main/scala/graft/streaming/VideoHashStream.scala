@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.ops.{HammingIndex, VideoHash}
+import graft.ops.{CorpusUpsert, VideoHash}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.streaming.DataStreamWriter
 
@@ -38,7 +38,8 @@ object VideoHashStream {
       streamId: String = ""): Boolean =
     VectorIndexStream.publishBatch(batch, batchId, path, streamId) { stage =>
       val (codes, _, _) = VideoHash.videoFingerprint(batch, idCol, payloadCol)
-      HammingIndex.writeDelta(codes.toDF(), "id", "video_diff", path, stage)
+      CorpusUpsert.HammingTarget(path, "video_diff")
+        .stage(codes.toDF(), "id", stage)
     }
 
   /** The stream writer: attach a checkpoint + trigger and `.start()`. */
@@ -47,9 +48,6 @@ object VideoHashStream {
       idCol: String,
       payloadCol: String,
       path: String): DataStreamWriter[Row] =
-    stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      appendBatch(batch, batchId, idCol, payloadCol, path,
-        VectorIndexStream.runningQueryId(batch))
-      ()
-    }
+    VectorIndexStream.sink(stream)(
+      appendBatch(_, _, idCol, payloadCol, path, _))
 }

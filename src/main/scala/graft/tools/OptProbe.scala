@@ -205,8 +205,8 @@ object OptProbe {
           bands = 8, nBuckets = 32, nDocBuckets = 16)
       }
       t("nd append half") {
-        NearDupIndex.neardupAppendIndex(dd.filter(col("doc_id") % 2 === 1),
-          "doc_id", "text", root)
+        CorpusUpsert.NearDupTarget(root, "text")
+          .append(dd.filter(col("doc_id") % 2 === 1), "doc_id")
       }
       t("nd probe corpus") {
         NearDupIndex.neardupProbeIndex(spark, dd, "doc_id", "text", root,

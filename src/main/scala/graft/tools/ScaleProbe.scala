@@ -1049,9 +1049,9 @@ object ScaleProbe {
       val appends = 32
       val maxVid = embs.agg(max("vec_id")).head().getLong(0) + 1
       (1 to appends).foreach { i =>
-        graft.ops.VectorOps.ivfAppendIndex(
+        graft.ops.CorpusUpsert.IvfTarget(path, "embedding", cents).append(
           embs.withColumn("vec_id", col("vec_id") + lit(i * maxVid)),
-          "vec_id", "embedding", path, cents)
+          "vec_id")
       }
       val littered = probeLat()
       val f1 = files()
@@ -1069,9 +1069,9 @@ object ScaleProbe {
       // is visible as the per-append mean.
       val ta0 = System.nanoTime()
       (1 to appends).foreach { i =>
-        graft.ops.VectorOps.ivfAppendIndex(
+        graft.ops.CorpusUpsert.IvfTarget(path, "embedding", cents).append(
           embs.withColumn("vec_id", col("vec_id") + lit((appends + i) * maxVid)),
-          "vec_id", "embedding", path, cents)
+          "vec_id")
         graft.ops.VectorOps.IvfLayout.compact(spark, path)
       }
       val appendSec = (System.nanoTime() - ta0) / 1e9
@@ -1134,8 +1134,8 @@ object ScaleProbe {
         val model = graft.ops.Pq.pqTrain(embs, "embedding", 8, 16)
         val exPath = s"$tmp/batchjoin_ivf_$label"
         val pqPath = s"$tmp/batchjoin_pq_$label"
-        graft.ops.VectorOps.ivfAppendIndex(
-          embs, "vec_id", "embedding", exPath, cents)
+        graft.ops.CorpusUpsert.IvfTarget(exPath, "embedding", cents)
+          .append(embs, "vec_id")
         graft.ops.Pq.pqIvfWriteIndex(
           embs, "vec_id", "embedding", pqPath, model, cents)
         val queries = Tables.load(spark, dir, "embeddings")

@@ -180,7 +180,8 @@ class CorpusUpsertSpec extends AnyFunSuite {
     val conf = spark.sparkContext.hadoopConfiguration
     val stageDir = new Path(s"${r.ups}/batches/rev1/stage-bm25")
     val fs = stageDir.getFileSystem(conf)
-    LexIndex.writeDelta(withRid, Rid, "text", r.bm25, stageDir.toString)
+    CorpusUpsert.Bm25Target(r.bm25, "text")
+      .stage(withRid, Rid, stageDir.toString)
     fs.create(new Path(stageDir, "_graft_staged"), true).close()
     // ...move HALF its doclen files by hand with the publish naming
     val doclenStage = new Path(stageDir, "doclen")

@@ -236,8 +236,8 @@ class HammingSpec extends AnyFunSuite {
       "vec_id", "embedding", inc, nBands = 8, nBuckets = 16)
     // three appends to generate litter
     b.grouped(7).foreach { g =>
-      HammingIndex.hammingAppendIndex(g.toDF("vec_id", "embedding"),
-        "vec_id", "embedding", inc)
+      CorpusUpsert.HammingTarget(inc, "embedding")
+        .append(g.toDF("vec_id", "embedding"), "vec_id")
     }
     def probe(path: String) = HammingIndex.hammingProbeIndex(
         spark, all, "vec_id", "embedding", path, radius = 15)
@@ -310,8 +310,8 @@ class HammingSpec extends AnyFunSuite {
         StructField("embedding", ArrayType(FloatType)))))
       .option("maxFilesPerTrigger", "1")
       .parquet(src)
-    val q = graft.streaming.HammingIndexStream
-      .indexSink(stream, "vec_id", "embedding", idx)
+    val q = graft.streaming.VectorIndexStream
+      .indexSink(stream, "vec_id", CorpusUpsert.HammingTarget(idx, "embedding"))
       .option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow())
       .start()
@@ -329,16 +329,16 @@ class HammingSpec extends AnyFunSuite {
     HammingIndex.hammingWriteIndex(df.limit(0), "vec_id", "embedding", reIdx,
       nBands = 8, nBuckets = 16, dim = 64)
     val b0 = df.filter($"vec_id" < 20)
-    assert(graft.streaming.HammingIndexStream.appendBatch(
-      b0, 0L, "vec_id", "embedding", reIdx, streamId = "s1"))
+    assert(graft.streaming.VectorIndexStream.appendBatch(b0, 0L, "vec_id",
+      CorpusUpsert.HammingTarget(reIdx, "embedding"), streamId = "s1"))
     val after = spark.read.parquet(s"$reIdx/bands").count()
-    assert(!graft.streaming.HammingIndexStream.appendBatch(
-      b0, 0L, "vec_id", "embedding", reIdx, streamId = "s1"))
+    assert(!graft.streaming.VectorIndexStream.appendBatch(b0, 0L, "vec_id",
+      CorpusUpsert.HammingTarget(reIdx, "embedding"), streamId = "s1"))
     assert(spark.read.parquet(s"$reIdx/bands").count() === after)
     // a new stream lineage restarting at batch 0 still appends
     val b1 = df.filter($"vec_id" >= 20 && $"vec_id" < 30)
-    assert(graft.streaming.HammingIndexStream.appendBatch(
-      b1, 0L, "vec_id", "embedding", reIdx, streamId = "s2"))
+    assert(graft.streaming.VectorIndexStream.appendBatch(b1, 0L, "vec_id",
+      CorpusUpsert.HammingTarget(reIdx, "embedding"), streamId = "s2"))
     assert(spark.read.parquet(s"$reIdx/bands").count() === after + 8 * b1.count())
   }
 

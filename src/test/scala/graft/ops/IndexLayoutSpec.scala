@@ -39,43 +39,42 @@ class IndexLayoutSpec extends AnyFunSuite {
   private val Victim = 65L
   private val NBands = 8
 
-  /** One family: its layout, a build + one append into `root`, its
-    * delete, and how many directories one id's rows occupy (None when
-    * that depends on the document — BM25's touched term buckets).
+  /** One family: its write handle over a root, a build of the base
+    * rows into a root, the rows it indexes, and how many directories one
+    * id's rows occupy (None when that depends on the document — BM25's
+    * touched term buckets). The exact IVF family has no build over given
+    * centroids, so its base is the target's own first append.
     */
   private case class Family(
       name: String,
-      layout: IndexLayout,
-      buildAndAppend: String => Unit,
-      delete: (DataFrame, String) => Unit,
-      victimDirs: Option[Int])
+      target: String => CorpusUpsert.IndexTarget,
+      build: String => Unit,
+      rows: () => DataFrame,
+      victimDirs: Option[Int]) {
+    def layout: IndexLayout = target("").layout
+    def buildAndAppend(root: String): Unit = {
+      build(root)
+      target(root).append(delta(rows()), "id")
+    }
+  }
 
   private val families = Seq(
-    Family("ivf", VectorOps.IvfLayout, root => {
-      val c = VectorOps.ivfWriteIndex(base(vecs), "id", "embedding", root,
-        nCentroids = 4)
-      VectorOps.ivfAppendIndex(delta(vecs), "id", "embedding", root, c)
-    }, (ids, root) => VectorOps.IvfLayout.delete(ids, "id", root), Some(1)),
-    Family("ivf-pq", VectorOps.IvfLayout, root => {
-      Pq.pqIvfWriteIndex(base(vecs), "id", "embedding", root, model, cents)
-      Pq.pqIvfAppendIndex(delta(vecs), "id", "embedding", root, model, cents)
-    }, (ids, root) => VectorOps.IvfLayout.delete(ids, "id", root), Some(1)),
-    Family("hamming", HammingIndex.Layout, root => {
-      HammingIndex.hammingWriteIndex(base(vecs), "id", "embedding", root,
-        nBands = NBands, nBuckets = 4)
-      HammingIndex.hammingAppendIndex(delta(vecs), "id", "embedding", root)
-    }, (ids, root) => HammingIndex.Layout.delete(ids, "id", root),
-      Some(NBands)),
-    Family("neardup", NearDupIndex.Layout, root => {
-      NearDupIndex.neardupWriteIndex(base(docs), "id", "text", root,
-        bands = NBands, nBuckets = 4, nDocBuckets = 4)
-      NearDupIndex.neardupAppendIndex(delta(docs), "id", "text", root)
-    }, (ids, root) => NearDupIndex.Layout.delete(ids, "id", root),
+    Family("ivf", CorpusUpsert.IvfTarget(_, "embedding", cents),
+      root => CorpusUpsert.IvfTarget(root, "embedding", cents)
+        .append(base(vecs), "id"), () => vecs, Some(1)),
+    Family("ivf-pq", CorpusUpsert.PqIvfTarget(_, "embedding", model, cents),
+      Pq.pqIvfWriteIndex(base(vecs), "id", "embedding", _, model, cents),
+      () => vecs, Some(1)),
+    Family("hamming", CorpusUpsert.HammingTarget(_, "embedding"),
+      HammingIndex.hammingWriteIndex(base(vecs), "id", "embedding", _,
+        nBands = NBands, nBuckets = 4), () => vecs, Some(NBands)),
+    Family("neardup", CorpusUpsert.NearDupTarget(_, "text"),
+      NearDupIndex.neardupWriteIndex(base(docs), "id", "text", _,
+        bands = NBands, nBuckets = 4, nDocBuckets = 4), () => docs,
       Some(NBands + 1)),
-    Family("bm25", LexIndex.Layout, root => {
-      LexIndex.bm25WriteIndex(base(docs), "id", "text", root, buckets = 8)
-      LexIndex.bm25AppendIndex(delta(docs), "id", "text", root)
-    }, (ids, root) => LexIndex.Layout.delete(ids, "id", root), None))
+    Family("bm25", CorpusUpsert.Bm25Target(_, "text"),
+      LexIndex.bm25WriteIndex(base(docs), "id", "text", _, buckets = 8),
+      () => docs, None))
 
   private def key(p: Path): String = p.toUri.getPath.stripSuffix("/")
 
@@ -106,7 +105,7 @@ class IndexLayoutSpec extends AnyFunSuite {
       assert(written.nonEmpty)
       assert(f.layout.leafDirs(spark, root).map(key).toSet === written)
 
-      f.delete(Seq(Victim).toDF("id"), root)
+      f.layout.delete(Seq(Victim).toDF("id"), "id", root)
       val holding = written.filter { d =>
         val rows = spark.read.parquet(d)
         rows.columns.contains("id") &&
@@ -122,6 +121,27 @@ class IndexLayoutSpec extends AnyFunSuite {
     }
   }
 
+  /** Every sub-directory's rows of `f`'s index at `root`, as sorted JSON. */
+  private def readout(f: Family, root: String): Seq[(String, Seq[String])] =
+    f.layout.subDirs.map(s =>
+      s.name -> s.read(spark, root).toJSON.collect().sorted.toSeq)
+
+  families.foreach { f =>
+    test(s"${f.name}: a stream appendBatch, then its redelivery, leaves " +
+        "the rows one target.append of the same delta leaves") {
+      val (streamed, appended) = (tmp(s"stream-${f.name}"),
+        tmp(s"append-${f.name}"))
+      Seq(streamed, appended).foreach(f.build)
+      val d = delta(f.rows())
+      assert(graft.streaming.VectorIndexStream.appendBatch(d, 0L, "id",
+        f.target(streamed), streamId = "s"))
+      assert(!graft.streaming.VectorIndexStream.appendBatch(d, 0L, "id",
+        f.target(streamed), streamId = "s"))
+      f.target(appended).append(d, "id")
+      assert(readout(f, streamed) === readout(f, appended))
+    }
+  }
+
   /** `body`'s result and how many Spark jobs it ran. */
   private def counted[A](body: => A): (A, Int) = {
     val (a, jobs) = JobCounter(spark.sparkContext)(body)
@@ -133,7 +153,7 @@ class IndexLayoutSpec extends AnyFunSuite {
         "spark.read.parquet's schema and no Spark job") {
       val root = tmp(s"read-${f.name}")
       f.buildAndAppend(root)
-      f.delete(Seq(Victim).toDF("id"), root)
+      f.layout.delete(Seq(Victim).toDF("id"), "id", root)
       val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
       val subs = f.layout.subDirs ++
         Seq(IndexLayout.Meta).filter(m => fs.exists(new Path(m.dir(root))))

@@ -28,7 +28,7 @@ class LexIndexSpec extends AnyFunSuite {
     val base = docs.filter(col("doc_id") % 2 === 0)
     val delta = docs.filter(col("doc_id") % 2 === 1)
     LexIndex.bm25WriteIndex(base, "doc_id", "text", appDir, buckets = 16)
-    LexIndex.bm25AppendIndex(delta, "doc_id", "text", appDir)
+    CorpusUpsert.Bm25Target(appDir, "text").append(delta, "doc_id")
     LexIndex.bm25WriteIndex(docs, "doc_id", "text", fullDir, buckets = 16)
     val appended = scores(LexIndex.bm25ProbeIndex(spark, appDir, "doc_id", terms))
     val rebuilt = scores(LexIndex.bm25ProbeIndex(spark, fullDir, "doc_id", terms))
@@ -73,7 +73,8 @@ class LexIndexSpec extends AnyFunSuite {
     val root = java.nio.file.Files.createTempDirectory("graft-lex-compact").toString + "/idx"
     val parts = (0 until 12).map(i => docs.filter(col("doc_id") % 12 === i))
     LexIndex.bm25WriteIndex(parts.head, "doc_id", "text", root, buckets = 8)
-    parts.tail.foreach(p => LexIndex.bm25AppendIndex(p, "doc_id", "text", root))
+    parts.tail.foreach(p =>
+      CorpusUpsert.Bm25Target(root, "text").append(p, "doc_id"))
     val before = scores(LexIndex.bm25ProbeIndex(spark, root, "doc_id", terms))
     def fileCount(dir: String): Int = {
       val d = new java.io.File(dir)
@@ -108,8 +109,8 @@ class LexIndexSpec extends AnyFunSuite {
         StructField("doc_id", LongType), StructField("text", StringType))))
       .option("maxFilesPerTrigger", "1")
       .parquet(src)
-    val q = graft.streaming.LexIndexStream
-      .indexSink(stream, "doc_id", "text", idx)
+    val q = graft.streaming.VectorIndexStream
+      .indexSink(stream, "doc_id", CorpusUpsert.Bm25Target(idx, "text"))
       .option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow())
       .start()
@@ -121,17 +122,17 @@ class LexIndexSpec extends AnyFunSuite {
     val reIdx = s"$root/re_idx"
     LexIndex.bm25WriteIndex(docs.limit(0), "doc_id", "text", reIdx, buckets = 16)
     val b0 = docs.filter(col("doc_id") < 100).select("doc_id", "text")
-    assert(graft.streaming.LexIndexStream.appendBatch(
-      b0, 0L, "doc_id", "text", reIdx, streamId = "s1"))
+    assert(graft.streaming.VectorIndexStream.appendBatch(
+      b0, 0L, "doc_id", CorpusUpsert.Bm25Target(reIdx, "text"), streamId = "s1"))
     val after = spark.read.parquet(s"$reIdx/doclen").count()
-    assert(!graft.streaming.LexIndexStream.appendBatch(
-      b0, 0L, "doc_id", "text", reIdx, streamId = "s1"))
+    assert(!graft.streaming.VectorIndexStream.appendBatch(
+      b0, 0L, "doc_id", CorpusUpsert.Bm25Target(reIdx, "text"), streamId = "s1"))
     assert(spark.read.parquet(s"$reIdx/doclen").count() === after)
     // a new stream lineage restarting at batch 0 still appends
     val b1 = docs.filter(col("doc_id") >= 100 && col("doc_id") < 150)
       .select("doc_id", "text")
-    assert(graft.streaming.LexIndexStream.appendBatch(
-      b1, 0L, "doc_id", "text", reIdx, streamId = "s2"))
+    assert(graft.streaming.VectorIndexStream.appendBatch(
+      b1, 0L, "doc_id", CorpusUpsert.Bm25Target(reIdx, "text"), streamId = "s2"))
     assert(spark.read.parquet(s"$reIdx/doclen").count() === after + b1.count())
   }
   test("bm25ProbeRids: snapshot scores ≡ an index holding exactly the " +

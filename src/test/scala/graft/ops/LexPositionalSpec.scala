@@ -138,8 +138,8 @@ class LexPositionalSpec extends AnyFunSuite {
       positional = true)
     LexIndex.bm25WriteIndex(docs.filter($"doc_id" < 250), "doc_id",
       "text", b, buckets = 8, positional = true)
-    LexIndex.bm25AppendIndex(docs.filter($"doc_id" >= 250), "doc_id",
-      "text", b)
+    CorpusUpsert.Bm25Target(b, "text").append(docs.filter($"doc_id" >= 250),
+      "doc_id")
     assert(phrase(a, "vector", "scan") === phrase(b, "vector", "scan"))
     val score = (p: String) =>
       LexIndex.bm25ProbeIndex(spark, p, "doc_id", Seq("vector", "scan"))
@@ -176,9 +176,9 @@ class LexPositionalSpec extends AnyFunSuite {
     val idx = tmp("compact")
     LexIndex.bm25WriteIndex(docs.filter($"doc_id" < 100), "doc_id",
       "text", idx, buckets = 8, positional = true)
-    (1 to 4).foreach(i => LexIndex.bm25AppendIndex(
+    (1 to 4).foreach(i => CorpusUpsert.Bm25Target(idx, "text").append(
       docs.filter($"doc_id" >= i * 100 && $"doc_id" < (i + 1) * 100),
-      "doc_id", "text", idx))
+      "doc_id"))
     val beforePhrase = phrase(idx, "vector", "scan")
     val beforeProx = prox(idx, 5, "vector", "window")
     val report = LexIndex.Layout.compact(spark, idx, maxFilesPerDir = 1)

@@ -62,7 +62,7 @@ class NearDupIndexSpec extends AnyFunSuite {
     val inc = tmpRoot("inc")
     NearDupIndex.neardupWriteIndex(a, "doc_id", "text", inc,
       nBuckets = 16, nDocBuckets = 8)
-    NearDupIndex.neardupAppendIndex(b, "doc_id", "text", inc)
+    CorpusUpsert.NearDupTarget(inc, "text").append(b, "doc_id")
     val full = tmpRoot("full")
     NearDupIndex.neardupWriteIndex(df, "doc_id", "text", full,
       nBuckets = 16, nDocBuckets = 8)
@@ -117,11 +117,11 @@ class NearDupIndexSpec extends AnyFunSuite {
     NearDupIndex.neardupWriteIndex(df.filter($"doc_id" < 100), "doc_id",
       "text", root, nBuckets = 8, nDocBuckets = 4)
     for (k <- 1 to 4)
-      NearDupIndex.neardupAppendIndex(
+      CorpusUpsert.NearDupTarget(root, "text").append(
         df.filter($"doc_id" >= k * 100 && $"doc_id" < (k + 1) * 100),
-        "doc_id", "text", root)
-    NearDupIndex.neardupAppendIndex(df.filter($"doc_id" >= 500),
-      "doc_id", "text", root)
+        "doc_id")
+    CorpusUpsert.NearDupTarget(root, "text")
+      .append(df.filter($"doc_id" >= 500), "doc_id")
     val before = probePairs(root, df)
     val report = NearDupIndex.Layout.compact(spark, root,
       maxFilesPerDir = 1)
@@ -231,8 +231,8 @@ class NearDupIndexSpec extends AnyFunSuite {
         StructField("text", StringType))))
       .option("maxFilesPerTrigger", "1")
       .parquet(src)
-    val q = graft.streaming.NearDupIndexStream
-      .indexSink(stream, "doc_id", "text", idx)
+    val q = graft.streaming.VectorIndexStream
+      .indexSink(stream, "doc_id", CorpusUpsert.NearDupTarget(idx, "text"))
       .option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow())
       .start()
@@ -246,11 +246,11 @@ class NearDupIndexSpec extends AnyFunSuite {
     val reIdx = s"$root/re"
     NearDupIndex.neardupWriteIndex(df.limit(0), "doc_id", "text", reIdx,
       nBuckets = 8, nDocBuckets = 4)
-    assert(graft.streaming.NearDupIndexStream.appendBatch(
-      df, 0L, "doc_id", "text", reIdx, "s1"))
+    assert(graft.streaming.VectorIndexStream.appendBatch(
+      df, 0L, "doc_id", CorpusUpsert.NearDupTarget(reIdx, "text"), "s1"))
     val n1 = spark.read.parquet(s"$reIdx/buckets").count()
-    assert(!graft.streaming.NearDupIndexStream.appendBatch(
-      df, 0L, "doc_id", "text", reIdx, "s1"))
+    assert(!graft.streaming.VectorIndexStream.appendBatch(
+      df, 0L, "doc_id", CorpusUpsert.NearDupTarget(reIdx, "text"), "s1"))
     assert(spark.read.parquet(s"$reIdx/buckets").count() === n1)
   }
 
@@ -264,7 +264,7 @@ class NearDupIndexSpec extends AnyFunSuite {
     // empty frame bootstraps an empty index a later append fills
     NearDupIndex.neardupWriteIndex(df.limit(0), "doc_id", "text", root,
       nBuckets = 8, nDocBuckets = 4)
-    NearDupIndex.neardupAppendIndex(df, "doc_id", "text", root)
+    CorpusUpsert.NearDupTarget(root, "text").append(df, "doc_id")
     val full = tmpRoot("guard-full")
     NearDupIndex.neardupWriteIndex(df, "doc_id", "text", full,
       nBuckets = 8, nDocBuckets = 4)

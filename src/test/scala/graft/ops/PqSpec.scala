@@ -79,7 +79,7 @@ class PqSpec extends AnyFunSuite {
     val cents = VectorOps.kmeansCentroids(embs, "embedding", 8)
     val model = Pq.pqTrain(embs, "embedding", m = 8, codebook = 16)
     Pq.pqIvfWriteIndex(embs, "vec_id", "embedding", pqIdx, model, cents)
-    VectorOps.ivfAppendIndex(embs, "vec_id", "embedding", exIdx, cents)
+    CorpusUpsert.IvfTarget(exIdx, "embedding", cents).append(embs, "vec_id")
     // over-fetch past the pruned-cluster population → the shortlist IS
     // the pruned set → rerank must equal the exact probe bit-for-bit
     val exact = VectorOps.ivfProbeIndex(spark, exIdx, cents, "vec_id", query, 10, nProbe = 3)
@@ -139,7 +139,8 @@ class PqSpec extends AnyFunSuite {
       embs.filter(col("vec_id") % 3 === 1),
       embs.filter(col("vec_id") % 3 === 2)
     ).foreach(slice =>
-      Pq.pqIvfAppendIndex(slice, "vec_id", "embedding", apIdx, model, cents))
+      CorpusUpsert.PqIvfTarget(apIdx, "embedding", model, cents).append(slice,
+        "vec_id"))
     // content identity: codes are a pure function of the vector under
     // the frozen model, clusters of the frozen centroids
     def content(p: String) = spark.read.parquet(p)
@@ -198,8 +199,8 @@ class PqSpec extends AnyFunSuite {
         StructField("embedding", ArrayType(FloatType)))))
       .option("maxFilesPerTrigger", "1")
       .parquet(src)
-    val q = graft.streaming.VectorIndexStream
-      .pqIndexSink(stream, "vec_id", "embedding", idx, model, cents)
+    val q = graft.streaming.VectorIndexStream.indexSink(stream, "vec_id",
+      CorpusUpsert.PqIvfTarget(idx, "embedding", model, cents))
       .option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow())
       .start()
@@ -213,11 +214,13 @@ class PqSpec extends AnyFunSuite {
       "every micro-batch row landed exactly once")
     // redelivery of a consumed batch id within the same stream namespace
     val b = embs.filter(col("vec_id") < 30).select("vec_id", "embedding")
-    assert(graft.streaming.VectorIndexStream.pqAppendBatch(
-      b, 0L, "vec_id", "embedding", idx, model, cents, streamId = "manual"))
+    assert(graft.streaming.VectorIndexStream.appendBatch(b, 0L, "vec_id",
+      CorpusUpsert.PqIvfTarget(idx, "embedding", model, cents),
+      streamId = "manual"))
     val after = spark.read.parquet(idx).count()
-    assert(!graft.streaming.VectorIndexStream.pqAppendBatch(
-      b, 0L, "vec_id", "embedding", idx, model, cents, streamId = "manual"))
+    assert(!graft.streaming.VectorIndexStream.appendBatch(b, 0L, "vec_id",
+      CorpusUpsert.PqIvfTarget(idx, "embedding", model, cents),
+      streamId = "manual"))
     assert(spark.read.parquet(idx).count() === after)
 
     // maintenance-window compaction of the streamed index: per-batch

@@ -67,13 +67,13 @@ class PublishCrashMatrixSpec extends AnyFunSuite {
   private def tombstoneRows(root: String): Seq[String] =
     Tombstones.rows(spark, root).map(rows).getOrElse(Nil)
 
-  /** Every sub-directory's rows and the tombstoned ids of an index (a
-    * set: re-adding a tombstone is legal, [[Tombstones.add]]).
+  /** Every sub-directory's rows and the tombstone rows of an index,
+    * duplicates included: every keyed publish lands its tombstones once.
     */
   private def indexReadout(layout: IndexLayout, root: String): Seq[String] =
     layout.subDirs.flatMap(s =>
       rows(s.read(spark, root)).map(r => s"${s.name}: $r")) ++
-      tombstoneRows(root).distinct.map(r => s"tombstone: $r")
+      tombstoneRows(root).map(r => s"tombstone: $r")
 
   /** Names of leftover litter: `.old` files and marked stages. */
   private def litter(dir: JPath): Seq[String] = {
@@ -145,57 +145,47 @@ class PublishCrashMatrixSpec extends AnyFunSuite {
   private lazy val cents = VectorOps.kmeansCentroids(vecs, "embedding", 2)
   private lazy val model = Pq.pqTrain(vecs, "embedding", m = 4, codebook = 4)
 
-  /** One index family: its layout, a build + two one-off appends, and
-    * its stream sink's append.
+  /** One index family: its write handle over a root, a build of the
+    * base rows into a root, and the rows it indexes. The fixture is the
+    * build plus two one-off appends; the stream cell appends a third
+    * delta through the generic stream door.
     */
   private case class Family(
       name: String,
-      layout: IndexLayout,
+      target: String => CorpusUpsert.IndexTarget,
       build: String => Unit,
-      streamAppend: String => Boolean)
+      rows: () => DataFrame) {
+    def layout: IndexLayout = target("").layout
+  }
 
   private val families = Seq(
-    Family("ivf", VectorOps.IvfLayout, root => {
-      VectorOps.ivfAppendIndex(base(vecs), "id", "embedding", root, cents)
-      VectorOps.ivfAppendIndex(d1(vecs), "id", "embedding", root, cents)
-      VectorOps.ivfAppendIndex(d2(vecs), "id", "embedding", root, cents)
-    }, root => VectorIndexStream.appendBatch(d3(vecs), 0L, "id",
-      "embedding", root, cents, streamId = "m")),
-    Family("ivf-pq", VectorOps.IvfLayout, root => {
-      Pq.pqIvfWriteIndex(base(vecs), "id", "embedding", root, model, cents)
-      Pq.pqIvfAppendIndex(d1(vecs), "id", "embedding", root, model, cents)
-      Pq.pqIvfAppendIndex(d2(vecs), "id", "embedding", root, model, cents)
-    }, root => VectorIndexStream.pqAppendBatch(d3(vecs), 0L, "id",
-      "embedding", root, model, cents, streamId = "m")),
-    Family("hamming", HammingIndex.Layout, root => {
-      HammingIndex.hammingWriteIndex(base(vecs), "id", "embedding", root,
-        nBands = 2, nBuckets = 2)
-      HammingIndex.hammingAppendIndex(d1(vecs), "id", "embedding", root)
-      HammingIndex.hammingAppendIndex(d2(vecs), "id", "embedding", root)
-    }, root => HammingIndexStream.appendBatch(d3(vecs), 0L, "id",
-      "embedding", root, streamId = "m")),
-    Family("neardup", NearDupIndex.Layout, root => {
-      NearDupIndex.neardupWriteIndex(base(docs), "id", "text", root,
-        bands = 2, nBuckets = 2, nDocBuckets = 2)
-      NearDupIndex.neardupAppendIndex(d1(docs), "id", "text", root)
-      NearDupIndex.neardupAppendIndex(d2(docs), "id", "text", root)
-    }, root => NearDupIndexStream.appendBatch(d3(docs), 0L, "id", "text",
-      root, streamId = "m")),
-    Family("bm25", LexIndex.Layout, root => {
-      LexIndex.bm25WriteIndex(base(docs), "id", "text", root, buckets = 2)
-      LexIndex.bm25AppendIndex(d1(docs), "id", "text", root)
-      LexIndex.bm25AppendIndex(d2(docs), "id", "text", root)
-    }, root => LexIndexStream.appendBatch(d3(docs), 0L, "id", "text", root,
-      streamId = "m")))
+    Family("ivf", CorpusUpsert.IvfTarget(_, "embedding", cents),
+      root => CorpusUpsert.IvfTarget(root, "embedding", cents)
+        .append(base(vecs), "id"), () => vecs),
+    Family("ivf-pq", CorpusUpsert.PqIvfTarget(_, "embedding", model, cents),
+      Pq.pqIvfWriteIndex(base(vecs), "id", "embedding", _, model, cents),
+      () => vecs),
+    Family("hamming", CorpusUpsert.HammingTarget(_, "embedding"),
+      HammingIndex.hammingWriteIndex(base(vecs), "id", "embedding", _,
+        nBands = 2, nBuckets = 2), () => vecs),
+    Family("neardup", CorpusUpsert.NearDupTarget(_, "text"),
+      NearDupIndex.neardupWriteIndex(base(docs), "id", "text", _,
+        bands = 2, nBuckets = 2, nDocBuckets = 2), () => docs),
+    Family("bm25", CorpusUpsert.Bm25Target(_, "text"),
+      LexIndex.bm25WriteIndex(base(docs), "id", "text", _, buckets = 2),
+      () => docs))
 
   families.foreach { f =>
     // built, two appends of litter, and tombstones
     lazy val fix = fixture(f.name) { root =>
       f.build(root)
+      Seq(d1 _, d2 _).foreach(d => f.target(root).append(d(f.rows()), "id"))
       f.layout.delete(victims, "id", root)
     }
     def readout(root: String) = indexReadout(f.layout, root)
-    cell(s"${f.name} stream append", fix)(f.streamAppend)(readout)
+    cell(s"${f.name} stream append", fix)(root =>
+      VectorIndexStream.appendBatch(d3(f.rows()), 0L, "id", f.target(root),
+        streamId = "m"))(readout)
     cell(s"${f.name} purge", fix)(f.layout.purge(spark, _, "id"))(readout)
     cell(s"${f.name} compact", fix)(
       f.layout.compact(spark, _, maxFilesPerDir = 1))(readout)

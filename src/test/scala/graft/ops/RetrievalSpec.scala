@@ -138,12 +138,12 @@ class RetrievalSpec extends AnyFunSuite {
         StructField("vec_id", LongType),
         StructField("embedding", ArrayType(FloatType)))))
       .option("maxFilesPerTrigger", "1").parquet(s"$root/esrc")
-    val q1 = graft.streaming.LexIndexStream
-      .indexSink(dStream, "doc_id", "text", s"$root/lex_s")
+    val q1 = graft.streaming.VectorIndexStream.indexSink(dStream, "doc_id",
+      CorpusUpsert.Bm25Target(s"$root/lex_s", "text"))
       .option("checkpointLocation", s"$root/dckpt")
       .trigger(Trigger.AvailableNow()).start()
-    val q2 = graft.streaming.VectorIndexStream
-      .indexSink(eStream, "vec_id", "embedding", s"$root/ivf_s", cents)
+    val q2 = graft.streaming.VectorIndexStream.indexSink(eStream, "vec_id",
+      CorpusUpsert.IvfTarget(s"$root/ivf_s", "embedding", cents))
       .option("checkpointLocation", s"$root/eckpt")
       .trigger(Trigger.AvailableNow()).start()
     q1.awaitTermination(); q2.awaitTermination()

@@ -131,10 +131,11 @@ class SimilaritySpec extends AnyFunSuite {
     // fit centroids on the base corpus, append the delta against them
     val cents = VectorOps.ivfWriteIndex(base, "vec_id", "embedding", baseDir,
       nCentroids = 8, kmeansIters = 4)
-    VectorOps.ivfAppendIndex(delta, "vec_id", "embedding", baseDir, cents)
+    CorpusUpsert.IvfTarget(baseDir, "embedding", cents).append(delta,
+      "vec_id")
     // from-scratch reference: the WHOLE corpus assigned to the SAME
     // frozen centroids (append must be indistinguishable from rebuild)
-    VectorOps.ivfAppendIndex(embs, "vec_id", "embedding", fullDir, cents)
+    CorpusUpsert.IvfTarget(fullDir, "embedding", cents).append(embs, "vec_id")
     val got = VectorOps.ivfProbeIndex(spark, baseDir, cents, "vec_id", query, 10, nProbe = 3)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toList
     val expected = VectorOps.ivfProbeIndex(spark, fullDir, cents, "vec_id", query, 10, nProbe = 3)
@@ -154,8 +155,8 @@ class SimilaritySpec extends AnyFunSuite {
     // every cluster with one small file per batch (trigger OFF — this
     // test measures the MANUAL maintenance path)
     for (m <- 1 to 9)
-      VectorOps.ivfAppendIndex(embs.filter(col("vec_id") % 10 === m),
-        "vec_id", "embedding", dir, cents)
+      CorpusUpsert.IvfTarget(dir, "embedding", cents)
+        .append(embs.filter(col("vec_id") % 10 === m), "vec_id")
     def clusterFiles() = new java.io.File(dir).listFiles
       .filter(f => f.isDirectory && f.getName.startsWith("cluster="))
       .map(d => d.getName -> d.listFiles.count { f =>
@@ -198,8 +199,8 @@ class SimilaritySpec extends AnyFunSuite {
     // the same nine-batch drip as the manual test, compacting after
     // every append with a tight knee so it must fire mid-sequence
     val reports = (1 to 9).map { m =>
-      VectorOps.ivfAppendIndex(embs.filter(col("vec_id") % 10 === m),
-        "vec_id", "embedding", dir, cents)
+      CorpusUpsert.IvfTarget(dir, "embedding", cents)
+        .append(embs.filter(col("vec_id") % 10 === m), "vec_id")
       VectorOps.IvfLayout.compact(spark, dir, 4)
     }
     assert(reports.exists(_.nonEmpty), "the trigger never fired across nine appends")
@@ -212,7 +213,7 @@ class SimilaritySpec extends AnyFunSuite {
       }).toMap
     for ((cl, n) <- counts) assert(n <= 4, s"$cl has $n files after auto-compaction")
     // auto-compacted probe ≡ a from-scratch index on the same centroids
-    VectorOps.ivfAppendIndex(embs, "vec_id", "embedding", fullDir, cents)
+    CorpusUpsert.IvfTarget(fullDir, "embedding", cents).append(embs, "vec_id")
     val got = VectorOps.ivfProbeIndex(spark, dir, cents, "vec_id", query, 10, nProbe = 3)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toList
     val expected = VectorOps.ivfProbeIndex(spark, fullDir, cents, "vec_id", query, 10, nProbe = 3)
@@ -540,7 +541,8 @@ class SimilaritySpec extends AnyFunSuite {
     // indexed variant: kept base persisted as an IVF index on the same
     // frozen centroids reproduces the DataFrame variant exactly
     val idxDir = java.nio.file.Files.createTempDirectory("graft-semdelta").toString + "/idx"
-    VectorOps.ivfAppendIndex(baseKept, "vec_id", "embedding", idxDir, cents)
+    CorpusUpsert.IvfTarget(idxDir, "embedding", cents).append(baseKept,
+      "vec_id")
     val keptIdx = ids(VectorOps.semDedupDeltaIndexed(delta, "vec_id", "embedding", 0.9, idxDir, cents))
     assert(keptIdx === deltaKept)
   }
@@ -602,13 +604,14 @@ class SimilaritySpec extends AnyFunSuite {
       .option("maxFilesPerTrigger", "1")
       .parquet(src)
     val q = graft.streaming.VectorIndexStream
-      .indexSink(stream, "vec_id", "embedding", idx, cents)
+      .indexSink(stream, "vec_id", CorpusUpsert.IvfTarget(idx, "embedding", cents))
       .option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
     // batch reference: one append of the whole corpus, same frozen centroids
-    VectorOps.ivfAppendIndex(embs, "vec_id", "embedding", batchIdx, cents)
+    CorpusUpsert.IvfTarget(batchIdx, "embedding", cents).append(embs,
+      "vec_id")
     val got = VectorOps.ivfProbeIndex(spark, idx, cents, "vec_id", query, 10, nProbe = 3)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toList
     val expected = VectorOps.ivfProbeIndex(spark, batchIdx, cents, "vec_id", query, 10, nProbe = 3)
@@ -624,17 +627,17 @@ class SimilaritySpec extends AnyFunSuite {
     val cents = VectorOps.kmeansCentroids(embs, "embedding", 8)
     val b0 = embs.filter(col("vec_id") < 50).select("vec_id", "embedding")
     assert(graft.streaming.VectorIndexStream.appendBatch(
-      b0, 0L, "vec_id", "embedding", idx, cents))
+      b0, 0L, "vec_id", CorpusUpsert.IvfTarget(idx, "embedding", cents)))
     val afterFirst = spark.read.parquet(idx).count()
     // at-least-once redelivery of the SAME batch id: ledger skips it
     assert(!graft.streaming.VectorIndexStream.appendBatch(
-      b0, 0L, "vec_id", "embedding", idx, cents))
+      b0, 0L, "vec_id", CorpusUpsert.IvfTarget(idx, "embedding", cents)))
     assert(spark.read.parquet(idx).count() === afterFirst)
     // a NEW batch id still appends
     val b1 = embs.filter(col("vec_id") >= 50 && col("vec_id") < 80)
       .select("vec_id", "embedding")
     assert(graft.streaming.VectorIndexStream.appendBatch(
-      b1, 1L, "vec_id", "embedding", idx, cents))
+      b1, 1L, "vec_id", CorpusUpsert.IvfTarget(idx, "embedding", cents)))
     assert(spark.read.parquet(idx).count() === afterFirst + b1.count())
   }
 
@@ -647,16 +650,19 @@ class SimilaritySpec extends AnyFunSuite {
       .select("vec_id", "embedding")
     // stream A writes its batch 0
     assert(graft.streaming.VectorIndexStream.appendBatch(
-      b0, 0L, "vec_id", "embedding", idx, cents, streamId = "streamA"))
+      b0, 0L, "vec_id", CorpusUpsert.IvfTarget(idx, "embedding", cents),
+      streamId = "streamA"))
     val afterA = spark.read.parquet(idx).count()
     // a fresh checkpoint (stream B) restarts batch ids at 0: without the
     // namespace this collides with A's marker and drops the batch
     assert(graft.streaming.VectorIndexStream.appendBatch(
-      b1, 0L, "vec_id", "embedding", idx, cents, streamId = "streamB"))
+      b1, 0L, "vec_id", CorpusUpsert.IvfTarget(idx, "embedding", cents),
+      streamId = "streamB"))
     assert(spark.read.parquet(idx).count() === afterA + b1.count())
     // redelivery within a stream is still idempotent
     assert(!graft.streaming.VectorIndexStream.appendBatch(
-      b1, 0L, "vec_id", "embedding", idx, cents, streamId = "streamB"))
+      b1, 0L, "vec_id", CorpusUpsert.IvfTarget(idx, "embedding", cents),
+      streamId = "streamB"))
     assert(spark.read.parquet(idx).count() === afterA + b1.count())
   }
 
@@ -921,10 +927,11 @@ class SimilaritySpec extends AnyFunSuite {
         transform(col("embedding"), x => -x).as("embedding"))
     val big = embs.select("vec_id", "embedding").unionByName(revised)
     val cents = VectorOps.kmeansCentroids(big, "embedding", 8)
-    VectorOps.ivfAppendIndex(big, "vec_id", "embedding", full, cents)
+    CorpusUpsert.IvfTarget(full, "embedding", cents).append(big, "vec_id")
     val snapCorpus = embs.filter(col("vec_id") % 5 =!= 2)
       .select("vec_id", "embedding").unionByName(revised)
-    VectorOps.ivfAppendIndex(snapCorpus, "vec_id", "embedding", snap, cents)
+    CorpusUpsert.IvfTarget(snap, "embedding", cents).append(snapCorpus,
+      "vec_id")
     val snapIds = snapCorpus.select("vec_id")
     val queries = embs.filter(col("vec_id") % 40 === 0)
     def rows(df: org.apache.spark.sql.DataFrame) =

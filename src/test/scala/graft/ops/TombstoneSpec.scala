@@ -45,7 +45,8 @@ class TombstoneSpec extends AnyFunSuite {
     val before = rows(probe(idxA))
     VectorOps.IvfLayout.delete(delVecs, "vec_id", idxA)
     // the reference: same centroids over the surviving corpus only
-    VectorOps.ivfAppendIndex(keptVecs, "vec_id", "embedding", idxB, cents)
+    CorpusUpsert.IvfTarget(idxB, "embedding", cents).append(keptVecs,
+      "vec_id")
     val want = rows(probe(idxB))
     assert(rows(probe(idxA)) === want)
     assert(before !== want) // the takedown set actually hit the top-k
@@ -77,7 +78,8 @@ class TombstoneSpec extends AnyFunSuite {
       spark, path, model, cents, "vec_id", query, k = 10, nProbe = 4)
 
     VectorOps.IvfLayout.delete(delVecs, "vec_id", idxA)
-    Pq.pqIvfAppendIndex(keptVecs, "vec_id", "embedding", idxB, model, cents)
+    CorpusUpsert.PqIvfTarget(idxB, "embedding", model, cents).append(keptVecs,
+      "vec_id")
     val want = rows(probe(idxB))
     assert(rows(probe(idxA)) === want)
 
@@ -335,7 +337,8 @@ class TombstoneSpec extends AnyFunSuite {
     assert(graft.streaming.VectorIndexStream.appendBatch(
       embs.filter($"vec_id" === 0L).select(($"vec_id" + 20000L).as("vec_id"),
         $"embedding"),
-      0L, "vec_id", "embedding", ivf, cents, streamId = "d1"))
+      0L, "vec_id", CorpusUpsert.IvfTarget(ivf, "embedding", cents),
+      streamId = "d1"))
 
     // a BM25 index takes the same delete stream; a redelivered batch
     // adds no tombstone file, and probes equal a rebuild without the ids

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.{FaultyFs, Tables, TestSpark}
-import graft.ops.LexIndex
+import graft.ops.{CorpusUpsert, LexIndex}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -24,8 +24,8 @@ class StagedPublishCrashSpec extends AnyFunSuite {
   private def batch = docs.filter(col("doc_id") % 3 === 1)
 
   private def append(root: String): Boolean =
-    LexIndexStream.appendBatch(batch, 0L, "doc_id", "text", root,
-      streamId = "s1")
+    VectorIndexStream.appendBatch(batch, 0L, "doc_id",
+      CorpusUpsert.Bm25Target(root, "text"), streamId = "s1")
 
   /** Doclen totals (N and Σdl) and doclen rows, then probe scores. */
   private def state(root: String) = (
