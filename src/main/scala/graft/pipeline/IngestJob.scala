@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSession, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -43,15 +43,32 @@ object IngestJob {
         to_date(from_utc_timestamp(
           to_utc_timestamp(current_timestamp(), current_timezone()), PipelineTz)))
 
+  /** Spark's cap on the tasks of a file-listing job (default 10000). */
+  private val ListingParallelism = "spark.sql.sources.parallelPartitionDiscovery.parallelism"
+
   /** File-inbox source — the gate-scale stand-in for the webhook: one
     * JSON body per file under `inboxDir`.
+    *
+    * The reader lives in a clone of `spark` whose file listing runs one
+    * task per core. Every micro-batch re-resolves its files as root
+    * paths (`FileStreamSource.getBatch`), and Spark lists more than
+    * `parallelPartitionDiscovery.threshold` (32) root paths with a job
+    * of `min(paths, parallelism)` tasks: at the default cap of 10000 and
+    * one body per file, one task per file, each a single
+    * `getFileStatus`. The clone keeps the caller's runtime conf
+    * (`maxPartitionBytes` decides how many raw files a batch writes)
+    * and leaves the caller's own conf untouched, so its other queries
+    * list as before.
     */
-  def fileSource(spark: SparkSession, inboxDir: String): DataFrame =
-    spark.readStream
+  def fileSource(spark: SparkSession, inboxDir: String): DataFrame = {
+    val drain = GraftSession.cloned(spark)
+    drain.conf.set(ListingParallelism, spark.sparkContext.defaultParallelism.toLong)
+    drain.readStream
       .schema(TelegramSchema.updateSchema)
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", TelegramSchema.CorruptCol)
       .json(inboxDir)
+  }
 
   /** A real HTTP webhook ENDPOINT in front of the file inbox — the
     * localhost analog of the reference's full ingress chain (ipynb:420
@@ -72,7 +89,8 @@ object IngestJob {
     * already the pipeline's problem and is closed ETL-side by the
     * (chat_id, message_id) dedup (SURVEY §3.4).
     *
-    * Returns the started server; callers stop it with `.stop(0)`. Port
+    * Returns the started server; callers stop it with `.stop(0)`, which
+    * also shuts down its `handlerThreads` pool. Port
     * 0 binds an ephemeral port — read it back from
     * `getAddress.getPort` (PipelineEndToEndSpec drives real HTTP POSTs
     * through it end-to-end into the raw zone).
@@ -88,15 +106,17 @@ object IngestJob {
       new java.net.InetSocketAddress(java.net.InetAddress.getLoopbackAddress, port), 0)
     // A bounded pool instead of the default single-thread dispatcher:
     // one slow sender stalls only its own worker, not the endpoint.
-    // Daemon threads — `server.stop(0)` does not shut the executor
-    // down, and non-daemon workers would pin the JVM open after it.
-    server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(
+    // `HttpServer.stop` leaves the executor running, so the returned
+    // server shuts the pool down on stop; daemon threads so an endpoint
+    // that is never stopped does not pin the JVM open.
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(
       handlerThreads,
       (r: Runnable) => {
         val t = new Thread(r, "graft-webhook-handler")
         t.setDaemon(true)
         t
-      }))
+      })
+    server.setExecutor(pool)
     val seq = new java.util.concurrent.atomic.AtomicLong()
     server.createContext(path, (ex: com.sun.net.httpserver.HttpExchange) =>
       try {
@@ -122,7 +142,25 @@ object IngestJob {
         } else ex.sendResponseHeaders(405, -1)
       } finally ex.close())
     server.start()
-    server
+    new PooledServer(server, pool)
+  }
+
+  /** `server`, except that `stop` also shuts down its handler pool. */
+  private final class PooledServer(
+      server: com.sun.net.httpserver.HttpServer,
+      pool: java.util.concurrent.ExecutorService)
+      extends com.sun.net.httpserver.HttpServer {
+    import com.sun.net.httpserver.{HttpContext, HttpHandler}
+    def stop(delay: Int): Unit = try server.stop(delay) finally pool.shutdown()
+    def bind(addr: java.net.InetSocketAddress, backlog: Int): Unit = server.bind(addr, backlog)
+    def start(): Unit = server.start()
+    def setExecutor(e: java.util.concurrent.Executor): Unit = server.setExecutor(e)
+    def getExecutor: java.util.concurrent.Executor = server.getExecutor
+    def createContext(path: String, h: HttpHandler): HttpContext = server.createContext(path, h)
+    def createContext(path: String): HttpContext = server.createContext(path)
+    def removeContext(path: String): Unit = server.removeContext(path)
+    def removeContext(c: HttpContext): Unit = server.removeContext(c)
+    def getAddress: java.net.InetSocketAddress = server.getAddress
   }
 
   /** Kafka-wire-shaped source adapter: any stream carrying raw webhook
@@ -149,7 +187,10 @@ object IngestJob {
       .select(col("u.*"))
 
   /** Start the streaming job from the file inbox: inbox JSON → raw zone
-    * JSON, daily partitions.
+    * JSON, daily partitions. The query runs in [[fileSource]]'s clone of
+    * `spark` (so it lists each batch with one task per core), which
+    * means `q.sparkSession` is the clone and the query is registered
+    * with the clone's `streams`, not the caller's.
     */
   def start(
       spark: SparkSession,

@@ -428,6 +428,76 @@ class PipelineEndToEndSpec extends AnyFunSuite {
     } finally server.stop(0)
   }
 
+  test("file-inbox drain: no job wider than the cores, in a clone that keeps the caller's conf") {
+    val sc = spark.sparkContext
+    val cores = sc.defaultParallelism
+    val listing = "spark.sql.sources.parallelPartitionDiscovery.parallelism"
+    val maxBytes = "spark.sql.files.maxPartitionBytes"
+    // more files than Spark lists serially (32) and more than twice the
+    // cores: at Spark's default listing cap, the batch's listing job
+    // runs one task per file
+    val n = 33 + 2 * cores
+    val bodies = (0 until n).map { i =>
+      val b = msg(3000 + i, 3000 + i, 11, "Ana", false, t1 + i, Some(s"d$i"))
+      if (i % 3 == 2) b.replace("\"id\":-100", "\"id\":-200") else b // wrong chat
+    }
+    val inbox = Files.createTempDirectory("drain_inbox")
+    bodies.zipWithIndex.foreach { case (b, i) =>
+      Files.write(inbox.resolve(f"m$i%03d.json"), b.getBytes("UTF-8"))
+    }
+    val rawOut = Files.createTempDirectory("drain_raw").toString
+    val listingBefore = spark.conf.getOption(listing)
+    val maxBytesBefore = spark.conf.getOption(maxBytes)
+    // a caller conf the clone must keep; at or above the default, so the
+    // batch's write still packs into at most one task per core
+    val callerMaxBytes = (256L << 20).toString
+    spark.conf.set(maxBytes, callerMaxBytes)
+    try {
+      val (q, jobs) = org.apache.spark.JobCounter(sc) {
+        val q = IngestJob.start(spark, inbox.toString, rawOut,
+          Files.createTempDirectory("drain_ckpt").toString, chatId = -100L)
+        q.awaitTermination()
+        q
+      }
+      val widest = jobs.map(j => (j.jobId, j.stageInfos.map(_.numTasks).max)).maxBy(_._2)
+      assert(widest._2 <= cores, s"drain job ${widest._1} ran ${widest._2} tasks on $cores cores")
+      assert(q.sparkSession ne spark)
+      assert(q.sparkSession.conf.get(maxBytes) === callerMaxBytes)
+      assert(q.sparkSession.conf.get(listing) === cores.toString)
+      assert(spark.conf.getOption(listing) === listingBefore)
+      val landed = spark.read.schema(TelegramSchema.updateSchema).json(rawOut)
+        .select("message.message_id").collect().map(_.getLong(0)).sorted.toSeq
+      assert(landed === (0 until n).filter(_ % 3 != 2).map(3000L + _))
+    } finally maxBytesBefore.fold(spark.conf.unset(maxBytes))(spark.conf.set(maxBytes, _))
+  }
+
+  test("webhookEndpoint: stop(0) also ends the endpoint's handler threads") {
+    import scala.jdk.CollectionConverters._
+    def handlers(): Set[Thread] = Thread.getAllStackTraces.keySet.asScala
+      .filter(_.getName == "graft-webhook-handler").toSet
+    val before = handlers()
+    val server = IngestJob.webhookEndpoint(
+      Files.createTempDirectory("webhook_stop_inbox").toString, handlerThreads = 2)
+    val mine =
+      try {
+        val client = java.net.http.HttpClient.newHttpClient()
+        (1 to 4).foreach { i =>
+          val status = client.send(
+            java.net.http.HttpRequest.newBuilder(java.net.URI.create(
+                s"http://127.0.0.1:${server.getAddress.getPort}/webhook"))
+              .POST(java.net.http.HttpRequest.BodyPublishers.ofString(
+                msg(i, 4000 + i, 11, "Ana", false, t1, Some("stop"))))
+              .build(),
+            java.net.http.HttpResponse.BodyHandlers.ofString()).statusCode()
+          assert(status === 200)
+        }
+        handlers() -- before
+      } finally server.stop(0)
+    assert(mine.nonEmpty, "the endpoint never started a handler thread")
+    mine.foreach(_.join(10000))
+    assert(mine.filter(_.isAlive).isEmpty, s"${mine.count(_.isAlive)} handler threads outlived stop(0)")
+  }
+
   test("incremental manifest replay: re-admitting a batch is idempotent (failure recovery)") {
     import graft.streaming.IncrementalManifest
     val dir = "/root/testdata/sf0.001"
