@@ -111,7 +111,7 @@ object HammingIndex {
   }
 
   private def readMeta(spark: SparkSession, path: String): (Int, Int, Int) =
-    MetaCache.meta(spark, path) { meta =>
+    IndexLayout.meta(spark, path) { meta =>
       val m = meta.select("nBands", "dim", "nBuckets").head()
       (m.getInt(0), m.getInt(1), m.getInt(2))
     }

@@ -148,9 +148,60 @@ object IndexLayout {
   /** The geometry sub-directory (`meta/`, one row of layout constants)
     * of the BM25, Hamming and near-dup families — outside their
     * [[IndexLayout]]s (maintenance never touches it), read through
-    * [[MetaCache.meta]].
+    * [[meta]].
     */
   val Meta: SubDir = SubDir("meta", keyed = false)
+
+  /** The index at `root`'s `meta/` geometry, `decode`d from the
+    * relation [[SubDir.read]] opens, once per [[perGeneration]] of the
+    * `meta/` dir: a hit costs one listing, a miss only `decode`'s job.
+    */
+  private[ops] def meta[A](spark: SparkSession, root: String)(
+      decode: DataFrame => A): A =
+    perGeneration(spark, Seq(Meta.dir(root)))(decode(Meta.read(spark, root)))
+
+  private val generations =
+    new java.util.concurrent.ConcurrentHashMap[Seq[String], (String, Any)]()
+
+  /** The generation of the flat directories `dirs`: their driver
+    * listings (name, length, mtime of every entry, `-` for a missing
+    * dir). Every write into an index directory changes it — a publish
+    * renames in new `graft-ups-<key>-*` names, a rewrite also deletes
+    * the replaced files, a tombstone append writes new part files, a
+    * purge deletes the tombstone dir, and a rebuild writes new part
+    * names.
+    */
+  private def generation(spark: SparkSession, dirs: Seq[String]): String =
+    dirs.map { d =>
+      val p = new Path(d)
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      if (!fs.exists(p)) s"$d -"
+      else (d +: fs.listStatus(p).toSeq
+        .map(s => s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
+        .sorted).mkString("\n")
+    }.mkString("\n")
+
+  /** A value computed from the flat directories `dirs` of an index
+    * root, computed once per [[generation]] of those dirs and reused
+    * until any of them changes — the index's geometry ([[meta]]) and
+    * BM25's live N/avgdl. A hit costs the listings and no Spark job.
+    * A value is cached only when the listing is the same before and
+    * after `load`, so a write racing the load is never remembered.
+    * Scalars only: never rows, never anything keyed on a caller's
+    * input.
+    */
+  private[ops] def perGeneration[A](spark: SparkSession, dirs: Seq[String])(
+      load: => A): A = {
+    val before = generation(spark, dirs)
+    Option(generations.get(dirs)) match {
+      case Some((`before`, v)) => v.asInstanceOf[A]
+      case _ =>
+        val v = load
+        if (generation(spark, dirs) == before) generations.put(dirs, (before, v))
+        else generations.remove(dirs)
+        v
+    }
+  }
 
   /** `spark.read.parquet(dir)` without its schema-inference job. Spark
     * infers a directory's schema in a one-task job that reads one data

@@ -9,21 +9,26 @@ import org.apache.spark.sql.functions._
   * without ever rescanning the corpus.
   *
   * Layout under the index root:
-  *   - `postings/` — (w, <idCol>, tf), hash-bucketed by term into
+  *   - `postings/` — (w, <idCol>, tf, dl), hash-bucketed by term into
   *     `tb=<0..buckets-1>` partition directories: a probe prunes to
   *     the query terms' buckets AT FILE LISTING, the
   *     [[VectorOps.ivfProbeIndex]] treatment of the postings scan.
   *     Full-fidelity tokens (empty tokens included), so index scores
-  *     reproduce the scan-path scores exactly.
+  *     reproduce the scan-path scores exactly. `dl`, the document's
+  *     token count, rides in every row: it is fixed per id, so the copy
+  *     is exact, and a score never joins back to `doclen/` for it.
   *   - `doclen/` — (<idCol>, dl), one row per document (every
   *     document, matching [[TextAnalysis.bm25Scores]]'s corpus-wide
-  *     N/avgdl). It is also the ONE source of the corpus statistics:
-  *     N and avgdl are one aggregate over `doclen/` minus the
-  *     tombstone set, so there is no side copy to keep consistent
-  *     under deletes and purges.
-  *   - `meta/` — (buckets): the term-bucket fanout, persisted so
-  *     append/probe can never hash terms into a different layout than
-  *     the index was written under.
+  *     N/avgdl). It is the ONE source of the corpus statistics — N and
+  *     avgdl are one aggregate over `doclen/` minus the tombstone set,
+  *     so there is no side copy to keep consistent under deletes and
+  *     purges — and of the snapshot cut and its purge guard.
+  *   - `meta/` — (buckets, positional, postings_dl): the term-bucket
+  *     fanout, persisted so append/probe can never hash terms into a
+  *     different layout than the index was written under, and the
+  *     marker that the postings carry `dl`. An index without the
+  *     marker was written before they did; every read and append
+  *     refuses it with [[OutdatedLayout]].
   *
   * Append contract (every [[CorpusUpsert.IndexTarget]]'s): delta doc
   * ids are NEW — postings/doclen rows stay unique per (term, doc) and
@@ -33,18 +38,21 @@ import org.apache.spark.sql.functions._
   * the shared [[IndexLayout]] lifecycle over [[Layout]].
   *
   * 100 TB shape: the build is the postings hash-agg (map-side
-  * combine) plus one cheap projection; a probe reads only the query
-  * terms' partition directories (|terms| buckets of `buckets`), the
-  * per-term df is a window count over those postings, and the only
-  * joins are the doclen attach on doc id, the broadcast one-row
-  * N/avgdl aggregate and, once a delete has landed, the tombstone
-  * anti-join. A live probe therefore reads all of `doclen/`, for
-  * both the dl attach and N/avgdl; computing the aggregate once per
-  * index generation and reusing it across probes is what would remove
-  * that full read. Opening the index costs no Spark job
-  * ([[IndexLayout.SubDir.read]]); a live probe with tombstones present
-  * runs 8 jobs (LexIndexSpec pins it). Scoring arithmetic is
-  * bit-for-bit [[TextAnalysis.bm25Scores]]'s.
+  * combine) plus one cheap projection; a live probe reads only the
+  * query terms' partition directories (|terms| buckets of `buckets`)
+  * and, once a delete has landed, the tombstone set. `dl` comes with
+  * each posting, the per-term df is a window count over the slice,
+  * and N/avgdl enter the plan as literals, computed once per index
+  * generation ([[IndexLayout.perGeneration]] over `doclen/`, the
+  * tombstones and `meta/`) and reused by every probe until a publish,
+  * delete, purge or compaction changes one of them. The only join
+  * left is the tombstone anti-join on the slice. Opening the index
+  * costs no Spark job ([[IndexLayout.SubDir.read]]); a warm live probe
+  * with tombstones present runs 4 jobs (LexIndexSpec pins it).
+  * Snapshot reads ([[bm25ProbeRids]], the `rids` modes) still
+  * aggregate the rid-cut `doclen/` per call, because their corpus is
+  * the caller's. Scoring arithmetic is bit-for-bit
+  * [[TextAnalysis.bm25Scores]]'s.
   */
 object LexIndex {
 
@@ -57,6 +65,17 @@ object LexIndex {
     * `stats/` directory; nothing reads it.
     */
   val Layout: IndexLayout = IndexLayout("bm25", Seq(Postings, Doclen))
+
+  /** The refusal every probe, rank and append raises on an index whose
+    * `meta/` lacks the `postings_dl` marker: its postings were written
+    * without `dl`, and reading them — or appending rows that carry it
+    * next to rows that do not — would score with null lengths. Rebuild
+    * the index with [[bm25WriteIndex]].
+    */
+  final class OutdatedLayout(path: String) extends IllegalStateException(
+    s"BM25 index at $path was written before postings carried dl " +
+      "(no postings_dl marker in meta/); rebuild it with " +
+      "LexIndex.bm25WriteIndex")
 
   /** Stable term bucket: layout hash only — scores never depend on it. */
   private def termBucket(w: org.apache.spark.sql.Column, buckets: Int) =
@@ -114,23 +133,22 @@ object LexIndex {
     require(buckets >= 1, s"buckets=$buckets must be >= 1")
     import docs.sparkSession.implicits._
     IndexLayout.Meta.write(
-      Seq((buckets, positional)).toDF("buckets", "positional"), path)
+      Seq((buckets, positional, true))
+        .toDF("buckets", "positional", "postings_dl"), path)
     writeParts(docs, idCol, textCol, path, buckets, positional)(identity)
   }
 
-  /** (buckets, positional) in ONE cached read ([[MetaCache]] — a probe
-    * used to pay one or two Spark head() jobs per call to re-learn the
-    * layout geometry). Indexes written before the positional layout
-    * existed have a one-column meta — term-frequency-only by
-    * construction.
+  /** (buckets, positional), read once per generation of `meta/`
+    * ([[IndexLayout.meta]] — a probe used to pay one or two Spark
+    * head() jobs per call to re-learn the layout geometry). Raises
+    * [[OutdatedLayout]] when the `postings_dl` marker is missing.
     */
   private def readMeta(spark: SparkSession, path: String): (Int, Boolean) =
-    MetaCache.meta(spark, path) { meta =>
-      val hasPos = meta.columns.contains("positional")
-      if (hasPos) {
-        val r = meta.select("buckets", "positional").head()
-        (r.getInt(0), r.getBoolean(1))
-      } else (meta.select("buckets").head().getInt(0), false)
+    IndexLayout.meta(spark, path) { meta =>
+      if (!meta.columns.contains("postings_dl"))
+        throw new OutdatedLayout(path)
+      val r = meta.select("buckets", "positional").head()
+      (r.getInt(0), r.getBoolean(1))
     }
 
   private def readBuckets(spark: SparkSession, path: String): Int =
@@ -161,10 +179,12 @@ object LexIndex {
   }
 
   /** Write the postings/doclen rows of `docs` under `path`; the
-    * postings rows pass through `layOut` before their aggregation. The
-    * two land in independent subtrees, so they are written
-    * concurrently (wall = max of the two, not the sum; the postings
-    * hash-agg dominates, so the doclen pass rides inside its tail).
+    * postings rows pass through `layOut` before their aggregation, and
+    * each carries its document's `dl` (the same `size(toks)` the
+    * doclen row holds). The two land in independent subtrees, so they
+    * are written concurrently (wall = max of the two, not the sum; the
+    * postings hash-agg dominates, so the doclen pass rides inside its
+    * tail).
     */
   private def writeParts(
       docs: DataFrame,
@@ -174,17 +194,19 @@ object LexIndex {
       buckets: Int,
       positional: Boolean)(layOut: DataFrame => DataFrame): Unit = {
     val toks = TextFunctions.tokens(col(textCol))
+    val dl = size(toks).cast("double").as("dl")
     val exploded =
       if (positional)
-        docs.select(col(idCol), posexplode(toks).as(Seq("p", "w")))
+        docs.select(col(idCol), dl, posexplode(toks).as(Seq("p", "w")))
       else
-        docs.select(col(idCol), explode(toks).as("w"))
+        docs.select(col(idCol), dl, explode(toks).as("w"))
+    // dl is fixed per id: max over a (doc, term) group is that value
     def agged(g: org.apache.spark.sql.RelationalGroupedDataset) =
       if (positional)
-        g.agg(count(lit(1)).cast("double").as("tf"),
+        g.agg(count(lit(1)).cast("double").as("tf"), max(col("dl")).as("dl"),
           sort_array(collect_list(col("p").cast("int"))).as("ps"))
       else
-        g.agg(count(lit(1)).cast("double").as("tf"))
+        g.agg(count(lit(1)).cast("double").as("tf"), max(col("dl")).as("dl"))
     WorkPool.runAll(Seq(
       () => {
         // a delta co-partitions with the tb layout (see writeDelta).
@@ -201,17 +223,18 @@ object LexIndex {
           agged(layOut(rows).groupBy(col("tb"), col(idCol), col("w"))),
           path)
       },
-      () => Doclen.write(
-        docs.select(col(idCol), size(toks).cast("double").as("dl")), path)))
+      () => Doclen.write(docs.select(col(idCol), dl), path)))
   }
 
   /** BM25 scores for `queryTerms` over the persisted index — the
     * index-backed twin of [[TextAnalysis.bm25Scores]] (same robust-idf
     * Okapi formula, same rounding), returning `(<idCol>, bm25)` for
     * every document matching ≥ 1 term. The postings scan prunes to
-    * the query terms' `tb=` directories at file listing. Tombstoned
-    * documents (`Layout.delete`) are excluded from the scanned slice,
-    * the per-term document frequencies and N/avgdl.
+    * the query terms' `tb=` directories at file listing and is the
+    * only index data the plan reads: `dl` rides in the postings rows
+    * and N/avgdl are this index generation's literals ([[withStats]]).
+    * Tombstoned documents (`Layout.delete`) are excluded from the
+    * scanned slice, the per-term document frequencies and N/avgdl.
     */
   def bm25ProbeIndex(
       spark: SparkSession,
@@ -243,15 +266,14 @@ object LexIndex {
     // pinned against the Catalyst expression), costing zero Spark jobs
     val probeBuckets =
       queryTerms.distinct.map(termBucketLocal(_, buckets)).distinct
-    val (lens, stats) = corpus(spark, path, idCol, rids, "bm25ProbeRids")
     val slice0 = Postings.read(spark, path)
       .filter(col("tb").isin(probeBuckets: _*)) // partition-pruned
       .filter(col("w").isin(queryTerms.distinct: _*))
-      .select(col(idCol), col("w"), col("tf"))
+      .select(col(idCol), col("w"), col("tf"), col("dl"))
     // live: tombstone anti-join AFTER the bucket/term prune (slice-
     // sized, skipped when no delete ever landed); snapshot: the rid
-    // cut replaces it (superseded rows are history). df and the doclen
-    // attach inherit the cut through this relation either way.
+    // cut replaces it (superseded rows are history). df inherits the
+    // cut through this relation either way.
     val tf = rids match {
       case Some(r) => slice0.join(r.select(col(idCol)), Seq(idCol),
         "left_semi")
@@ -260,10 +282,9 @@ object LexIndex {
     // df per term is a window count over the cut slice: one exchange
     // by term and one pass over the slice (an aggregate joined back
     // would scan it twice and add a broadcast stage)
-    tf.withColumn("df",
-        count(lit(1)).over(Window.partitionBy("w")).cast("double"))
-      .join(lens, Seq(idCol))
-      .crossJoin(broadcast(stats))
+    withStats(tf.withColumn("df",
+        count(lit(1)).over(Window.partitionBy("w")).cast("double")),
+        path, idCol, rids, "bm25ProbeRids")
       .select(col(idCol), okapiScore(col("tf"), col("df"), k1, b).as("term"))
       .groupBy(col(idCol))
       .agg(round(sum("term"), 6).as("bm25"))
@@ -275,9 +296,9 @@ object LexIndex {
     * as-of rid set from [[graft.ops.CorpusUpsert.asOfRids]]), and
     * every moving part of the score is historical —
     *
-    *   - tf: the bucket-pruned postings slice scanned WITHOUT the
-    *     tombstone exclusion (a superseded revision's rows are history
-    *     until purged) and semi-joined to `rids`;
+    *   - tf and dl: the bucket-pruned postings slice scanned WITHOUT
+    *     the tombstone exclusion (a superseded revision's rows are
+    *     history until purged) and semi-joined to `rids`;
     *   - df: recomputed from that filtered slice — per-term document
     *     frequency IN the snapshot, free;
     *   - N / avgdl: one aggregate over the rid-filtered `doclen/`
@@ -346,35 +367,61 @@ object LexIndex {
               " CorpusUpsert.revsAsOf)"))))
           .otherwise(col("dl")).as("dl"))
 
-  /** The corpus a score reads `dl` and N/avgdl from, as `(lens,
-    * stats)`: `lens` is `(idCol, dl)` per corpus document and `stats`
-    * its one `(n_docs, avgdl)` row. Live (`rids` None): `doclen/` minus
-    * the tombstone set — exact through every purge interleaving, since
-    * a purge drops from `doclen/` only ids the tombstones already
-    * exclude. Snapshot: [[guardedSnapshotLens]], whose purge guard
-    * fires in the stats aggregate (it consumes every lens row, so a
-    * selective consumer cannot prune the guard away). dl values are
-    * integer-valued doubles, so the sum under avg is exact in any
-    * order and N/avgdl is bit-identical to a rebuild without the ids.
-    * Shared by [[bm25Probe]], the rank entries and the batch joins.
+  /** `scored` with the `n_docs`/`avgdl` columns [[okapiScore]] reads,
+    * for the corpus a score reads: live (`rids` None) or the snapshot
+    * `rids`. Live: this index generation's [[liveStats]] as literals —
+    * no scan. Snapshot: the broadcast one-row aggregate over
+    * [[guardedSnapshotLens]], whose purge guard fires in that
+    * aggregate (it consumes every lens row, so a selective consumer
+    * cannot prune the guard away). Shared by [[bm25Probe]], the rank
+    * entries and the batch joins.
     */
-  private def corpus(
-      spark: SparkSession, path: String, idCol: String,
-      rids: Option[DataFrame], op: String): (DataFrame, DataFrame) = {
-    val lens = rids match {
-      case Some(r) =>
-        guardedSnapshotLens(spark, path, idCol, r.select(col(idCol)), op)
+  private def withStats(
+      scored: DataFrame, path: String, idCol: String,
+      rids: Option[DataFrame], op: String): DataFrame = {
+    val spark = scored.sparkSession
+    rids match {
       case None =>
-        Tombstones.excludeFrom(Doclen.read(spark, path), path, idCol)
+        val (n, avgdl) = liveStats(spark, path, idCol)
+        scored.withColumn("n_docs", lit(n))
+          .withColumn("avgdl",
+            avgdl.fold(lit(null).cast("double"))(a => lit(a)))
+      case Some(r) =>
+        scored.crossJoin(broadcast(statsOf(
+          guardedSnapshotLens(spark, path, idCol, r.select(col(idCol)), op))))
     }
-    (lens, lens.agg(count(lit(1)).cast("double").as("n_docs"),
-      avg(col("dl")).as("avgdl")))
   }
+
+  /** The one `(n_docs, avgdl)` row of a `(idCol, dl)` relation. dl
+    * values are integer-valued doubles, so the sum under avg is exact
+    * in any order and N/avgdl is bit-identical to a rebuild's.
+    */
+  private def statsOf(lens: DataFrame): DataFrame =
+    lens.agg(count(lit(1)).cast("double").as("n_docs"),
+      avg(col("dl")).as("avgdl"))
+
+  /** The live corpus's N and avgdl (None for an empty corpus):
+    * [[statsOf]] `doclen/` minus the tombstone set, collected once per
+    * generation of `doclen/`, the tombstones and `meta/`
+    * ([[IndexLayout.perGeneration]]), so a warm probe pays no job for
+    * them. Exact through every purge interleaving, since a purge
+    * drops from `doclen/` only ids the tombstones already exclude.
+    */
+  private def liveStats(spark: SparkSession, path: String, idCol: String)
+      : (Double, Option[Double]) =
+    IndexLayout.perGeneration(spark, Seq(Doclen.dir(path),
+        Tombstones.dir(path), IndexLayout.Meta.dir(path))) {
+      val r = statsOf(
+        Tombstones.excludeFrom(Doclen.read(spark, path), path, idCol)).head()
+      (r.getDouble(0), if (r.isNullAt(1)) None else Some(r.getDouble(1)))
+    }
 
   /** Candidate gather shared by the positional probes: for each doc
     * containing ALL of `terms`, a `w → ps` map of just those terms'
-    * position arrays. The postings scan prunes to the terms' `tb=`
-    * directories at file listing (the [[bm25ProbeIndex]] treatment),
+    * position arrays, with the doc's `dl` (a caller that never reads
+    * it lets the optimizer prune it). The postings scan prunes to the
+    * terms' `tb=` directories at file listing (the [[bm25ProbeIndex]]
+    * treatment),
     * tombstoned docs are excluded on the pruned slice, and the
     * conjunctive cut (`size(m) = |terms|`) happens in the same hash
     * aggregation — candidate volume entering the verify expression is
@@ -409,7 +456,7 @@ object LexIndex {
     val slice0 = Postings.read(spark, path)
       .filter(col("tb").isin(probeBuckets: _*)) // partition-pruned
       .filter(col("w").isin(terms.distinct: _*))
-      .select(col(idCol), col("w"), col("ps"))
+      .select(col(idCol), col("w"), col("ps"), col("dl"))
     val slice = rids match {
       case Some(r) => slice0.join(r.select(col(idCol)), Seq(idCol),
         "left_semi") // the snapshot cut — tombstoned rows stay
@@ -418,7 +465,7 @@ object LexIndex {
     slice
       .groupBy(col(idCol))
       .agg(map_from_entries(collect_list(struct(col("w"), col("ps"))))
-        .as("m"))
+        .as("m"), max(col("dl")).as("dl"))
       .filter(size(col("m")) === terms.distinct.size) // conjunctive
   }
 
@@ -453,7 +500,20 @@ object LexIndex {
       idCol: String,
       phrase: Seq[String],
       rids: Option[DataFrame] = None,
-      guardRids: Boolean = true): DataFrame = {
+      guardRids: Boolean = true): DataFrame =
+    phraseMatches(spark, path, idCol, phrase, rids, guardRids)
+      .select(col(idCol), col("phrase_tf"))
+
+  /** [[bm25PhraseProbe]]'s rows with each document's `dl`, which
+    * [[bm25PhraseRank]] scores with.
+    */
+  private def phraseMatches(
+      spark: SparkSession,
+      path: String,
+      idCol: String,
+      phrase: Seq[String],
+      rids: Option[DataFrame],
+      guardRids: Boolean): DataFrame = {
     require(phrase.size >= 2, "bm25PhraseProbe: need >= 2 phrase terms")
     val m = positionMaps(spark, path, idCol, phrase, rids, guardRids)
     val anchors = element_at(col("m"), lit(phrase.head))
@@ -462,7 +522,8 @@ object LexIndex {
         .map { case (t, j) =>
           array_contains(element_at(col("m"), lit(t)), p + lit(j)) }
         .reduce(_ && _))
-    m.select(col(idCol), size(matches).cast("long").as("phrase_tf"))
+    m.select(col(idCol), size(matches).cast("long").as("phrase_tf"),
+        col("dl"))
       .filter(col("phrase_tf") > 0)
   }
 
@@ -472,13 +533,14 @@ object LexIndex {
     * documents contain the phrase — over the index's live N/avgdl
     * (tombstone-exact like every probe). `(<idCol>, phrase_tf, bm25)`
     * for every matching doc. The plan adds one broadcast 1×1 df
-    * aggregate and the doclen attach to the phrase probe's no-join
-    * shape.
+    * aggregate to the phrase probe's no-join shape; `dl` comes from
+    * the postings and N/avgdl are literals ([[withStats]]).
     */
   /** `rids = Some(idSet)` scores over the SNAPSHOT: matches from the
     * rid-cut probe, df_p from those matches, N/avgdl from the
     * rid-filtered doclen — fully historical scores, the
-    * [[bm25ProbeRids]] treatment for phrases.
+    * [[bm25ProbeRids]] treatment for phrases. The snapshot aggregate
+    * carries the purge guard, so no eager per-probe guard runs.
     */
   def bm25PhraseRank(
       spark: SparkSession,
@@ -488,22 +550,13 @@ object LexIndex {
       k1: Double = 1.2,
       b: Double = 0.75,
       rids: Option[DataFrame] = None): DataFrame = {
-    val m = bm25PhraseProbe(spark, path, idCol, phrase, rids,
+    val m = phraseMatches(spark, path, idCol, phrase, rids,
       guardRids = false)
-    // snapshot mode: the doclen attach and the N/avgdl stats both read
-    // the GUARDED rid cut (the bm25Probe treatment) — m's ids are a
-    // subset of the rid set, so the attach is row-identical to the
-    // full-doclen join, the stats aggregate consumes every lens row
-    // (the purge guard fires there), and the eager per-probe guard
-    // collect is gone
-    val (lens, stats) =
-      corpus(spark, path, idCol, rids, "positional probe (rids)")
     val dfp = m.agg(count(lit(1)).cast("double").as("df_p"))
     val score = okapiScore(col("phrase_tf").cast("double"), col("df_p"),
       k1, b)
-    m.join(lens, Seq(idCol))
-      .crossJoin(broadcast(dfp))
-      .crossJoin(broadcast(stats))
+    withStats(m.crossJoin(broadcast(dfp)), path, idCol, rids,
+        "positional probe (rids)")
       .select(col(idCol), col("phrase_tf"), round(score, 6).as("bm25"))
   }
 
@@ -535,7 +588,21 @@ object LexIndex {
       terms: Seq[String],
       window: Int,
       rids: Option[DataFrame] = None,
-      guardRids: Boolean = true): DataFrame = {
+      guardRids: Boolean = true): DataFrame =
+    proximityMatches(spark, path, idCol, terms, window, rids, guardRids)
+      .select(col(idCol), col("span"))
+
+  /** [[bm25ProximityProbe]]'s rows with each document's `dl`, which
+    * [[bm25ProximityRank]] scores with.
+    */
+  private def proximityMatches(
+      spark: SparkSession,
+      path: String,
+      idCol: String,
+      terms: Seq[String],
+      window: Int,
+      rids: Option[DataFrame],
+      guardRids: Boolean): DataFrame = {
     require(terms.size >= 2, "bm25ProximityProbe: need >= 2 terms")
     require(window >= terms.size,
       s"bm25ProximityProbe: window=$window cannot fit ${terms.size} terms")
@@ -566,7 +633,7 @@ object LexIndex {
       // a far-coalesced term makes this anchor unusable; Int.MaxValue
       // minus a real position still dominates every feasible span
       spanAt(p))) + lit(1)
-    m.select(col(idCol), minSpan.cast("long").as("span"))
+    m.select(col(idCol), minSpan.cast("long").as("span"), col("dl"))
       .filter(col("span") <= window)
   }
 
@@ -580,7 +647,7 @@ object LexIndex {
     * documents match at all, over the index's live tombstone-exact
     * N/avgdl. Returns `(<idCol>, span, bm25)` for every matching doc.
     * Plan shape: the probe's no-join verify plus one broadcast 1×1 df
-    * aggregate and the doclen attach — exactly [[bm25PhraseRank]]'s.
+    * aggregate — exactly [[bm25PhraseRank]]'s.
     */
   def bm25ProximityRank(
       spark: SparkSession,
@@ -591,18 +658,14 @@ object LexIndex {
       k1: Double = 1.2,
       b: Double = 0.75,
       rids: Option[DataFrame] = None): DataFrame = {
-    val m = bm25ProximityProbe(spark, path, idCol, terms, window, rids,
+    val m = proximityMatches(spark, path, idCol, terms, window, rids,
       guardRids = false)
-    // snapshot lens/stats carry the fused purge guard — see
-    // [[bm25PhraseRank]]
-    val (lens, stats) =
-      corpus(spark, path, idCol, rids, "positional probe (rids)")
     val dfp = m.agg(count(lit(1)).cast("double").as("df_p"))
     val ptf = lit(terms.size.toDouble) / col("span").cast("double")
     val score = okapiScore(ptf, col("df_p"), k1, b)
-    m.join(lens, Seq(idCol))
-      .crossJoin(broadcast(dfp))
-      .crossJoin(broadcast(stats))
+    // snapshot stats carry the fused purge guard — see bm25PhraseRank
+    withStats(m.crossJoin(broadcast(dfp)), path, idCol, rids,
+        "positional probe (rids)")
       .select(col(idCol), col("span"), round(score, 6).as("bm25"))
   }
 
@@ -643,9 +706,10 @@ object LexIndex {
     * terms-array)` relation, the per-(qid, doc) candidate maps over
     * ONE bucket-pruned, tombstone-excluded postings pass — exploded
     * distinct (qid, w) meets postings keyed by term (inverted-index
-    * cost), one hash agg rebuilds the `w → ps` map, and the
-    * conjunctive cut (|map| = |distinct terms|) drops every doc
-    * missing a term. The terms array rides along as `q_terms`.
+    * cost), one hash agg rebuilds the `w → ps` map (and carries the
+    * doc's `dl`), and the conjunctive cut (|map| = |distinct terms|)
+    * drops every doc missing a term. The terms array rides along as
+    * `q_terms`.
     */
   private def queryCandidates(
       q: DataFrame, path: String, idCol: String, qidCol: String): DataFrame = {
@@ -664,35 +728,32 @@ object LexIndex {
     val postings = Tombstones.excludeFrom(
       Postings.read(spark, path)
         .filter(col("tb").isin(probeBuckets: _*)) // partition-pruned
-        .select(col(idCol), col("w"), col("ps")),
+        .select(col(idCol), col("w"), col("ps"), col("dl")),
       path, idCol)
     postings
       .join(broadcast(qterms), Seq("w")) // inverted-index cost
       .groupBy(col(qidCol), col(idCol))
       .agg(map_from_entries(collect_list(struct(col("w"), col("ps"))))
-        .as("m"))
+        .as("m"), max(col("dl")).as("dl"))
       .join(broadcast(q), Seq(qidCol))
       .filter(size(col("m")) === size(array_distinct(col("q_terms"))))
   }
 
   /** Shared tail of the batch retrieval joins: Okapi over the live
-    * N/avgdl with per-qid df from a query-scale broadcast agg, then
-    * the per-qid `row_number ≤ k` top-k Spark rewrites to
-    * WindowGroupLimit. `m` is `(qidCol, idCol, carry)`; `ptf` reads
-    * from `m`'s columns.
+    * N/avgdl literals ([[withStats]]) with per-qid df from a
+    * query-scale broadcast agg, then the per-qid `row_number ≤ k`
+    * top-k Spark rewrites to WindowGroupLimit. `m` is `(qidCol, idCol,
+    * carry, dl)`; `ptf` reads from `m`'s columns.
     */
   private def scoreAndRank(
       m: DataFrame, path: String, idCol: String, qidCol: String,
       carry: String, ptf: Column, k: Int, k1: Double, b: Double): DataFrame = {
-    val spark = m.sparkSession
-    val (lens, stats) = corpus(spark, path, idCol, None, "")
     val dfp = m.groupBy(col(qidCol))
       .agg(count(lit(1)).cast("double").as("df_p"))
     val byScore = Window.partitionBy(qidCol)
       .orderBy(col("bm25").desc, col(idCol))
-    m.join(lens, Seq(idCol))
-      .join(broadcast(dfp), Seq(qidCol)) // query-scale rows
-      .crossJoin(broadcast(stats))
+    withStats(m.join(broadcast(dfp), Seq(qidCol)), // query-scale rows
+        path, idCol, None, "")
       .select(col(qidCol), col(idCol), col(carry),
         round(okapiScore(ptf, col("df_p"), k1, b), 6).as("bm25"))
       .withColumn("rank", row_number().over(byScore).cast("long"))
@@ -731,7 +792,8 @@ object LexIndex {
     // on a 1-term row
     val ptfCol = when(n === 1, size(anchors)).otherwise(size(matches))
     val m = cand
-      .select(col(qidCol), col(idCol), ptfCol.cast("long").as("phrase_tf"))
+      .select(col(qidCol), col(idCol), ptfCol.cast("long").as("phrase_tf"),
+        col("dl"))
       .filter(col("phrase_tf") > 0)
     scoreAndRank(m, path, idCol, qidCol, "phrase_tf",
       col("phrase_tf").cast("double"), k, k1, b)
@@ -789,7 +851,7 @@ object LexIndex {
     val minSpan = array_min(transform(anchors, p => spanAt(p))) + lit(1)
     val m = cand
       .select(col(qidCol), col(idCol), size(col("q_terms")).as("n_terms"),
-        minSpan.cast("long").as("span"))
+        minSpan.cast("long").as("span"), col("dl"))
       .filter(col("span") <= window)
     scoreAndRank(m, path, idCol, qidCol, "span",
       col("n_terms").cast("double") / col("span").cast("double"), k, k1, b)

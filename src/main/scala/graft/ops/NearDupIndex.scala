@@ -127,7 +127,7 @@ object NearDupIndex {
       DirLayout.appendToDirs(rows, dirs, sub.cols: _*))
 
   private def readMeta(spark: SparkSession, path: String): Meta =
-    MetaCache.meta(spark, path) { meta =>
+    IndexLayout.meta(spark, path) { meta =>
       val r = meta
         .select("shingleN", "numHashes", "bands", "nBuckets", "nDocBuckets")
         .head()

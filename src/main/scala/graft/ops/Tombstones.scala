@@ -39,8 +39,9 @@ import org.apache.spark.sql.functions._
   *     tombstone set.
   *
   * Duplicate tombstone rows are legal (re-deleting an id appends
-  * again); every reader goes through [[ids]]' distinct, whose id
-  * projection also reads the `(id, dl)` rows older BM25 indexes
+  * again): the probe-side anti-join ignores them, and every other
+  * reader goes through [[ids]]' distinct. Both read the id projection
+  * only, which also reads the `(id, dl)` rows older BM25 indexes
   * wrote. The sketch tables ([[Sketches]]) are deliberately NOT in
   * this family — see the note there: HLL/CMS states are not
   * subtractive, so their delete path is rebuild-from-slices.
@@ -104,12 +105,15 @@ object Tombstones {
 
   /** Anti-join the tombstone set out of an index relation — identity
     * when no tombstones exist. `idCol` must be the index relation's id
-    * column (also the name the tombstones were written under).
+    * column (also the name the tombstones were written under). The
+    * right side is the raw id projection of [[rows]], not [[ids]]: a
+    * left-anti join's result does not depend on duplicate right rows,
+    * so the distinct's aggregate and exchange would buy nothing.
     */
   def excludeFrom(df: DataFrame, indexRoot: String, idCol: String)
       : DataFrame =
-    ids(df.sparkSession, indexRoot, idCol) match {
-      case Some(t) => df.join(t, Seq(idCol), "left_anti")
+    rows(df.sparkSession, indexRoot) match {
+      case Some(t) => df.join(t.select(col(idCol)), Seq(idCol), "left_anti")
       case None => df
     }
 

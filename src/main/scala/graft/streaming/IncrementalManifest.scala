@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.ops.{Contamination, Dedup, Sampling}
+import graft.ops.{Contamination, Dedup, IndexLayout, Sampling}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -63,15 +63,24 @@ object IncrementalManifest {
     * manifest membership. Empty-safe (schema-stable before any batch).
     */
   def readState(spark: SparkSession, stateDir: String, idCol: String = "doc_id"): DataFrame =
-    try {
-      val df = spark.read.parquet(stateDir)
+    readOrEmpty(spark, stateDir, stateSchema(idCol))(df =>
       // partition-discovered `batch` arrives typed by inference; pin it
       df.select(col(idCol), col("content_hash"), col("in_train"),
-        col("batch").cast("long").as("batch"))
-    } catch {
-      case _: org.apache.spark.sql.AnalysisException =>
-        spark.createDataFrame(
-          java.util.Collections.emptyList[Row](), stateSchema(idCol))
+        col("batch").cast("long").as("batch")))
+
+  /** `dir` opened with the schema of its first data file's footer
+    * ([[IndexLayout.dataSchema]], no Spark job) and projected by
+    * `select`, or an empty frame of `empty` when it holds no data file
+    * yet — told apart on the driver, so a first batch runs no failed
+    * analysis. Only [[admitAndWrite]] writes these dirs, never a
+    * streaming file sink.
+    */
+  private def readOrEmpty(spark: SparkSession, dir: String, empty: StructType)(
+      select: DataFrame => DataFrame): DataFrame =
+    IndexLayout.dataSchema(spark, dir) match {
+      case Some(s) => select(spark.read.schema(s).parquet(dir))
+      case None =>
+        spark.createDataFrame(java.util.Collections.emptyList[Row](), empty)
     }
 
   /** One micro-batch's admissions: the batch-manifest composition over
@@ -127,15 +136,9 @@ object IncrementalManifest {
   /** Accumulated observation sidecar (empty-safe, like [[readState]]). */
   def readObservations(
       spark: SparkSession, stateDir: String, idCol: String = "doc_id"): DataFrame =
-    try {
-      spark.read.parquet(obsDir(stateDir))
-        .select(col(idCol), col("content_hash"))
-    } catch {
-      case _: org.apache.spark.sql.AnalysisException =>
-        spark.createDataFrame(
-          java.util.Collections.emptyList[Row](),
-          StructType(stateSchema(idCol).fields.take(2)))
-    }
+    readOrEmpty(spark, obsDir(stateDir),
+      StructType(stateSchema(idCol).fields.take(2)))(
+      _.select(col(idCol), col("content_hash")))
 
   /** One batch's full state transition — the `foreachBatch` body of
     * [[start]], exposed so tests (and a non-streaming driver) run the

@@ -487,8 +487,9 @@ object ScaleProbe {
         // buckets); candidates stay replica-0-sized while the scanned
         // buckets grow k×, which is exactly the pruning story to price.
         "q230_corpus_upsert", "q231_bm25_phrase", "q232_bm25_proximity",
-        // round-17: q234/q235 add one broadcast 1×1 df aggregate + the
-        // doclen attach to the probes above; q236 is the batch shape —
+        // round-17: q234/q235 add one broadcast 1×1 df aggregate to
+        // the probes above (dl rides in the postings, N/avgdl are
+        // per-generation literals); q236 is the batch shape —
         // its postings scan count is CONSTANT (PlanSpec pin), so the
         // 64× term is the pruned-bucket growth, with candidates still
         // replica-0-sized per phrase (bounded by the rarest term's

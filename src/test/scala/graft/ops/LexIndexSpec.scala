@@ -13,6 +13,29 @@ class LexIndexSpec extends AnyFunSuite {
   private def scores(d: org.apache.spark.sql.DataFrame): Map[Long, Double] =
     d.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
 
+  private def tmp(tag: String): String =
+    java.nio.file.Files.createTempDirectory(s"graft-lex-$tag").toString
+
+  /** Every file scan of an executed plan, through AQE's wrappers. */
+  private def scans(p: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[org.apache.spark.sql.execution.FileSourceScanExec] = p match {
+    case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+      scans(a.executedPlan)
+    // materialized AQE stages and reused exchanges hold their
+    // subplans as fields, not children — descend explicitly
+    case qs: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
+      scans(qs.plan)
+    case r: org.apache.spark.sql.execution.exchange.ReusedExchangeExec =>
+      scans(r.child)
+    case f: org.apache.spark.sql.execution.FileSourceScanExec => Seq(f)
+    case other => other.children.flatMap(scans)
+  }
+
+  /** The scans of `d`'s executed plan rooted under a `sub` directory. */
+  private def scansOf(d: org.apache.spark.sql.DataFrame, sub: String) =
+    scans(d.queryExecution.executedPlan).filter(
+      _.relation.location.rootPaths.exists(_.toString.contains(s"/$sub")))
+
   test("index probe ≡ the scan-path bm25Scores, score for score") {
     val root = java.nio.file.Files.createTempDirectory("graft-lex").toString + "/idx"
     LexIndex.bm25WriteIndex(docs, "doc_id", "text", root, buckets = 16)
@@ -45,21 +68,7 @@ class LexIndexSpec extends AnyFunSuite {
     val tbDirs = new java.io.File(s"$root/postings").listFiles
       .count(f => f.isDirectory && f.getName.startsWith("tb="))
     assert(tbDirs > 3, s"fixture degenerated to $tbDirs term buckets")
-    def scans(p: org.apache.spark.sql.execution.SparkPlan)
-        : Seq[org.apache.spark.sql.execution.FileSourceScanExec] = p match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        scans(a.executedPlan)
-      // materialized AQE stages and reused exchanges hold their
-      // subplans as fields, not children — descend explicitly
-      case qs: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-        scans(qs.plan)
-      case r: org.apache.spark.sql.execution.exchange.ReusedExchangeExec =>
-        scans(r.child)
-      case f: org.apache.spark.sql.execution.FileSourceScanExec => Seq(f)
-      case other => other.children.flatMap(scans)
-    }
-    val postingScans = scans(probe.queryExecution.executedPlan)
-      .filter(_.relation.location.rootPaths.exists(_.toString.contains("postings")))
+    val postingScans = scansOf(probe, "postings")
     assert(postingScans.nonEmpty, "no postings scan in the probe plan")
     for (scan <- postingScans) {
       val pruned = scan.relation.location.listFiles(
@@ -201,7 +210,8 @@ class LexIndexSpec extends AnyFunSuite {
     val root = java.nio.file.Files.createTempDirectory("graft-lex-jobs").toString + "/idx"
     LexIndex.bm25WriteIndex(docs, "doc_id", "text", root, buckets = 16)
     LexIndex.Layout.delete(docs.filter(col("doc_id") % 7 === 0), "doc_id", root)
-    // warm the meta/ read (a MetaCache miss is one more job, once)
+    // warm this index generation: the meta/ read and the N/avgdl
+    // aggregate are one job each, once per generation
     LexIndex.bm25ProbeIndex(spark, root, "doc_id", terms).collect()
     val (rows, jobs) = JobCounter(spark.sparkContext)(
       LexIndex.bm25ProbeIndex(spark, root, "doc_id", terms).collect())
@@ -210,8 +220,109 @@ class LexIndexSpec extends AnyFunSuite {
     // no schema-inference job (stage "parquet at <read site>"): the
     // probe opens every relation with a driver-resolved schema
     assert(!sites.exists(_.startsWith("parquet at")), sites.mkString("; "))
-    // N/avgdl is one aggregate over doclen minus the tombstone set;
-    // df is a window
-    assert(jobs.size === 8, sites.mkString("; "))
+    // N/avgdl are this generation's literals and dl rides in the
+    // postings, so the plan reads the pruned postings slice and the
+    // tombstone files only; df is a window
+    assert(jobs.size === 4, sites.mkString("; "))
+  }
+
+  test("N/avgdl per index generation: after an append, applyBatch, delete, purge or compaction the next probe ≡ a fresh rebuild") {
+    val dir = tmp("gen")
+    def probe(p: String, id: String): Map[Long, Double] =
+      scores(LexIndex.bm25ProbeIndex(spark, p, id, terms))
+    def rebuilt(corpus: org.apache.spark.sql.DataFrame, id: String = "doc_id") = {
+      val ref = tmp("gen-ref") + "/idx"
+      LexIndex.bm25WriteIndex(corpus, id, "text", ref, buckets = 8)
+      probe(ref, id)
+    }
+    val idx = s"$dir/idx"
+    val kept = docs.filter(col("doc_id") % 5 =!= 0)
+    LexIndex.bm25WriteIndex(docs.filter(col("doc_id") % 2 === 0), "doc_id",
+      "text", idx, buckets = 8)
+    // each step probes once before its change (the cached generation)
+    // and once after it
+    assert(probe(idx, "doc_id") === rebuilt(docs.filter(col("doc_id") % 2 === 0)))
+    CorpusUpsert.Bm25Target(idx, "text").append(
+      docs.filter(col("doc_id") % 2 === 1), "doc_id")
+    val all = rebuilt(docs)
+    assert(probe(idx, "doc_id") === all)
+    LexIndex.Layout.delete(docs.filter(col("doc_id") % 5 === 0), "doc_id", idx)
+    val afterDelete = rebuilt(kept)
+    assert(afterDelete !== all)
+    assert(probe(idx, "doc_id") === afterDelete)
+    assert(LexIndex.Layout.purge(spark, idx, "doc_id", targetBytes = 512).nonEmpty)
+    assert(probe(idx, "doc_id") === afterDelete)
+    assert(LexIndex.Layout.compact(spark, idx, maxFilesPerDir = 1).nonEmpty)
+    assert(probe(idx, "doc_id") === afterDelete)
+    // a delete and its purge with no probe between: the tombstone dir
+    // is gone again, and the rewritten doclen/ alone names the change
+    LexIndex.Layout.delete(kept.filter(col("doc_id") % 3 === 0), "doc_id", idx)
+    LexIndex.Layout.purge(spark, idx, "doc_id")
+    assert(!Tombstones.exists(spark, idx))
+    assert(probe(idx, "doc_id") === rebuilt(kept.filter(col("doc_id") % 3 =!= 0)))
+
+    // applyBatch: an inserted doc at rev 0, a revised one at rev 1 (its
+    // rev-0 rid tombstoned)
+    val rid = CorpusUpsert.RidCol
+    val (ups, bm) = (s"$dir/ups", s"$dir/bm25")
+    val base = docs.select("doc_id", "text")
+    LexIndex.bm25WriteIndex(base.select(col("doc_id").as(rid), col("text")).limit(0),
+      rid, "text", bm, buckets = 8)
+    val targets = Seq(CorpusUpsert.Bm25Target(bm, "text"))
+    def asRids(d: org.apache.spark.sql.DataFrame, rev: Int) =
+      d.select(CorpusUpsert.ridExpr(col("doc_id"), lit(rev)).as(rid), col("text"))
+    val first = base.filter(col("doc_id") < 300)
+    CorpusUpsert.applyBatch(first, "doc_id", "b0", ups, targets)
+    assert(probe(bm, rid) === rebuilt(asRids(first, 0), rid))
+    val revised = first.filter(col("doc_id") % 4 === 1)
+      .select(col("doc_id"), concat(col("text"), lit(" vector join")).as("text"))
+    val fresh = base.filter(col("doc_id") >= 300)
+    CorpusUpsert.applyBatch(revised.unionByName(fresh), "doc_id", "b1", ups, targets)
+    assert(probe(bm, rid) === rebuilt(
+      asRids(first.filter(col("doc_id") % 4 =!= 1).unionByName(fresh), 0)
+        .unionByName(asRids(revised, 1)), rid))
+  }
+
+  test("a warm live probe, phrase rank, proximity rank and batch join scan no doclen/: dl rides in the postings") {
+    import spark.implicits._
+    val root = tmp("nodoclen") + "/idx"
+    LexIndex.bm25WriteIndex(docs, "doc_id", "text", root, buckets = 16,
+      positional = true)
+    LexIndex.Layout.delete(docs.filter(col("doc_id") % 7 === 0), "doc_id", root)
+    val phrases = Seq((1, Seq("vector", "scan"))).toDF("qid", "phrase")
+    val plans = Seq(
+      () => LexIndex.bm25ProbeIndex(spark, root, "doc_id", terms),
+      () => LexIndex.bm25PhraseRank(spark, root, "doc_id", Seq("vector", "scan")),
+      () => LexIndex.bm25ProximityRank(spark, root, "doc_id",
+        Seq("vector", "window"), 5),
+      () => LexIndex.bm25PhraseJoin(phrases, root, "doc_id", "qid", "phrase",
+        k = 5))
+    for (plan <- plans) {
+      plan().collect() // warm this index generation
+      val d = plan()
+      assert(d.collect().nonEmpty)
+      assert(scansOf(d, "postings").nonEmpty, "no postings scan in the plan")
+      assert(scansOf(d, "doclen").isEmpty, d.queryExecution.executedPlan.toString)
+    }
+  }
+
+  test("an index written before postings carried dl is refused by name: probe, snapshot probe, rank and append") {
+    import spark.implicits._
+    val root = tmp("outdated") + "/idx"
+    LexIndex.bm25WriteIndex(docs, "doc_id", "text", root, buckets = 8)
+    LexIndex.bm25ProbeIndex(spark, root, "doc_id", terms).collect()
+    // meta/ as the layout before the marker wrote it
+    IndexLayout.Meta.write(Seq((8, false)).toDF("buckets", "positional"), root)
+    val e = intercept[LexIndex.OutdatedLayout](
+      LexIndex.bm25ProbeIndex(spark, root, "doc_id", terms))
+    assert(e.getMessage.contains("rebuild"))
+    intercept[LexIndex.OutdatedLayout](LexIndex.bm25ProbeRids(spark, root,
+      "doc_id", terms, docs.select("doc_id")))
+    intercept[LexIndex.OutdatedLayout](LexIndex.bm25PhraseRank(spark, root,
+      "doc_id", Seq("vector", "scan")))
+    val doclen0 = spark.read.parquet(s"$root/doclen").count()
+    intercept[LexIndex.OutdatedLayout](CorpusUpsert.Bm25Target(root, "text")
+      .append(docs.limit(5), "doc_id"))
+    assert(spark.read.parquet(s"$root/doclen").count() === doclen0)
   }
 }

@@ -309,6 +309,62 @@ class LexPositionalSpec extends AnyFunSuite {
     assert(got.forall(_.getLong(1) % 7 != 3))
   }
 
+  test("phrase rank and batch phrase join follow every index generation: append, applyBatch, delete, purge, compact ≡ a fresh rebuild") {
+    val docs = Tables.load(spark, TestSpark.Sf001, "documents")
+      .select($"doc_id", $"text")
+    val ph = Seq("vector", "scan")
+    val phrases = Seq((1, ph), (2, Seq("the", "table"))).toDF("qid", "phrase")
+    def both(p: String, id: String) = (
+      LexIndex.bm25PhraseRank(spark, p, id, ph)
+        .orderBy(id).collect().toSeq.map(_.toSeq),
+      LexIndex.bm25PhraseJoin(phrases, p, id, "qid", "phrase", k = 50)
+        .orderBy("qid", "rank").collect().toSeq.map(_.toSeq))
+    def rebuilt(corpus: DataFrame, id: String = "doc_id") = {
+      val ref = tmp("gen-ref")
+      LexIndex.bm25WriteIndex(corpus, id, "text", ref, buckets = 8,
+        positional = true)
+      both(ref, id)
+    }
+    val idx = tmp("gen")
+    val kept = docs.filter($"doc_id" % 7 =!= 3)
+    LexIndex.bm25WriteIndex(docs.filter($"doc_id" < 250), "doc_id", "text",
+      idx, buckets = 8, positional = true)
+    // each change lands between a probe (the cached generation) and
+    // the checked probe
+    assert(both(idx, "doc_id") === rebuilt(docs.filter($"doc_id" < 250)))
+    CorpusUpsert.Bm25Target(idx, "text").append(docs.filter($"doc_id" >= 250),
+      "doc_id")
+    val all = rebuilt(docs)
+    assert(both(idx, "doc_id") === all)
+    LexIndex.Layout.delete(docs.filter($"doc_id" % 7 === 3), "doc_id", idx)
+    val afterDelete = rebuilt(kept)
+    assert(afterDelete !== all)
+    assert(both(idx, "doc_id") === afterDelete)
+    LexIndex.Layout.purge(spark, idx, "doc_id", targetBytes = 512)
+    assert(both(idx, "doc_id") === afterDelete)
+    LexIndex.Layout.compact(spark, idx, maxFilesPerDir = 1)
+    assert(both(idx, "doc_id") === afterDelete)
+
+    val rid = CorpusUpsert.RidCol
+    val (ups, bm) = (tmp("gen-ups"), tmp("gen-bm25"))
+    LexIndex.bm25WriteIndex(docs.select($"doc_id".as(rid), $"text").limit(0),
+      rid, "text", bm, buckets = 8, positional = true)
+    val targets = Seq(CorpusUpsert.Bm25Target(bm, "text"))
+    def asRids(d: DataFrame, rev: Int) =
+      d.select(CorpusUpsert.ridExpr($"doc_id", lit(rev)).as(rid), $"text")
+    val first = docs.filter($"doc_id" < 300)
+    CorpusUpsert.applyBatch(first, "doc_id", "b0", ups, targets)
+    assert(both(bm, rid) === rebuilt(asRids(first, 0), rid))
+    val revised = first.filter($"doc_id" % 4 === 1)
+      .select($"doc_id", concat($"text", lit(" vector scan")).as("text"))
+    val fresh = docs.filter($"doc_id" >= 300)
+    CorpusUpsert.applyBatch(revised.unionByName(fresh), "doc_id", "b1", ups,
+      targets)
+    assert(both(bm, rid) === rebuilt(
+      asRids(first.filter($"doc_id" % 4 =!= 1).unionByName(fresh), 0)
+        .unionByName(asRids(revised, 1)), rid))
+  }
+
   test("refusals: non-positional index, infeasible window") {
     val flat = tmp("flat")
     LexIndex.bm25WriteIndex(fixture, "doc_id", "text", flat, buckets = 4)
